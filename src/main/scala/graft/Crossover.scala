@@ -46,45 +46,14 @@ object Crossover {
   /** Clustered embeddings: `n/clusterSize` tight bundles — cluster
     * center from `hash(cluster, j)`, per-vector jitter at `noise`
     * amplitude. Cluster count scales WITH n (fixed cluster size), the
-    * real-corpus shape. `clusterTag` (default 0 — bit-identical to the
-    * historical corpora) offsets the cluster-id hash space so two
-    * generated populations can be DECORRELATED: without it, cluster c
-    * of every generator draws the same `hash(c, j)` signal, and a
-    * union of populations carries cross-population cosine ~0.5 between
-    * same-c clusters — an accidental correlation no real mixed corpus
-    * has. */
+    * real-corpus shape. */
   def clusteredEmbeddings(spark: SparkSession, n: Long,
-      clusterSize: Int = 256, noise: Double = 0.15,
-      clusterTag: Long = 0L): DataFrame =
+      clusterSize: Int = 256, noise: Double = 0.15): DataFrame =
     spark.range(n).toDF("vec_id")
-      .withColumn("cl", col("vec_id") % lit(math.max(1L, n / clusterSize))
-        + lit(clusterTag))
+      .withColumn("cl", col("vec_id") % lit(math.max(1L, n / clusterSize)))
       .withColumn("embedding", expr(
         s"""transform(sequence(0, 63), j ->
            |  float(sin(hash(cl, j)) + $noise * sin(hash(vec_id, j))))"""
-          .stripMargin))
-      .select(col("vec_id"), col("embedding"))
-
-  /** LOOSE clusters at a CONTROLLED neighbor cosine (r16, the third
-    * population of the multi-strata cell): cluster signal in the first
-    * 32 coordinates, per-vector jitter at amplitude `alpha` in the
-    * other 32. Same-cluster pair cosine concentrates at ≈ 1/(1+α²)
-    * (±~0.03 at 32 signal dims) — additive full-coordinate noise (the
-    * [[clusteredEmbeddings]] `noise` knob) cannot hold a mid-range
-    * population TIGHT enough for gap clustering: its max-of-k
-    * within-sample top-1 tail reached ~0.85 at a 0.70 pair mean and
-    * merged into the tight bin. α = 0.65 ⇒ cosine ≈ 0.70, between the
-    * regimes. */
-  def looseClusteredEmbeddings(spark: SparkSession, n: Long,
-      clusterSize: Int = 256, alpha: Double = 0.65,
-      clusterTag: Long = 0L): DataFrame =
-    spark.range(n).toDF("vec_id")
-      .withColumn("cl", col("vec_id") % lit(math.max(1L, n / clusterSize))
-        + lit(clusterTag))
-      .withColumn("embedding", expr(
-        s"""transform(sequence(0, 63), j ->
-           |  float(CASE WHEN j < 32 THEN sin(hash(cl, j))
-           |        ELSE $alpha * sin(hash(vec_id, j)) END))"""
           .stripMargin))
       .select(col("vec_id"), col("embedding"))
 
@@ -192,15 +161,12 @@ object Crossover {
     md ++= "## 1. k-NN self-join (k=3): exact blocked grid vs IVF vs SRP-LSH\n\n"
     md ++= "Clustered corpus (cluster size 256, cluster count scales with n;\n"
     md ++= "ivf: cells=sqrt(n) probes=4 → coverage shrinks as 4/sqrt(n),\n"
-    md ++= "two-level routed assignment past 64 cells (r13);\n"
-    md ++= "lsh: 8 tables × AUTO bits (r13: log2(n/8) — fixed bits=8/10\n"
-    md ++= "measured superlinear at 150k in the r12 ladder; r14: auto is\n"
-    md ++= "REGIME-AWARE — the neighbor-cosine probe keeps the full-rate\n"
-    md ++= "ramp here and routes isotropic corpora to the half-rate\n"
-    md ++= "anchored ramp, see the isotropic table):\n\n"
+    md ++= "lsh: 8 tables × AUTO bits (r13: round(log2(n/8)) clamped to\n"
+    md ++= "[4, 24] — fixed bits=8/10 measured superlinear at 150k in the\n"
+    md ++= "r12 ladder):\n\n"
     md ++= "| n | exact s | ivf s | ivf recall | lsh s | lsh recall |\n"
     md ++= "|---|---|---|---|---|---|\n"
-    // 1M is the r13 routed-assignment rung (ivf-only past the caps);
+    // 1M is the ivf-only rung past the caps;
     // GRAFT_CROSSOVER_KNN_MIN skips rungs below a floor so one new rung
     // can be measured without re-paying the whole ladder (merge by hand
     // like the ONLY fragments).
@@ -271,12 +237,10 @@ object Crossover {
       vecs.unpersist()
     }
     md ++= "\nIsotropic contrast (the testdata regime — no structure to\n"
-    md ++= "route by; approximate variants at the SAME knobs; since r14\n"
-    md ++= "the regime probe routes these corpora to the half-rate\n"
-    md ++= "anchored bits ramp — 9/10/10 bits at 10k/25k/60k vs the\n"
-    md ++= "full-rate 10/12/13 that traded recall down in the r13\n"
-    md ++= "table; the 60k rung is the r14 extension past the old\n"
-    md ++= "25k measurement ceiling):\n\n"
+    md ++= "route by; approximate variants at the SAME knobs, so lsh runs\n"
+    md ++= "the same auto formula — 10/12/13 bits at 10k/25k/60k, which\n"
+    md ++= "trades recall down here; isotropic callers pass explicit\n"
+    md ++= "narrower bits):\n\n"
     md ++= "| n | exact s | ivf s | ivf recall | lsh s | lsh recall |\n"
     md ++= "|---|---|---|---|---|---|\n"
     if (section("knn")) Seq(10000L, 25000L, 60000L).foreach { n =>
@@ -292,10 +256,9 @@ object Crossover {
     // the full exact baseline is n² (145 s at 60k). Ground truth here is
     // SAMPLED instead — exact top-3 for a deterministic 1k-query sample
     // via one knnJoinAgainst blocked pass (O(n·1k) pairs, not O(n²)) —
-    // which extends the recall evidence to the rungs where the
-    // half-rate anchored ramp's design intent (bucket population grows
-    // as sqrt(n); recall flat-to-up at slowly-growing bits) is actually
-    // under load. The LSH column is the FULL self-join (every vector
+    // which extends the isotropic recall evidence to 250k-1M rows,
+    // where the auto width keeps growing while per-plane collision
+    // probability does not. The LSH column is the FULL self-join (every vector
     // queries; the honest O(n^1.5) candidate volume of the regime) with
     // recall scored on the sample. GRAFT_CROSSOVER_ISOSCALE_MIN/MAX
     // bound the rungs (default max = 250k: the 1M cell is a ~1 h
@@ -303,7 +266,7 @@ object Crossover {
     // default-cost rule).
     md ++= "\nIsotropic sampled-recall extension (r15): exact ground truth\n"
     md ++= "from a 1k-query sample (one blocked O(n·1k) pass), LSH runs\n"
-    md ++= "the full self-join at auto (regime-routed half-rate) bits,\n"
+    md ++= "the full self-join at auto bits (round(log2(n/8))),\n"
     md ++= "ivf at cells=sqrt(n)/probes=4 for contrast:\n\n"
     md ++= "| n | exact-sample s | ivf s | ivf recall | lsh s | lsh recall@3 |\n"
     md ++= "|---|---|---|---|---|---|\n"
@@ -345,70 +308,6 @@ object Crossover {
           s"ivf=${f1(ivfS)}/${f3(ivfR)} lsh=${f1(lshS)}/${f3(lshR)}")
         exact.unpersist(); vecs.unpersist()
       }
-
-    // ------------------- 1c. Hamming-2 multi-probe at the recall wall
-    // r16 late: §1b measured the anchored ramp's recall wall (0.519 at
-    // 250k, bits=11) with the flip-1 probe shell the banded join has
-    // always used. The margin-aware Hamming-2 shell (SrpProbes;
-    // spark.graft.ann.lsh.probeHamming=2) probes pair flips within the
-    // probeMarginBits lowest-|margin| planes — where the remaining
-    // collision mass lives once per-table capture is collision-bound.
-    // This cell sweeps the (probe depth × width) grid at the wall rung:
-    // recall recovered per unit of candidate volume decides the
-    // advertised remedy (checkRecallWall's message) and whether the wall
-    // threshold itself should read probeHamming.
-    md ++= "\nHamming-2 multi-probe at the wall rung (r16 late): same\n"
-    md ++= "sampled ground truth as above; flip2 probes pair flips within\n"
-    md ++= "the mb lowest-|margin| planes on top of the full flip-1 shell\n"
-    md ++= "(probes/table 12 -> 40 at mb=8, 67 at mb=11; bits=13 trades\n"
-    md ++= "bucket population 4x down against the wider shell).\n"
-    md ++= "Regenerate with `GRAFT_CROSSOVER_ONLY=mprobe`:\n\n"
-    md ++= "| n | variant | bits | probes/table | lsh s | lsh recall@3 |\n"
-    md ++= "|---|---|---|---|---|---|\n"
-    if (section("mprobe")) Seq(250000L)
-      .filter(n => n >= isoMin && n <= isoMax).foreach { n =>
-      import graft.ext.Similarity
-      val vecs = isotropicEmbeddings(spark, n).localCheckpoint(true)
-      val qEvery = math.max(1L, n / 1000L)
-      val sample = vecs.filter(pmod(col("vec_id"), lit(qEvery)) === 0)
-      val (exact, exS) = time {
-        val d = Similarity.knnJoinAgainst(vecs, sample, 3)
-          .localCheckpoint(true)
-        d.count(); d
-      }
-      println(s"[crossover] mprobe n=$n exact=${f1(exS)}")
-      val variants = Seq(
-        ("flip1 (banked shape)", 1, 11, 8),
-        ("flip2", 2, 11, 8),
-        ("flip2 all-pairs", 2, 11, 11),
-        ("flip2 wider sig", 2, 13, 8))
-      variants.foreach { case (label, hamming, bits, mb) =>
-        spark.conf.set("spark.graft.ann.lsh.probeHamming", hamming.toString)
-        spark.conf.set("spark.graft.ann.lsh.probeMarginBits", mb.toString)
-        try {
-          val (lshDf, lshS) = time {
-            val d = Similarity
-              .knnJoinLsh(vecs, k = 3, tables = 8, bits = bits)
-              .localCheckpoint(true)
-            d.count(); d
-          }
-          Similarity.sweepAnnCaches()
-          val r = recallOf(lshDf, exact)
-          lshDf.unpersist()
-          val ppt =
-            if (hamming == 1) 1 + bits
-            else 1 + bits + math.min(mb, bits) * (math.min(mb, bits) - 1) / 2
-          md ++= s"| ${n / 1000}k | $label | $bits | $ppt | ${f1(lshS)} " +
-            s"| ${f3(r)} |\n"
-          println(s"[crossover] mprobe n=$n $label bits=$bits " +
-            s"lsh=${f1(lshS)}/${f3(r)}")
-        } finally {
-          spark.conf.unset("spark.graft.ann.lsh.probeHamming")
-          spark.conf.unset("spark.graft.ann.lsh.probeMarginBits")
-        }
-      }
-      exact.unpersist(); vecs.unpersist()
-    }
 
     // ------------------------------------------------ 2. near-dup dedup
     md ++= "\n## 2. Near-dup dedup: exact all-pairs n-gram Jaccard vs MinHash+LSH\n\n"
@@ -460,278 +359,6 @@ object Crossover {
       println(s"[crossover] hh tokens=${nDocs * 20} exact=${f1(exS)} " +
         s"mg=${f1(mgS)} hitters=$exHitters/$mgHitters")
       docs.unpersist()
-    }
-
-    // ------------------------------------- 4. routed-assignment fidelity
-    // The r13 two-level router is an APPROXIMATION of the flat
-    // nearest-cell scan; its recall is exact-comparable only up to the
-    // exact cap (60k). This family measures the approximation DIRECTLY
-    // at the sizes the router exists for: top-1 agreement (does routed
-    // assignment land in the flat scan's cell?) and probe-set overlap
-    // at the ladder's probes=4 operating point, over the FULL corpus —
-    // the flat column is the O(n·cells) scan the router replaces, paid
-    // here once as ground truth.
-    md ++= "\n## 4. Routed-assignment fidelity vs the flat scan (r13; extended past S≈30 in r14)\n\n"
-    md ++= "Clustered corpus, cells=sqrt(n), superProbes SWEPT over the\n"
-    md ++= "group fan-out; `top1` = routed top-1 cell == flat top-1 cell\n"
-    md ++= "(the assignment the index stores); `overlap@4` = |routed ∩\n"
-    md ++= "flat|/4 of the probes=4 probe sets (the search-side fan-out);\n"
-    md ++= "`scan` = fraction of fine cells a row scores (S + sp·cells/S\n"
-    md ++= "over cells — the cost the router exists to bound):\n\n"
-    md ++= "| n | cells | S | superProbes | top1 agree | overlap@4 | scan |\n"
-    md ++= "|---|---|---|---|---|---|---|\n"
-    // r14 (VERDICT r13 #4): the 1M/4M rungs (S=32/45) close the residual —
-    // the auto = ceil(sqrt(S)) near-flat-fidelity claim was measured only
-    // to S=26 and extrapolated past it. GRAFT_CROSSOVER_ROUTING_MIN skips
-    // rungs below a floor (merge fragments by hand, like KNN_MIN);
-    // GRAFT_CROSSOVER_ROUTING_MAX caps the top rung (ADVICE r14: each
-    // rung pays a flat O(n·cells) ground-truth scan — multi-minute at
-    // 4M×2000 — and local/CI reruns need the small rungs without it).
-    val routingMin = sys.env.get("GRAFT_CROSSOVER_ROUTING_MIN")
-      .map(_.toLong).getOrElse(0L)
-    val routingMax = sys.env.get("GRAFT_CROSSOVER_ROUTING_MAX")
-      .map(_.toLong).getOrElse(Long.MaxValue)
-    val routingSizes = Seq(150000L, 400000L, 1000000L, 4000000L)
-      .filter(n => n >= routingMin && n <= routingMax)
-    if (section("routing")) routingSizes.foreach { n =>
-      import graft.functions.VectorFunctions.{nearestCells, nearestCellsRouted}
-      val vecs = clusteredEmbeddings(spark, n).localCheckpoint(true)
-      val cells = math.max(16, math.sqrt(n.toDouble).toInt)
-      val index = graft.ext.Similarity.IvfIndex.train(vecs, cells)
-      val cents = index.centroids
-      val (ids, mat, superMat, offs) = graft.ext.Similarity.superGroups(cents)
-      val nGroups = offs.length - 1
-      def flat(p: Int) = nearestCells(col("embedding"),
-        cents.map(_._1), cents.flatMap(_._2), math.min(p, cents.size))
-      // the flat ground truth is the O(n·cells) scan the router replaces —
-      // pay it ONCE per rung (it dominates the rung past 1M×1000 cells);
-      // each sweep point then scores only its routed column against the
-      // checkpointed flat answers
-      val flats = vecs.select(col("embedding"),
-          element_at(flat(1), 1).as("f1"), flat(4).as("f4"))
-        .localCheckpoint(true)
-      val sweep = Seq(2, 4,
-        math.ceil(math.sqrt(nGroups.toDouble)).toInt,
-        (nGroups + 3) / 4, (nGroups + 1) / 2).distinct.sorted
-        .map(sp => math.min(sp, nGroups)).distinct
-      sweep.foreach { sp =>
-        def routed(p: Int) = nearestCellsRouted(col("embedding"), ids, mat,
-          superMat, offs, math.min(p, cents.size), sp)
-        val m = flats.select(
-            (col("f1") === element_at(routed(1), 1))
-              .cast("double").as("agree"),
-            (size(array_intersect(col("f4"), routed(4))) / lit(4.0)).as("ov"))
-          .agg(avg(col("agree")).as("a"), avg(col("ov")).as("o"))
-          .collect().head
-        val scan = (nGroups + sp.toDouble * cents.size / nGroups) / cents.size
-        md ++= s"| ${n / 1000}k | $cells | $nGroups | $sp " +
-          s"| ${f3(m.getDouble(0))} | ${f3(m.getDouble(1))} | ${f3(scan)} |\n"
-        println(s"[crossover] routing n=$n cells=$cells S=$nGroups sp=$sp " +
-          s"top1=${f3(m.getDouble(0))} overlap4=${f3(m.getDouble(1))} " +
-          s"scan=${f3(scan)}")
-      }
-      flats.unpersist()
-      vecs.unpersist()
-    }
-
-    // ------------------------------------------ 5. mixed-regime strata
-    // r15 (VERDICT r14 #3): the even clustered+isotropic union that r14
-    // measured under the single global bits choice (1.000/0.503 per
-    // half) now stratifies — this section is the committed evidence:
-    // per-half recall@3 of knnJoinLsh under (a) the global choice
-    // (stratify=off, the r14 behavior) and (b) the stratified default,
-    // against the exact blocked join on a deterministic 1/16 query
-    // sample. Clustered half must hold ~1.0 under both; the isotropic
-    // half must recover its pure-regime recall under (b).
-    md ++= "\n## 5. Mixed-regime corpus: global vs per-stratum auto-bits (r15)\n\n"
-    md ++= "| n (per half) | variant | bits | iso recall@3 | clustered recall@3 | wall s |\n"
-    md ++= "|---|---|---|---|---|---|\n"
-    if (section("mixed")) Seq(10000L).foreach { half =>
-      val cl = clusteredEmbeddings(spark, half)
-      val iso = isotropicEmbeddings(spark, half)
-        .select((col("vec_id") + half).as("vec_id"), col("embedding"))
-      val mixed = cl.unionByName(iso).localCheckpoint(true)
-      val sample = mixed.filter(col("vec_id") % 16 === 0)
-      val exact = graft.ext.Similarity.knnJoinAgainst(mixed, sample, 3)
-        .localCheckpoint(true)
-      val exIso = exact.filter(col("q_id") >= half).localCheckpoint(true)
-      val exCl = exact.filter(col("q_id") < half).localCheckpoint(true)
-      Seq("off" -> "global", "auto" -> "stratified").foreach {
-        case (conf, label) =>
-          spark.conf.set("spark.graft.ann.lsh.stratify", conf)
-          try {
-            val t0 = System.nanoTime()
-            val ann = graft.ext.Similarity.knnJoinLsh(mixed, k = 3)
-              .localCheckpoint(true)
-            val wall = (System.nanoTime() - t0) / 1e9
-            val rIso = recallOf(ann.filter(col("q_id") >= half), exIso)
-            val rCl = recallOf(ann.filter(col("q_id") < half), exCl)
-            val bits =
-              if (conf == "off")
-                s"${graft.ext.Similarity.autoWidths(2 * half, 8)._2} (global iso)"
-              else
-                s"${graft.ext.Similarity.autoWidths(half, 8)._1}C/" +
-                  s"${graft.ext.Similarity.autoWidths(half, 8)._2}I (nominal)"
-            md ++= s"| $half | $label | $bits | ${f3(rIso)} | " +
-              s"${f3(rCl)} | ${f1(wall)} |\n"
-            ann.unpersist()
-          } finally {
-            spark.conf.unset("spark.graft.ann.lsh.stratify")
-            graft.ext.Similarity.sweepAnnCaches()
-          }
-      }
-      exact.unpersist(); exIso.unpersist(); exCl.unpersist()
-      mixed.unpersist()
-    }
-
-    // --------------------------------------- 5b. three-population strata
-    // r16 (VERDICT r15 #2): THREE neighbor-cosine populations — tight
-    // islands (~0.99), loose islands (~0.70, the concentration-controlled
-    // generator), isotropic sea (~0.47). Under the r15 TWO-way split the
-    // two sub-threshold populations resolved bits from their combined
-    // size (20k -> 10, vs 9 for each 10k third alone — and at these
-    // sizes the two-way widths degenerate to equal, falling back to the
-    // global choice entirely), so each read below its pure-regime
-    // recall. The r16 gap-clustered bins give one operating point per
-    // population; the done-bar is each third within ~0.05 of its
-    // PURE-regime recall (that population alone at its own auto point).
-    md ++= "\n### 5b. Three populations: per-population bins (r16)\n\n"
-    md ++= "| n (per third) | variant | iso r@3 | loose r@3 | tight r@3 | wall s |\n"
-    md ++= "|---|---|---|---|---|---|\n"
-    if (section("mixed3")) Seq(10000L).foreach { third =>
-      import graft.ext.Similarity
-      val tight = clusteredEmbeddings(spark, third)
-      val loose = looseClusteredEmbeddings(spark, third)
-        .select((col("vec_id") + third).as("vec_id"), col("embedding"))
-      val iso = isotropicEmbeddings(spark, third)
-        .select((col("vec_id") + 2 * third).as("vec_id"), col("embedding"))
-      // pure-regime reference: each population ALONE at its own auto point
-      def pure(vecs: DataFrame): (Double, Double) = {
-        val v = vecs.localCheckpoint(true)
-        val sample = v.filter(col("vec_id") % 16 === 0)
-        val exact = Similarity.knnJoinAgainst(v, sample, 3)
-          .localCheckpoint(true)
-        val (ann, wall) = time {
-          val a = Similarity.knnJoinLsh(v, k = 3).localCheckpoint(true)
-          a.count(); a
-        }
-        val r = recallOf(ann, exact)
-        ann.unpersist(); exact.unpersist(); v.unpersist()
-        Similarity.sweepAnnCaches()
-        (r, wall)
-      }
-      val (pTight, wTight) = pure(tight)
-      val (pLoose, wLoose) = pure(loose)
-      val (pIso, wIso) = pure(iso)
-      md ++= s"| $third | pure (each alone) | ${f3(pIso)} | ${f3(pLoose)} " +
-        s"| ${f3(pTight)} | ${f1(wIso)}/${f1(wLoose)}/${f1(wTight)} |\n"
-      println(s"[crossover] mixed3 pure iso=${f3(pIso)} " +
-        s"loose=${f3(pLoose)} tight=${f3(pTight)}")
-      val mixed = tight.unionByName(loose).unionByName(iso)
-        .localCheckpoint(true)
-      val sample = mixed.filter(col("vec_id") % 16 === 0)
-      val exact = Similarity.knnJoinAgainst(mixed, sample, 3)
-        .localCheckpoint(true)
-      val exIso = exact.filter(col("q_id") >= 2 * third).localCheckpoint(true)
-      val exLoose = exact.filter(col("q_id") >= third
-        && col("q_id") < 2 * third).localCheckpoint(true)
-      val exTight = exact.filter(col("q_id") < third).localCheckpoint(true)
-      Seq("off" -> "global", "auto" -> "stratified").foreach {
-        case (conf, label) =>
-          spark.conf.set("spark.graft.ann.lsh.stratify", conf)
-          try {
-            val (ann, wall) = time {
-              val a = Similarity.knnJoinLsh(mixed, k = 3)
-                .localCheckpoint(true)
-              a.count(); a
-            }
-            val rIso = recallOf(ann.filter(col("q_id") >= 2 * third), exIso)
-            val rLoose = recallOf(ann.filter(col("q_id") >= third
-              && col("q_id") < 2 * third), exLoose)
-            val rTight = recallOf(ann.filter(col("q_id") < third), exTight)
-            md ++= s"| $third | $label | ${f3(rIso)} | ${f3(rLoose)} " +
-              s"| ${f3(rTight)} | ${f1(wall)} |\n"
-            println(s"[crossover] mixed3 $label iso=${f3(rIso)} " +
-              s"loose=${f3(rLoose)} tight=${f3(rTight)} wall=${f1(wall)}")
-            ann.unpersist()
-          } finally {
-            spark.conf.unset("spark.graft.ann.lsh.stratify")
-            Similarity.sweepAnnCaches()
-          }
-      }
-      exact.unpersist(); exIso.unpersist(); exLoose.unpersist()
-      exTight.unpersist(); mixed.unpersist()
-    }
-
-    // ------------------------------- 5c. minority-population discovery
-    // r16 late: a ~3% isotropic minority in a clustered corpus is
-    // invisible to the probe's summary percentiles (its rows choose
-    // majority samples, so its samples form no probe groups) and, at
-    // the default 256-sample probe, sits under the k-means mass floor
-    // (~8 expected samples < 16) — strata discovery merges and the
-    // minority runs at the majority's full-rate width. Widening
-    // spark.graft.ann.lsh.probeQueries puts the minority's expected
-    // sample count over the capped floor (24): the minority gets its
-    // own bin and anchored width. The cell's rows per rung are the old
-    // global behavior, the default probe (expected: merges, same width
-    // as global), and the widened probe. The 97k rung measured the
-    // floor's SAMPLING GRANULARITY: at 1024 the deterministic md5
-    // sample draws 20 iso rows (expected ~31, z≈-2) — one short of
-    // nothing, four short of the floor — so the split fails on mass
-    // alone, the scores separating perfectly (iso ≤0.37 vs clustered
-    // ≥0.978). That is precisely the massOnlyMiss advisory's case
-    // ("widen the probe"); the rung's fourth variant FOLLOWS the
-    // advisory (2048 → 52 iso samples) and discovers.
-    md ++= "\n### 5c. Minority population: probe width vs discovery (r16)\n\n"
-    md ++= "Clustered majority (cluster size 1024) + a ~3% isotropic\n"
-    md ++= "minority, two corpus rungs. Regenerate with\n"
-    md ++= "`GRAFT_CROSSOVER_ONLY=minority`:\n\n"
-    md ++= "| n (maj+min) | variant | probeQueries | iso r@3 | clustered r@3 | wall s |\n"
-    md ++= "|---|---|---|---|---|---|\n"
-    if (section("minority")) Seq((29000L, 1000L), (97000L, 3000L)).foreach {
-      case (nCl, nIso) =>
-      import graft.ext.Similarity
-      val cl = clusteredEmbeddings(spark, nCl, clusterSize = 1024)
-      val iso = isotropicEmbeddings(spark, nIso)
-        .select((col("vec_id") + nCl).as("vec_id"), col("embedding"))
-      val mixed = cl.unionByName(iso).localCheckpoint(true)
-      val sample = mixed.filter(col("vec_id") % 16 === 0)
-      val exact = Similarity.knnJoinAgainst(mixed, sample, 3)
-        .localCheckpoint(true)
-      val exIso = exact.filter(col("q_id") >= nCl).localCheckpoint(true)
-      val exCl = exact.filter(col("q_id") < nCl).localCheckpoint(true)
-      val variants = Seq(("off", None, "global"),
-        ("auto", None, "default probe"),
-        ("auto", Some(1024), "widened probe")) ++
-        (if (nCl > 90000L) Seq(("auto", Some(2048), "advisory followed"))
-         else Nil)
-      variants.foreach {
-        case (conf, pq, label) =>
-          spark.conf.set("spark.graft.ann.lsh.stratify", conf)
-          pq.foreach(v =>
-            spark.conf.set("spark.graft.ann.lsh.probeQueries", v.toString))
-          try {
-            val (ann, wall) = time {
-              val a = Similarity.knnJoinLsh(mixed, k = 3)
-                .localCheckpoint(true)
-              a.count(); a
-            }
-            val rIso = recallOf(ann.filter(col("q_id") >= nCl), exIso)
-            val rCl = recallOf(ann.filter(col("q_id") < nCl), exCl)
-            md ++= s"| ${nCl / 1000}k+${nIso / 1000}k | $label | " +
-              s"${pq.getOrElse(256)} | ${f3(rIso)} | ${f3(rCl)} | " +
-              s"${f1(wall)} |\n"
-            println(s"[crossover] minority ${nCl / 1000}k+${nIso / 1000}k " +
-              s"$label iso=${f3(rIso)} cl=${f3(rCl)} wall=${f1(wall)}")
-            ann.unpersist()
-          } finally {
-            spark.conf.unset("spark.graft.ann.lsh.stratify")
-            spark.conf.unset("spark.graft.ann.lsh.probeQueries")
-            Similarity.sweepAnnCaches()
-          }
-      }
-      exact.unpersist(); exIso.unpersist(); exCl.unpersist()
-      mixed.unpersist()
     }
 
     md ++= "\n## Reading\n\n"

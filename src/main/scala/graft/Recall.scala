@@ -306,7 +306,10 @@ object Recall {
       "real recall dip at this operating point on this corpus and no " +
       "retrain advisory is warranted. The f=0 anchor moves 0.94->0.876 " +
       "because the query set changed (10->50) — diff decay curves " +
-      "within r16+ only"
+      "within r16+ only. Later the LSH regime probe, the stratified " +
+      "path and routed cell assignment were removed: auto-bits is one " +
+      "formula again (round(log2(n/8)) clamped to [4, 24], still 8 " +
+      "here), so every block is unchanged by the removal"
     val json =
       s"""{"metric":"ann_recall@$k","queries":${exact.size},"k":$k,""" +
         s""""baseline":"x_ann_bruteforce","sf":"$sfDir",""" +

@@ -180,58 +180,19 @@ object Similarity {
     * join key space is tables × 2^bits, scaled by `bits` as the corpus
     * grows.
     *
-    * `bits <= 0` = AUTO (the default): the signature width resolves to
-    * ~log2(n / 8) from one count of `vectors` — the [[resolveProbes]]
-    * discipline applied to the r12-measured LSH scale cliff
-    * (CROSSOVER.md §1: fixed bits=8 went superlinear at 150k rows,
-    * 446 s vs IVF's 54 s, because bucket population grows linearly with
-    * n once the signature stops slicing). Bits growing as log2(n) pins
-    * the EXPECTED bucket population (~8 per table) instead, so the
-    * banded-join pair stream grows ~linearly in n. Recall holds because
-    * flip-1 multi-probing widens with bits (bits+1 probes of 2^bits)
-    * and the table count still drives the (1-p)^tables miss decay; the
-    * ladder re-measured at 150k-400k is committed in CROSSOVER.md.
+    * The operating point is (tables, bits), both caller-set. `bits <= 0`
+    * = AUTO (the default): [[resolveBits]] at a target bucket population
+    * of 8, from one count of `vectors` — the only Spark job plan
+    * construction runs in auto mode (it doubles as the broadcast-bound
+    * check below). Explicit bits skip that count, and the bound check
+    * runs a LIMIT-bounded count instead; explicit bits with the bound at
+    * -1 give a fully lazy frame. The formula keeps the pair stream
+    * ~linear in n and holds recall on clustered corpora; isotropic
+    * corpora past ~2k vectors should pass explicit, narrower bits (see
+    * [[resolveBits]]).
     *
-    * REGIME-AWARE since r14 (VERDICT r13 #2): the full-rate ramp above
-    * is the CLUSTERED-regime formula — on isotropic corpora recall is
-    * collision-bound and the same ramp traded it DOWN (CROSSOVER §1:
-    * 0.536 → 0.312 at 25k), so auto mode first resolves the regime
-    * ([[resolveLshRegime]]: conf override or the measured
-    * [[neighborCosineProbe]]) and isotropic corpora take the half-rate
-    * anchored ramp instead (see [[resolveBits]]). At the registered
-    * sf0.1 corpus (2000 vectors ≈ the anchor) BOTH formulas resolve to
-    * the legacy 8, so the default operating point (and its RECALL
-    * block) is unchanged under the switch. AUTO RUNS UP TO THREE JOBS
-    * at plan-construction time (count, probe-query sample, one probe
-    * scan; conf `spark.graft.ann.lsh.regime` skips the last two, and
-    * since r15 both are also skipped whenever the two regime formulas
-    * resolve the same clamped width — every corpus at or below the
-    * anchor, the registered entries included) — callers that need a
-    * fully lazy frame pass explicit bits.
-    *
-    * STRATIFIED since r15 (VERDICT r14 #3; discovery finalized late
-    * r16): whenever the auto widths CAN diverge (past the anchor, no
-    * regime override), [[stratifiedKnnJoinLsh]] decides driver-side
-    * whether distinct neighbor-cosine populations exist — 1-D k-means
-    * over per-sample chooser-median scores; pure corpora return to the
-    * global path with zero extra Spark jobs. When populations are
-    * found at diverging widths, the query side splits by a per-row
-    * population label and each stratum runs at its own bits against
-    * the full candidate set. `spark.graft.ann.lsh.stratify` = off
-    * restores the single global choice.
-    *
-    * PROBE DEPTH (r16 late): the query side has probed the flip-1
-    * (Hamming-1) shell since r8; `spark.graft.ann.lsh.probeHamming=2`
-    * adds the margin-aware Hamming-2 shell — pair flips within the
-    * `spark.graft.ann.lsh.probeMarginBits` (default 8) lowest-|margin|
-    * planes, a strict superset of the flip-1 probe set over the same
-    * planes ([[org.apache.spark.sql.graft.SrpProbes]]). This is the
-    * in-family remedy for the isotropic recall wall: past the wall the
-    * per-table capture is collision-bound and most of the remaining
-    * collision mass sits in the H2 shell (CROSSOVER §1c — measured
-    * recall/volume grid at the 250k wall rung). Probe volume grows
-    * from `bits+1` to `1 + bits + mb(mb-1)/2` per table; default 1
-    * keeps the legacy probe set bit-identical.
+    * Probe set: per table, the query's own bucket plus every 1-bit flip
+    * (bits+1 probes of 2^bits).
     *
     * Since r13 the rescue pipeline is LAZY (ADVICE r12): the banded
     * aggregate is `persist`ed, not checkpointed — recomputable lineage
@@ -240,8 +201,6 @@ object Similarity {
     * short-query set makes it a zero-row union, not a driver probe). */
   def knnJoinLsh(vectors: DataFrame, k: Int = 3, tables: Int = 16,
       bits: Int = -1, rescueCap: Int = 1024): DataFrame = {
-    // memoized: auto-bits and the broadcast-bound guard share one count
-    var counted = -1L
     // ENFORCED BOUND (r14, VERDICT r13 #1): the two vector re-joins below
     // broadcast the full n × (4·dim + 8)-byte vector projection — the one
     // architectural memory bound in this operator. Past it the failure
@@ -249,22 +208,15 @@ object Similarity {
     // hint of the remedy; now it is a loud contract error that routes the
     // caller to the right tool. `spark.graft.ann.lsh.broadcastBound`
     // (bytes, default 1 GiB ≈ 4M × 64-dim rows; -1 disables) is checked
-    // against the memoized auto-bits count, or — when explicit bits kept
-    // the plan lazy — a LIMIT-bounded probe that scans at most
-    // bound/rowBytes + 1 rows (the [[IvfIndex.train]] trainCap shape), so
-    // the guard never pays a full count it doesn't already have. In auto
-    // mode the check runs INSIDE the count callback, right after counting
-    // (ADVICE r15): every auto resolution checks the bound — including
-    // the probe-skip branch where the two width formulas agree — and an
-    // over-bound corpus is still rejected before paying the regime
-    // probe's full corpus scan (the most expensive plan-construction
-    // job), because resolveBits counts before it probes.
+    // against the auto-bits count, or — when explicit bits kept the plan
+    // lazy — a LIMIT-bounded probe that scans at most bound/rowBytes + 1
+    // rows (the [[IvfIndex.train]] trainCap shape), so the guard never
+    // pays a full count it doesn't already have.
     val bound = longConf(vectors.sparkSession,
       "spark.graft.ann.lsh.broadcastBound", 1L << 30)
+    val rowBytes = 4L * 64 + 8
     def checkBound(n: Long): Unit = if (bound > 0) {
-      val rowBytes = 4L * 64 + 8
-      val maxRows = bound / rowBytes
-      require(n <= maxRows,
+      require(n <= bound / rowBytes,
         s"knnJoinLsh: corpus has >= $n rows; the exact-rerank banded shape " +
           s"broadcasts n x (4*dim+8) = ${n * rowBytes} bytes of vectors, over " +
           s"spark.graft.ann.lsh.broadcastBound=$bound. Past this regime use " +
@@ -272,137 +224,25 @@ object Similarity {
           "family (rerank from ~12-byte codes), or raise the bound / set it " +
           "to -1 if executors can hold the broadcast.")
     }
-    // STRATIFIED MIXED-CORPUS PATH (r15, VERDICT r14 #3): a corpus of
-    // clustered islands in an isotropic sea reads BETWEEN the regimes on
-    // the probe mean and, under one global bits choice, gives the
-    // isotropic half less than its pure-regime recall (r14 measured an
-    // even 10k+10k mix at 1.000/0.503 per half — the global n drives the
-    // width past what the isotropic STRATUM alone would resolve). When
-    // (a) bits are auto, (b) no regime conf override, and (c) the widths
-    // can diverge at this n (past the anchor — the probe-skip
-    // condition), the stratified path decides for itself (driver-side)
-    // whether distinct populations exist; when they do, each row is
-    // labeled by ITS nearest-probe-query cosine and each stratum runs
-    // at its own regime and size — see [[stratifiedKnnJoinLsh]].
-    // `spark.graft.ann.lsh.stratify` = off restores the r14
-    // single-choice behavior.
-    val stratifyConf = {
-      val v = vectors.sparkSession.conf
-        .get("spark.graft.ann.lsh.stratify", "auto").trim
-      require(Seq("auto", "off").contains(v),
-        s"spark.graft.ann.lsh.stratify must be auto|off, got $v")
-      v
-    }
-    if (bits <= 0 && stratifyConf == "auto"
-        && regimeConf(vectors.sparkSession) == "auto") {
-      counted = vectors.count()
-      checkBound(counted)
-      val (fullW, isoW) = autoWidths(counted, targetBucket = 8)
-      if (fullW != isoW) {
-        val thr = doubleConf(vectors.sparkSession,
-          "spark.graft.ann.lsh.regimeThreshold", 0.80)
-        // The stratify attempt is UNCONDITIONAL past this point (r16
-        // late — the r15/r16 percentile pre-filter is gone): the
-        // distributed per-query percentiles structurally CANNOT see a
-        // small minority population, because minority rows mostly
-        // choose MAJORITY samples as their nearest (the max over ~248
-        // cross-population cosines beats the max over ~8 own-population
-        // ones), so minority samples never even form groups in the
-        // probe — no percentile read on the group values, however wide,
-        // catches them. Discovery authority lives in
-        // [[stratifiedKnnJoinLsh]]'s driver-side k-means over the
-        // per-sample score (distributed median chooser cosine where a
-        // sample had choosers, within-sample top-1 where not), which sees
-        // minorities AND is orphan-clean; its validity gates (center
-        // gap + mass floor) return None with ZERO additional Spark jobs
-        // on a pure corpus — the probe below was already paid on every
-        // widths-diverge path (and is memoized for the global path's
-        // regime resolution).
-        stratifiedKnnJoinLsh(vectors, k, tables, rescueCap, thr) match {
-          case Some(out) => return out
-          case None      => () // strata degenerate/agree: global path
-        }
-      }
-    }
     val nBits = resolveBits(bits,
-      () => {
-        if (counted < 0) counted = vectors.count()
-        checkBound(counted)
-        counted
-      },
-      targetBucket = 8,
-      regime = () => {
-        val r = resolveLshRegime(vectors)
-        // RECALL WALL (r16, VERDICT r15 #3): the broadcast bound rejects
-        // by MEMORY; this rejects (or warns, the default) by RECALL
-        // REGIME — the other way the banded exact-rerank shape becomes
-        // the wrong tool. Runs exactly when the isotropic verdict is
-        // about to pick the anchored width, so registered corpora (at or
-        // under the anchor: probe skipped, width < wall) never see it.
-        if (r == "isotropic")
-          checkRecallWall(vectors.sparkSession,
-            autoWidths(counted, targetBucket = 8)._2, counted)
-        r
-      },
-      session = () => vectors.sparkSession)
-    if (counted < 0 && bound > 0) {
-      // explicit bits kept the plan lazy: LIMIT-bounded probe, never a
-      // full count the caller didn't ask for
-      val maxRows = bound / (4L * 64 + 8)
+      () => { val n = vectors.count(); checkBound(n); n },
+      targetBucket = 8)
+    if (bits > 0 && bound > 0)
       checkBound(vectors.limit(
-        math.min(maxRows + 1, Int.MaxValue.toLong).toInt).count())
-    }
-    bandedKnnPass(vectors, k, tables, nBits, rescueCap, lit(true))
-  }
-
-  /** One banded-join pass of [[knnJoinLsh]] at a FIXED signature width,
-    * with the query side restricted to `queryPred` (lit(true) = the full
-    * self-join). Candidates are ALWAYS the full corpus — a stratified
-    * call changes each stratum's operating point, never its candidate
-    * set, so cross-stratum neighbors stay reachable. The rescue cap
-    * applies per pass (per stratum on the stratified path). */
-  private def bandedKnnPass(vectors: DataFrame, k: Int, tables: Int,
-      nBits: Int, rescueCap: Int, queryPred: Column): DataFrame = {
+        math.min(bound / rowBytes + 1, Int.MaxValue.toLong).toInt).count())
     val topk = udaf(graft.functions.TopKAggregator.agg(k))
     val sigs = graft.functions.VectorFunctions.srpSignature(
       col("embedding"), bands = tables, bits = nBits, dim = 64, seed = 42)
     val all = vectors.withColumn("sigs", sigs)
     val cand = all.select(col("vec_id").as("c_id"),
       posexplode(col("sigs")).as(Seq("t", "bucket")))
-    // MULTI-PROBE DEPTH (r16 late): the Hamming-1 shell below has been
-    // the probe set since r8; `spark.graft.ann.lsh.probeHamming` = 2
-    // adds the margin-aware Hamming-2 shell ([[SrpProbes]] — pair flips
-    // within the `probeMarginBits` lowest-|margin| planes, a strict
-    // SUPERSET of the flip-1 set) for the isotropic past-the-wall
-    // regime, where per-table capture is collision-bound and the H2
-    // shell is where the remaining collision mass lives (CROSSOVER
-    // §1c). Default 1 keeps the legacy probe set bit-identical.
-    val hamming = {
-      val h = intConf(vectors.sparkSession,
-        "spark.graft.ann.lsh.probeHamming", 1)
-      require(h == 1 || h == 2,
-        s"spark.graft.ann.lsh.probeHamming must be 1 or 2, got $h")
-      h
-    }
-    val qProbe =
-      if (hamming == 2) {
-        val mb = math.max(2, math.min(intConf(vectors.sparkSession,
-          "spark.graft.ann.lsh.probeMarginBits", 8), nBits))
-        val ppb = 1 + nBits + mb * (mb - 1) / 2
-        vectors.filter(queryPred)
-          .select(col("vec_id").as("q_id"),
-            posexplode(graft.functions.VectorFunctions.srpProbes(
-              col("embedding"), bands = tables, bits = nBits, dim = 64,
-              seed = 42, marginBits = mb)).as(Seq("pos", "bucket")))
-          .select(col("q_id"),
-            (col("pos") / lit(ppb)).cast("int").as("t"), col("bucket"))
-      } else all.filter(queryPred)
-        .select(col("vec_id").as("q_id"),
-          posexplode(col("sigs")).as(Seq("t", "bucket")))
-        .select(col("q_id"), col("t"), explode(expr(
-          s"""array_union(array(bucket),
-             |  transform(sequence(0, ${nBits - 1}), p -> int(bucket ^ shiftleft(1, p))))"""
-            .stripMargin)).as("bucket"))
+    val qProbe = all
+      .select(col("vec_id").as("q_id"),
+        posexplode(col("sigs")).as(Seq("t", "bucket")))
+      .select(col("q_id"), col("t"), explode(expr(
+        s"""array_union(array(bucket),
+           |  transform(sequence(0, ${nBits - 1}), p -> int(bucket ^ shiftleft(1, p))))"""
+          .stripMargin)).as("bucket"))
     // no dropDuplicates pre-pass: the same pair surfacing via several
     // tables/probes scores identically, and TopKAggregator is idempotent
     // on identical (score, id) — duplicates die inside the partial
@@ -440,7 +280,7 @@ object Similarity {
       .select(col("q_id"), col("c_id"))
     val cVecs = vectors.select(col("vec_id").as("c_id"),
       col("embedding").as("v_c"))
-    val qVecs = vectors.filter(queryPred)
+    val qVecs = vectors
       .select(col("vec_id").as("q_id"), col("embedding").as("v_q"))
     val nnRaw = pairs.join(broadcast(cVecs), "c_id")
       .join(broadcast(qVecs), "q_id")
@@ -473,7 +313,7 @@ object Similarity {
       else {
         val done = nnRaw
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val short = vectors.filter(queryPred)
+        val short = vectors
           .select(col("vec_id").as("q_id"))
           .join(done.filter(size(col("nn")) >= k).select("q_id"),
             Seq("q_id"), "left_anti")
@@ -498,310 +338,6 @@ object Similarity {
         col("col.id").as("c_id"), round(col("col.score"), 6).as("cosine"))
   }
 
-  /** Per-stratum auto-bits for a MIXED corpus (r15, VERDICT r14 #3;
-    * generalized past two strata in r16, VERDICT r15 #2).
-    *
-    * Labeling: the probe's own statistic, per row — cosine to the
-    * nearest of the memoized probe's deterministic sample vectors
-    * (a clustered row is near some sampled point of its island; an
-    * isotropic row is near nothing). The sample rows themselves
-    * would self-match at cosine 1, so they are pinned driver-side by
-    * their per-sample SCORE (below).
-    *
-    * STRATA DISCOVERY (r16; minority-clean scoring r16 late): each
-    * sample gets a score — its DISTRIBUTED median chooser cosine when
-    * any corpus row chose it as nearest (orphan-clean: a cluster's only
-    * sampled row still reads its population's pair cosine from its own
-    * cluster's choosers; the median, not the extreme-valued max — see
-    * [[ChooserStats]]),
-    * falling back to its WITHIN-SAMPLE top-1 when it had no choosers
-    * (the minority signature: a small population's rows choose
-    * majority samples, so its samples form no groups — the fallback
-    * reads their own low regime). The scores are clustered
-    * driver-side by 1-D Lloyd k-means — the largest k ≤ `maxStrata`
-    * (default 4) whose clusters all hold ≥ minMass samples (nq/16,
-    * capped at 24 absolute so widening
-    * `spark.graft.ann.lsh.probeQueries` lowers the discoverable
-    * population share below ~6%) and whose adjacent CENTERS sit ≥
-    * `strataMinGap` apart (default 0.15, well under the ~0.3
-    * separation between pure populations) wins; bin boundaries are
-    * the midpoints between adjacent centers. Center separation, not
-    * empty-gap detection: a 256 sample of a multi-population corpus
-    * always carries stragglers with mid-range scores that fill any
-    * fixed gap window (measured: the 30k 3-population corpus reads
-    * as a continuum p0=0.24 / p50=0.71 / p100=0.98 with no
-    * adjacent-point gap ≥ 0.12, while its k-means centers sit at
-    * ~0.37/0.70/0.97). Stragglers simply join the nearest
-    * population. A corpus with THREE-plus
-    * neighbor-cosine populations (e.g. tight islands + loose islands
-    * + an isotropic sea) thus gets one operating point per
-    * population: under the r15 two-way split the two sub-threshold
-    * populations resolved bits from their COMBINED size — wider than
-    * either alone under the half-rate ramp — and each read below its
-    * pure-regime recall (CROSSOVER §5b). Over-splitting one true
-    * population is self-correcting: its halves resolve the same
-    * width and merge back into one pass.
-    *
-    * Each bin's regime is its sample-mean top-1 vs the regime
-    * threshold (clustered → full-rate width, isotropic → anchored
-    * half-rate width, both from [[autoWidths]] at the BIN's size).
-    * Bins resolving to the SAME width merge into one pass (their
-    * operating points are identical — the widths stay the per-bin
-    * resolutions, never re-resolved at the merged size). The query
-    * side splits by bin; the candidate side stays the FULL corpus in
-    * every pass (cross-stratum neighbors reachable; the label column
-    * is evaluated only on the query path). Cost when triggered: the
-    * candidate side signs and bucket-joins once per DISTINCT width
-    * (each pass against that width's share of the queries) plus one
-    * label-count job — paid only on corpora the probe measures as
-    * mixed AND where the per-bin widths actually diverge; returns
-    * None otherwise (global path). Row contract is unchanged: the
-    * bins partition the query set, so the union carries every query
-    * exactly once. */
-  private def stratifiedKnnJoinLsh(vectors: DataFrame, k: Int,
-      tables: Int, rescueCap: Int, thr: Double): Option[DataFrame] = {
-    import graft.functions.VectorFunctions.nearestCellSim
-    val session = vectors.sparkSession
-    // the memoized probe (first probe on this corpus, or a memo hit):
-    // labels must be relative to the SAME sample the stats measured
-    val pr = regimeProbeStats(vectors)
-    val qVals = pr.ids
-    val flat = pr.flat
-    val nq = qVals.length
-    if (nq < 2) return None
-    val dim = flat.length / nq
-    val mat = flat.toArray
-    def cos(i: Int, j: Int): Double = {
-      var dot = 0.0; var ni = 0.0; var nj = 0.0; var d = 0
-      while (d < dim) {
-        val a = mat(i * dim + d).toDouble; val b = mat(j * dim + d).toDouble
-        dot += a * b; ni += a * a; nj += b * b; d += 1
-      }
-      val denom = math.sqrt(ni) * math.sqrt(nj)
-      if (denom == 0.0) 0.0 else dot / denom
-    }
-    // Per-sample SCORE (r16 late): the DISTRIBUTED median chooser
-    // cosine where the sample had choosers, the WITHIN-SAMPLE top-1
-    // where it had none. The distributed value is orphan-clean — a
-    // sample that is its cluster's only sampled row still reads its
-    // own population's pair cosine (its own cluster's rows choose
-    // it), where its within-sample top-1 would read the cross-cluster
-    // cosine and fake a low-cosine population on a PURE clustered
-    // corpus. The MEDIAN, not the max: max-over-choosers is
-    // extreme-valued and drifts up with chooser count
-    // ([[ChooserStats]] — loose 0.70-islands read ~0.85 and merged
-    // into the tight bin). A genuine minority sample, by contrast,
-    // usually has NO choosers (its population's rows choose majority
-    // samples — the max over many cross-population cosines beats the
-    // max over few own-population ones), and its within-sample top-1
-    // correctly reads its own low regime. The within-sample fallback
-    // is computed only for the absent samples: O(#absent · nq · dim)
-    // driver flops, tiny at every probe width.
-    val sampleTop1 = (0 until nq).map { i =>
-      val score = pr.perQuery.get(i).map(_.median).getOrElse(
-        (0 until nq).collect { case j if j != i => cos(i, j) }.max)
-      (qVals(i), score)
-    }
-    // 1-D Lloyd k-means over the sample top-1 cosines: the largest
-    // valid k (all clusters >= minMass, adjacent centers >= minGap
-    // apart) up to maxStrata wins; none valid = one population
-    val maxStrata = math.max(2,
-      intConf(session, "spark.graft.ann.lsh.maxStrata", 4))
-    val minGap =
-      doubleConf(session, "spark.graft.ann.lsh.strataMinGap", 0.15)
-    // Mass floor: fractional (nq/16 ≈ 6%) at the default 256-sample
-    // probe — small enough that noise tails don't form a "population",
-    // large enough to estimate a bin mean — but CAPPED at 24 absolute
-    // samples (r16 late): what validates a population is an absolute
-    // count, not a corpus share, so widening the probe
-    // (`spark.graft.ann.lsh.probeQueries`) lowers the discoverable
-    // population share instead of freezing it at ~6% (24 of 1024
-    // samples ≈ a 2.3% population; at the default 256 the cap is
-    // inactive — min(16, 24) — and behavior is unchanged).
-    val minMass = math.max(4, math.min(nq / 16, 24))
-    val sorted = sampleTop1.map(_._2).sorted
-    // smallest plausible-population cluster rejected on mass alone
-    // across the k ladder (see the near-miss tracking in kmeans1d)
-    var massOnlyMiss: Option[Int] = None
-    def kmeans1d(k: Int): Option[Seq[Double]] = {
-      var centers = (0 until k)
-        .map(i => sorted(math.min(nq - 1, ((i + 0.5) / k * nq).toInt)))
-        .toArray
-      def assign(): (Array[Double], Array[Int]) = {
-        val sums = Array.fill(k)(0.0)
-        val counts = Array.fill(k)(0)
-        sorted.foreach { v =>
-          var best = 0; var bd = math.abs(v - centers(0)); var c = 1
-          while (c < k) {
-            val d = math.abs(v - centers(c))
-            if (d < bd) { bd = d; best = c }
-            c += 1
-          }
-          sums(best) += v; counts(best) += 1
-        }
-        (sums, counts)
-      }
-      var iter = 0
-      var moved = true
-      while (moved && iter < 25) {
-        moved = false
-        val (sums, counts) = assign()
-        (0 until k).foreach { c =>
-          if (counts(c) > 0) {
-            val m = sums(c) / counts(c)
-            if (math.abs(m - centers(c)) > 1e-9) { moved = true; centers(c) = m }
-          }
-        }
-        iter += 1
-      }
-      // validate mass against the FINAL centers (review r16): exiting
-      // at the iteration cap would otherwise judge one-update-stale
-      // assignments
-      val counts = assign()._2
-      val cs = centers.toSeq.sorted
-      val gapsOk =
-        cs.sliding(2).forall(p => p.size < 2 || p(1) - p(0) >= minGap)
-      val massOk = counts.forall(_ >= minMass)
-      // near-miss tracking (r16 late): a split whose centers separate
-      // cleanly but whose smallest cluster is a PLAUSIBLE population
-      // (>= the hard floor of 4, < minMass) failed only on sample
-      // width — the caller can make it discoverable by widening the
-      // probe, and deserves to be told so (the loud-contract pattern).
-      // An empty/straggler cluster (< 4) is k-too-large, not a
-      // population; gap failures are genuinely one population.
-      if (gapsOk && !massOk && counts.min >= 4)
-        massOnlyMiss = Some(massOnlyMiss.fold(counts.min)(
-          math.min(_, counts.min)))
-      if (gapsOk && massOk) Some(cs) else None
-    }
-    val centersOpt = (maxStrata to 2 by -1).view.flatMap(kmeans1d).headOption
-    if (centersOpt.isEmpty) { // one population after all
-      val widen = massOnlyMiss match {
-        case Some(m) if nq < 4096 =>
-          // Actionable width (r16 late, measured at the CROSSOVER §5c
-          // 97k rung where 1024 drew 20 samples of an expected ~31 and
-          // missed the 24 floor by four): at the OBSERVED share m/nq
-          // the suggested width's expected count must clear the capped
-          // floor with a one-sigma binomial margin — x − √x ≥ 24 ⇒
-          // x ≥ ~29.4 expected samples — rounded up to a power of two
-          // and clamped at the probe's 4096 cap. The suggestion leans
-          // CONSERVATIVE twice over: m is the min near-miss across the
-          // whole k ladder (a k>2 sub-split can undercount the k=2
-          // population — measured ~4 of 256 at the 29k rung, where the
-          // true minority held ~8), and a sub-floor count is itself a
-          // noisy share estimate; both errors over-widen, never
-          // under-widen, and the probe cost is linear in the width.
-          // m < minMass ≤ 24 guarantees the suggestion > nq.
-          val need = 29.4 * nq / m
-          val suggest = math.min(4096L,
-            math.pow(2, math.ceil(math.log(need) / math.log(2))).toLong)
-          s"; a well-separated candidate population of ~$m samples sits " +
-            s"under the $minMass mass floor — widening " +
-            s"spark.graft.ann.lsh.probeQueries (currently $nq, " +
-            s"try >= $suggest) may make it discoverable"
-        case _ => ""
-      }
-      logOnce(session, "INFO graft-ann: lsh stratify probe found no " +
-        f"valid sample split (centers < $minGap%.2f apart or under " +
-        f"$minMass mass; top-1 spread p0=${sorted.head}%.2f " +
-        f"p50=${sorted(nq / 2)}%.2f p100=${sorted.last}%.2f); global path" +
-        widen)
-      return None
-    }
-    // bin boundary = midpoint between adjacent centers; bin of cosine
-    // c = the number of boundaries at or below c (ascending)
-    val centers = centersOpt.get
-    val boundaries = centers.sliding(2).collect {
-      case Seq(a, b) => (a + b) / 2.0
-    }.toSeq
-    def binOfCos(c: Double): Int = boundaries.count(_ <= c)
-    val nBins = boundaries.size + 1
-    // per-bin regime from the bin's sample mean top-1 cosine
-    val binMeans = (0 until nBins).map { b =>
-      val vs = sampleTop1.map(_._2).filter(c => binOfCos(c) == b)
-      if (vs.isEmpty) thr else vs.sum / vs.size
-    }
-    // sample rows pinned driver-side to their within-sample bin
-    val sampleBins: Map[Int, Seq[Any]] = sampleTop1
-      .groupBy { case (_, c) => binOfCos(c) }
-      .view.mapValues(_.map(_._1)).toMap
-    def inList(ids: Seq[Any]): Column =
-      if (ids.isEmpty) lit(false) else col("vec_id").isin(ids: _*)
-    // null-embedding rows get a NULL cosine → coalesce to -1 (bin 0,
-    // the lowest-cosine/recall-safe stratum) so the label column is
-    // never null: a null label would NPE the getInt in the count job
-    // below (ADVICE r15), and such rows vanish from every pass anyway
-    // (null sigs explode to nothing) — exactly the global path's
-    // behavior.
-    val simCol = coalesce(
-      nearestCellSim(col("embedding"), flat, nq), lit(-1.0d))
-    val computedBin = boundaries.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(simCol >= b, 1).otherwise(0)
-    }
-    val labelCol = sampleBins.foldLeft(when(lit(false), lit(0))) {
-      case (acc, (b, ids)) => acc.when(inList(ids), lit(b))
-    }.otherwise(computedBin)
-    // persist: the label expression is a fused 256-cosine loop per row,
-    // and without materialization every consumer below (the count job,
-    // each pass's query filter, qVecs filter, and rescue anti-join)
-    // would re-evaluate it over the full corpus (review r15). Registered
-    // for [[sweepAnnCaches]] like the rescue-path persists.
-    val labeled = vectors.withColumn("graft_lsh_bin", labelCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    annCacheRegistry.add(labeled)
-    val counts = labeled.groupBy("graft_lsh_bin").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // per-bin width at the bin's OWN size and regime
-    val binBits = (0 until nBins).map { b =>
-      val n = counts.getOrElse(b, 0L)
-      val w = autoWidths(math.max(n, 2L), targetBucket = 8)
-      b -> (if (binMeans(b) >= thr) w._1 else w._2)
-    }.toMap
-    val binsDesc = (0 until nBins).map { b =>
-      val regime = if (binMeans(b) >= thr) "clustered" else "isotropic"
-      f"bin$b[mean=${binMeans(b)}%.2f $regime n=${counts.getOrElse(b, 0L)}" +
-        s" -> bits=${binBits(b)}]"
-    }.mkString(" ")
-    logOnce(session, s"INFO graft-ann: lsh stratified auto-bits $binsDesc")
-    // merge bins sharing a resolved width into one pass at that width
-    val widthGroups = binBits.groupBy(_._2)
-      .view.mapValues(_.keys.toSeq.sorted).toSeq.sortBy(_._1)
-    // per-bin recall wall (r16): an isotropic bin large enough to
-    // resolve past the wall gets the same loud contract as the global
-    // path — the wall is a property of the operating width, not of how
-    // the corpus was partitioned. Checked AFTER the merge decision
-    // (review r16) so a merged-to-global fallback whose MEAN reads
-    // isotropic warns once via the global path's regime callback, not
-    // twice — but a merged fallback whose mean reads CLUSTERED would
-    // skip the global check entirely (the wall only fires on the
-    // isotropic verdict), so for that case the per-bin check still
-    // runs here: a discovered isotropic bin past the wall must be
-    // loud even when a clustered majority drags the mean over the
-    // threshold (review r16 late).
-    def perBinWall(): Unit = (0 until nBins).foreach { b =>
-      if (binMeans(b) < thr)
-        checkRecallWall(session, binBits(b), counts.getOrElse(b, 0L))
-    }
-    if (widthGroups.size < 2) { // one width fits all: global is cheaper
-      // the bin summary keeps this line corpus-specific, so the
-      // print-once dedup can never suppress one corpus's fallback
-      // because another corpus merged at the same width
-      logOnce(session, "INFO graft-ann: lsh stratify bins all resolve " +
-        s"bits=${widthGroups.head._1} ($binsDesc); global path")
-      if (pr.stats.mean >= thr) perBinWall()
-      // the labeled frame is dead on this path — release it instead of
-      // pinning a corpus-sized cache until the next sweep (review r16
-      // late; the unconditional attempt made this branch common)
-      labeled.unpersist(blocking = false)
-      return None
-    }
-    perBinWall()
-    Some(widthGroups.map { case (bits, bins) =>
-      bandedKnnPass(labeled, k, tables, bits, rescueCap,
-        col("graft_lsh_bin").isin(bins: _*))
-    }.reduce(_ unionByName _))
-  }
-
   /** Multi-table SRP LSH ANN — the standard high-recall LSH form:
     * `tables` INDEPENDENT `bits`-plane hash tables (one [[
     * org.apache.spark.sql.graft.SrpSignature]] call emits all `tables`
@@ -824,14 +360,12 @@ object Similarity {
     * [[Dedup.embedNearDupsLsh]]. */
   def lshTopK(candidates: DataFrame, queryFilter: Column, k: Int = 5,
       tables: Int = 8, bits: Int = 6): DataFrame = {
-    // bits <= 0 = auto, same log2(n/target) shape as [[knnJoinLsh]] but
-    // at a denser target bucket (~32): the probe side here is a bounded
+    // bits <= 0 = auto: the [[resolveBits]] formula of [[knnJoinLsh]]
+    // at a denser target bucket (32): the probe side here is a bounded
     // query set, so candidate volume per query — not the symmetric pair
-    // stream — is what the width controls. Auto resolves to the legacy
-    // 6 at the registered sf0.1 corpus (2000 vectors).
-    val nBits = resolveBits(bits, () => candidates.count(), targetBucket = 32,
-      regime = () => resolveLshRegime(candidates),
-      session = () => candidates.sparkSession)
+    // stream — is what the width controls. Auto resolves to the
+    // registered 6 at the sf0.1 corpus (2000 vectors).
+    val nBits = resolveBits(bits, () => candidates.count(), targetBucket = 32)
     val sigs = graft.functions.VectorFunctions.srpSignature(
       col("embedding"), bands = tables, bits = nBits, dim = 64, seed = 42)
     val all = candidates.withColumn("sigs", sigs)
@@ -895,383 +429,40 @@ object Similarity {
   def resolveProbes(cells: Int, probes: Int, num: Int, den: Int): Int =
     if (probes > 0) probes else math.max(1, (cells * num + den - 1) / den)
 
-  /** Auto SRP signature width: `bits <= 0` resolves to
-    * round(log2(n / targetBucket)) clamped to [4, 24] — the
-    * [[resolveProbes]] discipline for the OTHER fixed-knob scale cliff
-    * (CROSSOVER.md §1 r12: bits=8 at 150k rows → linearly growing
-    * bucket populations → superlinear banded join). Pinning the
-    * EXPECTED per-table bucket population at `targetBucket` keeps the
-    * pair stream ~linear in n; the count supplier runs only in auto
-    * mode (explicit bits stay fully lazy). The cap at 24 bounds the
-    * flip-1 probe fan-out (bits+1 probes/table) and keeps bucket ids
-    * comfortably in int range. */
+  /** Auto SRP signature width: `bits > 0` is returned as-is and the
+    * count supplier never runs (explicit bits keep the plan fully lazy);
+    * `bits <= 0` resolves to
+    *
+    *   clamp(round(log2(n / targetBucket)), 4, 24)
+    *
+    * from one count of the corpus. This is the [[resolveProbes]]
+    * discipline for the OTHER fixed-knob scale cliff (CROSSOVER.md §1
+    * r12: bits=8 at 150k rows → linearly growing bucket populations →
+    * superlinear banded join). Pinning the EXPECTED per-table bucket
+    * population at `targetBucket` keeps the pair stream ~linear in n —
+    * the CROSSOVER §1 clustered ladder holds recall 1.000 up it. The cap
+    * at 24 bounds the flip-1 probe fan-out (bits+1 probes/table) and
+    * keeps bucket ids comfortably in int range.
+    *
+    * ISOTROPIC corpora: true neighbors sit at moderate cosine there
+    * (θ ≈ 50-60°), per-plane collision is ≈ 0.65-0.7, and recall decays
+    * ~p^bits per table, so the full-rate ramp trades recall down as n
+    * grows (CROSSOVER §1 isotropic table: 0.536 at a fixed 10 bits vs
+    * 0.312 at auto 12 on 25k vectors). At the registered sf0.1 corpus
+    * (2000 vectors) the formula resolves to 8 for the k-NN join and 6
+    * for the ANN entry; isotropic corpora above ~2k vectors should pass
+    * explicit bits read off that table, or route to the IVF family. */
   def resolveBits(bits: Int, count: () => Long, targetBucket: Int): Int =
-    resolveBits(bits, count, targetBucket, () => "clustered")
-
-  /** The corpus-size scale at which the committed recall grids were
-    * measured (RECALL_r*.json's registered sf0.1 corpus: 2000 vectors;
-    * the CROSSOVER isotropic rungs anchor here too). The isotropic
-    * auto-bits ramp grows FROM this anchor — both regime formulas
-    * resolve to the same width at this n by construction, which is what
-    * keeps every registered operating point invariant under the regime
-    * switch. */
-  private[graft] val LshAnchorN = 2048L
-
-  /** Regime-aware auto width (r14, VERDICT r13 #2). The two regimes need
-    * opposite things from the signature:
-    *
-    *  - CLUSTERED (real corpora): true neighbors sit at near-dup cosine
-    *    (θ → 0), so per-plane collision probability 1 - θ/π ≈ 1 and
-    *    recall survives ANY width — the binding constraint is the pair
-    *    stream, so bits track the bucket-POPULATION target at full rate,
-    *    log2(n / targetBucket) (bucket population pinned ≈ targetBucket,
-    *    pair stream ~linear in n; the CROSSOVER §1 clustered ladder
-    *    holds recall 1.000 up it).
-    *  - ISOTROPIC (the adversarial floor): nearest neighbors sit at
-    *    moderate cosine (θ ≈ 50-60°), per-plane collision ≈ 0.65-0.7,
-    *    and recall decays ~p^bits per table — CROSSOVER §1 measured the
-    *    full-rate ramp TRADING recall DOWN (25k: 0.536 at the old fixed
-    *    10 bits → 0.312 at auto 12). Here bits grow at HALF rate from
-    *    the measured-recall anchor: log2(AnchorN/target) +
-    *    0.5·log2(n/AnchorN) — bucket population grows as sqrt(n)
-    *    (candidate volume O(n^1.5) total: the honest price of recall in
-    *    the regime where approximation has no structure to exploit),
-    *    capped by the full-rate width so small corpora are never made
-    *    WIDER than the population target.
-    *
-    * Which regime applies comes from `regime()` — resolved by
-    * [[resolveLshRegime]] (conf override or the measured
-    * [[neighborCosineProbe]]) and evaluated only in auto mode. */
-  def resolveBits(bits: Int, count: () => Long, targetBucket: Int,
-      regime: () => String,
-      session: () => SparkSession = () =>
-        org.apache.spark.sql.SparkSession.active): Int =
     if (bits > 0) bits
     else {
       val n = math.max(count(), 2L)
-      val (fullW, isoW) = autoWidths(n, targetBucket)
-      // Probe only when the verdict can MOVE the width (ADVICE r14): at
-      // or below the anchor the half-rate ramp sits at/above the
-      // full-rate one, so min(full, anchored) == full for BOTH regimes
-      // and the (memoized but still ~1 s cold) corpus scan buys nothing;
-      // clamping can also collapse the two raws to one resolved width.
-      // The skip still VALIDATES the regime conf (review r15): a typo'd
-      // override must fail loudly at first use, not silently pass until
-      // the corpus grows past the anchor. The conf is read from the
-      // CALLER-threaded session (ADVICE r15) — operators pass their
-      // frame's own sparkSession, so a multi-session app validates the
-      // conf on the session actually in use, not SparkSession.active.
-      val (r, resolved) =
-        if (fullW == isoW) {
-          regimeConf(session())
-          ("any (formulas agree; probe skipped)", fullW)
-        } else if (regime() == "isotropic") ("isotropic", isoW)
-        else ("clustered", fullW)
-      System.err.println(s"INFO graft-ann: lsh auto-bits n=$n regime=$r" +
+      val raw = math.round(math.log(n.toDouble / targetBucket) / math.log(2.0))
+      val resolved = math.max(4, math.min(24, raw.toInt))
+      System.err.println(s"INFO graft-ann: lsh auto-bits n=$n" +
         s" targetBucket=$targetBucket -> bits=$resolved")
       resolved
     }
 
-  /** The two clamped auto-width candidates at corpus size `n`: (the
-    * clustered full-rate width, the isotropic anchored half-rate width).
-    * Equal at or below the anchor — the condition under which auto mode
-    * skips the regime probe entirely. Factored out of [[resolveBits]] so
-    * the stratified path can resolve each stratum at ITS regime and size
-    * with the identical formulas. */
-  private[graft] def autoWidths(n0: Long, targetBucket: Int): (Int, Int) = {
-    def log2(x: Double) = math.log(x) / math.log(2.0)
-    def clamp(raw: Int) = math.max(4, math.min(24, raw))
-    val n = math.max(n0, 2L)
-    val full = math.round(log2(n.toDouble / targetBucket)).toInt
-    val anchored = math.round(log2(LshAnchorN.toDouble / targetBucket) +
-      0.5 * log2(n.toDouble / LshAnchorN)).toInt
-    (clamp(full), clamp(math.min(full, anchored)))
-  }
-
-  /** Measured LSH regime verdict for a `(vec_id, embedding)` corpus:
-    * mean top-1 neighbor cosine — the quantity that DIRECTLY decides
-    * whether wider signatures preserve recall (per-plane collision
-    * probability for a neighbor at angle θ is 1 - θ/π; clustered
-    * corpora hold neighbors at θ → 0 and tolerate any width, isotropic
-    * ones at θ ≈ 55° lose ~p^bits recall per table — the CROSSOVER §1
-    * isotropic table). A driver-side SAMPLE cannot see this (cluster
-    * count grows with n, so a bounded sample's same-cluster pair count
-    * decays to zero), so the probe is one distributed pass: `nQueries`
-    * hash-sampled query vectors re-enter as a literal matrix (the
-    * [[org.apache.spark.sql.graft.NearestCellSim]] machinery — queries
-    * play the centroid role), every non-query row scores its nearest
-    * query in one codegen'd scan, and per-query max cosine over the
-    * rows that chose it is a tight lower bound on that query's true
-    * top-1 neighbor. Cost: one corpus scan evaluating two fused
-    * nQueries-cosine loops per row (argmax id + max sim are separate
-    * native expressions) — ~2× the count job auto mode already pays,
-    * memoized per corpus by [[resolveLshRegime]].
-    *
-    * `spark.graft.ann.lsh.regimeThreshold` (default 0.80) splits the
-    * verdicts: measured means are ~0.97+ on the clustered generator and
-    * ~0.5-0.7 on isotropic ones (testdata embeddings included), so the
-    * threshold sits in the gap. Returns the raw mean so callers can log
-    * or re-threshold. */
-  private[graft] def neighborCosineProbe(vectors: DataFrame,
-      nQueries: Int = 256): Double =
-    neighborCosineStats(vectors, nQueries).mean
-
-  /** Summary of the probe's per-query top-1 cosine distribution. The
-    * regime verdict thresholds the MEAN; `p10`/`p90` make an even MIX
-    * (clustered islands in an isotropic sea) visible — such a corpus
-    * reads between the regimes on the mean but shows a wide p10/p90
-    * spread (spec-pinned on an even clustered+isotropic union: p90
-    * near-dup-grade, p10 isotropic-grade). The 2% tails (r16 late) are
-    * diagnostic only — logged at regime resolution so a heavy-tailed
-    * distribution is visible where the tuning decision is made. Note
-    * what this distribution structurally CANNOT show: a small MINORITY
-    * population. Its rows mostly choose MAJORITY samples as their
-    * nearest (the max over many cross-population cosines beats the max
-    * over few own-population ones), so minority samples never form
-    * groups here and no percentile of the group values catches them —
-    * minority discovery lives in [[stratifiedKnnJoinLsh]]'s per-sample
-    * score over the RAW `perQuery` map instead. Per-partition
-    * regimes remain a documented non-feature. */
-  private[graft] final case class ProbeStats(mean: Double, p02: Double,
-      p10: Double, p90: Double, p98: Double)
-  /** The probe's deterministic query sample: `nQueries` md5(vec_id)-order
-    * rows as (ids, flattened row-major embedding matrix). Shared by the
-    * probe scan and the stratified path's per-row labeling, which must
-    * agree on the sample to agree on the labels. */
-  private[graft] def probeSample(vectors: DataFrame,
-      nQueries: Int = 256): (Seq[Any], Seq[Float]) = {
-    val qRows = vectors
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(md5(col("vec_id").cast("string")))
-      .limit(nQueries)
-      .collect()
-    (qRows.map(_.get(0)).toSeq, qRows.flatMap(_.getSeq[Float](1)).toSeq)
-  }
-
-  private[graft] def neighborCosineStats(vectors: DataFrame,
-      nQueries: Int = 256): ProbeStats =
-    neighborCosineDistWith(vectors, probeSample(vectors, nQueries))._1
-
-  /** Per-chosen-sample distributed statistics over the rows that chose
-    * the sample as their nearest: `top1` = the MAX chooser cosine — an
-    * extreme-value statistic that drifts UP with chooser count (it
-    * feeds the regime summary, whose 0.80 threshold was calibrated on
-    * it), `median` = the MEDIAN chooser cosine — the population's
-    * characteristic operating cosine, which the stratified score uses
-    * instead: max-over-choosers measured ~0.85 on loose 0.70-islands
-    * (~50 choosers each), within the 0.15 center gap of tight islands
-    * and merging their bins, while the median stays at the pair-cosine
-    * level (~0.70). */
-  private[graft] final case class ChooserStats(top1: Double, median: Double)
-
-  /** The probe's FULL per-query result against an already-collected
-    * sample — so the memoized path ([[regimeProbeStats]]) collects the
-    * sample ONCE and shares it with the stratified labeler. Returns the
-    * summary stats plus the raw per-query map (sample index →
-    * [[ChooserStats]] over the non-sample rows that chose that sample
-    * as their nearest), collected driver-side: it is ≤ nQueries rows,
-    * the same single groupBy job the summary aggregation already ran,
-    * and the summary quantiles become exact instead of
-    * percentile_approx. A sample ABSENT from the map had NO choosers —
-    * for a minority-population sample that absence is itself the
-    * signal (see [[stratifiedKnnJoinLsh]]'s per-sample score). */
-  private[graft] def neighborCosineDistWith(vectors: DataFrame,
-      sample: (Seq[Any], Seq[Float])): (ProbeStats, Map[Int, ChooserStats]) = {
-    import graft.functions.VectorFunctions.{nearestCellSim, nearestCells}
-    val (qVals, flat) = sample
-    if (qVals.length < 2)
-      return (ProbeStats(0.0, 0.0, 0.0, 0.0, 0.0), Map.empty)
-    val nq = qVals.length
-    val rows = vectors
-      .filter(!col("vec_id").isin(qVals: _*))
-      .select(
-        element_at(nearestCells(col("embedding"), 0 until nq, flat, 1), 1)
-          .as("q"),
-        nearestCellSim(col("embedding"), flat, nq).as("s"))
-      .groupBy(col("q")).agg(max(col("s")).as("top1"),
-        expr("percentile_approx(s, 0.5)").as("med"))
-      .collect()
-    val per = rows.iterator
-      .filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
-      .map(r => r.getInt(0) -> ChooserStats(r.getDouble(1), r.getDouble(2)))
-      .toMap
-    if (per.isEmpty) return (ProbeStats(0.0, 0.0, 0.0, 0.0, 0.0), per)
-    val sorted = per.values.iterator.map(_.top1).toArray.sorted
-    def q(p: Double): Double =
-      sorted(math.min(sorted.length - 1, (p * sorted.length).toInt))
-    (ProbeStats(sorted.sum / sorted.length, q(0.02), q(0.1), q(0.9),
-      q(0.98)), per)
-  }
-
-  /** Resolve the LSH regime for auto-bits: the conf override
-    * `spark.graft.ann.lsh.regime` ∈ {auto, clustered, isotropic}
-    * (default auto) short-circuits the probe for callers who know their
-    * corpus; auto runs [[neighborCosineProbe]] once and thresholds at
-    * `spark.graft.ann.lsh.regimeThreshold`. Logged at resolve time,
-    * like the IVF isotropy probe — the operating regime is visible
-    * exactly where the tuning decision is made. */
-  /** The MEMOIZED probe stats: per (session, analyzed-plan, input files)
-    * — the probe is ~0.8-1.0 s of fixed job/plan cost even warm (measured
-    * at the registered sf0.1 corpus), which is real money on a 2.5 s
-    * entry benched min-of-2 — and the regime is a corpus-level property,
-    * identical across the repeated calls bench runs, ladder loops, and
-    * library callers make on the same frame. The outer weak map keys on
-    * the SESSION OBJECT (a recycled identity hash can't alias; dead
-    * sessions are GC-reclaimable) and the inner key folds in the
-    * file-listing fingerprint, so a table rewritten under an identical
-    * plan (new part files at the same path) re-probes instead of serving
-    * the stale verdict (VERDICT r14 #2). In-memory/checkpointed frames
-    * have no file provenance and key on the plan alone. Regimes move
-    * slowly; the bound is fine.
-    *
-    * SAMPLE SIZE (r16): `spark.graft.ann.lsh.probeQueries` (default
-    * 256, clamped to [16, 4096]) — 256 deterministic samples are thin
-    * for a corpus with thousands of clusters (a cluster the sample
-    * misses labels its rows toward the recall-safe low-cosine side, at
-    * full-rate cost forgone — the documented residual), so large mixed
-    * corpora can widen the probe. Cost grows linearly: the probe scan
-    * and the stratified label column each evaluate one fused
-    * nQueries-cosine loop per row, and the literal sample matrix is
-    * nQueries × dim × 4 B (1 MB at the 4096 cap). The size is part of
-    * the memo key, so a mid-session conf change re-probes instead of
-    * serving a mismatched sample. */
-  /** One memoized probe of a corpus: summary stats, the deterministic
-    * query sample (ids + row-major matrix), and the per-query top-1 map
-    * ([[neighborCosineDistWith]]). */
-  private[graft] final case class ProbeResult(stats: ProbeStats,
-      ids: Seq[Any], flat: Seq[Float], perQuery: Map[Int, ChooserStats])
-
-  private[graft] def regimeProbeStats(vectors: DataFrame): ProbeResult = {
-    val s = vectors.sparkSession
-    val filesKey = {
-      val fs = try vectors.inputFiles
-               catch { case _: UnsupportedOperationException =>
-                 Array.empty[String] }
-      scala.util.hashing.MurmurHash3.arrayHash(fs.sorted)
-    }
-    val nQueries = math.max(16, math.min(4096,
-      intConf(s, "spark.graft.ann.lsh.probeQueries", 256)))
-    val key = (vectors.queryExecution.analyzed.semanticHash(),
-      filesKey ^ nQueries)
-    val inner = regimeMemo.synchronized {
-      var m = regimeMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[(Int, Int),
-          ProbeResult]()
-        regimeMemo.put(s, m)
-      }
-      m
-    }
-    // probe OUTSIDE the map (review r14): computeIfAbsent would run a
-    // multi-second Spark job under the bucket lock, serializing
-    // unrelated corpora that hash to the same bucket; a lost race
-    // costs one redundant (idempotent) probe instead. The KB-scale
-    // query SAMPLE memoizes alongside the stats (review r15): the
-    // stratified labeler needs the identical sample, and re-collecting
-    // it would repeat the full-corpus TakeOrdered job per call.
-    val cached = inner.get(key)
-    if (cached != null) cached
-    else {
-      val sample = probeSample(vectors, nQueries)
-      val (stats, per) = neighborCosineDistWith(vectors, sample)
-      val fresh = ProbeResult(stats, sample._1, sample._2, per)
-      val prev = inner.putIfAbsent(key, fresh)
-      if (prev != null) prev else fresh
-    }
-  }
-
-  /** Loud wrong-tool contract for isotropic LSH past the measured recall
-    * wall (r16, VERDICT r15 #3) — the [[knnJoinLsh]] broadcast-bound
-    * pattern applied to RECALL instead of memory. CROSSOVER §1b measured
-    * the anchored half-rate ramp's sampled recall@3 at 0.519 (250k rows,
-    * 11 bits) and 0.452 (1M rows, 12 bits) on isotropic corpora: past
-    * ~11-bit signatures in the structureless regime, the banded
-    * exact-rerank shape pays its O(n^1.5) candidate price for sub-0.55
-    * recall, and routed scans (IVF / IVF-PQ with exact rerank, ~110 s vs
-    * 3592 s at the 1M cell) are the right tool. Fires when the regime
-    * verdict (probe or conf override) is isotropic AND the resolved
-    * anchored width reaches `spark.graft.ann.lsh.recallWallBits`
-    * (default 11 — the first measured sub-0.55 rung). PROBE-DEPTH-AWARE
-    * since late r16: under `probeHamming=2` the threshold shifts +3
-    * bits (CROSSOVER §1c — 0.858 measured at the flip1 wall rung,
-    * ≥ 0.632 at 13 bits at 4× sparser-than-ramp buckets, so 14 is the
-    * first unproven anchored rung), and the flip1 warn message names
-    * the Hamming-2 shell as the in-family remedy.
-    * `spark.graft.ann.lsh.recallWallAction` = warn (default, stderr) |
-    * fail (contract error) | off. */
-  private[graft] def checkRecallWall(s: SparkSession, isoBits: Int,
-      n: Long): Unit = {
-    val action =
-      s.conf.get("spark.graft.ann.lsh.recallWallAction", "warn").trim
-    require(Seq("warn", "fail", "off").contains(action),
-      "spark.graft.ann.lsh.recallWallAction must be warn|fail|off, " +
-        s"got $action")
-    val wallBits = intConf(s, "spark.graft.ann.lsh.recallWallBits", 11)
-    // PROBE-DEPTH-AWARE (r16 late): the Hamming-2 shell moves the wall
-    // +3 bits — CROSSOVER §1c measured recall@3 0.858 at the flip1 wall
-    // rung (250k/11 bits) and >= 0.632 at 13 bits even at 4×
-    // sparser-than-ramp buckets, so under flip2 the first UNPROVEN
-    // anchored rung is wallBits+3 (~8M isotropic rows at the default).
-    val hamming = intConf(s, "spark.graft.ann.lsh.probeHamming", 1)
-    val effWall = if (hamming == 2) wallBits + 3 else wallBits
-    if (action != "off" && isoBits >= effWall) {
-      val remedy =
-        if (hamming == 2)
-          "Past the measured Hamming-2 evidence the remaining remedies " +
-            "are routing to knnJoinIvf / the IVF-PQ family (routed scan " +
-            "+ exact rerank — the serving path at this scale), passing " +
-            "explicit narrower bits if the extra candidate volume is " +
-            "acceptable, or setting " +
-            "spark.graft.ann.lsh.recallWallAction=off to proceed silently."
-        else
-          "Set spark.graft.ann.lsh.probeHamming=2 (margin-aware " +
-            "Hamming-2 multi-probe — measured 0.519 -> 0.858 recall@3 at " +
-            "the 250k wall rung for 2.2x wall, CROSSOVER §1c; moves the " +
-            "wall +3 bits), route to knnJoinIvf / the IVF-PQ family " +
-            "(routed scan + exact rerank — the serving path at this " +
-            "scale), pass explicit narrower bits if the extra candidate " +
-            "volume is acceptable, or set " +
-            "spark.graft.ann.lsh.recallWallAction=off to proceed silently."
-      val msg = s"knnJoinLsh: the corpus resolved ISOTROPIC at n=$n and " +
-        s"the anchored auto ramp picks $isoBits-bit signatures — at/past " +
-        s"the measured recall wall ($effWall bits; CROSSOVER §1b/§1c: " +
-        "flip-1 sampled recall@3 0.519 at 250k/11 bits, 0.452 at 1M/12 " +
-        "bits; flip-2 unmeasured past the +3 shift). In this regime the " +
-        "banded exact-rerank join pays O(n^1.5) candidate volume for " +
-        s"collision-bound recall. $remedy"
-      if (action == "fail") throw new IllegalArgumentException(msg)
-      else System.err.println(s"WARN graft-ann: $msg")
-    }
-  }
-
-  /** The validated `spark.graft.ann.lsh.regime` conf value — the ONE
-    * read-and-require site, shared by every path that consults the
-    * override (including the probe-skip branch of [[resolveBits]] and
-    * the stratify trigger, so a typo'd value fails loudly everywhere). */
-  private[graft] def regimeConf(s: SparkSession): String = {
-    val conf = s.conf.get("spark.graft.ann.lsh.regime", "auto").trim
-    require(Seq("auto", "clustered", "isotropic").contains(conf),
-      s"spark.graft.ann.lsh.regime must be auto|clustered|isotropic, got $conf")
-    conf
-  }
-
-  private[graft] def resolveLshRegime(vectors: DataFrame): String = {
-    val s = vectors.sparkSession
-    val conf = regimeConf(s)
-    if (conf != "auto") conf
-    else {
-      val thr = doubleConf(s, "spark.graft.ann.lsh.regimeThreshold", 0.80)
-      val st = regimeProbeStats(vectors).stats
-      val verdict = if (st.mean >= thr) "clustered" else "isotropic"
-      // wide spread = a MIXED corpus (tails = minority populations):
-      // the verdict below is the mean's side; see [[ProbeStats]]
-      System.err.println(
-        f"INFO graft-ann: lsh regime probe meanTop1Cosine=${st.mean}%.3f" +
-          f" p02=${st.p02}%.3f p10=${st.p10}%.3f p90=${st.p90}%.3f" +
-          f" p98=${st.p98}%.3f threshold=$thr%.2f -> $verdict")
-      verdict
-    }
-  }
   private def ivfProbes(cells: Int, probes: Int): Int =
     resolveProbes(cells, probes, 5, 8)   // 62.5% coverage → 10 of 16
   private def ivfpqProbes(cells: Int, probes: Int): Int =
@@ -1288,236 +479,18 @@ object Similarity {
     * native expression carries the centroid matrix as a reference
     * object and keeps ranking bit-identical (cosine desc, cell id
     * desc), so cells can scale with sqrt(n) as the 100 TB story needs.
-    *
-    * TWO-LEVEL ROUTING (r13): a flat scan is still O(cells) per row —
-    * under the cells≈sqrt(n) rule that makes corpus-wide assignment
-    * O(n^1.5), which CROSSOVER.md §1 measured as the residual growth
-    * term of the r12 IVF ladder. Past
-    * `spark.graft.ann.routedCells.threshold` cells (default 64; -1
-    * disables) the probe column becomes
-    * [[org.apache.spark.sql.graft.NearestCellsRouted]]: a driver-side
-    * k-means ([[superGroups]]) folds the KB-scale centroid matrix into
-    * ~sqrt(cells) super-cells and each row scans only its
-    * `spark.graft.ann.superProbes` nearest groups (default -1 = auto =
-    * max(ceil(sqrt(S)), ceil(S/4)) since the r14 fidelity extension:
-    * sqrt fan-out is measured near-flat to S≈26 and DECAYING past it,
-    * the S/4 floor holds 0.96+ top-1 at every measured rung — see the
-    * in-line note below and CROSSOVER.md §4) — O(cells^0.75) per row up
-    * to S≈30 and a constant 4× per-row saving past it. Registered entries
-    * run at cells=16, below the threshold, so their plans and results
-    * are byte-identical to r12; the routed path is the scale rung,
-    * measured in the r13 CROSSOVER ladder. */
+    * The scan is flat, O(cells) per row; `spark.graft.ann.cellsBound`
+    * (see [[IvfIndex.train]]) caps cells. */
   private def probeCells(cents: Seq[(Int, Seq[Float])], probes: Int): Column =
-    probeCellsWith(cents, probes, activeAssignMode())
-
-  /** The conf-resolved routing parameters that decide HOW a probe/assign
-    * expression scans the centroid matrix: (routedCells.threshold,
-    * superProbes). Captured ONCE at quantizer train time and persisted
-    * with the index (r14, ADVICE r13): an append that re-resolved these
-    * from the session at call time would silently mix flat- and
-    * routed-assigned rows in one table whenever the confs (or the
-    * defaults) changed between build and append. */
-  private[graft] def activeAssignMode(): (Int, Int) = {
-    val s = org.apache.spark.sql.SparkSession.active
-    (intConf(s, "spark.graft.ann.routedCells.threshold", 64),
-      intConf(s, "spark.graft.ann.superProbes", -1))
-  }
-
-  private[graft] def probeCellsWith(cents: Seq[(Int, Seq[Float])], probes: Int,
-      mode: (Int, Int)): Column = {
     // clamp: Lloyd steps can collapse emptied cells below the requested
     // probe count (the legacy slice() tolerated that silently)
-    val p = math.min(probes, cents.size)
-    val threshold = mode._1
-    // Routing must not silently break the COVERAGE contract: the auto
-    // probe defaults request a FRACTION of cells (62.5-75% on isotropic
-    // corpora, where recall is coverage-bound), but a routed scan
-    // capped at `superProbes` groups can only ever return
-    // ~superProbes·cells/S cells. Two guards: (a) routing applies only
-    // when the requested probes are a SMALL fraction of cells (≤ 1/4 —
-    // at higher coverage the flat scan is within 4× of the routed one
-    // and exact, and the probe column is a tiny share of the stage
-    // either way, see the doGenCode note in NearestCells); (b) when it
-    // applies, the group fan-out widens to what the requested probe
-    // count needs (ceil(p·S/cells) + 1 slack for uneven groups) if the
-    // conf default is too narrow.
-    if (threshold == -1 || cents.size < threshold || p * 4 > cents.size)
-      graft.functions.VectorFunctions.nearestCells(col("embedding"),
-        cents.map(_._1), cents.flatMap(_._2), p)
-    else {
-      val (ids, mat, superMat, offs) = superGroups(cents)
-      val nGroups = offs.length - 1
-      val needed = (p * nGroups + cents.size - 1) / cents.size + 1
-      // superProbes default -1 = AUTO = max(ceil(sqrt(S)), ceil(S/4)).
-      // Two measured regimes (CROSSOVER.md §4, r13 sweep + r14 extension
-      // to S=32/45): below S≈30 ceil(sqrt(S)) is near-flat (top-1
-      // agreement 0.986/0.976 at S=20/26) at a per-row scan of
-      // S + cells/sqrt(S) = O(cells^0.75) under S=sqrt(cells); past it
-      // the sqrt fan-out DECAYS (0.941 at S=32, 0.894 at S=45 — the r13
-      // "near-flat" read was an extrapolation, now measured false),
-      // while a constant S/4 fraction holds 0.96-0.99 at every measured
-      // rung at a ~28% fine-cell scan. The S/4 floor caps the router's
-      // asymptotic win at a constant 4× per-row for very large cell
-      // counts (a 3-level router would recover asymptotics if a corpus
-      // ever needs cells >> 2000); both formulas coincide up to S≈20,
-      // so every registered plan and the swept flat regime are
-      // unchanged by the r14 re-tune.
-      val conf = mode._2
-      val base =
-        if (conf > 0) conf
-        else math.max(math.ceil(math.sqrt(nGroups.toDouble)).toInt,
-          (nGroups + 3) / 4)
-      val superProbes = math.min(nGroups, math.max(needed, base))
-      graft.functions.VectorFunctions.nearestCellsRouted(col("embedding"),
-        ids, mat, superMat, offs, p, superProbes)
-    }
-  }
+    graft.functions.VectorFunctions.nearestCells(col("embedding"),
+      cents.map(_._1), cents.flatMap(_._2), math.min(probes, cents.size))
 
-  /** Driver-side k-means of the fine centroids into ~sqrt(cells)
-    * super-cells for [[probeCells]]' routed mode — the classic two-level
-    * coarse quantizer (FAISS IMI shape), built where it belongs: the
-    * centroid matrix is KB-scale driver state already, so grouping it is
-    * microseconds of pure Scala, deterministic (seeds are every
-    * (cells/S)-th centroid in cell-id order; no RNG), and needs no Spark
-    * job. Returns the fine ids/matrix GROUPED by super-cell, the
-    * super-centroid matrix, and the S+1 fencepost offsets — the
-    * [[org.apache.spark.sql.graft.NearestCellsRouted]] layout contract.
-    * Empty groups are compacted away (fenceposts must be strictly
-    * increasing). */
-  private[graft] def superGroups(cents: Seq[(Int, Seq[Float])])
-      : (Seq[Int], Seq[Float], Seq[Float], Seq[Int]) = {
-    val sorted = cents.sortBy(_._1)
-    val cells = sorted.size
-    val dim = sorted.head._2.length
-    val s = math.max(2, math.ceil(math.sqrt(cells.toDouble)).toInt)
-    val fine: Array[Array[Double]] =
-      sorted.map(_._2.map(_.toDouble).toArray).toArray
-    def cosine(a: Array[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < dim) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      val denom = math.sqrt(na) * math.sqrt(nb)
-      val c = if (denom == 0.0) 0.0 else dot / denom
-      if (java.lang.Double.isNaN(c)) Double.NegativeInfinity else c
-    }
-    var superCents: Array[Array[Double]] =
-      Array.tabulate(s)(i => fine((i.toLong * cells / s).toInt).clone())
-    val assign = new Array[Int](cells)
-    for (_ <- 0 until 5) {
-      var c = 0
-      while (c < cells) {
-        var best = 0; var bestSim = Double.NegativeInfinity; var g = 0
-        while (g < s) {
-          val sim = cosine(fine(c), superCents(g))
-          if (sim > bestSim) { bestSim = sim; best = g }
-          g += 1
-        }
-        assign(c) = best
-        c += 1
-      }
-      val sums = Array.fill(s)(new Array[Double](dim))
-      val cnt = new Array[Int](s)
-      c = 0
-      while (c < cells) {
-        val g = assign(c); cnt(g) += 1
-        var i = 0
-        while (i < dim) { sums(g)(i) += fine(c)(i); i += 1 }
-        c += 1
-      }
-      superCents = Array.tabulate(s) { g =>
-        if (cnt(g) == 0) superCents(g)
-        else { val m = sums(g); var i = 0
-          while (i < dim) { m(i) /= cnt(g); i += 1 }; m }
-      }
-    }
-    val groups = (0 until s).map(g =>
-      g -> (0 until cells).filter(assign(_) == g)).filter(_._2.nonEmpty)
-    val orderedIdx = groups.flatMap(_._2)
-    val ids = orderedIdx.map(i => sorted(i)._1)
-    val mat = orderedIdx.flatMap(i => sorted(i)._2)
-    val superMat = groups.flatMap { case (g, _) =>
-      superCents(g).map(_.toFloat).toSeq
-    }
-    val offs = groups.map(_._2.size).scanLeft(0)(_ + _)
-    (ids, mat, superMat, offs)
-  }
-  private[graft] def nearestCellColWith(cents: Seq[(Int, Seq[Float])],
-      mode: (Int, Int)): Column =
-    element_at(probeCellsWith(cents, 1, mode), 1)
-
-  /** Freeze a FINAL quantizer's assignment mode: the conf pair with an
-    * auto (-1) superProbes replaced by its concrete resolution against
-    * the final centroid set. r14 (review finding): persisting the raw -1
-    * in the sidecar let a future auto-FORMULA re-tune — exactly this
-    * round's ceil(sqrt(S)) → S/4-floor change — silently alter
-    * appended-row assignment on an index saved under the old auto, the
-    * precise drift the sidecar exists to prevent. Resolution mirrors the
-    * call-time auto in [[probeCellsWith]] (same superGroups, same
-    * formula), so the frozen value assigns byte-identically to what auto
-    * resolved at train time. Routing-inactive quantizers keep -1: with
-    * the threshold and the frozen centroid count both persisted, flat
-    * assignment is formula-era-independent. */
-  private def freezeAssignMode(cents: Seq[(Int, Seq[Float])],
-      mode: (Int, Int)): (Int, Int) =
-    if (mode._2 > 0 || mode._1 == -1 || cents.size < mode._1) mode
-    else {
-      val (_, _, _, offs) = superGroups(cents)
-      val s = offs.length - 1
-      (mode._1, math.min(s, math.max(
-        math.ceil(math.sqrt(s.toDouble)).toInt, (s + 3) / 4)))
-    }
-
-  /** Assignment-mode sidecar of a persisted index (see
-    * [[activeAssignMode]]): KB-scale, written by both `save` variants,
-    * read back by `load`/`append` so a maintained table keeps ONE
-    * assignment semantics for its whole life regardless of session-conf
-    * drift between build and append. Since the r14 review pass the
-    * persisted super_probes is always CONCRETE for a routing-active
-    * quantizer (see [[freezeAssignMode]]). */
-  private def writeAssignMeta(spark: SparkSession, path: String,
-      mode: (Int, Int)): Unit = {
-    import spark.implicits._
-    Seq(mode).toDF("routed_threshold", "super_probes")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/assign_meta")
-  }
-  /** Missing sidecar (an index saved before r14) falls back to the
-    * CURRENT session confs with a loud warning — the documented caveat
-    * that appends to such an index can mix assignment modes if confs
-    * changed since it was built.
-    *
-    * A sidecar holding a RAW super_probes=-1 (saved between the sidecar's
-    * introduction and the r14 freeze commit) is resolved HERE with the
-    * formula that was in force when such sidecars were written —
-    * ceil(sqrt(S)) — never the current auto formula (r15, ADVICE r14):
-    * passing the -1 through to [[probeCellsWith]] would let any future
-    * auto re-tune (exactly the r14 sqrt→S/4-floor change) silently alter
-    * appended-row assignment on a routing-active index built under the
-    * old auto. `cents` is the loaded quantizer's centroid set (every
-    * read site has it), used only to decide routing-activeness and S. */
-  private def readAssignMeta(spark: SparkSession, path: String,
-      cents: Seq[(Int, Seq[Float])]): (Int, Int) =
-    try {
-      val r = spark.read.parquet(s"$path/assign_meta").collect().head
-      val (threshold, sp) = (r.getInt(0), r.getInt(1))
-      if (sp != -1 || threshold == -1 || cents.size < threshold)
-        (threshold, sp) // concrete, or routing-inactive: formula-free
-      else {
-        val (_, _, _, offs) = superGroups(cents)
-        val s = offs.length - 1
-        val legacy = math.min(s, math.ceil(math.sqrt(s.toDouble)).toInt)
-        System.err.println(s"WARN graft-ann: assign_meta at $path holds " +
-          s"a pre-freeze auto super_probes (-1); pinning it to the " +
-          s"formula of its era, ceil(sqrt(S))=$legacy at S=$s groups, so " +
-          "appends keep the index's build-time assignment semantics")
-        (threshold, legacy)
-      }
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        System.err.println(s"WARN graft-ann: no assign_meta at $path " +
-          "(index saved before the sidecar existed); assignment falls " +
-          "back to current session confs — appends may mix routing modes " +
-          "if spark.graft.ann.* changed since the index was built")
-        activeAssignMode()
-    }
+  /** The nearest cell id: the assignment column of every index build,
+    * Lloyd step and append. */
+  private def nearestCell(cents: Seq[(Int, Seq[Float])]): Column =
+    element_at(probeCells(cents, 1), 1)
 
   /** TRAINING-SET BOUND (the FAISS discipline) over an ALREADY-
     * materialized `(vec_id, embedding)` frame: Lloyd steps need a
@@ -1556,12 +529,7 @@ object Similarity {
       val meanCentroidSim: Double = Double.NaN,
       /** "lsh" when the probe saw no cluster structure, "ivf" when
         * routing pays, "unknown" on a loaded index. */
-      val recommendation: String = "unknown",
-      /** Routing parameters the assigned table was built under — frozen
-        * at train time (or read back from the persisted sidecar), used
-        * by every later assignment against this index so appends can
-        * never mix flat- and routed-assigned rows (ADVICE r13). */
-      private[Similarity] val assignMode: (Int, Int) = activeAssignMode()) {
+      val recommendation: String = "unknown") {
     /** Persist the trained index: the cell-assigned vector table lands
       * as an EXTERNAL table bucketed by `cell` (one bucket per cell — a
       * loaded index's probe join prunes to matching buckets with no
@@ -1577,7 +545,6 @@ object Similarity {
         s"${name}_assigned", s"$path/assigned", centroids.size, Seq("cell"))
       centroids.toDF("cell", "vec")
         .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
-      writeAssignMeta(spark, path, assignMode)
     }
 
     /** Top-k per query vector in `queryVecs` (`vec_id`, `embedding`):
@@ -1614,8 +581,7 @@ object Similarity {
       val assigned = spark.table(s"${name}_assigned")
       val source = assigned.select(col("c_id").as("vec_id"),
         col("v_c").as("embedding"))
-      new IvfIndex(centroids, source, assigned,
-        assignMode = readAssignMeta(spark, path, centroids))
+      new IvfIndex(centroids, source, assigned)
     }
 
     /** Incremental maintenance for a saved full-vector IVF index — the
@@ -1631,11 +597,8 @@ object Similarity {
         .map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
       graft.sources.Layout.registerBucketedExternal(spark,
         s"${name}_assigned", s"$path/assigned", centroids.size, Seq("cell"))
-      // assignment under the PERSISTED mode, never the session confs —
-      // one table, one assignment semantics for its whole life
       val assigned = newVectors.select(col("vec_id"), col("embedding"))
-        .withColumn("cell",
-          nearestCellColWith(centroids, readAssignMeta(spark, path, centroids)))
+        .withColumn("cell", nearestCell(centroids))
         .select(col("vec_id").as("c_id"), col("cell"),
           col("embedding").as("v_c"))
       graft.sources.Layout.appendBucketedExternal(assigned,
@@ -1684,33 +647,24 @@ object Similarity {
     private[Similarity] def trainPrepared(candidates: DataFrame,
         trainSet: DataFrame, cells: Int, lloydIters: Int): IvfIndex = {
       // ENFORCED CELLS BOUND (r15, VERDICT r14 #5 — the broadcast-bound
-      // discipline applied to the router's asymptotic boundary): the
-      // two-level routed assignment is O(cells^0.75)/row only up to
-      // S≈30 super-groups (cells≈900); past it the S/4 fidelity floor
-      // caps the win at a CONSTANT ~4× over the flat O(cells) scan
-      // (CROSSOVER §4, measured to S=45 / cells=2000 / 4M rows). Under
-      // the cells≈sqrt(n) rule the default bound of 4096 covers ~16M
-      // rows per index — beyond that, assignment cost per row grows
-      // linearly in cells again, a regime the caller must opt into
-      // consciously (shard the corpus across indexes, or raise
-      // `spark.graft.ann.cellsBound` / set -1 after reading this; a
-      // 3-level router would recover asymptotics and is the documented
-      // next step if a real corpus needs it).
+      // discipline applied to assignment cost): every row scans all
+      // `cells` centroids, so per-row assignment grows linearly in cells.
+      // Under the cells≈sqrt(n) rule the default bound of 4096 covers
+      // ~16M rows per index — beyond that the caller opts in consciously
+      // (shard the corpus across indexes, or raise
+      // `spark.graft.ann.cellsBound` / set -1 after reading this).
+      // Two-level routing is no remedy: it measured only a constant ~4×
+      // per-row saving past ~900 cells (CROSSOVER §4).
       val cellsBound = longConf(candidates.sparkSession,
         "spark.graft.ann.cellsBound", 4096L)
       require(cellsBound <= 0 || cells <= cellsBound,
         s"IvfIndex.train: cells=$cells exceeds " +
-          s"spark.graft.ann.cellsBound=$cellsBound. Past ~900 cells the " +
-          "routed scan's win over flat assignment is a constant ~4x " +
-          "(the S/4 fidelity floor, CROSSOVER.md §4), so per-row " +
-          "assignment grows ~linearly in cells again. Shard the corpus " +
-          "across indexes, or raise the bound (set -1 to disable) if " +
-          "the O(cells/4)-per-row cost is acceptable.")
-      // routing params frozen HERE: Lloyd steps, the final assignment,
-      // and every future append against this index share one semantics
-      val assignMode = activeAssignMode()
-      def nearestCell(cents: Seq[(Int, Seq[Float])]): Column =
-        nearestCellColWith(cents, assignMode)
+          s"spark.graft.ann.cellsBound=$cellsBound. Per-row assignment " +
+          "scans every cell, so its cost grows linearly in cells (a " +
+          "two-level router saved only a constant ~4x past ~900 cells, " +
+          "CROSSOVER.md §4). Shard the corpus across indexes, or raise " +
+          "the bound (set -1 to disable) if the O(cells)-per-row cost is " +
+          "acceptable.")
       def collectCentroids(df: DataFrame): Seq[(Int, Seq[Float])] =
         df.collect().toSeq.map(r => (r.getInt(0), r.getSeq[Float](1)))
 
@@ -1766,15 +720,11 @@ object Similarity {
           else
             "cluster structure detected: IVF cell routing is effective") +
           ")")
-      // the mode the index CARRIES (and persists) resolves auto against
-      // the final centroids — byte-identical assignment to the auto
-      // path today, immune to auto-formula re-tunes tomorrow
-      val frozenMode = freezeAssignMode(centroids, assignMode)
       val assigned = candidates
-        .withColumn("cell", nearestCellColWith(centroids, frozenMode))
+        .withColumn("cell", nearestCell(centroids))
         .select(col("vec_id").as("c_id"), col("cell"), col("embedding").as("v_c"))
       new IvfIndex(centroids, candidates, assigned,
-        meanCentroidSim, recommendation, frozenMode)
+        meanCentroidSim, recommendation)
     }
   }
 
@@ -2021,7 +971,6 @@ object Similarity {
       Seq((pq.codebooks.toSeq, m, pqCodes, probes))
         .toDF("codebooks", "m", "pq_codes", "probes")
         .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
-      writeAssignMeta(spark, path, ivf.assignMode)
     }
     /** [[search]] with the queries drawn from the index's own vector
       * table by predicate — the self-lookup shape every `x_ann_*` entry
@@ -2087,19 +1036,18 @@ object Similarity {
       graft.sources.Layout.registerBucketedExternal(spark,
         s"${name}_codes", s"$path/codes", centroids.size, Seq("cell"))
       val source = vectors.select(col("vec_id"), col("embedding"))
-      val assignMode = readAssignMeta(spark, path, centroids)
       // assigned/enc are lazy projections off the loaded quantizers —
       // declared for API completeness (IvfIndex.search / PqIndex.search
       // on the loaded handle), never evaluated by IvfPqIndex.search
       val assigned = source
-        .withColumn("cell", nearestCellColWith(centroids, assignMode))
+        .withColumn("cell", nearestCell(centroids))
         .select(col("vec_id").as("c_id"), col("cell"), col("embedding").as("v_c"))
       import graft.functions.VectorFunctions.{pqEncode, vecNorm}
       val enc = source.select(col("vec_id").as("c_id"),
         pqEncode(col("embedding"), codebooks, m, pqCodes).as("pq"),
         vecNorm(col("embedding")).as("norm_c"))
       new IvfPqIndex(
-        new IvfIndex(centroids, source, assigned, assignMode = assignMode),
+        new IvfIndex(centroids, source, assigned),
         new PqIndex(codebooks, m, pqCodes, source, enc),
         probes, m, pqCodes,
         spark.table(s"${name}_codes"))
@@ -2139,11 +1087,8 @@ object Similarity {
       import graft.functions.VectorFunctions.{pqEncode, vecNorm}
       graft.sources.Layout.registerBucketedExternal(spark, s"${name}_codes",
         s"$path/codes", centroids.size, Seq("cell"))
-      // assignment under the PERSISTED mode, never the session confs —
-      // one code table, one assignment semantics for its whole life
       val enc = newVectors.select(col("vec_id"), col("embedding"))
-        .withColumn("cell",
-          nearestCellColWith(centroids, readAssignMeta(spark, path, centroids)))
+        .withColumn("cell", nearestCell(centroids))
         .select(col("cell"), col("vec_id").as("c_id"),
           pqEncode(col("embedding"), codebooks, m, pqCodes).as("pq"),
           vecNorm(col("embedding")).as("norm_c"))
@@ -2194,7 +1139,7 @@ object Similarity {
               scala.concurrent.duration.Duration.Inf))
         } finally pool.shutdown()
       val codes = ivf.source
-        .withColumn("cell", nearestCellColWith(ivf.centroids, ivf.assignMode))
+        .withColumn("cell", nearestCell(ivf.centroids))
         .select(col("cell"), col("vec_id").as("c_id"),
           pqEncode(col("embedding"), pq.codebooks, m, pqCodes).as("pq"),
           vecNorm(col("embedding")).as("norm_c"))
@@ -2225,9 +1170,36 @@ object Similarity {
   private def emb(s: SparkSession, d: String): DataFrame =
     embeddings(s, d).repartition(s.sparkContext.defaultParallelism)
 
-  /** ANN operating-point knobs. The RECALL_r*.json sweep documents the
-    * recall-vs-cost grid (probes × rerank, tables × bits); these session
-    * confs let a consumer pick a point WITHOUT code changes.
+  /** ANN operating-point knobs: session confs that let a consumer pick
+    * a point of the RECALL_r*.json recall-vs-cost grid (probes × rerank,
+    * tables × bits) WITHOUT code changes. This is the complete list of
+    * `spark.graft.ann.*` and `spark.graft.knnjoin.*` keys, with defaults:
+    *
+    *  - `spark.graft.ann.lsh.tables` = 8, `spark.graft.ann.lsh.bits` = 6:
+    *    x_ann_lsh's operating point ([[lshTopK]]).
+    *  - `spark.graft.ann.lsh.broadcastBound` = 1073741824 (1 GiB; -1
+    *    disables): [[knnJoinLsh]]'s vector re-join broadcast bound.
+    *  - `spark.graft.ann.ivf.probes` = -1: x_ann_ivf probes (auto = 10
+    *    of 16 cells, [[resolveProbes]]).
+    *  - `spark.graft.ann.pq.codes` = 32, `spark.graft.ann.pq.rerank` =
+    *    200: x_ann_pq.
+    *  - `spark.graft.ann.ivfpq.probes` = -1 (auto = 12 of 16 cells),
+    *    `spark.graft.ann.ivfpq.rerank` = 400: x_ann_ivfpq.
+    *  - `spark.graft.ann.trainCap` = 65536: quantizer training-set bound
+    *    ([[boundedTrainSet]], [[PqIndex.train]]).
+    *  - `spark.graft.ann.cellsBound` = 4096 (-1 disables): largest IVF
+    *    cell count [[IvfIndex.train]] accepts.
+    *  - `spark.graft.ann.check.<lsh|ivf|pq|ivfpq>.minHits` = 2 and
+    *    `.minTotal` = 40/40/41/43: the x_ann_* recall contracts
+    *    ([[annRecallCheck]]).
+    *  - `spark.graft.knnjoin.blocks` = 8, `spark.graft.knnjoin.qblocks`
+    *    = 4: x_knn_join's grid ([[knnJoin]]).
+    *  - `spark.graft.knnjoin.ivf.probes` = -1: x_knn_join_ivf probes
+    *    (auto = 12 of 16 cells).
+    *  - `spark.graft.knnjoin.lsh.tables` = 16, `spark.graft.knnjoin.lsh.bits`
+    *    = -1 (auto, [[resolveBits]]): x_knn_join_lsh.
+    *  - `spark.graft.knnjoin.check.<ivf|lsh>.minRecallPct` = 85/80: the
+    *    sampled k-NN join recall contracts ([[knnRecallCheck]]).
     *
     * Defaults were RE-TUNED in r11 after the hash-sample seeding fix:
     * the old first-k seeding made the registered queries a subset of
@@ -2259,14 +1231,6 @@ object Similarity {
     v
   }
 
-  private def doubleConf(s: SparkSession, key: String, dflt: Double): Double = {
-    val raw = s.conf.get(key, dflt.toString).trim
-    try raw.toDouble catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"$key must be a decimal number (dot separator), got '$raw'")
-    }
-  }
-
   /** Intra-query persists registered by [[knnJoinLsh]]'s rescue path.
     * Dataset.persist pins the plan in the session CacheManager until an
     * explicit unpersist — and the returned frame is LAZY, so the operator
@@ -2283,63 +1247,16 @@ object Similarity {
   private val annCacheRegistry =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
-  /** Regime-probe memo for [[resolveLshRegime]]: per-SESSION (a weak map
-    * keyed on the SparkSession object itself, so a dead session's entries
-    * are GC-reclaimable and a recycled identity hash can never alias a
-    * new session — ADVICE r14), inner key = (analyzed-plan semantic hash,
-    * input-files fingerprint) → the probe's (mean, p10, p90). The files
-    * fingerprint (VERDICT r14 #2) folds `DataFrame.inputFiles` into the
-    * key so a table REWRITTEN under an identical path/plan (new part
-    * files) re-probes instead of serving the stale verdict; frames with
-    * no file provenance (in-memory, checkpointed) fingerprint to the
-    * empty listing and key on the plan alone, as before. Cleared by
-    * [[sweepAnnCaches]]. Exposed private[graft] so specs can pin the
-    * single-probe-per-corpus behavior. */
-  private[graft] val regimeMemo =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(Int, Int), ProbeResult]]()
-
-  /** Total memoized probe verdicts across live sessions (spec surface). */
-  private[graft] def regimeMemoSize: Int = regimeMemo.synchronized {
-    var n = 0
-    regimeMemo.values.forEach(m => n += m.size)
-    n
-  }
-
-  /** Session-scoped print-once for the stratify INFO lines (review r16
-    * late): the unconditional stratify attempt means a service issuing
-    * many knnJoinLsh calls over the same memoized corpus would re-run
-    * the (cheap) driver k-means AND re-print an identical verdict line
-    * per call — the k-means is noise-free to repeat, the log line is
-    * not. Keyed on the full message text (same corpus + confs → same
-    * text; the spread percentiles make distinct corpora distinct).
-    * Cleared by [[sweepAnnCaches]] so a swept session re-announces. */
-  private val loggedOnce =
-    new java.util.WeakHashMap[SparkSession, java.util.Set[String]]()
-  private def logOnce(s: SparkSession, msg: String): Unit = {
-    val set = loggedOnce.synchronized {
-      var v = loggedOnce.get(s)
-      if (v == null) {
-        v = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-        loggedOnce.put(s, v)
-      }
-      v
-    }
-    if (set.add(msg)) System.err.println(msg)
-  }
-
   /** Release every cached intermediate registered by [[knnJoinLsh]] since
-    * the last sweep, the regime-probe memo, and the exact-baseline memo.
-    * Safe to call at any time (see [[annCacheRegistry]]). */
+    * the last sweep, and the exact-baseline memo. Safe to call at any
+    * time (see [[annCacheRegistry]]). */
   def sweepAnnCaches(): Unit = {
     var df = annCacheRegistry.poll()
     while (df != null) {
       df.unpersist(blocking = false)
       df = annCacheRegistry.poll()
     }
-    regimeMemo.synchronized(regimeMemo.clear())
     exactBaselineMemo.synchronized(exactBaselineMemo.clear())
-    loggedOnce.synchronized(loggedOnce.clear())
   }
 
   /** Shared exact ground-truth memo for the recall-contract checks (r16,
@@ -2350,17 +1267,18 @@ object Similarity {
     * ~1.3 s at bench SF (measured: x_ann_bruteforce's whole wall) paid
     * 4× + a blocked ~n/7-pair pass paid 2× per bench pass. The
     * KB-scale (q_id, c_id) result memoizes per session + corpus
-    * identity + baseline tag (the [[regimeMemo]] key shape — analyzed
-    * plan semantic hash and input-files fingerprint — plus a tag
-    * separating the two baseline families) and re-enters later plans
+    * identity + baseline tag (analyzed-plan semantic hash, an
+    * input-files fingerprint, and a tag separating the two baseline
+    * families) and re-enters later plans
     * as a local relation. Determinism makes the swap hash-invisible:
     * both baselines rank bit-reproducibly, so the memoized rows ARE
     * what a recomputation would return. Cleared by [[sweepAnnCaches]].
-    * Same staleness contract as [[regimeMemo]]: the files fingerprint
-    * re-keys a corpus rewritten into NEW part files (the Spark rewrite
-    * shape), not a same-name in-place overwrite, and in-memory frames
-    * key on the plan alone — call sweepAnnCaches after mutating a
-    * corpus out-of-band. Memory contract: these are GATE fixtures —
+    * The outer weak map keys on the SESSION OBJECT (a recycled identity
+    * hash can't alias; dead sessions are GC-reclaimable). The files
+    * fingerprint re-keys a corpus rewritten into NEW part files (the
+    * Spark rewrite shape), not a same-name in-place overwrite, and
+    * in-memory frames key on the plan alone — call sweepAnnCaches after
+    * mutating a corpus out-of-band. Memory contract: these are GATE fixtures —
     * the ann baseline is a fixed 50 rows, the knn-join baseline grows
     * as ~3n/7 pairs and the check computes an O(n²/7) blocked pass
     * eagerly at construction, so at non-gate corpus scale use the
@@ -2370,8 +1288,7 @@ object Similarity {
       java.util.concurrent.ConcurrentHashMap[(String, Int, Int),
         Seq[(Long, Long)]]]()
 
-  /** Total memoized exact baselines across live sessions (spec surface,
-    * the [[regimeMemoSize]] pattern). */
+  /** Total memoized exact baselines across live sessions (spec surface). */
   private[graft] def exactBaselineMemoSize: Int =
     exactBaselineMemo.synchronized {
       var n = 0
@@ -2398,8 +1315,9 @@ object Similarity {
       }
       m
     }
-    // compute OUTSIDE the map (the regimeProbeStats discipline): a lost
-    // race costs one redundant idempotent scan, never a lock convoy
+    // compute OUTSIDE the map: computeIfAbsent would run a Spark job
+    // under the bucket lock; a lost race costs one redundant idempotent
+    // scan, never a lock convoy
     val cached = inner.get(key)
     val rows =
       if (cached != null) cached

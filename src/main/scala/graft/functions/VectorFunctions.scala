@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.graft.{CosineSimilarity, Md5SimHash60, MinHashSignature, NearestCellSim, NearestCells, NearestCellsRouted, PqAdc, PqEncode, PqLut, ShingleSet, SimHash64, VecNorm}
+import org.apache.spark.sql.graft.{CosineSimilarity, Md5SimHash60, MinHashSignature, NearestCellSim, NearestCells, PqAdc, PqEncode, PqLut, ShingleSet, SimHash64, VecNorm}
 
 /** Column-API facade over the native Catalyst expressions
   * (o.a.s.sql.graft — see each expression's scaladoc for the why). */
@@ -19,16 +19,6 @@ object VectorFunctions {
       probes: Int): Column =
     GraftBridge.column(NearestCells(GraftBridge.expression(vec),
       cellIds, centroids, probes))
-
-  /** Two-level routed [[NearestCells]]: score `superProbes` of the
-    * super-centroids, then only their fine-cell groups — O(sqrt(cells))
-    * per row instead of O(cells) (see [[NearestCellsRouted]]; with
-    * `superProbes` == the group count it is exactly [[NearestCells]]). */
-  def nearestCellsRouted(vec: Column, cellIds: Seq[Int],
-      centroids: Seq[Float], superCentroids: Seq[Float],
-      superOffsets: Seq[Int], probes: Int, superProbes: Int): Column =
-    GraftBridge.column(NearestCellsRouted(GraftBridge.expression(vec),
-      cellIds, centroids, superCentroids, superOffsets, probes, superProbes))
 
   /** Cosine similarity to the single nearest centroid ([[NearestCellSim]]). */
   def nearestCellSim(vec: Column, centroids: Seq[Float], nCells: Int): Column =
@@ -72,16 +62,6 @@ object VectorFunctions {
       dim: Int = 64, seed: Int = 4242): Column =
     GraftBridge.column(org.apache.spark.sql.graft.SrpSignature(
       GraftBridge.expression(vec), bands, bits, dim, seed))
-
-  /** Hamming-2 margin-aware multi-probe sequence over the SAME planes as
-    * [[srpSignature]] — one flat `array<int>` of
-    * `bands * (1 + bits + marginBits*(marginBits-1)/2)` probe buckets,
-    * constant stride per band (see
-    * [[org.apache.spark.sql.graft.SrpProbes]]). */
-  def srpProbes(vec: Column, bands: Int, bits: Int, dim: Int = 64,
-      seed: Int = 4242, marginBits: Int = 8): Column =
-    GraftBridge.column(org.apache.spark.sql.graft.SrpProbes(
-      GraftBridge.expression(vec), bands, bits, dim, seed, marginBits))
 
   /** L2 norm of an `array<float>` vector (see [[VecNorm]]). */
   def vecNorm(vec: Column): Column =

@@ -39,12 +39,10 @@ import org.apache.spark.sql.types._
   * never per pair, and its work is `cells` fused cosine loops — at the
   * registered operating point (cells=16, coverage 0.75, n=2000) that
   * is 16 cosines per row against ~1500 per row in the downstream
-  * pair-scoring stage, ~1% of the stage's floating-point work; at
-  * crossover scale the ROUTED variant scans ~sqrt(cells)·5 of the
-  * cells against pair work that grows as k·sqrt(n). A generated-code
-  * version of this call cannot move the stage by the verdict's 10%
-  * bar when the call is ~1-3% of it; the boxing overhead it would
-  * remove is one ArrayData allocation per row. The surrounding stage
+  * pair-scoring stage, ~1% of the stage's floating-point work. A
+  * generated-code version of this call cannot move the stage by the
+  * verdict's 10% bar when the call is ~1-3% of it; the boxing overhead
+  * it would remove is one ArrayData allocation per row. The surrounding stage
   * keeps whole-stage codegen either way (this is the property that
   * mattered — the r12 fix was about the LITERAL formulation breaking
   * the WHOLE stage's codegen, not about this call's own dispatch). */
@@ -116,147 +114,6 @@ case class NearestCells(child: Expression, cellIds: Seq[Int],
   }
 
   override protected def withNewChildInternal(newChild: Expression): NearestCells =
-    copy(child = newChild)
-}
-
-/** TWO-LEVEL routed [[NearestCells]] — bounds the per-row assignment
-  * cost when the cell count scales with the corpus (SURVEY §2.11
-  * [EXT]; the r12 CROSSOVER reading "at larger scale cap cells and
-  * shard the quantizer" made code). A flat scan is O(cells) per row —
-  * with the FAISS cells≈sqrt(n) rule that makes assignment itself
-  * O(n^1.5) across the corpus, which CROSSOVER.md §1 measured as the
-  * residual growth term in the IVF ladder (195 s at n=400k, most of
-  * it assignment). Here the fine cells are grouped under
-  * `superOffsets.length - 1` super-cells (a driver-side k-means over
-  * the KB-scale centroid matrix — see `Similarity.probeCells`): a row
-  * scores the S super-centroids, keeps its `superProbes` nearest
-  * groups, and scans ONLY their fine cells — O(S + superProbes ·
-  * cells/S) ≈ O(sqrt(cells)) per row at S≈sqrt(cells), so corpus-wide
-  * assignment is O(n · sqrt(cells)) = O(n^1.25) under the sqrt rule.
-  *
-  * The result is an APPROXIMATION of the flat scan: a fine cell whose
-  * super-group the row did not probe cannot be returned (with
-  * `superProbes == S` the scan is exhaustive and the output is
-  * IDENTICAL to [[NearestCells]] — property-pinned in
-  * NativeExprProps). Routing error is benign for IVF because BOTH
-  * sides of the search route through the same expression: a candidate
-  * lands in the cell its route found, and a near-identical query's
-  * route lands in the same group — recall at scale is measured in the
-  * committed CROSSOVER ladder. Layout contract: `cellIds`/`centroids`
-  * hold the fine cells GROUPED by super-cell, `superOffsets` is the
-  * S+1 fencepost array into them, `superCentroids` is S × dim.
-  * Comparator, accumulation, dim check, and NaN normalization are
-  * [[NearestCells]]'s exactly. */
-case class NearestCellsRouted(child: Expression, cellIds: Seq[Int],
-    centroids: Seq[Float], superCentroids: Seq[Float],
-    superOffsets: Seq[Int], probes: Int, superProbes: Int)
-  extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
-  require(cellIds.nonEmpty, "nearest_cells_routed: needs >= 1 centroid")
-  require(probes >= 1 && probes <= cellIds.length,
-    s"nearest_cells_routed: probes must be in [1, ${cellIds.length}], " +
-      s"got $probes")
-  require(centroids.nonEmpty && centroids.length % cellIds.length == 0,
-    s"nearest_cells_routed: centroid matrix length ${centroids.length} " +
-      s"is not a multiple of the cell count ${cellIds.length}")
-  require(superOffsets.length >= 2 && superOffsets.head == 0
-      && superOffsets.last == cellIds.length
-      && superOffsets.sliding(2).forall(w => w(0) < w(1)),
-    s"nearest_cells_routed: superOffsets ${superOffsets.mkString(",")} " +
-      s"must be strictly increasing fenceposts 0..${cellIds.length}")
-  require(superCentroids.length ==
-      (superOffsets.length - 1) * (centroids.length / cellIds.length),
-    s"nearest_cells_routed: super-centroid matrix length " +
-      s"${superCentroids.length} != S × dim")
-  require(superProbes >= 1 && superProbes <= superOffsets.length - 1,
-    s"nearest_cells_routed: superProbes must be in " +
-      s"[1, ${superOffsets.length - 1}], got $superProbes")
-
-  @transient private lazy val ids: Array[Int] = cellIds.toArray
-  @transient private lazy val mat: Array[Float] = centroids.toArray
-  @transient private lazy val superMat: Array[Float] = superCentroids.toArray
-  @transient private lazy val offs: Array[Int] = superOffsets.toArray
-  @transient private lazy val dim: Int = centroids.length / cellIds.length
-  @transient private lazy val nSuper: Int = superOffsets.length - 1
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "nearest_cells_routed"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    if (v.numElements() != dim) throw new IllegalArgumentException(
-      s"nearest_cells_routed: vector length ${v.numElements()} != " +
-        s"centroid dim $dim")
-    // the query vector's components load once; norms are re-derived per
-    // centroid exactly as in NearestCells so scores stay bit-identical
-    val q = new Array[Double](dim)
-    var qi = 0
-    while (qi < dim) { q(qi) = v.getFloat(qi).toDouble; qi += 1 }
-    def simAgainst(m: Array[Float], base: Int): Double = {
-      var dot = 0.0; var nx = 0.0; var ny = 0.0
-      var i = 0
-      while (i < dim) {
-        val xi = q(i); val yi = m(base + i).toDouble
-        dot += xi * yi; nx += xi * xi; ny += yi * yi
-        i += 1
-      }
-      val denom = math.sqrt(nx) * math.sqrt(ny)
-      val s0 = if (denom == 0.0) 0.0 else dot / denom
-      if (java.lang.Double.isNaN(s0)) Double.NegativeInfinity else s0
-    }
-    // level 1: top-superProbes super-groups by (sim desc, index desc) —
-    // same insertion shape as the fine selection
-    val supSim = new Array[Double](superProbes)
-    val supIdx = new Array[Int](superProbes)
-    var supFilled = 0
-    var g = 0
-    while (g < nSuper) {
-      val s = simAgainst(superMat, g * dim)
-      var pos = supFilled
-      while (pos > 0 && (s > supSim(pos - 1) ||
-          (s == supSim(pos - 1) && g > supIdx(pos - 1)))) pos -= 1
-      if (pos < superProbes) {
-        val last = math.min(supFilled, superProbes - 1)
-        var j = last
-        while (j > pos) { supSim(j) = supSim(j - 1); supIdx(j) = supIdx(j - 1); j -= 1 }
-        supSim(pos) = s; supIdx(pos) = g
-        if (supFilled < superProbes) supFilled += 1
-      }
-      g += 1
-    }
-    // level 2: flat NearestCells insertion over ONLY the probed groups'
-    // fine cells
-    val topSim = new Array[Double](probes)
-    val topId = new Array[Int](probes)
-    var filled = 0
-    var gi = 0
-    while (gi < supFilled) {
-      val grp = supIdx(gi)
-      var c = offs(grp)
-      val end = offs(grp + 1)
-      while (c < end) {
-        val s = simAgainst(mat, c * dim)
-        val id = ids(c)
-        var pos = filled
-        while (pos > 0 && (s > topSim(pos - 1) ||
-            (s == topSim(pos - 1) && id > topId(pos - 1)))) pos -= 1
-        if (pos < probes) {
-          val last = math.min(filled, probes - 1)
-          var j = last
-          while (j > pos) { topSim(j) = topSim(j - 1); topId(j) = topId(j - 1); j -= 1 }
-          topSim(pos) = s; topId(pos) = id
-          if (filled < probes) filled += 1
-        }
-        c += 1
-      }
-      gi += 1
-    }
-    val out = new Array[Int](filled)
-    System.arraycopy(topId, 0, out, 0, filled)
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCellsRouted =
     copy(child = newChild)
 }
 

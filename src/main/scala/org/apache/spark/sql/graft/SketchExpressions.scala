@@ -267,115 +267,3 @@ case class SrpSignature(child: Expression, bands: Int = 16, bits: Int = 8,
   override protected def withNewChildInternal(newChild: Expression): SrpSignature =
     copy(child = newChild)
 }
-
-/** Hamming-2 margin-aware multi-probe sequence for [[SrpSignature]]
-  * (multi-probe LSH, Lv et al. VLDB'07, applied to sign-random-projection
-  * banding). Derives the SAME planes as [[SrpSignature]] at the same
-  * `(bands, bits, dim, seed)` — probe 0 of every band IS the base bucket,
-  * bit-for-bit — then emits per band, as one FLAT `array<int>` of
-  * `bands * (1 + bits + marginBits*(marginBits-1)/2)` entries
-  * (constant stride per band, so callers recover the band index as
-  * `pos / probesPerBand`):
-  *
-  *  1. the base bucket;
-  *  2. every single-bit flip — the full blind Hamming-1 shell, a strict
-  *     SUPERSET of the flip-1 probing the banded join has always done
-  *     (restricting singles to the margin pool would trade away H1
-  *     captures the legacy path already had);
-  *  3. every PAIR flip within the `marginBits` lowest-|margin| planes —
-  *     the margin-aware Hamming-2 shell. A true neighbor's chance of
-  *     disagreeing on a plane falls steeply with the query's distance
-  *     from that plane (|dot|), so the pair mass concentrates in the
-  *     low-margin pool: probing C(marginBits,2) of C(bits,2) pair
-  *     buckets buys most of the Hamming-2 collision probability at a
-  *     fraction of the probe volume.
-  *
-  * Duplicate probes (a pair flip landing on a bucket another probe
-  * already emitted — only possible via hash coincidence, since flips of
-  * distinct bit sets differ) are NOT deduplicated here: the consumer's
-  * k-bounded aggregation is idempotent on identical (score, id) pairs,
-  * the same reason the banded join never dropDuplicates its pair stream. */
-case class SrpProbes(child: Expression, bands: Int = 16, bits: Int = 8,
-    dim: Int = 64, seed: Int = 4242, marginBits: Int = 8)
-  extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
-  require(bits > 0 && bits < 31, "bits must fit a positive Int bucket")
-  require(marginBits >= 2 && marginBits <= bits,
-    s"marginBits must be in [2, bits=$bits], got $marginBits")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "srp_probes"
-
-  /** Probes emitted per band: base + all singles + margin-pool pairs. */
-  val probesPerBand: Int = 1 + bits + marginBits * (marginBits - 1) / 2
-
-  // Identical derivation to SrpSignature — same seed stream, same
-  // (band, bit, dim) layout — so probe 0 reproduces its bucket exactly.
-  @transient private lazy val planes: Array[Float] = {
-    val rng = new scala.util.Random(seed)
-    Array.fill(bands * bits * dim)(if (rng.nextBoolean()) 1.0f else -1.0f)
-  }
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = v.numElements()
-    if (n != dim) throw new IllegalArgumentException(
-      s"srp_probes: vector length $n != declared dim $dim — truncation/" +
-        "padding would silently lose LSH recall, so this fails fast")
-    val out = new Array[Int](bands * probesPerBand)
-    val dots = new Array[Double](bits)
-    val pool = new Array[Int](marginBits)
-    var b = 0
-    while (b < bands) {
-      var bucket = 0
-      var p = 0
-      while (p < bits) {
-        val base = (b * bits + p) * dim
-        var dot = 0.0
-        var i = 0
-        while (i < n) {
-          dot += v.getFloat(i).toDouble * planes(base + i)
-          i += 1
-        }
-        dots(p) = dot
-        if (dot > 0) bucket |= 1 << p
-        p += 1
-      }
-      // lowest-|margin| pool: selection by insertion — bits <= 30 and
-      // marginBits <= bits, so the quadratic bound is ~900 compares
-      var filled = 0
-      p = 0
-      while (p < bits) {
-        val m = math.abs(dots(p))
-        var at = filled
-        while (at > 0 && math.abs(dots(pool(at - 1))) > m) at -= 1
-        if (at < marginBits) {
-          val last = math.min(filled, marginBits - 1)
-          var j = last
-          while (j > at) { pool(j) = pool(j - 1); j -= 1 }
-          pool(at) = p
-          if (filled < marginBits) filled += 1
-        }
-        p += 1
-      }
-      var o = b * probesPerBand
-      out(o) = bucket; o += 1
-      p = 0
-      while (p < bits) { out(o) = bucket ^ (1 << p); o += 1; p += 1 }
-      var i = 0
-      while (i < marginBits) {
-        var j = i + 1
-        while (j < marginBits) {
-          out(o) = bucket ^ (1 << pool(i)) ^ (1 << pool(j))
-          o += 1; j += 1
-        }
-        i += 1
-      }
-      b += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SrpProbes =
-    copy(child = newChild)
-}

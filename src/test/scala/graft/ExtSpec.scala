@@ -631,97 +631,6 @@ class ExtSpec extends SparkSpec {
     assert(msgs(e).exists(_.contains("srp_signature")))
   }
 
-  // r16 late: the Hamming-2 multi-probe shell (SrpProbes) must emit a
-  // strict SUPERSET of the legacy flip-1 probe set over the SAME planes —
-  // probe 0 is the srp_signature bucket bit-for-bit, the next `bits`
-  // probes are the complete blind H1 shell, and the margin-pool pairs
-  // are all at Hamming distance exactly 2 from the base.
-  test("srp_probes: probe 0 == srp_signature bucket; H1 shell complete; pairs at distance 2") {
-    val bands = 4; val bits = 9; val mb = 6
-    val ppb = 1 + bits + mb * (mb - 1) / 2
-    val emb = graft.Tables.embeddings(spark, sf).limit(50)
-    val rows = emb.select(
-      graft.functions.VectorFunctions.srpSignature(
-        col("embedding"), bands, bits, dim = 64, seed = 42).as("sig"),
-      graft.functions.VectorFunctions.srpProbes(
-        col("embedding"), bands, bits, dim = 64, seed = 42,
-        marginBits = mb).as("probes")).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val sig = r.getSeq[Int](0)
-      val probes = r.getSeq[Int](1)
-      assert(probes.length === bands * ppb)
-      (0 until bands).foreach { b =>
-        val base = sig(b)
-        val band = probes.slice(b * ppb, (b + 1) * ppb)
-        assert(band.head === base, s"probe 0 of band $b != signature bucket")
-        val h1 = band.slice(1, 1 + bits)
-        assert(h1.toSet === (0 until bits).map(p => base ^ (1 << p)).toSet,
-          s"band $b H1 shell incomplete")
-        band.drop(1 + bits).foreach { pr =>
-          assert(Integer.bitCount(pr ^ base) === 2,
-            s"band $b pair probe at Hamming ${Integer.bitCount(pr ^ base)}")
-        }
-      }
-    }
-  }
-
-  // The H2 shell's recall contract, measured where it matters: an
-  // isotropic corpus at a past-the-wall width (bits=11 at n=4000 — way
-  // over both auto ramps, per-table capture collision-bound). The flip-2
-  // candidate set is a superset of flip-1's, so per-query top-k can only
-  // improve; the measured gap at this operating point is large (the
-  // H2 shell holds most of the remaining collision mass). Deterministic:
-  // hash-generated corpus + fixed-seed planes.
-  test("probeHamming=2 dominates flip-1 at a past-the-wall isotropic width") {
-    val vecs = graft.Crossover.isotropicEmbeddings(spark, 4000L)
-      .localCheckpoint(true)
-    def sets(df: org.apache.spark.sql.DataFrame) = df
-      .select("q_id", "c_id").collect().groupBy(_.getLong(0))
-      .view.mapValues(_.map(_.getLong(1)).toSet).toMap
-    def recall(ann: Map[Long, Set[Long]], ex: Map[Long, Set[Long]]) = {
-      val rs = ex.toSeq.map { case (q, s) =>
-        ann.getOrElse(q, Set.empty).intersect(s).size.toDouble / s.size }
-      rs.sum / rs.size
-    }
-    val exact = sets(Similarity.knnJoinAgainst(vecs, vecs, k = 3))
-    try {
-      val flip1 = sets(
-        Similarity.knnJoinLsh(vecs, k = 3, tables = 8, bits = 11))
-      spark.conf.set("spark.graft.ann.lsh.probeHamming", "2")
-      val flip2df = Similarity.knnJoinLsh(vecs, k = 3, tables = 8, bits = 11)
-      val flip2 = sets(flip2df)
-      val r1 = recall(flip1, exact); val r2 = recall(flip2, exact)
-      info(f"isotropic n=4000 bits=11: flip1 recall@3 $r1%.3f, flip2 $r2%.3f")
-      assert(r2 >= r1,
-        f"flip-2 candidates are a superset — recall cannot drop ($r2%.3f < $r1%.3f)")
-      // measured at this point: 0.333 -> 0.686 (mb=8; the sweep read
-      // 0.469/0.588/0.686/0.759/0.781 at mb=4/6/8/10/11 — margin
-      // truncation trades real recall for probe volume, the §1c knob)
-      assert(r2 >= r1 + 0.25 && r2 >= 0.6,
-        f"H2 shell should recover most of the wall at this point: $r1%.3f -> $r2%.3f")
-      // pure function of the data under the wider probe set too
-      val again = sets(Similarity.knnJoinLsh(
-        vecs.repartition(7), k = 3, tables = 8, bits = 11))
-      assert(again === flip2, "flip-2 result moved under repartition")
-    } finally {
-      spark.conf.unset("spark.graft.ann.lsh.probeHamming")
-      Similarity.sweepAnnCaches()
-      vecs.unpersist()
-    }
-  }
-
-  test("probeHamming conf rejects values outside {1, 2}") {
-    val vecs = graft.Crossover.isotropicEmbeddings(spark, 100L)
-    try {
-      spark.conf.set("spark.graft.ann.lsh.probeHamming", "3")
-      val e = intercept[IllegalArgumentException] {
-        Similarity.knnJoinLsh(vecs, k = 3, tables = 8, bits = 6).collect()
-      }
-      assert(e.getMessage.contains("probeHamming"))
-    } finally spark.conf.unset("spark.graft.ann.lsh.probeHamming")
-  }
-
   // r15: the oracle-backed recall contract must actually BITE — the
   // flags are TRUE at the registered operating points (the correctness
   // gate), and an unreachable threshold flips them FALSE (so a real
@@ -1378,84 +1287,6 @@ class ExtSpec extends SparkSpec {
     assert(cells === 1L)
   }
 
-  // r14 review: a routing-active quantizer trained under AUTO superProbes
-  // must persist the RESOLVED fan-out, never the raw -1 — otherwise a
-  // future auto-formula re-tune (exactly r14's sqrt -> S/4-floor change)
-  // silently alters appended-row assignment on an old index, the drift
-  // the sidecar exists to prevent.
-  test("auto superProbes freezes to a concrete value in the persisted sidecar") {
-    import org.apache.spark.sql.functions.col
-    val keyT = "spark.graft.ann.routedCells.threshold"
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_freeze_spec").toString
-    try {
-      spark.conf.set(keyT, "8") // routing active at cells=64; sp conf UNSET
-      val vecs = graft.Crossover.clusteredEmbeddings(spark, 500L)
-        .localCheckpoint(true)
-      Similarity.IvfIndex.train(vecs, cells = 64).save("freeze_spec", dir)
-      val r = spark.read.parquet(s"$dir/assign_meta").collect().head
-      assert(r.getInt(0) === 8)
-      assert(r.getInt(1) > 0,
-        s"sidecar must carry the RESOLVED fan-out, got ${r.getInt(1)}")
-    } finally {
-      spark.conf.unset(keyT)
-      spark.sql("DROP TABLE IF EXISTS freeze_spec_assigned")
-    }
-  }
-
-  test("index append reuses PERSISTED assignment semantics across session-conf drift") {
-    // r14 (ADVICE r13): save() writes an assign_meta sidecar carrying the
-    // routing params (routedCells.threshold, superProbes) the assigned
-    // table was built under; append() assigns with THOSE, never the
-    // call-time session confs — so changing spark.graft.ann.* between
-    // build and append can no longer silently mix flat- and routed-
-    // assigned rows in one table.
-    import org.apache.spark.sql.functions.col
-    val keyT = "spark.graft.ann.routedCells.threshold"
-    val keyS = "spark.graft.ann.superProbes"
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_assign_meta").toString
-    try {
-      // build under AGGRESSIVE routing (threshold 8, 2 super-groups
-      // probed) so routed and flat assignment demonstrably disagree
-      spark.conf.set(keyT, "8"); spark.conf.set(keyS, "2")
-      val vecs = graft.Crossover.clusteredEmbeddings(spark, 800L)
-        .localCheckpoint(true)
-      val idx = Similarity.IvfIndex.train(
-        vecs.filter(col("vec_id") < 500), cells = 64)
-      idx.save("assign_meta_spec", dir)
-      val batch = vecs.filter(col("vec_id") >= 500)
-      // witnesses: batch vectors whose routed (build-time) and flat
-      // assignments differ — without them the test would pass vacuously
-      val routed = batch.withColumn("cell_r",
-        Similarity.nearestCellColWith(idx.centroids, (8, 2)))
-      val flat = batch.withColumn("cell_f",
-        Similarity.nearestCellColWith(idx.centroids, (-1, -1)))
-      val witnesses = routed.join(flat, "vec_id")
-        .filter(col("cell_r") =!= col("cell_f")).count()
-      assert(witnesses > 0,
-        "routed and flat assignment agree on every batch vector; " +
-          "narrow superProbes or grow the corpus to keep this test honest")
-      // conf DRIFT: routing disabled in the session, then append — the
-      // appended rows must still carry the build-time ROUTED assignment
-      spark.conf.set(keyT, "-1")
-      Similarity.IvfIndex.append(spark, "assign_meta_spec", dir, batch)
-      val appended = spark.table("assign_meta_spec_assigned")
-        .filter(col("c_id") >= 500)
-      assert(appended.count() === batch.count())
-      val mixed = appended.join(
-        routed.select(col("vec_id").as("c_id"), col("cell_r")), "c_id")
-        .filter(col("cell") =!= col("cell_r")).count()
-      assert(mixed === 0L,
-        s"$mixed appended rows were assigned under the drifted session " +
-          "confs instead of the persisted build-time mode")
-      vecs.unpersist()
-    } finally {
-      spark.conf.unset(keyT); spark.conf.unset(keyS)
-      spark.sql("DROP TABLE IF EXISTS assign_meta_spec_assigned")
-    }
-  }
-
   test("ivfpq append: frozen-quantizer encode, appended clone found at rank 1, no retrain") {
     import org.apache.spark.sql.functions.col
     val emb = graft.Tables.embeddings(spark, sf)
@@ -1696,33 +1527,6 @@ class ExtSpec extends SparkSpec {
     (outliers ++ bundle).toDF("vec_id", "embedding")
   }
 
-  test("routed probing respects the coverage contract: high-coverage probes stay flat, low-coverage route") {
-    // r13 guard: the auto probe defaults request a FRACTION of cells
-    // (coverage-bound isotropic operating points), while a routed scan
-    // bounded to superProbes groups can only return ~superProbes·S
-    // cells — so routing must apply ONLY when the requested probes are
-    // a small fraction of cells (≤1/4), and widen its fan-out to what
-    // the probe count needs when it does apply.
-    import org.apache.spark.sql.functions.col
-    val vecs = graft.Crossover.clusteredEmbeddings(spark, 2000L)
-      .localCheckpoint(true)
-    val index = Similarity.IvfIndex.train(vecs, cells = 100)
-    def plan(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.executedPlan.toString
-    // auto probes = 62.5% of cells — far past the 1/4 routing bar: the
-    // QUERY-PROBE column must be the EXACT flat scan ("nearest_cells("
-    // is not a substring of "nearest_cells_routed("). The candidate
-    // ASSIGNMENT side (probes=1, 1% coverage) stays routed in the same
-    // plan — that is the split the guard exists to draw.
-    val hi = plan(index.search(vecs.filter(col("vec_id") < 5), k = 3))
-    assert(hi.contains("nearest_cells("), hi.take(2000))
-    // explicit low-coverage probes route BOTH sides — no flat scan left
-    val lo = plan(index.search(vecs.filter(col("vec_id") < 5), k = 3,
-      probes = 4))
-    assert(lo.contains("nearest_cells_routed("), lo.take(2000))
-    assert(!lo.contains("nearest_cells("), lo.take(2000))
-  }
-
   test("lsh rescue FIRES: an SRP-isolated query gets exact brute-force top-k") {
     val vecs = rescueCorpus(1)
     // precondition of the scenario: with the rescue OFF the outlier is
@@ -1802,155 +1606,59 @@ class ExtSpec extends SparkSpec {
     }
   }
 
-  // r14 (verdict r13 #2): auto-bits is REGIME-AWARE. The pure formula
-  // pins: both regimes coincide at the measured-recall anchor (which is
-  // what keeps the registered RECALL block invariant), the isotropic ramp
-  // reproduces the CROSSOVER-measured good widths (fixed 10 at 25k), and
-  // it can never exceed the clustered width.
-  test("regime-aware auto-bits: anchored half-rate ramp, never wider than clustered") {
-    // session threaded explicitly (r16): the probe-skip branch validates
-    // the regime conf on the CALLER's session — without this the test
-    // depended on an earlier test having made some session active
-    def bitsAt(n: Long, regime: String): Int =
-      Similarity.resolveBits(-1, () => n, targetBucket = 8, () => regime,
-        session = () => spark)
-    // registered anchor: both formulas give the legacy 8 at corpus ~2000
-    assert(bitsAt(2000L, "isotropic") === 8)
-    assert(bitsAt(2000L, "clustered") === 8)
-    // the CROSSOVER §1 isotropic rungs: the r13 full-rate auto resolved
-    // 10/12 and traded recall down; the anchored ramp lands at 9/10
-    // (10 = the fixed width the r12 table measured recall 0.536 at 25k)
-    assert(bitsAt(10000L, "isotropic") === 9)
-    assert(bitsAt(25000L, "isotropic") === 10)
-    assert(bitsAt(10000L, "clustered") === 10)
-    assert(bitsAt(25000L, "clustered") === 12)
-    // clustered ladder rungs unchanged from r13 (the committed table)
-    assert(bitsAt(150000L, "clustered") === 14)
-    assert(bitsAt(400000L, "clustered") === 16)
-    assert(bitsAt(1000000L, "clustered") === 17)
-    // isotropic is capped by the clustered width at EVERY n (below the
-    // anchor the min() picks the population target, so a tiny corpus is
-    // never made wider by the regime switch)
-    (7 to 30).foreach { e =>
-      val n = 1L << e
-      assert(bitsAt(n, "isotropic") <= bitsAt(n, "clustered"),
-        s"iso wider than clustered at n=$n")
+  // Auto bits are ONE formula, clamp(round(log2(n / targetBucket)), 4, 24),
+  // from a single count. The pins are the registered sf0.1 corpus (2000
+  // vectors: the legacy 8 for the k-NN join, 6 for the ANN entry's
+  // denser target) and the CROSSOVER §1 clustered ladder rungs.
+  test("auto-bits: clamp(round(log2(n / targetBucket)), 4, 24); explicit bits skip the count") {
+    def bitsAt(n: Long): Int =
+      Similarity.resolveBits(-1, () => n, targetBucket = 8)
+    assert(bitsAt(2000L) === 8)
+    assert(bitsAt(10000L) === 10)
+    assert(bitsAt(25000L) === 12)
+    assert(bitsAt(150000L) === 14)
+    assert(bitsAt(400000L) === 16)
+    assert(bitsAt(1000000L) === 17)
+    assert(bitsAt(2L) === 4)
+    assert(bitsAt(1L << 40) === 24)
+    assert(Similarity.resolveBits(-1, () => 2000L, targetBucket = 32) === 6)
+    // explicit bits bypass the count entirely (the plan stays lazy)
+    assert(Similarity.resolveBits(11, () => fail("must not count"), 8) === 11)
+  }
+
+  // Auto bits cost the count and nothing else at plan construction —
+  // also on an isotropic corpus past 2k vectors, where no corpus probe
+  // may run. A bare count is the reference: under AQE it is two jobs.
+  test("knnJoinLsh auto bits on a 10k isotropic corpus: construction runs only the count") {
+    val vecs = Crossover.isotropicEmbeddings(spark, 10000L)
+      .localCheckpoint(true)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
     }
-    // explicit bits bypass regime resolution entirely (stays lazy)
-    assert(Similarity.resolveBits(11, () => fail("must not count"),
-      8, () => fail("must not probe")) === 11)
-  }
-
-  test("lsh regime probe: separates the generators, conf override wins") {
-    // the probe measures mean top-1 neighbor cosine — calibrated r14:
-    // clustered generator ~0.987 at every n (10k..1M), isotropic ~0.47-
-    // 0.56, real testdata embeddings ~0.36-0.40; threshold 0.80 sits in
-    // the gap
-    val cl = Crossover.clusteredEmbeddings(spark, 20000L)
-    val iso = Crossover.isotropicEmbeddings(spark, 20000L)
-    val mCl = Similarity.neighborCosineProbe(cl)
-    val mIso = Similarity.neighborCosineProbe(iso)
-    info(f"probe clustered=$mCl%.3f isotropic=$mIso%.3f")
-    assert(mCl > 0.9, s"clustered probe $mCl")
-    assert(mIso < 0.7, s"isotropic probe $mIso")
-    assert(Similarity.resolveLshRegime(cl) === "clustered")
-    assert(Similarity.resolveLshRegime(iso) === "isotropic")
-    // real testdata: the regime the RECALL grids are measured in
-    assert(Similarity.resolveLshRegime(
-      graft.Tables.embeddings(spark, sf)) === "isotropic")
-    val key = "spark.graft.ann.lsh.regime"
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.TestBus.drain(sc)
+      jobs.set(0)
+      body
+      org.apache.spark.TestBus.drain(sc)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
     try {
-      spark.conf.set(key, "clustered")
-      assert(Similarity.resolveLshRegime(iso) === "clustered")
-      spark.conf.set(key, "bogus")
-      intercept[IllegalArgumentException](Similarity.resolveLshRegime(iso))
-    } finally spark.conf.unset(key)
-    // r14 late: the probe is MEMOIZED per (session, analyzed plan,
-    // input files) — a repeated auto resolution on the same corpus runs
-    // no second probe (one memo entry per distinct corpus), and the
-    // sweep clears it
-    Similarity.sweepAnnCaches()
-    assert(Similarity.regimeMemoSize === 0)
-    assert(Similarity.resolveLshRegime(cl) === "clustered")
-    assert(Similarity.regimeMemoSize === 1)
-    assert(Similarity.resolveLshRegime(cl) === "clustered")
-    assert(Similarity.regimeMemoSize === 1) // memo hit, no new probe
-    assert(Similarity.resolveLshRegime(iso) === "isotropic")
-    assert(Similarity.regimeMemoSize === 2)
-    // r15 (VERDICT r14 #2): the inner key folds in the file listing —
-    // the SAME read plan over a REWRITTEN path must re-probe, not serve
-    // the stale verdict. Write an isotropic slice, probe, overwrite the
-    // path with a clustered corpus, re-read: verdict flips.
-    val dir = graft.Scratch.dir("graft_regime_fp")
-    iso.limit(5000).write.mode("overwrite").parquet(s"$dir/t")
-    assert(Similarity.resolveLshRegime(
-      spark.read.parquet(s"$dir/t")) === "isotropic")
-    val before = Similarity.regimeMemoSize
-    // memo hit on the identical listing: no new entry
-    assert(Similarity.resolveLshRegime(
-      spark.read.parquet(s"$dir/t")) === "isotropic")
-    assert(Similarity.regimeMemoSize === before)
-    cl.limit(5000).write.mode("overwrite").parquet(s"$dir/t")
-    assert(Similarity.resolveLshRegime(
-      spark.read.parquet(s"$dir/t")) === "clustered",
-      "rewritten files under the same path/plan must re-probe")
-    Similarity.sweepAnnCaches()
-    assert(Similarity.regimeMemoSize === 0)
-  }
-
-  // r16 late: the probe sample width is a conf — 256 deterministic
-  // samples are thin for a corpus with thousands of clusters, so large
-  // mixed corpora can widen (or tests shrink) the probe. The size folds
-  // into the memo key so a mid-session change re-probes instead of
-  // serving a mismatched sample; out-of-range values clamp to [16, 4096].
-  test("lsh regime probe: probeQueries conf sizes the sample and re-keys the memo") {
-    val key = "spark.graft.ann.lsh.probeQueries"
-    val cl = Crossover.clusteredEmbeddings(spark, 5000L).localCheckpoint(true)
-    Similarity.sweepAnnCaches()
-    try {
-      spark.conf.set(key, "32")
-      val pr32 = Similarity.regimeProbeStats(cl)
-      assert(pr32.ids.length === 32)
-      assert(pr32.flat.length === 32 * 64) // nQueries x dim, row-major
-      val n0 = Similarity.regimeMemoSize
-      spark.conf.set(key, "64")
-      val pr64 = Similarity.regimeProbeStats(cl)
-      assert(pr64.ids.length === 64)
-      assert(Similarity.regimeMemoSize === n0 + 1,
-        "widened conf must be a new memo entry, not a stale 32-sample hit")
-      // same conf again: memo hit, no new entry
-      assert(Similarity.regimeProbeStats(cl).ids.length === 64)
-      assert(Similarity.regimeMemoSize === n0 + 1)
-      // below the floor clamps to 16 (a <2-query sample would zero the
-      // probe); the clamp is silent by design, like cellsBound
-      spark.conf.set(key, "4")
-      assert(Similarity.regimeProbeStats(cl).ids.length === 16)
-    } finally { spark.conf.unset(key); Similarity.sweepAnnCaches() }
-  }
-
-  // r14: a MIXED corpus (clustered islands in an isotropic sea) reads
-  // BETWEEN the regimes on the probe's mean but is VISIBLE in the
-  // p10/p90 spread the probe logs — and at the 0.80 threshold an even
-  // mix lands on the isotropic (collision-preserving, recall-safe) side.
-  // Per-partition regime choice is a documented non-feature; this pin is
-  // the evidence for the documented behavior.
-  test("lsh regime probe on a mixed corpus: mean between regimes, spread visible, safe verdict") {
-    import org.apache.spark.sql.functions.col
-    val cl = Crossover.clusteredEmbeddings(spark, 10000L)
-    val iso = Crossover.isotropicEmbeddings(spark, 10000L)
-      .select((col("vec_id") + 10000L).as("vec_id"), col("embedding"))
-    val mixed = cl.unionByName(iso).localCheckpoint(true)
-    val Similarity.ProbeStats(mean, _, p10, p90, _) =
-      Similarity.neighborCosineStats(mixed)
-    info(f"mixed probe mean=$mean%.3f p10=$p10%.3f p90=$p90%.3f")
-    // mean sits between the pure regimes (~0.99 clustered, ~0.47-0.56 iso)
-    assert(mean > 0.55 && mean < 0.90, s"mean $mean")
-    // the spread is the mixed-corpus signature: near-dup-grade p90 from
-    // the clustered half, isotropic-grade p10 from the other
-    assert(p90 > 0.9, s"p90 $p90")
-    assert(p10 < 0.7, s"p10 $p10")
-    // the even mix resolves to the recall-safe side at the 0.80 threshold
-    assert(Similarity.resolveLshRegime(mixed) === "isotropic")
+      val countJobs = jobsOf(vecs.count())
+      val buildJobs = jobsOf(Similarity.knnJoinLsh(vecs, k = 3))
+      info(s"count: $countJobs job(s); knnJoinLsh construction: $buildJobs")
+      assert(countJobs >= 1)
+      assert(buildJobs === countJobs,
+        s"building knnJoinLsh ran $buildJobs jobs; one count runs $countJobs")
+    } finally {
+      sc.removeSparkListener(listener)
+      Similarity.sweepAnnCaches()
+      vecs.unpersist()
+    }
   }
 
   // end-to-end registered-point invariance: on a corpus at the anchor
@@ -1967,415 +1675,5 @@ class ExtSpec extends SparkSpec {
         .collect().toSet
       assert(auto === fixed)
     } finally Similarity.sweepAnnCaches()
-  }
-
-  // r15 (VERDICT r14 #3): on a MIXED corpus past the anchor, auto mode
-  // stratifies — each half runs at its own pure-regime width instead of
-  // one global choice — and the isotropic half's recall must not be
-  // WORSE than under the global choice while the clustered half stays
-  // perfect. Recall is scored on a deterministic query sample against
-  // the exact blocked join (the full-ladder evidence lives in
-  // CROSSOVER.md; this pin is the trigger + contract).
-  test("knnJoinLsh stratifies a mixed corpus: per-stratum bits, no recall lost vs global") {
-    import org.apache.spark.sql.functions.col
-    val n = 4000L
-    val cl = Crossover.clusteredEmbeddings(spark, n)
-    val iso = Crossover.isotropicEmbeddings(spark, n)
-      .select((col("vec_id") + n).as("vec_id"), col("embedding"))
-    val mixed = cl.unionByName(iso).localCheckpoint(true)
-    // widths must diverge at 2n=8000 (full 10 vs anchored 9) and per
-    // stratum (clustered 4000 -> 9, isotropic 4000 -> 8): the trigger
-    assert(Similarity.autoWidths(2 * n, 8) === ((10, 9)))
-    assert(Similarity.autoWidths(n, 8) === ((9, 8)))
-    def sets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.select("q_id", "c_id").collect()
-        .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-    try {
-      val strat = sets(Similarity.knnJoinLsh(mixed, k = 3))
-      spark.conf.set("spark.graft.ann.lsh.stratify", "off")
-      val global = sets(Similarity.knnJoinLsh(mixed, k = 3))
-      // row contract unchanged: the strata partition the query set
-      assert(strat.keySet.size === (2 * n).toInt,
-        s"stratified output covers ${strat.keySet.size} of ${2 * n} queries")
-      assert(strat.values.forall(_.size <= 3))
-      // recall vs the exact top-3 of a 250-query deterministic sample
-      val sample = mixed.filter(col("vec_id") % 32 === 0)
-      val exact = sets(Similarity.knnJoinAgainst(mixed, sample, 3))
-      def recall(ann: Map[Long, Set[Long]], pred: Long => Boolean): Double = {
-        val qs = exact.keys.filter(pred).toSeq
-        qs.map(q => ann.getOrElse(q, Set.empty[Long])
-          .intersect(exact(q)).size.toDouble / 3).sum / qs.size
-      }
-      val stratIso = recall(strat, _ >= n); val globIso = recall(global, _ >= n)
-      val stratCl = recall(strat, _ < n); val globCl = recall(global, _ < n)
-      info(f"iso-half recall strat=$stratIso%.3f global=$globIso%.3f; " +
-        f"clustered-half strat=$stratCl%.3f global=$globCl%.3f")
-      assert(stratCl > 0.98, s"clustered half must stay ~perfect: $stratCl")
-      // the stratified isotropic half runs at ITS pure-regime width —
-      // never worse than the global choice (small slack: the sampled
-      // estimator)
-      assert(stratIso >= globIso - 0.02,
-        s"stratified iso-half $stratIso vs global $globIso")
-    } finally {
-      spark.conf.unset("spark.graft.ann.lsh.stratify")
-      Similarity.sweepAnnCaches()
-    }
-  }
-
-  // r16 review: a mixed corpus ENTIRELY below the regime threshold —
-  // loose islands (~0.70) + isotropic sea (~0.47) — never straddles
-  // thr, so the r15 straddle-only trigger missed it and the combined
-  // size drove a too-wide global width. (Historically caught by a
-  // p90-p10 spread trigger; since late r16 the attempt is
-  // unconditional and k-means discovery handles it directly.) Sizes
-  // chosen so the per-bin widths diverge with margin for label
-  // spillover — the iso bin must stay under the 4096 rounding boundary
-  // of the anchored ramp (loose ~15.5k -> 9, iso ~3.4k -> 8, vs global
-  // 19k -> 10).
-  test("knnJoinLsh stratifies an all-sub-threshold loose+iso corpus") {
-    import org.apache.spark.sql.functions.col
-    val nLoose = 16000L; val nIso = 3000L
-    val loose = Crossover.looseClusteredEmbeddings(spark, nLoose)
-    val iso = Crossover.isotropicEmbeddings(spark, nIso)
-      .select((col("vec_id") + nLoose).as("vec_id"), col("embedding"))
-    val mixed = loose.unionByName(iso).localCheckpoint(true)
-    def sets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.select("q_id", "c_id").collect()
-        .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-    val errBuf = new java.io.ByteArrayOutputStream()
-    val realErr = System.err
-    try {
-      System.setErr(new java.io.PrintStream(errBuf, true))
-      val strat = try sets(Similarity.knnJoinLsh(mixed, k = 3))
-      finally System.setErr(realErr)
-      assert(errBuf.toString.contains("lsh stratified auto-bits"),
-        s"discovery must stratify; stderr: ${errBuf.toString.take(300)}")
-      assert(!errBuf.toString.contains("bins all resolve"),
-        "the bins must actually diverge (not merge back to the global " +
-          s"path); stderr: ${errBuf.toString.take(300)}")
-      spark.conf.set("spark.graft.ann.lsh.stratify", "off")
-      val global = sets(Similarity.knnJoinLsh(mixed, k = 3))
-      assert(strat.keySet.size === (nLoose + nIso).toInt)
-      val sample = mixed.filter(col("vec_id") % 32 === 0)
-      val exact = sets(Similarity.knnJoinAgainst(mixed, sample, 3))
-      def recall(ann: Map[Long, Set[Long]], pred: Long => Boolean): Double = {
-        val qs = exact.keys.filter(pred).toSeq
-        qs.map(q => ann.getOrElse(q, Set.empty[Long])
-          .intersect(exact(q)).size.toDouble / 3).sum / qs.size
-      }
-      val stratIso = recall(strat, _ >= nLoose)
-      val globIso = recall(global, _ >= nLoose)
-      val stratLoose = recall(strat, _ < nLoose)
-      val globLoose = recall(global, _ < nLoose)
-      info(f"iso strat=$stratIso%.3f global=$globIso%.3f; " +
-        f"loose strat=$stratLoose%.3f global=$globLoose%.3f")
-      assert(stratIso >= globIso - 0.02, s"iso $stratIso vs $globIso")
-      assert(stratLoose >= globLoose - 0.02,
-        s"loose $stratLoose vs $globLoose")
-    } finally {
-      System.setErr(realErr)
-      spark.conf.unset("spark.graft.ann.lsh.stratify")
-      Similarity.sweepAnnCaches()
-    }
-  }
-
-  // r16 late: a MINORITY population (~3% of the corpus) was invisible
-  // twice over — the r15/r16 percentile trigger read (its rows choose
-  // majority samples, so it never forms probe groups and no summary
-  // percentile sees it; that trigger is now deleted) and, at the
-  // default 256-sample probe, the k-means mass floor (~8 expected
-  // samples < 16). The chooserless-sample fallback score makes it
-  // VISIBLE to k-means at any probe width, and the absolute mass-floor
-  // cap (24) makes it DISCOVERABLE once the probe is wide enough to
-  // carry >= 24 of its samples: at probeQueries=1024 a 3.3% minority
-  // holds ~34 samples, gets its own bin, and runs at its own anchored
-  // width instead of the clustered majority's full-rate width.
-  test("knnJoinLsh discovers a ~3% minority population once the probe is widened") {
-    import org.apache.spark.sql.functions.col
-    val nCl = 29000L; val nIso = 1000L
-    val cl = Crossover.clusteredEmbeddings(spark, nCl, clusterSize = 1024)
-    val iso = Crossover.isotropicEmbeddings(spark, nIso)
-      .select((col("vec_id") + nCl).as("vec_id"), col("embedding"))
-    val mixed = cl.unionByName(iso).localCheckpoint(true)
-    def sets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.select("q_id", "c_id").collect()
-        .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-    val realErr = System.err
-    def captured(body: => Map[Long, Set[Long]]): (Map[Long, Set[Long]], String) = {
-      val buf = new java.io.ByteArrayOutputStream()
-      System.setErr(new java.io.PrintStream(buf, true))
-      val out = try body finally System.setErr(realErr)
-      (out, buf.toString)
-    }
-    try {
-      // default 256-sample probe: the attempt runs (widths diverge)
-      // and k-means SEES the minority via the fallback scores, but its
-      // ~8 samples sit under the mass floor — no valid split, global
-      // path
-      val (glob256, err256) = captured(sets(Similarity.knnJoinLsh(mixed, k = 3)))
-      assert(err256.contains("no valid sample split"),
-        s"expected trigger+merge at 256 samples; stderr: ${err256.take(400)}")
-      assert(!err256.contains("lsh stratified auto-bits"))
-      // the merge is a mass-only near-miss (centers separate cleanly),
-      // so the INFO line must carry the widen advisory
-      assert(err256.contains("widening spark.graft.ann.lsh.probeQueries"),
-        s"expected the widen advisory; stderr: ${err256.take(500)}")
-      // the advisory names a concrete width to try (one-sigma-margin
-      // expected count over the floor at the observed — conservatively
-      // undercounted — share); a power of two above the current width,
-      // at most the 4096 cap
-      val suggested = "try >= (\\d+)".r.findFirstMatchIn(err256)
-        .map(_.group(1).toInt)
-      assert(suggested.exists(s => s > 256 && s <= 4096 &&
-        Integer.bitCount(s) == 1),
-        s"expected an actionable suggested width; stderr: ${err256.take(500)}")
-      // widened probe: the minority carries ~34 >= 24 samples — its own
-      // bin, its own width
-      spark.conf.set("spark.graft.ann.lsh.probeQueries", "1024")
-      val (strat, errStrat) = captured(sets(Similarity.knnJoinLsh(mixed, k = 3)))
-      assert(errStrat.contains("lsh stratified auto-bits"),
-        s"expected stratification at 1024 samples; stderr: ${errStrat.take(400)}")
-      assert(!errStrat.contains("bins all resolve"),
-        s"bins must diverge; stderr: ${errStrat.take(400)}")
-      assert(strat.keySet.size === (nCl + nIso).toInt)
-      // recall vs the exact top-3 of a deterministic query sample
-      val sample = mixed.filter(col("vec_id") % 32 === 0)
-      val exact = sets(Similarity.knnJoinAgainst(mixed, sample, 3))
-      def recall(ann: Map[Long, Set[Long]], pred: Long => Boolean): Double = {
-        val qs = exact.keys.filter(pred).toSeq
-        qs.map(q => ann.getOrElse(q, Set.empty[Long])
-          .intersect(exact(q)).size.toDouble / 3).sum / qs.size
-      }
-      val stratIso = recall(strat, _ >= nCl)
-      val globIso = recall(glob256, _ >= nCl)
-      val stratCl = recall(strat, _ < nCl)
-      val globCl = recall(glob256, _ < nCl)
-      info(f"iso strat=$stratIso%.3f global=$globIso%.3f; " +
-        f"clustered strat=$stratCl%.3f global=$globCl%.3f")
-      assert(stratCl > 0.98, s"clustered majority must stay ~perfect: $stratCl")
-      // measured: global (full-rate width 12 over the whole corpus)
-      // 0.387 on the minority; stratified (its own anchored width) 0.968
-      assert(stratIso >= 0.9, s"minority recall at its own width: $stratIso")
-      assert(stratIso >= globIso + 0.3,
-        s"discovery must be a substantive win: $stratIso vs $globIso")
-      // partitioning invariance — the 100 TB contract: discovery,
-      // labels, and the banded passes must not depend on cluster
-      // layout. A different partitioning is a different plan (new memo
-      // key → full re-probe), the md5-ordered sample is total-order
-      // deterministic, and the per-group chooser aggregates reduce the
-      // same groups — so the stratified result set must be identical.
-      val repart = sets(Similarity.knnJoinLsh(
-        mixed.repartition(7).localCheckpoint(true), k = 3))
-      assert(repart === strat,
-        "stratified result must be partitioning-invariant")
-    } finally {
-      spark.conf.unset("spark.graft.ann.lsh.probeQueries")
-      Similarity.sweepAnnCaches()
-    }
-  }
-
-  // r16 late: the maxStrata=4 bound is exercised at its limit — FOUR
-  // neighbor-cosine populations are discovered as four bins. Two
-  // spacing lessons are baked into the knobs (both measured via a
-  // throwaway per-population score diagnostic): (1) the chooser-median
-  // score drifts UP from the pair cosine (a chooser's cosine is its
-  // max over its cluster's sampled candidates), so alphas are spaced
-  // by MEASURED in-mix score — tight 0.98 / alpha=0.6 ~0.80 /
-  // alpha=1.0 ~0.57 / iso 0.33, adjacent gaps 0.18/0.22/0.24, all >=
-  // strataMinGap; (2) the populations must be DECORRELATED via
-  // clusterTag — the generators share the hash(cl, j) signal space, so
-  // without tags cluster c of every population is ~0.5-cosine
-  // correlated with cluster c of the others, rows leak to the wrong
-  // population's samples, and the middle populations' scores collapse
-  // into the isotropic floor (an artifact no real mixed corpus has).
-  // A population whose rows genuinely cannot out-cosine the
-  // cross-random floor (~0.42 at 256 samples) merges into the iso bin
-  // by design — that IS its correct operating regime.
-  // At 4k per population the tight bin resolves the full-rate width and
-  // the three sub-threshold bins the anchored width, so they merge into
-  // one pass — discovery is 4-way even when execution is 2-pass. The
-  // sampled recalls pin that no population loses vs the global choice.
-  test("knnJoinLsh discovers four populations at the maxStrata bound") {
-    import org.apache.spark.sql.functions.col
-    val n = 4000L
-    val tight = Crossover.clusteredEmbeddings(spark, n)
-    val loose = Crossover.looseClusteredEmbeddings(spark, n, alpha = 0.6,
-        clusterTag = 1000L)
-      .select((col("vec_id") + n).as("vec_id"), col("embedding"))
-    val looser = Crossover.looseClusteredEmbeddings(spark, n, alpha = 1.0,
-        clusterTag = 2000L)
-      .select((col("vec_id") + 2 * n).as("vec_id"), col("embedding"))
-    val iso = Crossover.isotropicEmbeddings(spark, n)
-      .select((col("vec_id") + 3 * n).as("vec_id"), col("embedding"))
-    val mixed = tight.unionByName(loose).unionByName(looser)
-      .unionByName(iso).localCheckpoint(true)
-    def sets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.select("q_id", "c_id").collect()
-        .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-    val errBuf = new java.io.ByteArrayOutputStream()
-    val realErr = System.err
-    try {
-      System.setErr(new java.io.PrintStream(errBuf, true))
-      val strat = try sets(Similarity.knnJoinLsh(mixed, k = 3))
-      finally System.setErr(realErr)
-      val infoLine = errBuf.toString.linesIterator
-        .find(_.contains("lsh stratified auto-bits")).getOrElse("")
-      assert(infoLine.contains("bin3"), s"expected 4 bins, got: $infoLine")
-      spark.conf.set("spark.graft.ann.lsh.stratify", "off")
-      val global = sets(Similarity.knnJoinLsh(mixed, k = 3))
-      assert(strat.keySet.size === (4 * n).toInt)
-      val sample = mixed.filter(col("vec_id") % 32 === 0)
-      val exact = sets(Similarity.knnJoinAgainst(mixed, sample, 3))
-      def recall(ann: Map[Long, Set[Long]], pred: Long => Boolean): Double = {
-        val qs = exact.keys.filter(pred).toSeq
-        qs.map(q => ann.getOrElse(q, Set.empty[Long])
-          .intersect(exact(q)).size.toDouble / 3).sum / qs.size
-      }
-      val pops = Seq("tight" -> ((q: Long) => q < n),
-        "loose" -> ((q: Long) => q >= n && q < 2 * n),
-        "looser" -> ((q: Long) => q >= 2 * n && q < 3 * n),
-        "iso" -> ((q: Long) => q >= 3 * n))
-      val lines = pops.map { case (label, pred) =>
-        val rs = recall(strat, pred); val rg = recall(global, pred)
-        assert(rs >= rg - 0.02, s"$label strat $rs vs global $rg")
-        f"$label strat=$rs%.3f global=$rg%.3f"
-      }
-      info(lines.mkString("; "))
-    } finally {
-      System.setErr(realErr)
-      spark.conf.unset("spark.graft.ann.lsh.stratify")
-      Similarity.sweepAnnCaches()
-    }
-  }
-
-  // r16 (VERDICT r15 #3): past the measured isotropic recall wall
-  // (CROSSOVER §1b: sampled recall@3 0.519 at 250k/11 bits) knnJoinLsh
-  // must be LOUD about being the wrong tool — the broadcast-bound
-  // pattern applied to recall regime. Construction-time contract only
-  // (no join executes): wall lowered by conf so a 10k corpus (isotropic
-  // anchored width 9) reaches it.
-  test("knnJoinLsh recall wall: fail/warn/off contract on isotropic corpora") {
-    val vecs = Crossover.isotropicEmbeddings(spark, 10000L)
-      .localCheckpoint(true)
-    // regime override: the verdict is isotropic without paying the probe
-    spark.conf.set("spark.graft.ann.lsh.regime", "isotropic")
-    try {
-      assert(Similarity.autoWidths(10000L, 8)._2 === 9)
-      // default wall (11 bits): a 10k corpus resolves 9 — no trigger
-      Similarity.knnJoinLsh(vecs, k = 3)
-      // lowered wall + fail: loud contract error naming the route out
-      spark.conf.set("spark.graft.ann.lsh.recallWallBits", "9")
-      spark.conf.set("spark.graft.ann.lsh.recallWallAction", "fail")
-      val e = intercept[IllegalArgumentException] {
-        Similarity.knnJoinLsh(vecs, k = 3)
-      }
-      assert(e.getMessage.contains("recall wall"))
-      assert(e.getMessage.contains("knnJoinIvf"))
-      // the flip1 message names the in-family remedy first (r16 late)
-      assert(e.getMessage.contains("probeHamming=2"))
-      // under the Hamming-2 shell the wall shifts +3 bits (9 -> 12, over
-      // this corpus's anchored 9): same confs, no trigger
-      spark.conf.set("spark.graft.ann.lsh.probeHamming", "2")
-      Similarity.knnJoinLsh(vecs, k = 3)
-      // ... and a flip2 corpus past even the shifted wall still fails,
-      // with the remedy list no longer naming the shell it already uses
-      spark.conf.set("spark.graft.ann.lsh.recallWallBits", "6")
-      val e2 = intercept[IllegalArgumentException] {
-        Similarity.knnJoinLsh(vecs, k = 3)
-      }
-      assert(e2.getMessage.contains("knnJoinIvf") &&
-        !e2.getMessage.contains("Set spark.graft.ann.lsh.probeHamming=2"))
-      spark.conf.unset("spark.graft.ann.lsh.probeHamming")
-      spark.conf.set("spark.graft.ann.lsh.recallWallBits", "9")
-      // warn (the default action): plan constructs, message to stderr
-      spark.conf.set("spark.graft.ann.lsh.recallWallAction", "warn")
-      val errBuf = new java.io.ByteArrayOutputStream()
-      val realErr = System.err
-      System.setErr(new java.io.PrintStream(errBuf, true))
-      try Similarity.knnJoinLsh(vecs, k = 3)
-      finally System.setErr(realErr)
-      assert(errBuf.toString.contains("WARN graft-ann"),
-        s"expected a recall-wall warning, got: ${errBuf.toString.take(200)}")
-      // off: silent
-      spark.conf.set("spark.graft.ann.lsh.recallWallAction", "off")
-      Similarity.knnJoinLsh(vecs, k = 3)
-      // a typo'd action fails loudly
-      spark.conf.set("spark.graft.ann.lsh.recallWallAction", "silent")
-      intercept[IllegalArgumentException] {
-        Similarity.knnJoinLsh(vecs, k = 3)
-      }
-    } finally {
-      spark.conf.unset("spark.graft.ann.lsh.regime")
-      spark.conf.unset("spark.graft.ann.lsh.recallWallBits")
-      spark.conf.unset("spark.graft.ann.lsh.recallWallAction")
-      spark.conf.unset("spark.graft.ann.lsh.probeHamming")
-      Similarity.sweepAnnCaches()
-    }
-  }
-
-  // r16 (VERDICT r15 #2): THREE neighbor-cosine populations — tight
-  // islands (~0.99), loose islands (~0.70), isotropic sea (~0.47) — get
-  // one operating point per population instead of the r15 two-way
-  // split. At 4000/third the r15 logic degenerates (clustered stratum
-  // 4000 -> 9, iso stratum 8000 -> 9, equal widths -> global), so ANY
-  // stratified behavior here is the new multi-bin path; the INFO line
-  // pins the 3-bin discovery and the sampled recalls pin that the two
-  // sub-threshold thirds run at their own (narrower) width with recall
-  // >= the global choice.
-  test("knnJoinLsh stratifies a 3-population corpus into per-population bins") {
-    import org.apache.spark.sql.functions.col
-    val n = 4000L
-    val tight = Crossover.clusteredEmbeddings(spark, n)
-    val loose = Crossover.looseClusteredEmbeddings(spark, n)
-      .select((col("vec_id") + n).as("vec_id"), col("embedding"))
-    val iso = Crossover.isotropicEmbeddings(spark, n)
-      .select((col("vec_id") + 2 * n).as("vec_id"), col("embedding"))
-    val mixed = tight.unionByName(loose).unionByName(iso)
-      .localCheckpoint(true)
-    def sets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.select("q_id", "c_id").collect()
-        .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-    val errBuf = new java.io.ByteArrayOutputStream()
-    val realErr = System.err
-    try {
-      System.setErr(new java.io.PrintStream(errBuf, true))
-      val strat = try sets(Similarity.knnJoinLsh(mixed, k = 3))
-      finally System.setErr(realErr)
-      val infoLine = errBuf.toString.linesIterator
-        .find(_.contains("lsh stratified auto-bits")).getOrElse("")
-      assert(infoLine.contains("bin2"), s"expected 3 bins, got: $infoLine")
-      assert(!infoLine.contains("bin3"),
-        s"expected exactly 3 bins, got: $infoLine")
-      spark.conf.set("spark.graft.ann.lsh.stratify", "off")
-      val global = sets(Similarity.knnJoinLsh(mixed, k = 3))
-      // row contract: the bins partition the query set
-      assert(strat.keySet.size === (3 * n).toInt,
-        s"stratified output covers ${strat.keySet.size} of ${3 * n} queries")
-      // recall vs the exact top-3 of a deterministic query sample
-      val sample = mixed.filter(col("vec_id") % 32 === 0)
-      val exact = sets(Similarity.knnJoinAgainst(mixed, sample, 3))
-      def recall(ann: Map[Long, Set[Long]], pred: Long => Boolean): Double = {
-        val qs = exact.keys.filter(pred).toSeq
-        qs.map(q => ann.getOrElse(q, Set.empty[Long])
-          .intersect(exact(q)).size.toDouble / 3).sum / qs.size
-      }
-      val stratIso = recall(strat, _ >= 2 * n)
-      val globIso = recall(global, _ >= 2 * n)
-      val stratLoose = recall(strat, q => q >= n && q < 2 * n)
-      val globLoose = recall(global, q => q >= n && q < 2 * n)
-      val stratTight = recall(strat, _ < n)
-      info(f"iso third strat=$stratIso%.3f global=$globIso%.3f; " +
-        f"loose third strat=$stratLoose%.3f global=$globLoose%.3f; " +
-        f"tight third strat=$stratTight%.3f")
-      assert(stratTight > 0.98, s"tight third must stay ~perfect: $stratTight")
-      assert(stratIso >= globIso - 0.02,
-        s"iso third $stratIso vs global $globIso")
-      assert(stratLoose >= globLoose - 0.02,
-        s"loose third $stratLoose vs global $globLoose")
-    } finally {
-      System.setErr(realErr)
-      spark.conf.unset("spark.graft.ann.lsh.stratify")
-      Similarity.sweepAnnCaches()
-    }
   }
 }

@@ -212,73 +212,6 @@ object NativeExprProps extends Properties("graft.nativeexprs") {
       native == legacy
     }
 
-  property("nearest_cells_routed with all super-groups probed == nearest_cells") =
-    forAll(vecs, Gen.choose(1, 6)) { (base, probes) =>
-      import spark.implicits._
-      // 12 fine cells, non-consecutive ids; grouping comes from the real
-      // driver-side k-means (Similarity.superGroups), so this pins the
-      // production layout contract, not a hand-built one
-      val rng = new scala.util.Random(13)
-      val cents: Seq[(Int, Seq[Float])] = (0 until 12).map(i =>
-        (i * 5 + 2, Seq.fill(16)((rng.nextInt(200) - 100) / 10.0f)))
-      val (ids, mat, superMat, offs) = graft.ext.Similarity.superGroups(cents)
-      val nGroups = offs.length - 1
-      val df = base.zipWithIndex.map { case (v, i) => (i.toLong, v.toArray) }
-        .toDF("id", "embedding")
-      val flat = df.select(col("id"),
-          nearestCells(col("embedding"), cents.map(_._1),
-            cents.flatMap(_._2), probes).as("cells"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-      // exhaustive routing (superProbes == nGroups) must be EXACTLY the
-      // flat scan — same comparator, every fine cell visited
-      val routedAll = df.select(col("id"),
-          nearestCellsRouted(col("embedding"), ids, mat, superMat, offs,
-            probes, nGroups).as("cells"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-      routedAll == flat
-    }
-
-  property("nearest_cells_routed subset routing == flat scan over the probed groups' cells") =
-    forAll(vecs, Gen.choose(1, 4), Gen.choose(1, 2)) { (base, probes, superProbes) =>
-      import spark.implicits._
-      val rng = new scala.util.Random(17)
-      val cents: Seq[(Int, Seq[Float])] = (0 until 12).map(i =>
-        (i * 3, Seq.fill(16)((rng.nextInt(200) - 100) / 10.0f)))
-      val (ids, mat, superMat, offs) = graft.ext.Similarity.superGroups(cents)
-      val nGroups = offs.length - 1
-      val sp = math.min(superProbes, nGroups)
-      val dim = 16
-      // Scala reference for level 1: the expression's exact accumulation
-      // (sequential float→double), comparator (sim desc, group idx desc)
-      def cos(v: Seq[Float], m: Seq[Float], base0: Int): Double = {
-        var dot = 0.0; var nx = 0.0; var ny = 0.0
-        (0 until dim).foreach { i =>
-          val xi = v(i).toDouble; val yi = m(base0 + i).toDouble
-          dot += xi * yi; nx += xi * xi; ny += yi * yi
-        }
-        val den = math.sqrt(nx) * math.sqrt(ny)
-        val s = if (den == 0.0) 0.0 else dot / den
-        if (s.isNaN) Double.NegativeInfinity else s
-      }
-      val df = base.zipWithIndex.map { case (v, i) => (i.toLong, v.toArray) }
-        .toDF("id", "embedding")
-      val routed = df.select(col("id"),
-          nearestCellsRouted(col("embedding"), ids, mat, superMat, offs,
-            probes, sp).as("cells"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-      base.zipWithIndex.forall { case (v, i) =>
-        val groupsRanked = (0 until nGroups)
-          .map(g => (cos(v, superMat, g * dim), g))
-          .sortBy { case (s, g) => (-s, -g) }.take(sp).map(_._2).toSet
-        val cellIdx = (0 until nGroups).filter(groupsRanked)
-          .flatMap(g => offs(g) until offs(g + 1))
-        val expect = cellIdx
-          .map(c => (cos(v, mat, c * dim), ids(c)))
-          .sortBy { case (s, id) => (-s, -id) }.take(probes).map(_._2)
-        routed(i.toLong) == expect
-      }
-    }
-
   property("nearest_cells ranks non-finite similarities LAST (NaN-vector determinism)") =
     forAll(Gen.choose(1, 4)) { probes =>
       import spark.implicits._
