@@ -28,7 +28,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Recall {
   def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("RECALL_r7.json")
+    // the default lands under target/, so a bare run never overwrites a
+    // committed RECALL_r*.json; pass the artifact name to write one
+    val out = args.headOption.getOrElse("target/recall.json")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = SparkSession.builder()
@@ -318,7 +320,9 @@ object Recall {
         s""""knn_join":{$kjJson},$decayJson,""" +
         s""""sweep":{"pq":[${pqSweep.mkString(",")}],""" +
         s""""ivfpq":[${ivfpqSweep.mkString(",")}]},"note":"$note"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
+    val outPath = java.nio.file.Paths.get(out).toAbsolutePath
+    java.nio.file.Files.createDirectories(outPath.getParent)
+    java.nio.file.Files.write(outPath,
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(json)
     spark.stop()

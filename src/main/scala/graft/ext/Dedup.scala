@@ -1257,10 +1257,14 @@ object Dedup {
 
   /** Exact n-gram Jaccard in DuckDB — the ground truth for `x_dedup_ngram`
     * AND for `x_dedup_minhash`: banded 64-perm MinHash at b=16/r=4 has
-    * collision probability 1-(1-j^4)^16 ≈ 0.9996 at j=0.5 (higher above),
-    * and every emitted pair is exact-Jaccard re-verified, so the LSH path
-    * provably emits a subset of the ground truth and measurably emits all
-    * of it (recall 1.0 at the gate scale factor, asserted in ExtSpec). */
+    * collision probability 1-(1-j^4)^16 — 0.644 at j=0.5, 0.891 at 0.6,
+    * 0.981 at 0.684 (near-certain collision at j=0.5 takes b=32/r=2:
+    * 0.9999). Every emitted pair is exact-Jaccard re-verified, so the LSH
+    * path provably emits a subset of the ground truth. It emits all of it
+    * on the gate test data (recall 1.0, asserted in ExtSpec) only because
+    * every oracle pair there has j ≥ 0.88, where a pair's miss chance is
+    * below 1e-5 (2.2e-4 at j=0.8); pairs near the 0.5 threshold are
+    * missed about a third of the time. */
   private val ngramJaccardSql: String =
       """WITH sets AS (
         |  SELECT doc_id, list_distinct(ngrams) AS shingles

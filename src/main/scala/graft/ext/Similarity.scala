@@ -20,10 +20,12 @@ import graft.functions.VectorFunctions.cosineSim
   *  - LSH: MULTI-TABLE random-hyperplane hashing via the fused native
   *    SrpSignature expression (planes derived per-executor from a fixed
   *    seed, so the plan ships four ints, not plane literals): L
-  *    independent tables, each probed with flip-1-bit multi-probe, union
-  *    of candidates exact-reranked. At 100 TB the bucket join replaces
-  *    the O(N·Q) nested loop with a lean banded join; recall is tuned by
-  *    (tables, bits) — miss probability decays as (1-p)^tables.
+  *    independent tables, each probed with flip-1-bit multi-probe; every
+  *    bucket match is scored with exact cosine in the join's own stage
+  *    and reduced by the bounded top-k aggregate. At 100 TB the bucket
+  *    join replaces the O(N·Q) nested loop with a banded one-pass join;
+  *    recall is tuned by (tables, bits) — miss probability decays as
+  *    (1-p)^tables.
   */
 object Similarity {
   type Q = (SparkSession, String) => DataFrame
@@ -37,6 +39,31 @@ object Similarity {
       .select(col("q_id"), col("rank"), col("c_id"),
         round(col("cosine"), 6).as("cosine"))
   }
+
+  /** Per query, the `k` best scored candidates of a `(q_id, score, c_id)`
+    * pair stream as one [[graft.functions.TopKAggregator]] buffer `nn`:
+    * (score desc, id asc), run partial+final so each task combines its
+    * pairs down to ≤ k per query before the exchange, and idempotent on a
+    * duplicate `(score, id)`, so a pair found through several routes
+    * (tables, probes, cells) needs no `dropDuplicates` pass. */
+  private def topKBuffers(scored: DataFrame, k: Int): DataFrame = {
+    val topk = udaf(graft.functions.TopKAggregator.agg(k))
+    scored.groupBy("q_id").agg(topk(col("score"), col("c_id")).as("nn"))
+  }
+
+  /** One `(q_id, rank, c_id, cosine)` row per entry of a [[topKBuffers]]
+    * buffer — the output shape of [[topKSelect]]. */
+  private def rankedRows(nn: DataFrame): DataFrame =
+    nn.select(col("q_id"), posexplode(col("nn")))
+      .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
+        col("col.id").as("c_id"), round(col("col.score"), 6).as("cosine"))
+
+  /** A query's flip-1 SRP probes: its own `bucket` plus each 1-bit flip
+    * (bits+1 probes of 2^bits). */
+  private def flipProbes(bits: Int): Column = expr(
+    s"""array_union(array(bucket),
+       |  transform(sequence(0, ${bits - 1}), p -> int(bucket ^ shiftleft(1, p))))"""
+      .stripMargin)
 
   /** Exact cosine top-k: every (query, candidate) pair scored with the
     * fused native expression; queries broadcast. O(N·Q) — the baseline
@@ -96,7 +123,6 @@ object Similarity {
   def knnJoinAgainst(candidates: DataFrame, queryVecs: DataFrame,
       k: Int = 3, blocks: Int = 8, qblocks: Int = 4,
       excludeSelf: Boolean = true): DataFrame = {
-    val topk = udaf(graft.functions.TopKAggregator.agg(k))
     val cand = candidates
       .select(col("vec_id").as("c_id"), col("embedding").as("v_c"),
         pmod(xxhash64(col("vec_id")), lit(blocks)).cast("int").as("b"))
@@ -115,15 +141,10 @@ object Similarity {
     // explicit shuffle-hash hint (build = the less-replicated side)
     // keeps the plan shape constant from 10k rows to 100 TB.
     val pairs = cand.hint("shuffle_hash").join(qs, Seq("b", "qb"))
-    val nn = (if (excludeSelf) pairs.filter(col("q_id") =!= col("c_id"))
-              else pairs)
-      .select(col("q_id"), cosineSim(col("v_q"), col("v_c")).as("score"),
-        col("c_id"))
-      .groupBy("q_id")
-      .agg(topk(col("score"), col("c_id")).as("nn"))
-    nn.select(col("q_id"), posexplode(col("nn")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("c_id"), round(col("col.score"), 6).as("cosine"))
+    rankedRows(topKBuffers(
+      (if (excludeSelf) pairs.filter(col("q_id") =!= col("c_id")) else pairs)
+        .select(col("q_id"), cosineSim(col("v_q"), col("v_c")).as("score"),
+          col("c_id")), k))
   }
 
   /** Approximate k-NN self-join through IVF cells — the 100 TB operating
@@ -142,7 +163,6 @@ object Similarity {
       probes: Int = -1): DataFrame = {
     val index = IvfIndex.train(vectors, cells)
     val nProbes = ivfpqProbes(cells, probes)
-    val topk = udaf(graft.functions.TopKAggregator.agg(k))
     val qProbe = vectors
       .withColumn("probe_cells", probeCells(index.centroids, nProbes))
       .select(col("vec_id").as("q_id"), col("embedding").as("v_q"),
@@ -150,15 +170,11 @@ object Similarity {
     // strategy pinned like [[knnJoinAgainst]]: both sides are
     // corpus-scale (assigned = n rows, probe side = n × probes), so the
     // cell join must never auto-broadcast off a narrow-source estimate
-    val nn = index.assigned.hint("shuffle_hash").join(qProbe, Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), cosineSim(col("v_q"), col("v_c")).as("score"),
-        col("c_id"))
-      .groupBy("q_id")
-      .agg(topk(col("score"), col("c_id")).as("nn"))
-    nn.select(col("q_id"), posexplode(col("nn")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("c_id"), round(col("col.score"), 6).as("cosine"))
+    rankedRows(topKBuffers(
+      index.assigned.hint("shuffle_hash").join(qProbe, Seq("cell"))
+        .filter(col("q_id") =!= col("c_id"))
+        .select(col("q_id"), cosineSim(col("v_q"), col("v_c")).as("score"),
+          col("c_id")), k))
   }
 
   /** Approximate k-NN self-join via SYMMETRIC multi-table SRP banding —
@@ -230,19 +246,17 @@ object Similarity {
     if (bits > 0 && bound > 0)
       checkBound(vectors.limit(
         math.min(bound / rowBytes + 1, Int.MaxValue.toLong).toInt).count())
-    val topk = udaf(graft.functions.TopKAggregator.agg(k))
     val sigs = graft.functions.VectorFunctions.srpSignature(
       col("embedding"), bands = tables, bits = nBits, dim = 64, seed = 42)
-    val all = vectors.withColumn("sigs", sigs)
-    val cand = all.select(col("vec_id").as("c_id"),
-      posexplode(col("sigs")).as(Seq("t", "bucket")))
-    val qProbe = all
-      .select(col("vec_id").as("q_id"),
-        posexplode(col("sigs")).as(Seq("t", "bucket")))
-      .select(col("q_id"), col("t"), explode(expr(
-        s"""array_union(array(bucket),
-           |  transform(sequence(0, ${nBits - 1}), p -> int(bucket ^ shiftleft(1, p))))"""
-          .stripMargin)).as("bucket"))
+    // posexplode the signature expression itself, not a `sigs` column:
+    // over an attribute, InferFiltersFromGenerate adds `size(sigs) > 0`,
+    // and pushdown turns that into a scan-side Filter that recomputes
+    // the signature
+    val cand = vectors.select(col("vec_id").as("c_id"),
+      posexplode(sigs).as(Seq("t", "bucket")))
+    val qProbe = vectors
+      .select(col("vec_id").as("q_id"), posexplode(sigs).as(Seq("t", "bucket")))
+      .select(col("q_id"), col("t"), explode(flipProbes(nBits)).as("bucket"))
     // no dropDuplicates pre-pass: the same pair surfacing via several
     // tables/probes scores identically, and TopKAggregator is idempotent
     // on identical (score, id) — duplicates die inside the partial
@@ -282,12 +296,10 @@ object Similarity {
       col("embedding").as("v_c"))
     val qVecs = vectors
       .select(col("vec_id").as("q_id"), col("embedding").as("v_q"))
-    val nnRaw = pairs.join(broadcast(cVecs), "c_id")
+    val nnRaw = topKBuffers(pairs.join(broadcast(cVecs), "c_id")
       .join(broadcast(qVecs), "q_id")
       .select(col("q_id"), cosineSim(col("v_q"), col("v_c")).as("score"),
-        col("c_id"))
-      .groupBy("q_id")
-      .agg(topk(col("score"), col("c_id")).as("nn"))
+        col("c_id")), k)
     // Zero-recall-tail rescue (r12): an SRP-isolated vector — one whose
     // buckets collide with nobody across all tables+probes — produces NO
     // pairs and silently vanishes from the result; unlike the IVF
@@ -324,18 +336,14 @@ object Similarity {
         // CacheManager would otherwise pin both for the session lifetime
         annCacheRegistry.add(done)
         annCacheRegistry.add(short)
-        val rescued = cVecs
+        val rescued = topKBuffers(cVecs
           .join(broadcast(short), col("q_id") =!= col("c_id"))
           .select(col("q_id"),
-            cosineSim(col("v_q"), col("v_c")).as("score"), col("c_id"))
-          .groupBy("q_id")
-          .agg(topk(col("score"), col("c_id")).as("nn"))
+            cosineSim(col("v_q"), col("v_c")).as("score"), col("c_id")), k)
         done.join(short.select("q_id"), Seq("q_id"), "left_anti")
           .unionByName(rescued)
       }
-    nn.select(col("q_id"), posexplode(col("nn")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("c_id"), round(col("col.score"), 6).as("cosine"))
+    rankedRows(nn)
   }
 
   /** Multi-table SRP LSH ANN — the standard high-recall LSH form:
@@ -350,14 +358,19 @@ object Similarity {
     * recall@5 from the single-table ~0.28 to ≥0.8 on the near-uniform
     * testdata embeddings (measured per round in RECALL_r*.json).
     *
-    * 100 TB shape: the bucket join carries LEAN banded frames only —
-    * (c_id, table, bucket) rows, `tables` per vector, no payloads — and
-    * the probe side broadcasts (queries × tables × (bits+1) rows). The
-    * matched pair set (bounded by queries × union-bucket population)
-    * broadcasts back against the vector table for the exact rerank, so
-    * the corpus-sized embedding column never shuffles and is read only
-    * for matched candidates — the same payload-free banding discipline as
-    * [[Dedup.embedNearDupsLsh]]. */
+    * 100 TB shape: one pass over the candidates. Each candidate row
+    * emits its `tables` (table, bucket) keys from the one srp_signature
+    * call that reads its embedding, and carries that embedding on; the
+    * probe side — queries × tables × (bits+1) rows with the query vector
+    * — broadcasts. Cosine is scored right after the bucket join and
+    * reduced by the k-bounded [[graft.functions.TopKAggregator]] run
+    * partial+final, so the only exchange the candidate side feeds is
+    * the ≤ k-per-query partial buffers: no pair list, no second scan or
+    * vector re-join, no `dropDuplicates` (a pair found through several
+    * tables or probes scores identically, and the aggregator keeps it
+    * once), no window. The ranking is (cosine desc, c_id asc), the order
+    * [[topKSelect]]'s window gives: the native cosine never yields NaN
+    * or -0.0 on finite input, where the two orders could differ. */
   def lshTopK(candidates: DataFrame, queryFilter: Column, k: Int = 5,
       tables: Int = 8, bits: Int = 6): DataFrame = {
     // bits <= 0 = auto: the [[resolveBits]] formula of [[knnJoinLsh]]
@@ -366,32 +379,21 @@ object Similarity {
     // stream — is what the width controls. Auto resolves to the
     // registered 6 at the sf0.1 corpus (2000 vectors).
     val nBits = resolveBits(bits, () => candidates.count(), targetBucket = 32)
+    // posexploded directly: see [[knnJoinLsh]]
     val sigs = graft.functions.VectorFunctions.srpSignature(
       col("embedding"), bands = tables, bits = nBits, dim = 64, seed = 42)
-    val all = candidates.withColumn("sigs", sigs)
-    // lean banded candidate frame: no embedding payloads through the join
-    val cand = all.select(col("vec_id").as("c_id"),
-      posexplode(col("sigs")).as(Seq("t", "c_bucket")))
-    // per table: own bucket + each 1-bit flip (bits+1 probes of 2^bits)
-    val qProbe = all.filter(queryFilter)
-      .select(col("vec_id").as("q_id"),
-        posexplode(col("sigs")).as(Seq("t", "bucket")))
-      .select(col("q_id"), col("t"), explode(expr(
-        s"""array_union(array(bucket),
-           |  transform(sequence(0, ${nBits - 1}), p -> int(bucket ^ shiftleft(1, p))))"""
-          .stripMargin)).as("c_bucket"))
-    val pairs = cand.join(broadcast(qProbe), Seq("t", "c_bucket"))
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"))
-      .dropDuplicates("q_id", "c_id") // same candidate via several tables/probes
-    val cVecs = candidates.select(col("vec_id").as("c_id"),
-      col("embedding").as("v_c"))
-    val qVecs = candidates.filter(queryFilter)
-      .select(col("vec_id").as("q_id"), col("embedding").as("v_q"))
-    topKSelect(
-      cVecs.join(broadcast(pairs), "c_id")
-        .join(broadcast(qVecs), "q_id")
-        .withColumn("cosine", cosineSim(col("v_q"), col("v_c"))), k)
+    val cand = candidates.select(col("vec_id").as("c_id"),
+      col("embedding").as("v_c"), posexplode(sigs).as(Seq("t", "c_bucket")))
+    val qProbe = candidates.filter(queryFilter)
+      .select(col("vec_id").as("q_id"), col("embedding").as("v_q"),
+        posexplode(sigs).as(Seq("t", "bucket")))
+      .select(col("q_id"), col("v_q"), col("t"),
+        explode(flipProbes(nBits)).as("c_bucket"))
+    rankedRows(topKBuffers(
+      cand.join(broadcast(qProbe), Seq("t", "c_bucket"))
+        .filter(col("q_id") =!= col("c_id"))
+        .select(col("q_id"), cosineSim(col("v_q"), col("v_c")).as("score"),
+          col("c_id")), k))
   }
 
   /** IVF (inverted-file) ANN: a `cells`-cell coarse quantizer —
@@ -1420,12 +1422,16 @@ object Similarity {
     val exact = memoizedBaseline(all, "ann_q10_k5")(
       exactTopK(all, all.filter(col("vec_id") < 10), 5))
     // 10 queries × 5 rows: the per-query fold and the all-query window
-    // are KB-scale by construction (never corpus-proportional)
-    val perQ = exact
-      .join(approx.withColumn("hit", lit(1L)), Seq("q_id", "c_id"), "left")
+    // are KB-scale by construction (never corpus-proportional). One
+    // union feeds one aggregate: the baseline rows count n_exact, and
+    // the approx rows that hit the broadcast baseline count hits (approx
+    // is unique per (q_id, c_id), so this equals the left-join count
+    // without a sort-merge join's two exchanges)
+    val perQ = exact.select(col("q_id"), lit(1L).as("n"), lit(0L).as("hit"))
+      .unionByName(approx.join(broadcast(exact), Seq("q_id", "c_id"))
+        .select(col("q_id"), lit(0L).as("n"), lit(1L).as("hit")))
       .groupBy(col("q_id"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("hits"))
+      .agg(sum(col("n")).as("n_exact"), sum(col("hit")).as("hits"))
     // the all-query total rides a constant-key broadcast hash join of
     // the 1-row aggregate (a partition-less window would drag the
     // plan-gate exception in for a 10-row frame)

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.VectorFunctions.tokenEntropy
 
 /** [EXT] Text analysis for training-data pipelines: token counting
   * (whitespace + BPE-ish regex), quality scoring (length / stopword /
@@ -12,8 +13,9 @@ import graft.Tables._
   * Public API is DataFrame-in/DataFrame-out over any frame with
   * `(doc_id, text)` columns; the `queries` map binds them to the driver
   * testdata. Everything is Catalyst built-ins (split / regexp_extract_all /
-  * higher-order array functions) — codegen-friendly, no UDFs, scales
-  * linearly in tokens with zero shuffles (all per-row projections).
+  * higher-order array functions) plus the native entropy kernel — no
+  * UDFs, scales linearly in tokens with zero shuffles (all per-row
+  * projections).
   */
 object TextAnalysis {
   type Q = (SparkSession, String) => DataFrame
@@ -128,27 +130,16 @@ object TextAnalysis {
     * boilerplate/padding (one dominant symbol class); low word entropy
     * flags template/repetitive text that a plain length filter passes.
     *
-    * Entirely row-local higher-order functions — O(len × alphabet) per
-    * doc, zero shuffles at any corpus size. The fold runs over the
-    * SORTED distinct symbols so the floating-point accumulation order is
+    * One native [[org.apache.spark.sql.graft.TokenEntropy]] call per
+    * column: a hash count of the symbols, then a fold over the distinct
+    * symbols in sorted order — O(len) per doc, zero shuffles at any corpus
+    * size. The sorted fold makes the floating-point accumulation order
     * deterministic and engine-portable (the DuckDB twin folds an
     * identically ordered count list). */
-  def entropySignals(docs: DataFrame): DataFrame = {
-    def entropyOf(c: String): Column = expr(
-      s"""round(cast(0.0 as double) - aggregate(
-         |  transform(array_sort(array_distinct($c)),
-         |            u -> size(filter($c, x -> x = u))),
-         |  cast(0.0 as double),
-         |  (acc, cnt) -> acc
-         |    + (cnt / cast(size($c) as double))
-         |      * log2(cnt / cast(size($c) as double))), 6)""".stripMargin)
-    docs
-      .withColumn("chars", split(col("text"), ""))
-      .withColumn("words", tokens)
-      .select(col("doc_id"),
-        entropyOf("chars").as("char_entropy"),
-        entropyOf("words").as("word_entropy"))
-  }
+  def entropySignals(docs: DataFrame): DataFrame = docs
+    .select(col("doc_id"),
+      round(tokenEntropy(split(col("text"), "")), 6).as("char_entropy"),
+      round(tokenEntropy(tokens), 6).as("word_entropy"))
 
   /** Language ID: CJK codepoint check, else argmax over marker-word hits
     * (deterministic tie-break by language ordinal). Keeps every input

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.graft.{CosineSimilarity, Md5SimHash60, MinHashSignature, NearestCellSim, NearestCells, PqAdc, PqEncode, PqLut, ShingleSet, SimHash64, VecNorm}
+import org.apache.spark.sql.graft.{CosineSimilarity, Md5SimHash60, MinHashSignature, NearestCellSim, NearestCells, PqAdc, PqEncode, PqLut, ShingleSet, SimHash64, TokenEntropy, VecNorm}
 
 /** Column-API facade over the native Catalyst expressions
   * (o.a.s.sql.graft — see each expression's scaladoc for the why). */
@@ -42,6 +42,11 @@ object VectorFunctions {
     * token list, one fused pass (see [[ShingleSet]]). */
   def shingleSet(tokens: Column, width: Int = 3): Column =
     GraftBridge.column(ShingleSet(GraftBridge.expression(tokens), width))
+
+  /** Shannon entropy in bits of an `array<string>` symbol list, one fused
+    * pass (see [[TokenEntropy]]). */
+  def tokenEntropy(symbols: Column): Column =
+    GraftBridge.column(TokenEntropy(GraftBridge.expression(symbols)))
 
   /** Product-quantization primitives (see [[PqEncode]]/[[PqLut]]/[[PqAdc]]). */
   def pqEncode(vec: Column, codebooks: Array[Float], m: Int, k: Int): Column =

@@ -112,7 +112,8 @@ object Layout {
     *    heavily skewed columns would want quantile boundaries instead,
     *    the bucketing is the only piece to swap).
     * 2. Rows sort by the Morton interleave of their bucket ids
-    *    (`repartitionByRange` on the z-value + in-partition sort), so
+    *    (range partitions at the z-value's quantiles + in-partition
+    *    sort), so
     *    every output file covers a small HYPER-RECTANGLE of the z-column
     *    space rather than a slab of one column. A linear sort bounds one
     *    column per file; z-order bounds ALL of them at once — a range
@@ -180,8 +181,19 @@ object Layout {
             lit(0L)), lit(cells - 1))
         }
       }
-    df.withColumn("__z", morton(buckets, bits))
-      .repartitionByRange(files, col("__z"))
+    // file boundaries from the data alone: `files`-quantiles of the
+    // z-value, and a row's file is the count of boundaries ≤ its z-value.
+    // (`repartitionByRange` seeds its boundary sample from the RDD id,
+    // which made the layout move with the SparkContext's history.)
+    val z = df.withColumn("__z", morton(buckets, bits))
+    val bounds =
+      if (files <= 1) Array.empty[Double]
+      else z.stat.approxQuantile("__z",
+        (1 until files).map(_.toDouble / files).toArray,
+        math.min(0.001, 0.1 / files))
+    val file = aggregate(array(bounds.toSeq.map(lit): _*), lit(0),
+      (acc, b) => acc + when(col("__z").cast("double") >= b, 1).otherwise(0))
+    z.repartitionById(files, file)
       .sortWithinPartitions("__z")
       .drop("__z")
   }

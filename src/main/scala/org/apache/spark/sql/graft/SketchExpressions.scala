@@ -204,6 +204,64 @@ object ShingleSet {
   private val space = UTF8String.fromString(" ")
 }
 
+/** Shannon entropy (bits) of an array<string> symbol list — the fused
+  * native form of the sorted-fold HOF
+  *
+  * {{{ 0.0 - aggregate(
+  *       transform(array_sort(array_distinct(x)),
+  *                 u -> size(filter(x, e -> e = u))),
+  *       0.0D, (acc, cnt) -> acc + (cnt / size(x)) * log2(cnt / size(x))) }}}
+  *
+  * which paid one interpreted `filter` per distinct symbol per row
+  * (O(len × distinct) lambda calls). Here the counts come from one hash
+  * pass, and the fold runs over the distinct symbols in `UTF8String`
+  * binary order — `array_sort`'s order — with the HOF's arithmetic
+  * (p = cnt / n, `Log2` = StrictMath.log(p) / StrictMath.log(2)), so the
+  * result is bit-identical to it. Edge cases follow the HOF too: an
+  * empty array gives 0.0, and a null element gives null (its count is 0,
+  * and `log2(0)` is null). */
+case class TokenEntropy(child: Expression)
+  extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def prettyName: String = "token_entropy"
+
+  override protected def nullSafeEval(input: Any): Any = {
+    val arr = input.asInstanceOf[ArrayData]
+    val n = arr.numElements()
+    val counts = new java.util.HashMap[UTF8String, Array[Int]]()
+    var i = 0
+    while (i < n) {
+      if (arr.isNullAt(i)) return null
+      val s = arr.getUTF8String(i)
+      val c = counts.get(s)
+      if (c == null) counts.put(s, Array(1)) else c(0) += 1
+      i += 1
+    }
+    val symbols = counts.keySet().toArray(new Array[UTF8String](counts.size()))
+    java.util.Arrays.sort(symbols, TokenEntropy.binaryOrder)
+    val total = n.toDouble
+    var acc = 0.0
+    var j = 0
+    while (j < symbols.length) {
+      val p = counts.get(symbols(j))(0) / total
+      acc = acc + p * (StrictMath.log(p) / StrictMath.log(2))
+      j += 1
+    }
+    0.0 - acc
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): TokenEntropy =
+    copy(child = newChild)
+}
+
+object TokenEntropy {
+  private val binaryOrder: java.util.Comparator[UTF8String] =
+    (a: UTF8String, b: UTF8String) => a.binaryCompare(b)
+}
+
 /** `bands` packed random-hyperplane (SRP) LSH buckets of an `array<float>`
   * embedding, one fused pass: out[b] = sum over p < bits of
   * (dot(v, plane[b][p]) > 0 ? 1 << p : 0). Plane components are ±1 from a

@@ -619,6 +619,102 @@ class ExtSpec extends SparkSpec {
     }
   }
 
+  /** Spark's walk over an executed plan through its adaptive query
+    * stages. */
+  private object aqe
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** The two-stage formulation lshTopK had before it scored inside the
+    * bucket join: a deduplicated pair list broadcast back against the
+    * vectors, ranked by a row_number window. The reference the
+    * single-stage shape must reproduce row for row. */
+  private def windowedLshTopK(candidates: org.apache.spark.sql.DataFrame,
+      queryFilter: org.apache.spark.sql.Column, k: Int, tables: Int,
+      bits: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.VectorFunctions.{cosineSim, srpSignature}
+    val all = candidates.withColumn("sigs", srpSignature(col("embedding"),
+      bands = tables, bits = bits, dim = 64, seed = 42))
+    val cand = all.select(col("vec_id").as("c_id"),
+      posexplode(col("sigs")).as(Seq("t", "c_bucket")))
+    val qProbe = all.filter(queryFilter)
+      .select(col("vec_id").as("q_id"),
+        posexplode(col("sigs")).as(Seq("t", "bucket")))
+      .select(col("q_id"), col("t"), explode(expr(
+        s"""array_union(array(bucket),
+           |  transform(sequence(0, ${bits - 1}), p -> int(bucket ^ shiftleft(1, p))))"""
+          .stripMargin)).as("c_bucket"))
+    val pairs = cand.join(broadcast(qProbe), Seq("t", "c_bucket"))
+      .filter(col("q_id") =!= col("c_id"))
+      .select(col("q_id"), col("c_id"))
+      .dropDuplicates("q_id", "c_id")
+    val cVecs = candidates.select(col("vec_id").as("c_id"),
+      col("embedding").as("v_c"))
+    val qVecs = candidates.filter(queryFilter)
+      .select(col("vec_id").as("q_id"), col("embedding").as("v_q"))
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("cosine").desc, col("c_id"))
+    cVecs.join(broadcast(pairs), "c_id")
+      .join(broadcast(qVecs), "q_id")
+      .withColumn("cosine", cosineSim(col("v_q"), col("v_c")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("rank"), col("c_id"),
+        round(col("cosine"), 6).as("cosine"))
+  }
+
+  test("single-stage lshTopK == the windowed pair-list formulation, row for row") {
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.01")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
+    // the registered operating point, and a wider query set at a coarser
+    // point (more shared buckets, deeper k)
+    Seq((col("vec_id") < 10, 5, 8, 6), (col("vec_id") % 7 === 0, 8, 4, 5))
+      .foreach { case (qf, k, tables, bits) =>
+        val want = rows(windowedLshTopK(emb, qf, k, tables, bits))
+        assert(want.nonEmpty)
+        Seq(1, 3, 11).foreach { n =>
+          val got = rows(Similarity.lshTopK(emb.repartition(n), qf, k,
+            tables, bits))
+          assert(got === want,
+            s"k=$k tables=$tables bits=$bits repartition($n) moved the rows")
+        }
+      }
+  }
+
+  test("lshTopK executes as one stage: no window, no sort-merge join, one aggregate exchange") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val df = Similarity.lshTopK(graft.Tables.embeddings(spark, sf),
+      col("vec_id") < 10)
+    df.collect()
+    val nodes = aqe.collect(df.queryExecution.executedPlan) { case n => n }
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!nodes.exists(_.isInstanceOf[WindowExec]), plan)
+    assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]), plan)
+    val shuffles = nodes.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size === 1, plan)
+    // the top-k aggregate's exchange, keyed on the query alone
+    assert(shuffles.head.outputPartitioning.toString
+      .matches("hashpartitioning\\(q_id#\\d+L?, \\d+\\)"), plan)
+  }
+
+  test("srp_signature runs once per banded row: no Filter recomputes it") {
+    import org.apache.spark.sql.execution.FilterExec
+    val emb = graft.Tables.embeddings(spark, sf)
+    Seq("lshTopK" -> Similarity.lshTopK(emb, col("vec_id") < 10),
+      "knnJoinLsh" -> Similarity.knnJoinLsh(emb, k = 3, rescueCap = 0))
+      .foreach { case (name, df) =>
+        df.collect()
+        val plan = df.queryExecution.executedPlan
+        assert(plan.toString.contains("srp_signature"), s"$name:\n$plan")
+        val filters = aqe.collect(plan) { case f: FilterExec => f }
+        assert(!filters.exists(_.condition.toString.contains("srp_signature")),
+          s"$name filters on a recomputed signature:\n$plan")
+      }
+  }
+
   test("srp_signature fails fast on a dim mismatch instead of truncating") {
     import spark.implicits._
     val bad = Seq((1L, Array.fill(32)(1.0f))).toDF("vec_id", "embedding")

@@ -231,6 +231,31 @@ class LayoutSpec extends SparkSpec {
       s"rank buckets ($rankKept files) should beat the uniform grid ($uniKept) under skew")
   }
 
+  // Range partitioning that samples its boundaries with an RDD-id seed
+  // moved the file boundaries with the SparkContext's history (the
+  // skewed-column test above kept 10-13 of 16 files depending on how
+  // many RDDs earlier tests had made). The boundaries must come from the
+  // data alone.
+  test("z-order file boundaries do not move with the SparkContext's RDD history") {
+    val li = Tables.lineitem(spark, "/root/testdata/sf0.001")
+      .repartition(8, col("l_orderkey"), col("l_linenumber"))
+    def layout(): Seq[(Int, Long, Long, Long)] =
+      Layout.zOrderFrame(li, Seq("l_orderkey", "l_partkey"), 16,
+          rankBuckets = true)
+        .groupBy(spark_partition_id().as("file"))
+        .agg(count(lit(1)), min(col("l_orderkey") * 10 + col("l_linenumber")),
+          max(col("l_orderkey") * 10 + col("l_linenumber")))
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
+          r.getLong(3))).toSeq.sorted
+    val first = layout()
+    assert(first.size > 1)
+    (1 to 5).foreach { i =>
+      // each offset makes a different number of throwaway RDDs
+      (0 until i).foreach(_ => spark.sparkContext.parallelize(1 to 2))
+      assert(layout() === first, s"file boundaries moved after $i more RDDs")
+    }
+  }
+
   test("pruned read of a partitioned layout reconstructs the partition columns") {
     // without basePath the explicit-file read silently loses the hive
     // partition column and breaks row-identity with the full scan

@@ -34,6 +34,43 @@ object NativeExprProps extends Properties("graft.nativeexprs") {
         .filter(col("native") =!= col("hof")).count() == 0L
     }
 
+  // multi-byte symbols (accented, combining, CJK, a 4-byte emoji) sort
+  // by UTF-8 bytes, which is neither code-unit nor code-point order
+  private val symbol: Gen[String] = Gen.frequency(
+    8 -> Gen.oneOf("a", "b", "c", "Zz", "é", "e\u0301", "ß", "中", "文",
+      "日本", "\ud83d\ude00", ""),
+    1 -> Gen.const(null))
+  private val symbolLists: Gen[List[List[String]]] = Gen.listOfN(8,
+    Gen.frequency(
+      1 -> Gen.const(Nil),
+      1 -> Gen.choose(1, 30).map(n => List.fill(n)("中")),
+      6 -> Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, symbol))))
+
+  property("native token_entropy == sorted-fold HOF, bit for bit") =
+    forAll(symbolLists) { lists =>
+      import spark.implicits._
+      // fixed edge cases ride along with every generated case
+      val all = List(Nil, List("x"), List("", ""), List("a", null, "a")) ++
+        lists
+      val df = all.zipWithIndex.map { case (ts, i) => (i.toLong, ts) }
+        .toDF("id", "syms")
+      // the fold verbatim as entropySignals ran it before the native
+      // kernel (without the outer round)
+      val hof = expr(
+        """cast(0.0 as double) - aggregate(
+          |  transform(array_sort(array_distinct(syms)),
+          |            u -> size(filter(syms, x -> x = u))),
+          |  cast(0.0 as double),
+          |  (acc, cnt) -> acc
+          |    + (cnt / cast(size(syms) as double))
+          |      * log2(cnt / cast(size(syms) as double)))""".stripMargin)
+      def bits(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
+        if (r.isNullAt(i)) None
+        else Some(java.lang.Double.doubleToLongBits(r.getDouble(i)))
+      df.select(tokenEntropy(col("syms")).as("native"), hof.as("hof"))
+        .collect().forall(r => bits(r, 0) == bits(r, 1))
+    }
+
   private val vec: Gen[List[Float]] =
     Gen.listOfN(16, Gen.choose(-100, 100).map(_ / 10.0f))
   private val vecs: Gen[List[List[Float]]] = Gen.listOfN(6, vec)
