@@ -253,8 +253,9 @@ object Recall {
       "probe-coverage floor while data-independent SRP holds (0.90). " +
       "Read the registered recall block as the seed-adjacent operating " +
       "point and nonseed_queries as the isotropic-corpus floor; " +
-      "clustered real corpora sit between, and the spark.graft.ann.* " +
-      "confs plus the sweep grids are the tuning path. r9: the " +
+      "clustered real corpora sit between, and the sweep grids chart " +
+      "the operating points a caller passes as the top-k functions' " +
+      "probes/rerank/tables/bits arguments. r9: the " +
       "registered defaults moved to the r8 sweep winners (pq rerank " +
       "50->100, ivfpq probes 2->1 + rerank 50->100) — diff r8->r9 " +
       "registered pq 0.62->0.80 and ivfpq 0.82->0.96 is that " +
@@ -295,7 +296,7 @@ object Recall {
       "is new this round: at the registered rerank=200, 16 codes read " +
       "mean 0.82/min 0.4 vs 32 codes 0.90/0.6 at flat wall — codebook " +
       "resolution, not shortlist depth, was the binding constraint; " +
-      "conf spark.graft.ann.pq.codes) — diff x_ann_pq within r14+ or " +
+      "pqTopK's pqCodes argument) — diff x_ann_pq within r14+ or " +
       "against the pqCodes=16 sweep row. LSH auto-bits became " +
       "regime-aware (neighbor-cosine probe; isotropic corpora take a " +
       "half-rate anchored ramp) — NO effect at this corpus scale (both " +

@@ -13,8 +13,10 @@ object Stress {
   def main(args: Array[String]): Unit = {
     val k = args.headOption.map(_.toInt).getOrElse(10)
     val d = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", 2 * cpus.toInt)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -124,7 +126,7 @@ object Stress {
     // the join is forced sort-merge (a broadcast would hide the skew),
     // and AQE's skew-join split is toggled between runs. On a real
     // cluster the unsplit hot partition is one straggling executor; on
-    // local[32] all partitions share the machine, so the gap here only
+    // local[N] all partitions share the machine, so the gap here only
     // LOWER-bounds the cluster-side effect.
     val liSkew = li.withColumn("l_orderkey",
       when(pmod(col("l_orderkey"), lit(6)) < 1, lit(1L))

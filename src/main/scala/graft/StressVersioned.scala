@@ -52,10 +52,12 @@ object StressVersioned {
     if (!cond) throw new AssertionError(msg)
 
   def main(args: Array[String]): Unit = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master("local[8]")
+      .master(s"local[$cpus]")
       .appName("graft-stress-versioned")
-      .config("spark.sql.shuffle.partitions", "8")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -342,10 +344,9 @@ object StressVersioned {
       }
       val probes: Seq[Any] = Seq(12345L, 2000001L, 3999999L)
       val t0 = System.nanoTime()
-      val pruned = Versioned.readPointPruned(spark, base,
-        Seq(("id", probes)))
-      val hits = pruned.filter(col("id").isin(probes: _*))
-        .select("id").as[Long].collect().toSet
+      val pruned = Versioned.readWhere(spark, base,
+        col("id").isin(probes: _*))
+      val hits = pruned.select("id").as[Long].collect().toSet
       val probeSecs = (System.nanoTime() - t0) / 1e9
       val planned = pruned.inputFiles.length
       val all = Versioned.read(spark, base).inputFiles.length

@@ -27,6 +27,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      // the written result was the last consumer of any rescue-path
+      // persists the entry registered; release them before the next
+      graft.ext.Similarity.sweepAnnCaches()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -98,16 +98,22 @@ object Dedup {
     // dedupe at runtime via ReuseExchange). cache() only MARKS the plan —
     // nothing materializes until a pair-finder runs — so declaring both
     // frames eagerly here costs nothing if only one family is used.
-    private[graft] val minhashSigs: DataFrame =
+    private[graft] val minhashSigs: DataFrame = cacheOnce(
       withMinhash(withShingles(docs))
-        .select(col("doc_id"), col("sig"))
-        .cache()
-    private[graft] val simhashSigs: DataFrame = docs
+        .select(col("doc_id"), col("sig")))
+    private[graft] val simhashSigs: DataFrame = cacheOnce(docs
       .withColumn("tokens", split(col("text"), " "))
       .select(col("doc_id"),
         graft.functions.VectorFunctions.md5Simhash60(col("tokens"))
-          .as("simhash"))
-      .cache()
+          .as("simhash")))
+
+    // a handle over a corpus plan the session already caches (the
+    // module-level functions open one per call) reuses that entry: a
+    // repeat cache() is a no-op apart from a CacheManager WARN per frame
+    private def cacheOnce(df: DataFrame): DataFrame =
+      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+        df.cache()
+      else df
 
     /** Candidate near-dup pairs from banded LSH over the MinHash signature. */
     private def lshCandidates: DataFrame = {

@@ -426,8 +426,8 @@ object Similarity {
     * default against a caller-supplied `cells=256` would silently be a
     * ~5%-coverage operating point with a fraction of the recall.
     * `probes <= 0` means "auto" at every entry. Clustered real corpora
-    * reach the same recall at far lower coverage — tune DOWN via the
-    * `spark.graft.ann.*` confs using the committed RECALL sweep grids. */
+    * reach the same recall at far lower coverage — tune DOWN through
+    * the `probes` argument, using the committed RECALL sweep grids. */
   def resolveProbes(cells: Int, probes: Int, num: Int, den: Int): Int =
     if (probes > 0) probes else math.max(1, (cells * num + den - 1) / den)
 
@@ -718,7 +718,7 @@ object Similarity {
           (if (recommendation == "lsh")
             "no cluster structure to route by: SRP-LSH dominates " +
               "quantizer ANN here; quantizer recall is coverage-bound — " +
-              "see spark.graft.ann.* confs and the RECALL sweep grids"
+              "see the probes argument and the RECALL sweep grids"
           else
             "cluster structure detected: IVF cell routing is effective") +
           ")")
@@ -1172,57 +1172,42 @@ object Similarity {
   private def emb(s: SparkSession, d: String): DataFrame =
     embeddings(s, d).repartition(s.sparkContext.defaultParallelism)
 
-  /** ANN operating-point knobs: session confs that let a consumer pick
-    * a point of the RECALL_r*.json recall-vs-cost grid (probes × rerank,
-    * tables × bits) WITHOUT code changes. This is the complete list of
-    * `spark.graft.ann.*` and `spark.graft.knnjoin.*` keys, with defaults:
+  /** The complete list of `spark.graft.*` session confs the engine
+    * reads, with defaults — each one a caller or test sets: three ANN
+    * memory guards a test lowers to reach the guarded path, the
+    * bloom-sizing pair, and the window switch. The registered entries'
+    * operating points and recall-contract thresholds are literals at
+    * each entry.
     *
-    *  - `spark.graft.ann.lsh.tables` = 8, `spark.graft.ann.lsh.bits` = 6:
-    *    x_ann_lsh's operating point ([[lshTopK]]).
-    *  - `spark.graft.ann.lsh.broadcastBound` = 1073741824 (1 GiB; -1
-    *    disables): [[knnJoinLsh]]'s vector re-join broadcast bound.
-    *  - `spark.graft.ann.ivf.probes` = -1: x_ann_ivf probes (auto = 10
-    *    of 16 cells, [[resolveProbes]]).
-    *  - `spark.graft.ann.pq.codes` = 32, `spark.graft.ann.pq.rerank` =
-    *    200: x_ann_pq.
-    *  - `spark.graft.ann.ivfpq.probes` = -1 (auto = 12 of 16 cells),
-    *    `spark.graft.ann.ivfpq.rerank` = 400: x_ann_ivfpq.
     *  - `spark.graft.ann.trainCap` = 65536: quantizer training-set bound
     *    ([[boundedTrainSet]], [[PqIndex.train]]).
     *  - `spark.graft.ann.cellsBound` = 4096 (-1 disables): largest IVF
     *    cell count [[IvfIndex.train]] accepts.
-    *  - `spark.graft.ann.check.<lsh|ivf|pq|ivfpq>.minHits` = 2 and
-    *    `.minTotal` = 40/40/41/43: the x_ann_* recall contracts
-    *    ([[annRecallCheck]]).
-    *  - `spark.graft.knnjoin.blocks` = 8, `spark.graft.knnjoin.qblocks`
-    *    = 4: x_knn_join's grid ([[knnJoin]]).
-    *  - `spark.graft.knnjoin.ivf.probes` = -1: x_knn_join_ivf probes
-    *    (auto = 12 of 16 cells).
-    *  - `spark.graft.knnjoin.lsh.tables` = 16, `spark.graft.knnjoin.lsh.bits`
-    *    = -1 (auto, [[resolveBits]]): x_knn_join_lsh.
-    *  - `spark.graft.knnjoin.check.<ivf|lsh>.minRecallPct` = 85/80: the
-    *    sampled k-NN join recall contracts ([[knnRecallCheck]]).
+    *  - `spark.graft.ann.lsh.broadcastBound` = 1073741824 (1 GiB; -1
+    *    disables): [[knnJoinLsh]]'s vector re-join broadcast bound.
+    *  - `spark.graft.bloom.items` / `spark.graft.bloom.bits` (unset =
+    *    auto-size from footers): bloom-sidecar sizing, set in scope by
+    *    [[graft.sources.Versioned.withBloomSizing]].
+    *  - `spark.graft.window.decomposeRows`: the window-decomposition
+    *    switch of [[graft.queries.Windows]].
     *
-    * Defaults were RE-TUNED in r11 after the hash-sample seeding fix:
-    * the old first-k seeding made the registered queries a subset of
-    * the quantizer seeds, so the r8–r10 "sweep winners" (ivf probes=2,
-    * ivfpq probes=1/rerank=100) were artifacts of that correlation —
-    * honest (nonseed) recall at those points was 0.18–0.28. On the
-    * testdata's ISOTROPIC embeddings (no cluster structure to route
-    * by), quantizer-routed recall is coverage-bound, so the honest
-    * operating points probe most cells: ivf probes=10 (nonseed 0.84),
-    * pq rerank=200 (0.82), ivfpq probes=12/rerank=400 (0.88) — all
-    * measured seed≈nonseed now, which is the point. Clustered real
-    * corpora reach the same recall at far lower probes; tune down via
-    * these confs using the RECALL sweep grid. Since r12 the probes
-    * defaults are -1 = auto, resolved as a FRACTION of cells
-    * ([[resolveProbes]]) so the operating point survives a different
-    * cells choice instead of silently collapsing to ~probes/cells
-    * coverage. */
+    * The registered operating points were tuned in r11 after the
+    * hash-sample seeding fix: the old first-k seeding made the
+    * registered queries a subset of the quantizer seeds, so the r8–r10
+    * "sweep winners" (ivf probes=2, ivfpq probes=1/rerank=100) were
+    * artifacts of that correlation — honest (nonseed) recall at those
+    * points was 0.18–0.28. On the testdata's ISOTROPIC embeddings (no
+    * cluster structure to route by), quantizer-routed recall is
+    * coverage-bound, so the honest operating points probe most cells:
+    * ivf probes=10 (nonseed 0.84), pq rerank=200 (0.82), ivfpq
+    * probes=12/rerank=400 (0.88) — all measured seed≈nonseed. Clustered
+    * real corpora reach the same recall at far lower probes (the RECALL
+    * sweep grids chart the trade). Probes of -1 = auto, resolved as a
+    * FRACTION of cells ([[resolveProbes]]) so the operating point
+    * survives a different cells choice. */
   private def intConf(s: SparkSession, key: String, dflt: Int): Int = {
     val v = s.conf.get(key, dflt.toString).trim.toInt
-    require(v > 0 || v == -1,
-      s"$key must be positive (or -1 = auto fraction-of-cells), got $v")
+    require(v > 0, s"$key must be positive, got $v")
     v
   }
 
@@ -1342,25 +1327,22 @@ object Similarity {
     // Multi-table SRP LSH ANN (8 tables × 6 bits, flip-1 multi-probe).
     "x_ann_lsh" -> ((s, d) =>
       lshTopK(emb(s, d), col("vec_id") < 10,
-        tables = intConf(s, "spark.graft.ann.lsh.tables", 8),
-        bits = intConf(s, "spark.graft.ann.lsh.bits", 6))
+        tables = 8, bits = 6)
         .orderBy("q_id", "rank")),
     // IVF coarse-quantizer ANN.
     "x_ann_ivf" -> ((s, d) =>
       ivfTopK(emb(s, d), col("vec_id") < 10,
-        probes = intConf(s, "spark.graft.ann.ivf.probes", -1))
+        probes = -1)
         .orderBy("q_id", "rank")),
     // Product-quantization ANN (ADC shortlist + exact rerank).
     "x_ann_pq" -> ((s, d) =>
       pqTopK(emb(s, d), col("vec_id") < 10,
-        pqCodes = intConf(s, "spark.graft.ann.pq.codes", 32),
-        rerank = intConf(s, "spark.graft.ann.pq.rerank", 200))
+        pqCodes = 32, rerank = 200)
         .orderBy("q_id", "rank")),
     // IVF-PQ composite: cell-routed scan over PQ codes + exact rerank.
     "x_ann_ivfpq" -> ((s, d) =>
       ivfpqTopK(emb(s, d), col("vec_id") < 10,
-        probes = intConf(s, "spark.graft.ann.ivfpq.probes", -1),
-        rerank = intConf(s, "spark.graft.ann.ivfpq.rerank", 400))
+        probes = -1, rerank = 400)
         .orderBy("q_id", "rank")),
     // IVF-celled approximate k-NN self-join — the routed-scan scale path
     // (recall ~ probe coverage on isotropic data; see knnJoinLsh
@@ -1371,7 +1353,7 @@ object Similarity {
     // it away).
     "x_knn_join_ivf" -> ((s, d) =>
       knnJoinIvf(emb(s, d), k = 3,
-        probes = intConf(s, "spark.graft.knnjoin.ivf.probes", -1))
+        probes = -1)
         .orderBy("q_id", "rank")),
     // Symmetric SRP-banded approximate k-NN self-join — the
     // angle-sensitive path that dominates IVF on unclustered embeddings;
@@ -1380,8 +1362,7 @@ object Similarity {
     // corpus size — identical results — and grows as log2(n) past it).
     "x_knn_join_lsh" -> ((s, d) =>
       knnJoinLsh(emb(s, d), k = 3,
-        tables = intConf(s, "spark.graft.knnjoin.lsh.tables", 16),
-        bits = intConf(s, "spark.graft.knnjoin.lsh.bits", -1))
+        tables = 16, bits = -1)
         .orderBy("q_id", "rank"))
   )
 
@@ -1409,14 +1390,10 @@ object Similarity {
     * reproducible), so its floor sits AT the measured cross-SF min.
     * The totals keep ≥2 hits of margin (aggregate mean ≥ 0.8), so the
     * gate cannot flap while genuine drift (a probe regression, a
-    * quantizer bug) still trips it. Conf-overridable per entry. */
-  private def annRecallCheck(name: String, short: String,
-      minHitsDflt: Int, minTotalDflt: Int): Q = (s, d) => {
+    * quantizer bug) still trips it. */
+  private[graft] def annRecallCheck(name: String, minHits: Int,
+      minTotal: Int): Q = (s, d) => {
     val all = emb(s, d)
-    val minHits = intConf(s, s"spark.graft.ann.check.$short.minHits",
-      minHitsDflt)
-    val minTotal = intConf(s, s"spark.graft.ann.check.$short.minTotal",
-      minTotalDflt)
     val approx = rawAnn(name)(s, d).select(col("q_id"), col("c_id"))
     // shared across the four x_ann_* checks — see [[memoizedBaseline]]
     val exact = memoizedBaseline(all, "ann_q10_k5")(
@@ -1460,11 +1437,9 @@ object Similarity {
     * keep ~0.09 of margin) and a rescued-tail flag (zero-recall queries
     * ≤ 2% of the sample; measured 0 at both SFs, full-corpus frac_zero
     * 0.0005 in RECALL_r14). */
-  private def knnRecallCheck(name: String, short: String,
-      minPctDflt: Int): Q = (s, d) => {
+  private[graft] def knnRecallCheck(name: String,
+      minPct: Int): Q = (s, d) => {
     val all = emb(s, d)
-    val minPct = intConf(s,
-      s"spark.graft.knnjoin.check.$short.minRecallPct", minPctDflt)
     val sample = all.filter(col("vec_id") % 7 === 0)
     val approx = rawAnn(name)(s, d).select(col("q_id"), col("c_id"))
     // shared across the two x_knn_join_* checks — see [[memoizedBaseline]]
@@ -1493,19 +1468,18 @@ object Similarity {
     // joins, each wrapped in its oracle-backed recall contract (the raw
     // top-k frames live in [[rawAnn]]; RECALL_r*.json diagnoses, this
     // gate ENFORCES).
-    "x_ann_lsh" -> annRecallCheck("x_ann_lsh", "lsh", 2, 40),
-    "x_ann_ivf" -> annRecallCheck("x_ann_ivf", "ivf", 2, 40),
-    "x_ann_pq" -> annRecallCheck("x_ann_pq", "pq", 2, 41),
-    "x_ann_ivfpq" -> annRecallCheck("x_ann_ivfpq", "ivfpq", 2, 43),
+    "x_ann_lsh" -> annRecallCheck("x_ann_lsh", 2, 40),
+    "x_ann_ivf" -> annRecallCheck("x_ann_ivf", 2, 40),
+    "x_ann_pq" -> annRecallCheck("x_ann_pq", 2, 41),
+    "x_ann_ivfpq" -> annRecallCheck("x_ann_ivfpq", 2, 43),
     // Exact k-NN SELF-join (every vector's top-3) — the semantic-dedup
     // primitive: blocked-grid equi-join + bounded top-k aggregation.
     "x_knn_join" -> ((s, d) =>
       knnJoin(emb(s, d), k = 3,
-        blocks = intConf(s, "spark.graft.knnjoin.blocks", 8),
-        qblocks = intConf(s, "spark.graft.knnjoin.qblocks", 4))
+        blocks = 8, qblocks = 4)
         .orderBy("q_id", "rank")),
-    "x_knn_join_ivf" -> knnRecallCheck("x_knn_join_ivf", "ivf", 85),
-    "x_knn_join_lsh" -> knnRecallCheck("x_knn_join_lsh", "lsh", 80)
+    "x_knn_join_ivf" -> knnRecallCheck("x_knn_join_ivf", 85),
+    "x_knn_join_lsh" -> knnRecallCheck("x_knn_join_lsh", 80)
   )
 
   /** The exact brute-force baseline IS SQL-expressible: the oracle mirrors

@@ -294,9 +294,8 @@ object Advanced {
       val ord = orders(s, d)
       val hiOk = ord.agg(max(col("o_orderkey"))).head().getLong(0).toDouble / 8
       val hiCk = ord.agg(max(col("o_custkey"))).head().getLong(0).toDouble / 8
-      graft.sources.Versioned.readPruned(s, base,
-          Seq(("o_orderkey", 0.0, hiOk), ("o_custkey", 0.0, hiCk)))
-        .filter(col("o_orderkey") <= hiOk && col("o_custkey") <= hiCk)
+      graft.sources.Versioned.readWhere(s, base,
+          col("o_orderkey") <= hiOk && col("o_custkey") <= hiCk)
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"),
           sum(cents(col("o_totalprice"))).as("total_cents"))
@@ -316,9 +315,8 @@ object Advanced {
       val ord = orders(s, d)
       val mm = ord.agg(min(col("o_orderkey")), max(col("o_orderkey"))).head()
       val probes = Seq(mm.getLong(0), mm.getLong(1))
-      graft.sources.Versioned.readPointPruned(s, base,
-          Seq(("o_orderkey", probes)))
-        .filter(col("o_orderkey").isin(probes: _*))
+      graft.sources.Versioned.readWhere(s, base,
+          col("o_orderkey").isin(probes: _*))
         .select(col("o_orderkey"), col("o_orderpriority"),
           cents(col("o_totalprice")).as("price_cents"))
         .orderBy("o_orderkey")

@@ -75,15 +75,8 @@ object Incremental {
     * PARTITION (measured r13: 32 files for a 90-row state),
     * multiplying every later listing/footer/scan cost of the table by
     * the shuffle width. One file per staged state dir is the right
-    * shape at any rollup size that honors the contract;
-    * `spark.graft.rollup.stageParts` widens it for a deliberately huge
-    * rollup. */
-  private def stateShape(df: DataFrame): DataFrame = {
-    val parts = df.sparkSession.conf
-      .get("spark.graft.rollup.stageParts", "1").trim.toInt
-    require(parts >= 1, "spark.graft.rollup.stageParts must be >= 1")
-    df.coalesce(parts)
-  }
+    * shape at any rollup size that honors the contract. */
+  private def stateShape(df: DataFrame): DataFrame = df.coalesce(1)
 
   private def partTag(v: Any): String = v match {
     case null => NullPart
@@ -147,9 +140,9 @@ object Incremental {
     // ADVICE r16: the probe previously paid two manifest-dir listings —
     // two metadata round-trips per NON-replayed batch on a slow object
     // store — to save work only in the replay case).
-    val headVs = Versioned.versions(spark, basePath)
-    if (Versioned.appliedBatchIds(spark, basePath, headVs).contains(batchId))
-      return headVs.last
+    val head = Versioned.versions(spark, basePath).lastOption
+    if (Versioned.appliedBatchIds(spark, basePath, head).contains(batchId))
+      return head.get
     val keys = (partitionKey +: subKeys).map(col)
     def reAgg(df: DataFrame): DataFrame =
       df.groupBy(keys: _*).agg(

@@ -406,6 +406,20 @@ object Layout {
   private def fs(spark: SparkSession, p: Path): org.apache.hadoop.fs.FileSystem =
     FsUtil.fs(spark, p)
 
+  /** The sidecar `name` (`_graft_zonemap` / `_graft_bloom`) under data
+    * directory `dir`, read through the parquet files INSIDE it: passed
+    * as an explicit path, the underscore-named directory trips Spark's
+    * hidden-path filter, which logs "All paths were ignored" on every
+    * read even though the read goes ahead. Same rows either way. */
+  private[sources] def readSidecar(spark: SparkSession, dir: String,
+      name: String): DataFrame = {
+    val side = new Path(dir, name)
+    val files = fs(spark, side).listStatus(side).toSeq.map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") &&
+        !p.getName.startsWith(".") && !p.getName.startsWith("_"))
+    spark.read.parquet(files.map(_.toString): _*)
+  }
+
   /** A zone-map sidecar loaded to the driver in ONE read (it is KB-scale
     * by construction — a few doubles per file): per-file encoded bounds
     * plus each column's recorded [[ZoneCodec]] FAMILY, against which the
@@ -455,7 +469,7 @@ object Layout {
   def loadZoneMap(spark: SparkSession, path: String): Option[ZoneMap] = {
     val zm = new Path(s"$path/_graft_zonemap")
     if (!fs(spark, zm).exists(zm)) return None
-    val df = spark.read.parquet(zm.toString)
+    val df = readSidecar(spark, path, "_graft_zonemap")
     val names = df.schema.fieldNames
     val cols = names.filter(_.endsWith("_min")).map(_.stripSuffix("_min"))
     val rows = df.collect()
@@ -710,7 +724,7 @@ object Layout {
       probes: Seq[(String, Seq[Any])]): Seq[String] = {
     require(probes.nonEmpty && probes.forall(_._2.nonEmpty),
       "pruneFilesBloom needs at least one probe value per column")
-    val bloomAll = spark.read.parquet(s"$path/_graft_bloom")
+    val bloomAll = readSidecar(spark, path, "_graft_bloom")
     val fields = bloomAll.schema.fieldNames.toSet
     def allFiles(): Seq[String] = bloomAll.select("file")
       .collect().map(_.getString(0)).toSeq

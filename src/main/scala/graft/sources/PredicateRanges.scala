@@ -68,12 +68,12 @@ private[sources] object ZoneCodec {
   * (AND / OR / comparison atoms / opaque leaves), then RESOLVED against
   * each data directory's sidecar metadata:
   *
-  *  - [[ranges]] produces per-column intervals in the zone map's encoded
-  *    double space, given each column's recorded FAMILY ([[ZoneCodec]]).
-  *    Conjunctions intersect per column; disjunctions take the interval
-  *    HULL over columns constrained in EVERY branch (a branch that
-  *    leaves a column unconstrained makes the column unconstrained in
-  *    the union). A conjunction whose intervals cross (`x > 5 AND x <
+  *  - [[rangeSets]] produces per-column interval sets in the zone map's
+  *    encoded double space, given each column's recorded FAMILY
+  *    ([[ZoneCodec]]). Conjunctions intersect per column; disjunctions
+  *    take the UNION of the interval sets over columns constrained in
+  *    EVERY branch (a branch that leaves a column unconstrained makes
+  *    the column unconstrained in the union). A conjunction whose intervals cross (`x > 5 AND x <
   *    3`) is UNSATISFIABLE — `None` — and an unsatisfiable OR branch
   *    simply drops out.
   *  - [[probes]] produces per-column equality probe-value sets for the
@@ -334,32 +334,6 @@ object PredicateRanges {
       : Option[Seq[(String, Seq[(Double, Double)])]] =
     rangeMap(n, family).map(_.toSeq.sortBy(_._1))
 
-  /** Single-interval (hull) view of [[rangeSets]] — the legacy shape for
-    * callers that pass `(col, lo, hi)` triples around. */
-  def ranges(n: Node, family: String => Option[String])
-      : Option[Seq[(String, Double, Double)]] =
-    rangeSets(n, family).map(_.map { case (c, ivs) =>
-      val (lo, hi) = hull(ivs); (c, lo, hi) })
-
-  /** Legacy numeric-only face (r9 contract, kept for callers that pass
-    * raw double intervals around): every column resolves as family
-    * `numeric`, unsatisfiable ⇒ an impossible interval on one involved
-    * column (so downstream overlap tests prune everything). */
-  def extract(cond: Column): Seq[(String, Double, Double)] = {
-    val n = tree(cond)
-    ranges(n, _ => Some(ZoneCodec.Numeric)).getOrElse {
-      firstCol(n).map(c => Seq((c, Inf, -Inf))).getOrElse(Seq.empty)
-    }
-  }
-
-  private def firstCol(n: Node): Option[String] = n match {
-    case Cmp(c, _, _) => Some(c)
-    case InN(c, _) => Some(c)
-    case AndN(cs) => cs.flatMap(firstCol(_)).headOption
-    case OrN(cs) => cs.flatMap(firstCol(_)).headOption
-    case Opaque => None
-  }
-
   /** Build a conjunction Node from raw numeric per-column envelopes —
     * the bridge for callers whose bounds come from DATA (e.g. a MERGE
     * source's key min/max), not from a predicate. Resolution then
@@ -441,12 +415,4 @@ object PredicateRanges {
     * short-circuit to an empty result. */
   def probes(n: Node): Option[Seq[(String, Seq[Any])]] =
     probeMap(n).map(_.toSeq.sortBy(_._1))
-
-  /** Legacy face of [[probes]] (r9 contract): unsatisfiable surfaces as
-    * one column with an EMPTY value list. */
-  def extractProbes(cond: Column): Seq[(String, Seq[Any])] = {
-    val n = tree(cond)
-    probes(n).getOrElse(
-      firstCol(n).map(c => Seq((c, Seq.empty[Any]))).getOrElse(Seq.empty))
-  }
 }

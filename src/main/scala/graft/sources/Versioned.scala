@@ -88,9 +88,10 @@ final class SchemaPolicyViolation(msg: String) extends RuntimeException(msg)
   * [[changes]] the net row-level feed between snapshots; [[history]] /
   * [[readAsOf]] the commit log and timestamp time travel;
   * [[cloneTable]] the zero-copy shallow fork (verbatim references +
-  * inherited ledger). Data skipping: [[readPruned]] (zone-map ranges)
-  * and [[readPointPruned]] (per-file bloom equality probes), both
-  * listing-time, both fail-open, both surviving DML rewrites. CHECK
+  * inherited ledger). Data skipping: [[readWhere]] distills one filter
+  * predicate into zone-map ranges and per-file bloom equality probes,
+  * prunes the file listing with both, and re-applies the predicate —
+  * fail-open, and surviving DML rewrites. CHECK
   * constraints ([[addConstraint]]) and the schema policy
   * ([[setSchemaPolicy]] — strict vs evolve) are protocol-carried
   * metadata enforced on every data-adding write at the staging door.
@@ -102,9 +103,7 @@ final class SchemaPolicyViolation(msg: String) extends RuntimeException(msg)
   * [[Incremental.upsertRollup]]) is ONE head-manifest read regardless of
   * retained-history depth, and it survives [[vacuum]] (the guard's
   * horizon is the ledger cap of [[AppliedCap]] most recent batch ids,
-  * not the manifest retention window). Legacy tables whose head predates
-  * the ledger fall back to scanning retained `#batch_id=` lines once;
-  * the next commit writes the consolidated ledger.
+  * not the manifest retention window).
   */
 object Versioned {
 
@@ -200,20 +199,20 @@ object Versioned {
       .filter(_.matches("v\\d+")).map(_.drop(1).toLong).sorted
   }
 
-  /** Manifest framing (r16, VERDICT r15 #6): every manifest opens with
-    * `#graft=2` and closes with `#eof=<line count between them>`, both
-    * stripped before parsing. The trailer turns a TORN manifest — a
-    * store whose "rename" is a non-atomic copy (the S3A class) exposing
-    * a half-copied target after a writer crash — into a loud contract
-    * error instead of a silently shorter file list: a truncated tail
-    * loses the trailer while keeping the header, which is the
-    * detectable signature (a legacy pre-r16 manifest has neither and
-    * still parses; a tear inside the first header line is the one
-    * residual blind spot, ~a dozen bytes wide). The repair is manual by
-    * design — delete the torn head file and re-publish — because the
-    * reader cannot distinguish a crashed writer from a SLOW one
-    * mid-copy, so auto-ignoring (or auto-deleting) the torn head could
-    * drop a commit that was about to complete. Stores honoring the
+  /** Manifest framing: every manifest opens with `#graft=2` and closes
+    * with `#eof=<line count between them>`, both stripped before
+    * parsing. The frame turns a TORN manifest — a store whose "rename"
+    * is a non-atomic copy (the S3A class) exposing a half-copied target
+    * after a writer crash — into a loud contract error instead of a
+    * silently shorter file list. ANY file without both the header and a
+    * trailer agreeing with the line count is torn: a truncated tail
+    * loses the trailer, and a tear inside the header line (`#graf`)
+    * loses the header, so no prefix of a published manifest parses as
+    * a snapshot. The repair is manual by design — delete the torn head
+    * file and re-publish — because the reader cannot distinguish a
+    * crashed writer from a SLOW one mid-copy, so auto-ignoring (or
+    * auto-deleting) the torn head could drop a commit that was about to
+    * complete. Stores honoring the
     * [[CommitStore]] visibility contract never produce this state. */
   private val ManifestHeader = "#graft=2"
 
@@ -227,33 +226,28 @@ object Versioned {
       try scala.io.Source.fromInputStream(in, "UTF-8")
         .getLines().map(_.trim).filter(_.nonEmpty).toList
       finally in.close()
-    val framed = lines.headOption.contains(ManifestHeader)
-    if (framed || lines.isEmpty) {
-      val body = lines.drop(1)
-      val complete = framed && body.lastOption.exists { l =>
+    val body = lines.drop(1)
+    val complete = lines.headOption.contains(ManifestHeader) &&
+      body.lastOption.exists { l =>
         l.startsWith("#eof=") &&
           scala.util.Try(l.drop("#eof=".length).toInt).toOption
             .contains(body.size - 1)
       }
-      // an EMPTY manifest is never legitimate either (every published
-      // manifest carries at least its #ts meta line) — same torn class
-      if (!complete) throw new IllegalStateException(
-        s"torn manifest v$v under $basePath: the #eof trailer is missing " +
-          "or disagrees with the line count. This means the commit store " +
-          "exposed a partially-copied manifest (a non-atomic rename — " +
-          "the CommitStore contract requires all-or-nothing target " +
-          "visibility). If the writing process is known dead, repair by " +
-          s"deleting ${new Path(manifestDir(basePath), s"v$v")} and " +
-          "re-publishing; do not delete it while a writer may still be " +
-          "mid-copy.")
-      body.dropRight(1)
-    } else lines
+    if (!complete) throw new IllegalStateException(
+      s"torn manifest v$v under $basePath: the #graft header or the #eof " +
+        "trailer is missing, or the trailer disagrees with the line count. " +
+        "This means the commit store exposed a partially-copied manifest " +
+        "(a non-atomic rename — the CommitStore contract requires " +
+        "all-or-nothing target visibility). If the writing process is " +
+        s"known dead, repair by deleting $p and re-publishing; do not " +
+        "delete it while a writer may still be mid-copy.")
+    body.dropRight(1)
   }
 
-  /** `path` alone, `path<TAB>parts=<url-enc>,<url-enc>` for a
-    * partition-confined data directory, or `path<TAB>del` for a
-    * deletion-vector directory. Plain-path lines (pre-r9 manifests)
-    * decode as untagged data — always-intersecting, so always correct. */
+  /** `path` alone for an untagged data directory (always-intersecting,
+    * so always correct), `path<TAB>parts=<url-enc>,<url-enc>` for a
+    * partition-confined one, or `path<TAB>del` for a deletion-vector
+    * directory. */
   private def encodeEntry(e: ManifestEntry): String =
     if (e.tombstone) {
       require(e.parts.isEmpty, "a tombstone entry cannot carry a parts tag")
@@ -341,43 +335,28 @@ object Versioned {
         }
       }.toMap
 
-  /** Defensive timestamp parse: "ts" only became protocol-reserved in
-    * r9, so a legacy manifest may carry a caller-written non-numeric
-    * value — treat it as unstamped rather than bricking every publish/
-    * history/readAsOf on the table. */
-  private def parseTs(meta: Map[String, String]): Option[Long] =
-    meta.get("ts").flatMap(v => scala.util.Try(v.toLong).toOption)
+  /** The protocol-stamped commit time (`#ts`, written by every
+    * [[publish]]). */
+  private def commitTs(meta: Map[String, String]): Long = meta("ts").toLong
 
-  /** The applied-batch-id ledger: ONE manifest read in the steady state
-    * (the head's `#applied=` line, maintained by every commit), with a
-    * one-time retained-history scan for legacy tables whose head
-    * predates the ledger. Ordered oldest→newest, capped at
-    * [[AppliedCap]]. */
+  /** The `#applied=` ledger carried in one manifest's metadata. */
+  private def ledgerOf(meta: Map[String, String]): Seq[String] =
+    meta.get(AppliedKey).iterator
+      .flatMap(_.split(',')).filter(_.nonEmpty).map(dec).toSeq
+
+  /** The applied-batch-id ledger: ONE head-manifest read (the head's
+    * `#applied=` line, maintained by every commit). Ordered
+    * oldest→newest, capped at [[AppliedCap]]. */
   def appliedBatchIds(spark: SparkSession, basePath: String): Seq[String] =
-    appliedFromHistory(spark, basePath, versions(spark, basePath))
+    appliedBatchIds(spark, basePath, versions(spark, basePath).lastOption)
 
-  /** [[appliedBatchIds]] over an already-fetched versions listing —
-    * callers that need both (the rollup replay probe) pass it through
-    * instead of paying a second manifest-dir listing per batch
-    * (ADVICE r16: two metadata round-trips on a slow object store
-    * before any work starts). */
+  /** [[appliedBatchIds]] at a head the caller already resolved — callers
+    * that hold a versions listing (the rollup replay probe) or a CAS
+    * attempt's head pass it through instead of paying a second
+    * manifest-dir listing per batch. */
   private[sources] def appliedBatchIds(spark: SparkSession,
-      basePath: String, vs: Seq[Long]): Seq[String] =
-    appliedFromHistory(spark, basePath, vs)
-
-  private def appliedFromHistory(spark: SparkSession, basePath: String,
-      vs: Seq[Long]): Seq[String] =
-    vs.lastOption match {
-      case None => Seq.empty
-      case Some(h) =>
-        commitMeta(spark, basePath, h).get(AppliedKey) match {
-          case Some(s) =>
-            s.split(',').iterator.filter(_.nonEmpty).map(dec).toSeq
-          case None => // legacy: derive once from retained history
-            vs.flatMap(v =>
-              commitMeta(spark, basePath, v).get("batch_id"))
-        }
-    }
+      basePath: String, head: Option[Long]): Seq[String] =
+    head.fold(Seq.empty[String])(h => ledgerOf(commitMeta(spark, basePath, h)))
 
   private def encodeConstraints(cs: Map[String, String]): String =
     cs.toSeq.sortBy(_._1).map { case (n, e) => n + ":" + enc(e) }
@@ -537,28 +516,22 @@ object Versioned {
       attempts += 1
       require(attempts <= 100,
         s"manifest CAS did not converge after 100 attempts under $basePath")
-      val vs = versions(spark, basePath)
-      val head = vs.lastOption
+      val head = versions(spark, basePath).lastOption
       val prev = head.map(entries(spark, basePath, _)).getOrElse(Seq.empty)
       val newEntries = mkEntries(head.getOrElse(0L), prev)
       // ledger derivation happens INSIDE the CAS loop: a lost race means
       // the winner may have ingested batches this attempt must remember
       val headMeta = head.map(commitMeta(spark, basePath, _))
         .getOrElse(Map.empty[String, String])
-      val ledgerBase = headMeta.get(AppliedKey) match {
-        case Some(s) =>
-          s.split(',').iterator.filter(_.nonEmpty).map(dec).toSeq
-        case None if head.isDefined => // legacy head: one-time history scan
-          vs.flatMap(v => commitMeta(spark, basePath, v).get("batch_id"))
-        case None => seedLedger // uninitialized table: a clone inherits
-      }
+      // an uninitialized table starts from the seed (a clone inherits)
+      val ledgerBase = if (head.isDefined) ledgerOf(headMeta) else seedLedger
       val ledger =
         (ledgerBase ++ meta.get("batch_id")).takeRight(AppliedCap)
       // ts is clamped monotone over the head's stamp: a clock step-back
       // must not let readAsOf resolve a NEWER snapshot for an OLDER
       // stamp (version order and stamp order stay aligned)
       val ts = math.max(System.currentTimeMillis(),
-        parseTs(headMeta).map(_ + 1).getOrElse(Long.MinValue))
+        head.fold(Long.MinValue)(_ => commitTs(headMeta) + 1))
       // constraints are PROTOCOL-CARRIED like the ledger: every commit
       // re-reads the refreshed head's set inside the CAS (a concurrent
       // addConstraint cannot be silently dropped by a racing writer);
@@ -579,10 +552,6 @@ object Versioned {
           else None
         case Some(f) => Some(encodeConstraints(f(headCons)))
       }
-      // the ledger key is written even when EMPTY: its presence is what
-      // tells the next reader "consolidated — no legacy scan needed", so
-      // omitting it would cost every future publish of a batch-id-free
-      // table an O(versions) manifest sweep
       // the schema policy carries exactly like the constraint set
       val polOut = editPolicy.orElse(headMeta.get(PolicyKey))
       val fullMeta = meta + ("ts" -> ts.toString) +
@@ -686,9 +655,9 @@ object Versioned {
   /** Stage `df` into a fresh immutable `data-<uuid>` directory (with an
     * optional zone-map sidecar over `statsCols`, read from the parquet
     * footers the write just produced — near-free, enables
-    * [[readPruned]]). Returns the qualified path. Staging is invisible
-    * until a manifest references it; a crash here leaves vacuumable
-    * garbage, never a visible half-commit. */
+    * [[readWhere]]'s range pruning). Returns the qualified path. Staging
+    * is invisible until a manifest references it; a crash here leaves
+    * vacuumable garbage, never a visible half-commit. */
   private[sources] def stage(df: DataFrame, basePath: String,
       statsCols: Seq[String] = Seq.empty,
       bloomCols: Seq[String] = Seq.empty,
@@ -784,7 +753,7 @@ object Versioned {
       Layout.writeZoneMap(spark, dataDir.toString, statsCols)
     if (bloomCols.nonEmpty && !isDirEmpty(spark, dataDir.toString)) {
       // sizing: explicit session confs win; otherwise AUTO-SIZE from
-      // the just-written files' footer row counts against the target
+      // the just-written files' footer row counts against a 3% target
       // fpp — a 2k-row staging batch must not pay (or mis-trust) a
       // 1M-item filter ([[Layout.writeBloomSidecar]] records what it
       // chose in the sidecar meta)
@@ -792,10 +761,8 @@ object Versioned {
         .map(_.toLong).getOrElse(-1L)
       val bits = spark.conf.getOption("spark.graft.bloom.bits")
         .map(_.toLong).getOrElse(-1L)
-      val fpp = spark.conf
-        .get("spark.graft.bloom.fpp", "0.03").toDouble
       Layout.writeBloomSidecar(spark, dataDir.toString, bloomCols,
-        expectedItems = items, numBits = bits, fpp = fpp)
+        expectedItems = items, numBits = bits, fpp = 0.03)
     }
     (dataDir.toString, validated)
   }
@@ -1051,11 +1018,11 @@ object Versioned {
     * if another commit landed since the caller read that head — the
     * rewrite was derived from a snapshot that is no longer current.
     * `statsCols`: write a zone-map sidecar into the staged directory
-    * (see [[readPruned]]). `bloomCols`: write a per-file bloom sidecar
-    * (see [[readPointPruned]]; sized by `spark.graft.bloom.items` /
-    * `spark.graft.bloom.bits`). `parts`: declare the staged directory
-    * partition-confined (see [[ManifestEntry]]). Returns the committed
-    * version. */
+    * (range pruning in [[readWhere]]). `bloomCols`: write a per-file
+    * bloom sidecar (equality pruning in [[readWhere]]; sized by
+    * `spark.graft.bloom.items` / `spark.graft.bloom.bits`). `parts`:
+    * declare the staged directory partition-confined (see
+    * [[ManifestEntry]]). Returns the committed version. */
   def commit(df: DataFrame, basePath: String,
       mode: SaveMode = SaveMode.Overwrite,
       expectedHead: Option[Long] = None,
@@ -1095,9 +1062,9 @@ object Versioned {
     if (appliedBatchIds(spark, basePath).contains(batchId)) return None
     val (dataDir, stagedWith) = stageValidated(batch, basePath)
     try {
-      Some(publish(spark, basePath, (_, prev) => {
-        if (appliedFromHistory(spark, basePath,
-            versions(spark, basePath)).contains(batchId))
+      Some(publish(spark, basePath, (head, prev) => {
+        if (appliedBatchIds(spark, basePath, Some(head).filter(_ > 0L))
+            .contains(batchId))
           throw new ReplayedBatch
         prev :+ ManifestEntry(dataDir, None)
       }, Map("batch_id" -> batchId),
@@ -1175,44 +1142,6 @@ object Versioned {
   /** Read the latest committed snapshot. */
   def read(spark: SparkSession, basePath: String): DataFrame =
     readVersion(spark, basePath, headVersion(spark, basePath))
-
-  /** Read the latest snapshot with LISTING-time zone-map pruning: data
-    * directories committed with `statsCols` carry a per-file min/max
-    * sidecar, and only the files whose rectangles overlap every
-    * `[lo, hi]` range are planned. Directories without a sidecar are
-    * read in full (fail open — pruning may only drop files proven empty
-    * of matches), so mixed tables stay row-identical to
-    * `read(...).filter(ranges)`. Callers re-apply their precise
-    * predicate; the sidecar is file-granular. */
-  def readPruned(spark: SparkSession, basePath: String,
-      ranges: Seq[(String, Double, Double)]): DataFrame = {
-    require(ranges.nonEmpty, "readPruned needs at least one column range")
-    val head = headVersion(spark, basePath)
-    val ents = entries(spark, basePath, head)
-    // fail open per dir AND per column ([[sidecarUsable]]): commits may
-    // have been staged with different statsCols, so a sidecar missing a
-    // requested column prunes on the columns it does have (none usable,
-    // or no sidecar → the whole dir is read)
-    val sources = dataEntries(ents).map(_.path).flatMap { d =>
-      Layout.loadZoneMap(spark, d) match {
-        case Some(zm) =>
-          // caller-supplied double intervals live in the NUMERIC-like
-          // encoded spaces (raw value / epoch day / epoch micros);
-          // string-family columns encode through an internal prefix map
-          // the caller cannot target — fail open for those
-          val usable = ranges.filter(r => zm.family(r._1).exists(f =>
-            f == ZoneCodec.Numeric || f == ZoneCodec.DateF ||
-              f == ZoneCodec.TimestampF))
-          if (usable.isEmpty) Seq(d) else zm.prune(usable)
-        case None => Seq(d)
-      }
-    }
-    if (sources.isEmpty) readVersion(spark, basePath, head).filter(
-      org.apache.spark.sql.functions.lit(false))
-    else applyDels(spark,
-      snapReader(spark, sources).parquet(sources: _*),
-      delPaths(ents))
-  }
 
   /** Undo without copying data: commit a NEW version whose manifest is
     * version `v`'s entry list (partition tags preserved). History stays
@@ -1296,11 +1225,7 @@ object Versioned {
     // the ledger AS OF the cloned version — the head's may record
     // batches whose data postdates (and so is absent from) the clone
     val srcMeta = commitMeta(spark, srcBase, srcV)
-    val ledger = srcMeta.get(AppliedKey) match {
-      case Some(s) => s.split(',').iterator.filter(_.nonEmpty).map(dec).toSeq
-      case None => versions(spark, srcBase).filter(_ <= srcV) // legacy
-        .flatMap(pv => commitMeta(spark, srcBase, pv).get("batch_id"))
-    }
+    val ledger = ledgerOf(srcMeta)
     // constraints inherit as-of the cloned version too: a fork of a
     // gated table must not silently lose its CHECK gate
     val srcCons = srcMeta.get(ConstraintsKey)
@@ -1560,13 +1485,13 @@ object Versioned {
   /** The commit log as a DataFrame: one row per retained version —
     * `(version, ts, batch_id, data_dirs, tombstone_dirs)`. Driver-side
     * manifest reads only (retained history is vacuum-bounded); `ts` is
-    * the protocol-stamped commit wall clock, null for pre-r9 manifests. */
+    * the protocol-stamped commit wall clock. */
   def history(spark: SparkSession, basePath: String): DataFrame = {
     import scala.jdk.CollectionConverters._
     val rows = versions(spark, basePath).map { v =>
       val meta = commitMeta(spark, basePath, v)
       val ents = entries(spark, basePath, v)
-      org.apache.spark.sql.Row(v, parseTs(meta).map(Long.box).orNull,
+      org.apache.spark.sql.Row(v, commitTs(meta),
         meta.get("batch_id").orNull,
         ents.count(!_.tombstone), ents.count(_.tombstone))
     }
@@ -1586,7 +1511,6 @@ object Versioned {
 
   /** Timestamp time travel: read the newest snapshot whose protocol-
     * stamped commit time is ≤ `tsMillis` (the AS OF TIMESTAMP form).
-    * Pre-r9 unstamped versions are treated as older than any stamp.
     * Fails loudly when every retained version is newer than the stamp —
     * the snapshot that WAS current then is vacuumed or predates the
     * table, and silently serving a newer one would lie. */
@@ -1595,7 +1519,7 @@ object Versioned {
     val vs = versions(spark, basePath)
     require(vs.nonEmpty, s"no committed versions under $basePath")
     val eligible = vs.filter { v =>
-      parseTs(commitMeta(spark, basePath, v)).forall(_ <= tsMillis)
+      commitTs(commitMeta(spark, basePath, v)) <= tsMillis
     }
     require(eligible.nonEmpty,
       s"no retained version at or before ts=$tsMillis under $basePath " +
@@ -1646,7 +1570,7 @@ object Versioned {
     val sets = paths.map { d =>
       val zm = new Path(d, "_graft_zonemap")
       if (!fs(spark, zm).exists(zm)) Set.empty[String]
-      else spark.read.parquet(zm.toString).schema.fieldNames
+      else Layout.readSidecar(spark, d, "_graft_zonemap").schema.fieldNames
         .filter(_.endsWith("_min")).map(_.stripSuffix("_min")).toSet
     }
     if (sets.isEmpty || sets.exists(_.isEmpty)) Seq.empty
@@ -1662,7 +1586,7 @@ object Versioned {
     val sets = paths.map { d =>
       val bm = new Path(d, "_graft_bloom")
       if (!fs(spark, bm).exists(bm)) Set.empty[String]
-      else spark.read.parquet(bm.toString).schema.fieldNames
+      else Layout.readSidecar(spark, d, "_graft_bloom").schema.fieldNames
         .filter(_.endsWith("_bloom")).map(_.stripSuffix("_bloom")).toSet
     }
     if (sets.isEmpty || sets.exists(_.isEmpty)) Seq.empty
@@ -1671,47 +1595,17 @@ object Versioned {
 
   /** The subset of `probes` a dir's bloom sidecar can evaluate — None
     * when the dir has no sidecar. The fail-open gate of the point-
-    * lookup path, mirroring [[sidecarUsable]]. */
+    * lookup path. */
   private def bloomUsable(spark: SparkSession, dir: String,
       probes: Seq[(String, Seq[Any])])
       : Option[Seq[(String, Seq[Any])]] = {
     val bm = new Path(dir, "_graft_bloom")
     if (!fs(spark, bm).exists(bm)) None
     else {
-      val cols = spark.read.parquet(bm.toString).schema.fieldNames.toSet
+      val cols = Layout.readSidecar(spark, dir, "_graft_bloom")
+        .schema.fieldNames.toSet
       Some(probes.filter(p => cols.contains(s"${p._1}_bloom")))
     }
-  }
-
-  /** Read the latest snapshot with LISTING-time BLOOM pruning — the
-    * point-lookup twin of [[readPruned]]: data directories committed
-    * with `bloomCols` carry a per-file bloom sidecar, and only the
-    * files that MIGHT contain, for every probed column, at least one of
-    * its probe values are planned (the `k1 IN (…) AND k2 IN (…)`
-    * shape). Zone maps answer ranges; blooms answer equality on
-    * high-cardinality keys scattered through range-covering files —
-    * the needle-in-100-TB case. Fail-open per directory and per column
-    * exactly like [[readPruned]]; callers re-apply their precise
-    * predicate (the sidecar is file-granular, and bloom positives may
-    * be false — never its negatives). */
-  def readPointPruned(spark: SparkSession, basePath: String,
-      probes: Seq[(String, Seq[Any])]): DataFrame = {
-    require(probes.nonEmpty && probes.forall(_._2.nonEmpty),
-      "readPointPruned needs at least one probe value per column")
-    val head = headVersion(spark, basePath)
-    val ents = entries(spark, basePath, head)
-    val sources = dataEntries(ents).map(_.path).flatMap { d =>
-      bloomUsable(spark, d, probes) match {
-        case Some(usable) if usable.nonEmpty =>
-          Layout.pruneFilesBloom(spark, d, usable)
-        case _ => Seq(d)
-      }
-    }
-    if (sources.isEmpty) readVersion(spark, basePath, head).filter(
-      org.apache.spark.sql.functions.lit(false))
-    else applyDels(spark,
-      snapReader(spark, sources).parquet(sources: _*),
-      delPaths(ents))
   }
 
   /** Predicate-driven read — the planner face of BOTH skipping layers:
@@ -1798,15 +1692,6 @@ object Versioned {
         }
       }
     }
-
-  /** Legacy numeric face of [[zoneSurvivors]]: raw double envelopes,
-    * applied only against `numeric`-family sidecar columns (a typed
-    * column never sees a raw double — fail open). */
-  private[graft] def zoneSurvivors(spark: SparkSession,
-      ents: Seq[ManifestEntry],
-      ranges: Seq[(String, Double, Double)]): Seq[ManifestEntry] =
-    if (ranges.isEmpty) ents
-    else zoneSurvivors(spark, ents, PredicateRanges.numericEnvelope(ranges))
 
   /** File-level copy-on-write: rewrite ONLY the directories containing
     * rows matching `cond`, carry the rest forward by reference.
@@ -2068,7 +1953,8 @@ object Versioned {
         }
       }
     }
-    val candidates = zoneSurvivors(spark, dataEntries(ents), keyRanges)
+    val candidates = zoneSurvivors(spark, dataEntries(ents),
+      PredicateRanges.numericEnvelope(keyRanges))
     import org.apache.spark.sql.functions.regexp_replace
     val matchDirs =
       if (candidates.isEmpty) Set.empty[String]
@@ -2309,7 +2195,7 @@ object Versioned {
     }
     val row = org.apache.spark.sql.Row(
       head,
-      parseTs(meta).map(Long.box).orNull,
+      commitTs(meta),
       datas.size,
       ents.count(_.tombstone),
       datas.map(d => dirBytes(spark, d.path)).sum,
@@ -2450,7 +2336,7 @@ object Versioned {
     * carries the version and whose modification time is the renewal
     * stamp — so a vacuum run from ANOTHER process honors it too.
     * Crashed readers cannot block retention forever: a lease file older
-    * than `spark.graft.lease.ttlMs` (default 1 h) is expired — ignored
+    * than [[LeaseTtlMs]] (1 h) is expired — ignored
     * and garbage-collected by the next vacuum. Long scans call
     * [[SnapshotLease.renew]] inside the TTL. */
   final class SnapshotLease private[Versioned] (
@@ -2489,6 +2375,10 @@ object Versioned {
     String, java.util.concurrent.ConcurrentHashMap[Long, Long]]()
   private val leaseIds = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Durable-lease expiry: a lease file not re-stamped for this long
+    * belongs to a crashed reader. */
+  val LeaseTtlMs: Long = 3600000L
+
   private def leasesDir(basePath: String): Path =
     new Path(basePath, "_graft_leases")
 
@@ -2509,9 +2399,7 @@ object Versioned {
     import scala.jdk.CollectionConverters._
     val inProc = Option(leases.get(qualifiedBase))
       .flatMap(_.values.asScala.minOption)
-    val ttl = spark.conf.getOption("spark.graft.lease.ttlMs")
-      .map(_.toLong).getOrElse(3600000L)
-    val horizon = System.currentTimeMillis() - ttl
+    val horizon = System.currentTimeMillis() - LeaseTtlMs
     val durable =
       try {
         val d = leasesDir(basePath)

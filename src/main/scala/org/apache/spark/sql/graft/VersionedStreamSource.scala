@@ -224,13 +224,12 @@ private[graft] final class VersionedStreamSource(sqlContext: SQLContext,
   // so a daemon re-stamps every in-flight pin at TTL/3 (renew() warns
   // on failure itself). Shut down with the source.
   private val leaseRenewer = {
-    val ttlMs = spark.conf.getOption("spark.graft.lease.ttlMs")
-      .map(_.toLong).getOrElse(3600000L)
+    val period = Versioned.LeaseTtlMs / 3
     val ex = java.util.concurrent.Executors.newSingleThreadScheduledExecutor(
       r => { val t = new Thread(r, s"graft-versioned-lease-renew $basePath")
         t.setDaemon(true); t })
     ex.scheduleAtFixedRate(() => pins.values.forEach(_.renew()),
-      ttlMs / 3, ttlMs / 3, java.util.concurrent.TimeUnit.MILLISECONDS)
+      period, period, java.util.concurrent.TimeUnit.MILLISECONDS)
     ex
   }
 

@@ -740,19 +740,13 @@ class ExtSpec extends SparkSpec {
     assert(kj.length === 1)
     assert(kj.head.getAs[Boolean]("recall_ok")
       && kj.head.getAs[Boolean]("zero_tail_ok"))
-    try {
-      spark.conf.set("spark.graft.ann.check.lsh.minTotal", "51") // > 10×5
-      spark.conf.set("spark.graft.knnjoin.check.ivf.minRecallPct", "101")
-      assert(Similarity.queries("x_ann_lsh")(spark, sf).collect()
-        .forall(!_.getAs[Boolean]("mean_ok")),
-        "an unreachable total bound must flip mean_ok")
-      assert(!Similarity.queries("x_knn_join_ivf")(spark, sf).collect()
-        .head.getAs[Boolean]("recall_ok"),
-        "an unreachable recall bound must flip recall_ok")
-    } finally {
-      spark.conf.unset("spark.graft.ann.check.lsh.minTotal")
-      spark.conf.unset("spark.graft.knnjoin.check.ivf.minRecallPct")
-    }
+    // the same checks built with unreachable thresholds
+    assert(Similarity.annRecallCheck("x_ann_lsh", 2, 51)(spark, sf) // > 10×5
+      .collect().forall(!_.getAs[Boolean]("mean_ok")),
+      "an unreachable total bound must flip mean_ok")
+    assert(!Similarity.knnRecallCheck("x_knn_join_ivf", 101)(spark, sf)
+      .collect().head.getAs[Boolean]("recall_ok"),
+      "an unreachable recall bound must flip recall_ok")
   }
 
   // r16 (VERDICT r15 #1): the four x_ann_* checks share ONE memoized
@@ -1003,20 +997,21 @@ class ExtSpec extends SparkSpec {
   }
 
   test("ann operating-point confs reach the registered plans; unset session = defaults") {
-    // the RECALL sweep's knobs are session confs — prove a set value lands
-    // in the executed plan (the rerank literal gates the shortlist filter)
-    // and that clearing it restores the benched default
+    // the operating point is an argument of the top-k builders (the rerank
+    // literal gates the shortlist filter); the registered entries pin the
+    // RECALL sweep's point as literals, so no session conf moves them
+    val emb = graft.Tables.embeddings(spark, sf)
+    assert(explain(Similarity.ivfpqTopK(emb, col("vec_id") < 10, rerank = 77))
+      .contains("<= 77"), "the rerank argument must reach the plan")
+    // r11 default = the honest-seeding sweep winner (probes=12/rerank=400)
     val key = "spark.graft.ann.ivfpq.rerank"
-    def plan(): String =
-      explain(Similarity.rawAnn("x_ann_ivfpq")(spark, sf))
     try {
       spark.conf.set(key, "77")
-      assert(plan().contains("<= 77"), "conf rerank must reach the plan")
-      spark.conf.set(key, "0")
-      intercept[IllegalArgumentException](plan())
+      assert(explain(Similarity.rawAnn("x_ann_ivfpq")(spark, sf))
+        .contains("<= 400"), "a retired conf must not move the registered point")
     } finally spark.conf.unset(key)
-    // r11 default = the honest-seeding sweep winner (probes=12/rerank=400)
-    assert(plan().contains("<= 400"), "unset conf must restore the default")
+    assert(explain(Similarity.rawAnn("x_ann_ivfpq")(spark, sf))
+      .contains("<= 400"), "the registered rerank must reach the plan")
   }
 
   // r15 (VERDICT r14 #5): the router's asymptotic boundary is a loud

@@ -63,14 +63,14 @@ class TypedSkipSpec extends SparkSpec {
     assert(zm.family("name") === Some("string"))
     assert(zm.family("absent") === None)
     // date bounds are epoch days: 2000-01-01 is day 10957
-    val ranges = PredicateRanges.ranges(
+    val ranges = PredicateRanges.rangeSets(
       PredicateRanges.tree(col("d") === lit(java.sql.Date.valueOf("2000-01-01"))),
       zm.family).get
     assert(ranges.size === 1)
-    val (c, lo, hi) = ranges.head
+    val (c, Seq((lo, hi))) = ranges.head
     assert(c === "d" && lo < 10957.0 && hi > 10957.0 && hi - lo < 1.0)
     // exactly one of the two range-partitioned files holds day 10957
-    assert(zm.prune(ranges).size === 1)
+    assert(zm.pruneSets(ranges).size === 1)
   }
 
   test("string prefix truncation is sound at the boundary") {
@@ -82,9 +82,9 @@ class TypedSkipSpec extends SparkSpec {
     Layout.writeZoneMap(spark, dir, Seq("s"))
     val zm = Layout.loadZoneMap(spark, dir).get
     def pruneOn(c: org.apache.spark.sql.Column): Int =
-      PredicateRanges.ranges(PredicateRanges.tree(c), zm.family) match {
+      PredicateRanges.rangeSets(PredicateRanges.tree(c), zm.family) match {
         case None => 0
-        case Some(rs) => zm.prune(rs).size
+        case Some(rs) => zm.pruneSets(rs).size
       }
     assert(pruneOn(col("s") === "abcdef") === 1,
       "a probe equal to the truncated max must survive")
@@ -205,10 +205,11 @@ class TypedSkipSpec extends SparkSpec {
     // raw doubles against the DATE column: family mismatch → fail open
     // (both dirs survive — sound), NOT pruned wrongly
     val survivors = Versioned.zoneSurvivors(spark, ents,
-      Seq(("d", 0.0, 1.0)))
+      PredicateRanges.numericEnvelope(Seq(("d", 0.0, 1.0))))
     assert(survivors.size === ents.size)
     // against the numeric id column they still prune
-    val s2 = Versioned.zoneSurvivors(spark, ents, Seq(("id", 0.0, 10.0)))
+    val s2 = Versioned.zoneSurvivors(spark, ents,
+      PredicateRanges.numericEnvelope(Seq(("id", 0.0, 10.0))))
     assert(s2.map(_.path) === Seq(ents.head.path))
   }
 }

@@ -462,7 +462,7 @@ class VersionedSpec extends SparkSpec {
         org.apache.spark.sql.SaveMode.Append, parts = Some(Set(""))))
   }
 
-  test("mixed statsCols across commits: readPruned fails open per column") {
+  test("mixed statsCols across commits: readWhere fails open per column") {
     import graft.sources.Layout
     val base = freshBase()
     val ord = Tables.orders(spark, "/root/testdata/sf0.001")
@@ -477,13 +477,11 @@ class VersionedSpec extends SparkSpec {
       Seq("o_orderkey", "o_custkey"), files = 4),
       base, SaveMode.Append, statsCols = Seq("o_orderkey", "o_custkey"))
     val hiCk = ord.agg(max(col("o_custkey"))).head().getLong(0).toDouble / 4
-    // pre-fix this threw UNRESOLVED_COLUMN on the first dir's sidecar
-    val pruned = Versioned.readPruned(spark, base,
-      Seq(("o_orderkey", 0.0, mid.toDouble), ("o_custkey", 0.0, hiCk)))
-    val expect = ord.filter(col("o_orderkey") <= mid
-      && col("o_custkey") <= hiCk).count()
-    assert(pruned.filter(col("o_orderkey") <= mid
-      && col("o_custkey") <= hiCk).count() === expect)
+    // the first dir's sidecar lacks o_custkey: it prunes on o_orderkey
+    // alone instead of failing to resolve the column
+    val cond = col("o_orderkey") <= mid && col("o_custkey") <= hiCk
+    assert(Versioned.readWhere(spark, base, cond).count() ===
+      ord.filter(cond).count())
   }
 
   test("schema-evolved columns: update and merge resolve against old dirs") {
@@ -681,8 +679,11 @@ class VersionedSpec extends SparkSpec {
 
   test("predicate ranges: conjunct extraction is conservative and fail-open") {
     import graft.sources.PredicateRanges
-    def r(c: org.apache.spark.sql.Column) = PredicateRanges.extract(c)
-      .map { case (n, lo, hi) => (n, math.ceil(lo), math.floor(hi)) }
+    // per-column hull of the interval sets, every column numeric
+    def r(c: org.apache.spark.sql.Column) = PredicateRanges
+      .rangeSets(PredicateRanges.tree(c), _ => Some("numeric")).get
+      .map { case (n, ivs) =>
+        (n, math.ceil(ivs.map(_._1).min), math.floor(ivs.map(_._2).max)) }
     // conjuncts intersect per column; = is a point; IN is an envelope
     assert(r(col("a") >= 5 && col("a") < 10 && col("b") === 3
       && col("c").isin(7, 9, 8)) ===
@@ -713,7 +714,7 @@ class VersionedSpec extends SparkSpec {
     val ents = V.entries(spark, base, 2)
     // the mechanism: a low-range predicate's intervals exclude dir 2
     val cond = col("o_orderkey") <= mid / 2
-    val survivors = V.zoneSurvivors(spark, ents, PredicateRanges.extract(cond))
+    val survivors = V.zoneSurvivors(spark, ents, PredicateRanges.tree(cond))
     assert(survivors.map(_.path) === Seq(ents.head.path),
       "the high-range dir's sidecar must rule it out pre-scan")
     // and the full op stays correct: delete through the pruned discovery
@@ -724,7 +725,7 @@ class VersionedSpec extends SparkSpec {
       ord.filter(!(col("o_orderkey") <= mid / 2)).count())
   }
 
-  test("zone-map sidecars in commits: readPruned is row-identical and prunes files") {
+  test("zone-map sidecars in commits: readWhere is row-identical and prunes files") {
     import graft.sources.Layout
     val base = freshBase()
     val li = Tables.lineitem(spark, "/root/testdata/sf0.001")
@@ -738,18 +739,14 @@ class VersionedSpec extends SparkSpec {
       base, SaveMode.Append, statsCols = z)
     val maxOk = li.agg(max(col("l_orderkey"))).head().getLong(0).toDouble
     val maxPk = li.agg(max(col("l_partkey"))).head().getLong(0).toDouble
-    val ranges = Seq(("l_orderkey", 0.0, maxOk / 8),
-      ("l_partkey", 0.0, maxPk / 8))
-    val pruned = Versioned.readPruned(spark, base, ranges)
+    val cond = col("l_orderkey") <= maxOk / 8 && col("l_partkey") <= maxPk / 8
+    val pruned = Versioned.readWhere(spark, base, cond)
     val all = Versioned.read(spark, base)
     // listing-time pruning really dropped files…
     assert(pruned.inputFiles.length * 2 <= all.inputFiles.length,
       s"${pruned.inputFiles.length} of ${all.inputFiles.length} planned")
-    // …and the precise-filtered result is row-identical to the full scan
-    def slice(df: org.apache.spark.sql.DataFrame): Long =
-      df.filter(col("l_orderkey") <= maxOk / 8
-        && col("l_partkey") <= maxPk / 8).count()
-    assert(slice(pruned) === slice(all))
+    // …and the result is row-identical to the full filtered scan
+    assert(pruned.count() === all.filter(cond).count())
   }
 
   test("partitionCol hint: update and merge preserve partition tags") {
@@ -867,11 +864,10 @@ class VersionedSpec extends SparkSpec {
 
     val mm = ord.agg(min(col("o_orderkey")), max(col("o_orderkey"))).head()
     val probes = Seq(mm.getLong(0), mm.getLong(1))
+    val probed = col("o_orderkey").isin(probes: _*)
     def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.filter(col("o_orderkey").isin(probes: _*))
-        .select("o_orderkey").as[Long].collect().toSeq.sorted
-    val pruned = Versioned.readPointPruned(spark, base,
-      Seq(("o_orderkey", probes)))
+      df.filter(probed).select("o_orderkey").as[Long].collect().toSeq.sorted
+    val pruned = Versioned.readWhere(spark, base, probed)
     val full = Versioned.read(spark, base)
     assert(pruned.inputFiles.length * 2 <= full.inputFiles.length,
       s"${pruned.inputFiles.length} of ${full.inputFiles.length} planned")
@@ -879,9 +875,10 @@ class VersionedSpec extends SparkSpec {
 
     // probe-literal type width must not break soundness (Int vs Long
     // hash differently raw; the canonical string cast makes them agree)
-    assert(Versioned.readPointPruned(spark, base,
-        Seq(("o_orderkey", Seq(probes.head.toInt))))
-      .filter(col("o_orderkey") === probes.head).count() === 1L)
+    val narrow = Versioned.readWhere(spark, base,
+      col("o_orderkey") === probes.head.toInt)
+    assert(narrow.count() === 1L)
+    assert(narrow.inputFiles.length < full.inputFiles.length)
 
     // DML keeps the bloom layer: the rewritten dir carries a rebuilt
     // sidecar, and the deleted key is gone from the pruned read
@@ -893,13 +890,12 @@ class VersionedSpec extends SparkSpec {
     assert(newDirs.forall(d => new java.io.File(
       d.stripPrefix("file:"), "_graft_bloom").exists()),
       "DML must not shed the bloom skipping layer")
-    assert(rowsOf(Versioned.readPointPruned(spark, base,
-      Seq(("o_orderkey", probes)))) === Seq(probes.last))
+    assert(rowsOf(Versioned.readWhere(spark, base, probed))
+      === Seq(probes.last))
 
     // fail open: an appended commit WITHOUT bloomCols is read in full
     Versioned.commit(ord.limit(50), base, SaveMode.Append)
-    assert(rowsOf(Versioned.readPointPruned(spark, base,
-        Seq(("o_orderkey", probes)))) ===
+    assert(rowsOf(Versioned.readWhere(spark, base, probed)) ===
       rowsOf(Versioned.read(spark, base)))
   }
 
@@ -1003,13 +999,34 @@ class VersionedSpec extends SparkSpec {
 
     // the rewrite carries a zone map: a range read prunes files
     val maxOk = ord.agg(max(col("o_orderkey"))).head().getLong(0).toDouble
-    val pruned = Versioned.readPruned(spark, base,
-      Seq(("o_orderkey", 0.0, maxOk / 8)))
+    val low = col("o_orderkey") <= maxOk / 8
+    val pruned = Versioned.readWhere(spark, base, low)
     assert(pruned.inputFiles.length * 2 <=
       Versioned.read(spark, base).inputFiles.length)
-    assert(pruned.filter(col("o_orderkey") <= maxOk / 8).count() ===
-      Versioned.read(spark, base)
-        .filter(col("o_orderkey") <= maxOk / 8).count())
+    assert(pruned.count() === Versioned.read(spark, base).filter(low).count())
+  }
+
+  // the two registered pruning entries read through readWhere; this
+  // pins the files they plan at sf0.001 — the list the raw range and
+  // bloom-probe faces planned before readWhere replaced them — as
+  // (manifest entry index / part file) pairs, so the PRUNING is shown
+  // unchanged, not just the rows
+  test("registered pruning entries plan the pinned surviving files") {
+    import org.apache.hadoop.fs.Path
+    def planned(name: String): (Seq[String], Int) = {
+      val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+      val files = df.inputFiles.toSeq.map(new Path(_))
+      val base = files.head.getParent.getParent.toString
+      val dirs = Versioned.entries(spark, base,
+        Versioned.versions(spark, base).last).map(e => new Path(e.path).getName)
+      (files.map(f => s"${dirs.indexOf(f.getParent.getName)}/" +
+          f.getName.take("part-00000".length)).sorted,
+        Versioned.read(spark, base).inputFiles.length)
+    }
+    assert(planned("x_versioned_pruned") ===
+      ((Seq("0/part-00000", "1/part-00000", "1/part-00001"), 16)))
+    assert(planned("x_versioned_bloomprune") ===
+      ((Seq("0/part-00000", "1/part-00007"), 16)))
   }
 
   test("bloom probes canonicalize through the recorded column type") {
@@ -1023,11 +1040,15 @@ class VersionedSpec extends SparkSpec {
     // an Int probe against the DOUBLE column must hash the way the
     // column renders ("100.0"), or the file holding the match is
     // silently pruned — the forbidden false negative
-    assert(Versioned.readPointPruned(spark, base, Seq(("price", Seq(100))))
-      .filter(col("price") === 100).count() === 1L)
+    val price = Versioned.readWhere(spark, base, col("price") === 100)
+    assert(price.count() === 1L && price.inputFiles.length === 1)
     // an uncastable probe can match no row: everything prunes, no error
-    assert(Versioned.readPointPruned(spark, base, Seq(("id", Seq("abc"))))
-      .count() === 0L)
+    // (the bloom layer alone — under ANSI the predicate itself would
+    // fail to cast if any file were left to evaluate it on)
+    val uncastable = graft.sources.PredicateRanges.probes(
+      graft.sources.PredicateRanges.tree(col("id") === "abc")).get
+    assert(graft.sources.Layout.pruneFilesBloom(spark,
+      Versioned.entries(spark, base, 1L).head.path, uncastable).isEmpty)
     // session-zone-dependent types are rejected at build time
     assertThrows[IllegalArgumentException](
       Versioned.withBloomSizing(spark, 1L << 10, 1L << 14) {

@@ -425,7 +425,7 @@ class ProtocolSpec extends SparkSpec {
       assert(Versioned.read(spark, base).count() === 1)
 
       // (b) crash mid-copy: the torn head is refused loudly — never
-      // parsed as a (silently shorter) legacy manifest
+      // parsed as a (silently shorter) manifest
       mode = "mid"
       intercept[RuntimeException] {
         Versioned.commit(Seq((2L, "b")).toDF("id", "s"), base)
@@ -459,34 +459,49 @@ class ProtocolSpec extends SparkSpec {
     }
   }
 
-  // back-compat pin for the r16 manifest framing: a pre-r16 manifest
-  // (no #graft header, no #eof trailer) must still parse — reads, meta
-  // (the replay ledger), and publishes on top of the legacy head.
-  test("legacy unframed manifests still parse and can be committed over") {
+  // the manifest framing has no unframed fallback: a head without the
+  // #graft header and a matching #eof trailer — the framing stripped, or
+  // a tear inside the header line itself — is torn, never an (empty or
+  // shorter) snapshot a reader would serve and the next commit would
+  // publish over; deleting the torn head restores the previous one.
+  test("unframed and header-torn manifests are refused as torn") {
     val base = freshBase()
     Versioned.appendOnce(Seq((1L, "a")).toDF("id", "s"), base, "b1")
     Versioned.appendOnce(Seq((2L, "b")).toDF("id", "s"), base, "b2")
-    // strip the framing from the head manifest — byte-identical to what
-    // a pre-r16 writer produced
     val head = new Path(base, "_manifests/v2")
     val f = FsUtil.fs(spark, head)
     val in = f.open(head)
     val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
       .getLines().toList finally in.close()
     assert(lines.head === "#graft=2" && lines.last.startsWith("#eof="))
-    val legacy = lines.drop(1).dropRight(1)
+    def rewriteHead(bytes: String): Unit = {
+      f.delete(head, false)
+      val out = f.create(head, false)
+      try out.write(bytes.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+    def assertTorn(): Unit = {
+      val e = intercept[IllegalStateException](Versioned.read(spark, base))
+      assert(e.getMessage.contains("torn manifest"), e.getMessage)
+      intercept[IllegalStateException](Versioned.appliedBatchIds(spark, base))
+      intercept[IllegalStateException](
+        Versioned.appendOnce(Seq((3L, "c")).toDF("id", "s"), base, "b3"))
+      assert(Versioned.versions(spark, base) === Seq(1L, 2L),
+        "nothing may publish over a torn head")
+    }
+    // the framing stripped: the body alone is not a manifest
+    rewriteHead(lines.drop(1).dropRight(1).mkString("\n"))
+    assertTorn()
+    // a tear inside the header line leaves a few bytes of it
+    rewriteHead("#graf")
+    assertTorn()
+    // the documented repair: delete the torn head, v1 is the head again
     f.delete(head, false)
-    val out = f.create(head, false)
-    try out.write(legacy.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // reads, the ledger, and a new commit all work over the legacy head
+    assert(Versioned.read(spark, base).count() === 1)
+    assert(Versioned.appliedBatchIds(spark, base) === Seq("b1"))
+    assert(Versioned.appendOnce(Seq((2L, "b")).toDF("id", "s"), base, "b2")
+      === Some(2L))
     assert(Versioned.read(spark, base).count() === 2)
-    assert(Versioned.appliedBatchIds(spark, base).toSet === Set("b1", "b2"))
-    Versioned.appendOnce(Seq((3L, "c")).toDF("id", "s"), base, "b3")
-    assert(Versioned.read(spark, base).count() === 3)
-    assert(Versioned.appliedBatchIds(spark, base).toSet
-      === Set("b1", "b2", "b3"))
   }
 
   test("durable lease: another process's lease file floors vacuum until it expires") {
@@ -553,9 +568,7 @@ class ProtocolSpec extends SparkSpec {
     assert(filterBytes < 8 * 1024,
       s"sidecar filter is $filterBytes bytes — not auto-sized")
     // and the layer still works: point probes prune, rows exact
-    val probe = Seq(("k", Seq[Any](7L * 42)))
-    val got = Versioned.readPointPruned(spark, base, probe)
-      .filter(col("k") === 7L * 42)
+    val got = Versioned.readWhere(spark, base, col("k") === 7L * 42)
     assert(got.count() === 1L)
     assert(got.inputFiles.length === 1,
       "the probe must plan only the file that can hold the key")
