@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, BooleanType, ByteType,
+  DecimalType, IntegerType, LongType, ShortType, StringType}
 
 /** Incremental rollup maintenance over a [[Versioned]] table — the
   * materialized-view-refresh pattern a 100 TB warehouse lives on: the
@@ -120,8 +122,12 @@ object Incremental {
     * rollup has accreted this many data directories, the upsert
     * consolidates them all into one (self-compaction) instead of adding
     * more — bounding both manifest size and per-read file listing.
-    * Returns the committed (or, for a replayed batch id, the
-    * already-current) version. */
+    * The untouched remainder of the intersecting dirs is re-staged only
+    * when it can hold rows: when every intersecting dir is tagged, all
+    * their tags are touched values, and the key's type tags each value
+    * exactly (string, integral, boolean, decimal or binary keys), it is
+    * skipped (no write, no footer read). Returns the committed (or, for
+    * a replayed batch id, the already-current) version. */
   def upsertRollup(spark: SparkSession, basePath: String, batch: DataFrame,
       batchId: String, partitionKey: String, subKeys: Seq[String],
       measures: Seq[String], maxEntries: Int = 64,
@@ -288,29 +294,29 @@ object Incremental {
     // InSet with zero jobs. Null-safe: a NULL partition value must merge
     // with the batch's NULL group, not duplicate into remainder AND
     // merged, so NULL membership is an explicit isNull branch and the
-    // three-valued `In` result coalesces to false. Exotic key types a
-    // Literal can't carry (struct/binary) fall back to the join shape.
-    val inTouched: Option[org.apache.spark.sql.Column] =
+    // three-valued `In` result coalesces to false. Key types a Literal
+    // can't carry (struct/array/map) fall back to the join shape; the
+    // literal fails when `filter` converts the column, so the frames are
+    // built inside the try.
+    val (inMerged, inRemainder): (DataFrame, DataFrame) =
       try {
         val hasNull = touchedVals.contains(null)
         val nonNull = touchedVals.filterNot(_ == null)
         val base =
           if (nonNull.isEmpty) lit(false)
           else col(partitionKey).isInCollection(nonNull)
-        Some(coalesce(
+        val p = coalesce(
           if (hasNull) base || col(partitionKey).isNull else base,
-          lit(false)))
-      } catch { case scala.util.control.NonFatal(_) => None }
-    val (inMerged, inRemainder): (DataFrame, DataFrame) = inTouched match {
-      case Some(p) => (cur.filter(p), cur.filter(!p))
-      case None =>
-        val tp = partials.select(col(partitionKey).as("__tp")).distinct()
-        (cur.join(broadcast(tp),
-            cur(partitionKey) <=> col("__tp"), "left_semi").drop("__tp"),
-          cur.join(broadcast(tp),
-            cur(partitionKey) <=> col("__tp"), "left_anti"))
-    }
-    val remainder = inRemainder
+          lit(false))
+        (cur.filter(p), cur.filter(!p))
+      } catch {
+        case scala.util.control.NonFatal(_) =>
+          val tp = partials.select(col(partitionKey).as("__tp")).distinct()
+          (cur.join(broadcast(tp),
+              cur(partitionKey) <=> col("__tp"), "left_semi").drop("__tp"),
+            cur.join(broadcast(tp),
+              cur(partitionKey) <=> col("__tp"), "left_anti"))
+      }
     val merged = finalizeState(reAgg(inMerged.unionByName(partials)))
     // stage FIRST, decide from the written footers: the old shape ran
     // each frame's full pipeline for `isEmpty` and then AGAIN for the
@@ -321,14 +327,28 @@ object Incremental {
       stateShape(merged), basePath, Some(touchedSet)).toSeq
     // the remainder keeps the intersecting dirs' confinement minus the
     // touched values — but only if EVERY intersecting dir was tagged
-    val remTag = {
-      if (intersecting.forall(_.parts.isDefined)) {
-        val u = intersecting.flatMap(_.parts.get).toSet -- touchedSet
-        if (u.nonEmpty) Some(u) else None
-      } else None
+    val untouchedTags: Option[Set[String]] =
+      if (intersecting.forall(_.parts.isDefined))
+        Some(intersecting.flatMap(_.parts.get).toSet -- touchedSet)
+      else None
+    // When those tags lie wholly inside the touched set, the remainder is
+    // empty only if equal tags mean equal values. Carrying by reference
+    // needs just the converse, so check it on the key's type: struct,
+    // array and map tags join fields with commas (Row("a,b","c") and
+    // Row("a","b,c") both print [a,b,c]), timestamps print local time
+    // (shared in a DST fall-back hour), dates print hybrid-calendar
+    // fields, float equality (-0.0, NaN) is not string equality, and a
+    // string that is literally a sentinel shares its tag with null or "".
+    val tagIsExact = partials.schema(partitionKey).dataType match {
+      case StringType => !touchedSet.exists(_.startsWith("\u0000"))
+      case ByteType | ShortType | IntegerType | LongType | BooleanType |
+          BinaryType | _: DecimalType => true
+      case _ => false
     }
     val remEntries =
-      Versioned.stageNonEmpty(stateShape(remainder), basePath, remTag).toSeq
+      if (tagIsExact && untouchedTags.exists(_.isEmpty)) Seq.empty
+      else Versioned.stageNonEmpty(stateShape(inRemainder), basePath,
+        untouchedTags.filter(_.nonEmpty)).toSeq
     // a lost CAS leaves the freshly staged dirs orphaned — vacuumable
     // garbage, never visible
     Versioned.publishEntries(spark, basePath, head,

@@ -411,7 +411,7 @@ object Layout {
     * as an explicit path, the underscore-named directory trips Spark's
     * hidden-path filter, which logs "All paths were ignored" on every
     * read even though the read goes ahead. Same rows either way. */
-  private[sources] def readSidecar(spark: SparkSession, dir: String,
+  private[graft] def readSidecar(spark: SparkSession, dir: String,
       name: String): DataFrame = {
     val side = new Path(dir, name)
     val files = fs(spark, side).listStatus(side).toSeq.map(_.getPath)

@@ -293,6 +293,19 @@ object Versioned {
   private[sources] def delPaths(ents: Seq[ManifestEntry]): Seq[String] =
     ents.filter(_.tombstone).map(_.path)
 
+  /** Every deletion-vector directory holds exactly these two columns
+    * (the `_metadata` identity pair [[deleteWhereMor]] and
+    * [[updateWhereMor]] stage). */
+  private val DvSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "file_path STRING, row_index BIGINT")
+
+  /** Deletion-vector directories read with their fixed schema: a bare
+    * `spark.read.parquet` launches a schema-inference job per call to
+    * re-derive what the protocol already fixes. */
+  private[sources] def readDv(spark: SparkSession,
+      paths: Seq[String]): DataFrame =
+    spark.read.schema(DvSchema).parquet(paths: _*)
+
   /** Subtract the snapshot's deletion vectors from a RAW parquet read of
     * its data directories (`df` must come straight from `spark.read` so
     * the `_metadata` virtual columns resolve). Tombstones are
@@ -310,7 +323,7 @@ object Versioned {
         col("_metadata.row_index").as("__ri"))
       else df
     } else {
-      val dv = spark.read.parquet(dels: _*)
+      val dv = readDv(spark, dels)
         .select(col("file_path").as("__fp"), col("row_index").as("__ri"))
       val w = df.select(col("*"),
           col("_metadata.file_path").as("__fp"),
@@ -632,7 +645,7 @@ object Versioned {
           // that never matched would make every raced vector look
           // disjoint and COMPOSE a real conflict (lost deletes).
           val rp = readPaths.map(normPath)
-          raced.isEmpty || spark.read.parquet(raced: _*)
+          raced.isEmpty || readDv(spark, raced)
             .select("file_path").distinct().collect()
             .forall { r =>
               val parent =
@@ -751,7 +764,10 @@ object Versioned {
     }
     if (statsCols.nonEmpty)
       Layout.writeZoneMap(spark, dataDir.toString, statsCols)
-    if (bloomCols.nonEmpty && !isDirEmpty(spark, dataDir.toString)) {
+    // a zero-row stage has no files to bloom-index; the footers the
+    // write just produced answer that without a job
+    if (bloomCols.nonEmpty &&
+        stagedRowCount(spark, dataDir.toString, atLeast = 1L) > 0L) {
       // sizing: explicit session confs win; otherwise AUTO-SIZE from
       // the just-written files' footer row counts against a 3% target
       // fpp — a 2k-row staging batch must not pay (or mis-trust) a
@@ -831,11 +847,6 @@ object Versioned {
           "dropConstraint first)")
     }
   }
-
-  /** A staged dir with zero data rows (an empty batch) has no files to
-    * bloom-index — the sidecar build would have nothing to group on. */
-  private def isDirEmpty(spark: SparkSession, dir: String): Boolean =
-    spark.read.parquet(dir).isEmpty
 
   /** Exact row count of a staged dir from its parquet FOOTERS — a
     * driver-side metadata loop, no Spark job. The cheap post-write
@@ -1258,6 +1269,12 @@ object Versioned {
     * Schema evolution is aligned to the union schema (absent columns
     * read as null on both sides — the same reconciliation reads use).
     *
+    * Deletion-vector deltas on common directories are located by one
+    * pre-pass job (which files gained or lost tombstones). It runs only
+    * when the two snapshots share a directory and either carries a
+    * vector; a window holding a compaction or a rewrite of every
+    * directory shares none and skips it.
+    *
     * Both versions must still be retained ([[vacuum]] horizon); the
     * call fails loudly otherwise. */
   def changes(spark: SparkSession, basePath: String,
@@ -1301,7 +1318,7 @@ object Versioned {
         spark.emptyDataFrame
           .withColumn("__fp", lit(null).cast("string"))
           .withColumn("__ri", lit(null).cast("long"))
-      else spark.read.parquet(paths: _*)
+      else readDv(spark, paths)
         .select(col("file_path").as("__fp"), col("row_index").as("__ri"))
     // positions newly tombstoned (deletes in common dirs) and positions
     // un-tombstoned (a rollback resurrecting rows — inserts)
@@ -1312,9 +1329,13 @@ object Versioned {
     // full exceptAll runs + collects): per-position multiset counts on
     // each side, full-outer joined — a file is del-touched when some
     // position gained tombstones, ins-touched when some position lost
-    // them. KB-scale output (file names), driver-collected once.
+    // them. KB-scale output (file names), driver-collected once. With no
+    // directory common to both snapshots (a window holding a compaction
+    // or a copy-on-write rewrite of every dir) `rowsAt` keeps no file,
+    // so the collect cannot matter and does not run.
     val (delFiles, insFiles): (Seq[String], Seq[String]) =
-      if (dvFrom.isEmpty && dvTo.isEmpty) (Seq.empty, Seq.empty)
+      if (common.isEmpty || (dvFrom.isEmpty && dvTo.isEmpty))
+        (Seq.empty, Seq.empty)
       else {
         import org.apache.spark.sql.functions.{coalesce, count, max, when}
         val f = dv(dvFrom).groupBy("__fp", "__ri")
@@ -1391,7 +1412,7 @@ object Versioned {
           else {
             val tag = Seq((dvTo, 1L), (dvFrom, -1L)).flatMap {
               case (paths, s) if paths.nonEmpty =>
-                Some(spark.read.parquet(paths: _*)
+                Some(readDv(spark, paths)
                   .select(col("file_path").as(cFp),
                     col("row_index").as(cRi), lit(s).as(cSg)))
               case _ => None
@@ -1917,15 +1938,25 @@ object Versioned {
   def mergeInto(spark: SparkSession, basePath: String, source: DataFrame,
       keys: Seq[String], updateCols: Seq[String],
       partitionCol: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit, when}
+    import org.apache.spark.sql.functions.{col, count, lit, when,
+      max => fmax, min => fmin}
     require(keys.nonEmpty, "mergeInto needs at least one key column")
     require(updateCols.nonEmpty,
       "mergeInto needs at least one update column (pure-insert = append)")
     require(!updateCols.exists(keys.contains),
       "mergeInto cannot update a match key (standard MERGE restriction)")
-    val dup = source.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(1).count()
-    require(dup == 0,
+    // ONE aggregate over the source answers both the uniqueness check
+    // and the numeric keys' envelope: per-key counts, then their max
+    // plus each numeric key's min/max (a min/max over the distinct keys
+    // equals one over the rows)
+    val keyCounts = source.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("__n"))
+    val numericKeys = keyCounts.schema.fields.init.filter(_.dataType
+      .isInstanceOf[org.apache.spark.sql.types.NumericType]).map(_.name).toSeq
+    val pre = keyCounts.agg(fmax(col("__n")), numericKeys.flatMap(k =>
+      Seq(fmin(col(k).cast("double")), fmax(col(k).cast("double")))): _*)
+      .head()
+    require(pre.isNullAt(0) || pre.getLong(0) <= 1L,
       s"mergeInto source is not unique on ${keys.mkString(",")} — a " +
         "duplicate source key would multiply target rows")
     val head = headVersion(spark, basePath)
@@ -1937,22 +1968,12 @@ object Versioned {
     // and dirs whose zone-map sidecars exclude the source keys' numeric
     // envelope are skipped before the scan plans them.
     val srcKeys = source.select(keys.map(col): _*).distinct()
-    val keyRanges: Seq[(String, Double, Double)] = {
-      import org.apache.spark.sql.functions.{max => fmax, min => fmin}
-      val numericKeys = srcKeys.schema.fields.filter(_.dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType]).map(_.name)
-      if (numericKeys.isEmpty) Seq.empty
-      else {
-        val aggs = numericKeys.toSeq.flatMap(k =>
-          Seq(fmin(col(k).cast("double")), fmax(col(k).cast("double"))))
-        val row = srcKeys.agg(aggs.head, aggs.tail: _*).head()
-        numericKeys.toSeq.zipWithIndex.flatMap { case (k, i) =>
-          if (row.isNullAt(2 * i) || row.isNullAt(2 * i + 1)) None
-          else Some((k, Math.nextDown(row.getDouble(2 * i)),
-            Math.nextUp(row.getDouble(2 * i + 1))))
-        }
+    val keyRanges: Seq[(String, Double, Double)] =
+      numericKeys.zipWithIndex.flatMap { case (k, i) =>
+        if (pre.isNullAt(1 + 2 * i) || pre.isNullAt(2 + 2 * i)) None
+        else Some((k, Math.nextDown(pre.getDouble(1 + 2 * i)),
+          Math.nextUp(pre.getDouble(2 + 2 * i))))
       }
-    }
     val candidates = zoneSurvivors(spark, dataEntries(ents),
       PredicateRanges.numericEnvelope(keyRanges))
     import org.apache.spark.sql.functions.regexp_replace

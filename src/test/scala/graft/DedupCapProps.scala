@@ -40,6 +40,12 @@ object DedupCapProps extends Properties("graft.dedupcap") {
     (0 to toks.length - 3).map(i => toks.slice(i, i + 3).mkString(" ")).toSet
   }
 
+  /** The engine emits `round(jaccard, 6)`: Spark rounds a double HALF_UP
+    * through its decimal string, so the reference does too (an unrounded
+    * 2/3 differs from the emitted 0.666667 by 3.3e-7). */
+  private def roundedScore(j: Double): Double =
+    BigDecimal(j).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
   private def collectPairs(df: org.apache.spark.sql.DataFrame)
       : Map[(Long, Long), Double] =
     df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
@@ -61,7 +67,7 @@ object DedupCapProps extends Properties("graft.dedupcap") {
         inter = sh(a).intersect(sh(b)).size
         j = inter.toDouble / (sh(a).size + sh(b).size - inter)
         if j >= 0.5
-      } yield (a, b) -> j).toMap
+      } yield (a, b) -> roundedScore(j)).toMap
       val cappedRef = exactRef.filter { case ((a, b), _) =>
         sh(a).intersect(sh(b)).exists(!hot.contains(_))
       }

@@ -1723,30 +1723,14 @@ class ExtSpec extends SparkSpec {
   test("knnJoinLsh auto bits on a 10k isotropic corpus: construction runs only the count") {
     val vecs = Crossover.isotropicEmbeddings(spark, 10000L)
       .localCheckpoint(true)
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def jobsOf(body: => Unit): Int = {
-      org.apache.spark.TestBus.drain(sc)
-      jobs.set(0)
-      body
-      org.apache.spark.TestBus.drain(sc)
-      jobs.get
-    }
-    sc.addSparkListener(listener)
     try {
-      val countJobs = jobsOf(vecs.count())
-      val buildJobs = jobsOf(Similarity.knnJoinLsh(vecs, k = 3))
+      val countJobs = jobsDuring(vecs.count())._2
+      val buildJobs = jobsDuring(Similarity.knnJoinLsh(vecs, k = 3))._2
       info(s"count: $countJobs job(s); knnJoinLsh construction: $buildJobs")
       assert(countJobs >= 1)
       assert(buildJobs === countJobs,
         s"building knnJoinLsh ran $buildJobs jobs; one count runs $countJobs")
     } finally {
-      sc.removeSparkListener(listener)
       Similarity.sweepAnnCaches()
       vecs.unpersist()
     }

@@ -166,7 +166,7 @@ class LayoutSpec extends SparkSpec {
     assert(fullD > 0, "test slice unexpectedly empty")
     assert(keptD === fullD, "decimal zone map lost matching rows")
     // and the bounds really are in VALUE space, not unscaled-int space
-    val zm = spark.read.parquet(s"$ddir/_graft_zonemap")
+    val zm = Layout.readSidecar(spark, ddir, "_graft_zonemap")
     val gmin = zm.agg(min(col("price_dec_min"))).head().getDouble(0)
     val trueMin = dec.agg(min(col("price_dec"))).head()
       .getDecimal(0).doubleValue()
@@ -286,7 +286,7 @@ class LayoutSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_zm_wide").toString + "/data"
     Seq(x).toDF("big").write.mode("overwrite").parquet(dir)
     Layout.writeZoneMap(spark, dir, Seq("big"))
-    val zm = spark.read.parquet(s"$dir/_graft_zonemap")
+    val zm = Layout.readSidecar(spark, dir, "_graft_zonemap")
       .select("big_min", "big_max").head()
     val (lo, hi) = (zm.getDouble(0), zm.getDouble(1))
     val exact = new java.math.BigDecimal(x)
@@ -313,7 +313,7 @@ class LayoutSpec extends SparkSpec {
       spark.conf.set(itemsKey, "1000")
       spark.conf.set(bitsKey, "4096")
       Layout.writeBloomSidecar(spark, dir, Seq("k")) // auto-size → 5000 rows
-      val meta = spark.read.parquet(s"$dir/_graft_bloom")
+      val meta = Layout.readSidecar(spark, dir, "_graft_bloom")
         .select("bloom_items", "bloom_bits", "bloom_fpp").head()
       assert(meta.getLong(0) === 1000L,
         s"items must record the clamp, got ${meta.getLong(0)}")

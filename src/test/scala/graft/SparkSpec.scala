@@ -12,6 +12,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def explain(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+
+  /** `body`'s result and the Spark jobs it launched. The listener bus is
+    * drained on both sides, so the count is complete and holds no job
+    * from earlier actions. */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      org.apache.spark.TestBus.drain(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

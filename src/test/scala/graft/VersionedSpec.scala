@@ -1355,6 +1355,35 @@ class VersionedSpec extends SparkSpec {
       s"one merged row expected, got ${rows.toSeq}")
   }
 
+  // a stored group whose tag equals a touched group's tag while its value
+  // differs sits only in the untouched remainder: the remainder must be
+  // re-staged, not skipped as empty
+  test("upsertRollup: distinct keys sharing a partition tag both survive") {
+    import spark.implicits._
+    import graft.sources.Incremental
+    def check(batches: Seq[org.apache.spark.sql.DataFrame]): Unit = {
+      val base = freshBase()
+      batches.zipWithIndex.foreach { case (b, i) =>
+        Incremental.upsertRollup(spark, base, b, s"b$i",
+          partitionKey = "k", subKeys = Seq("sub"), measures = Seq("cnt"))
+      }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.groupBy("k", "sub").agg(sum("cnt").as("cnt"))
+          .select(to_json(struct(col("k"))), col("sub"), col("cnt"))
+          .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+          .toSeq.sortBy(_._1)
+      assert(rows(Versioned.read(spark, base)) === rows(batches.reduce(_ unionByName _)))
+    }
+    // both struct keys print [a,b,c]
+    check(Seq(
+      Seq((("a,b", "c"), "g", 1L)).toDF("k", "sub", "cnt"),
+      Seq((("a", "b,c"), "g", 2L)).toDF("k", "sub", "cnt")))
+    // a string that spells the null sentinel shares null's tag
+    check(Seq(
+      Seq((Option("\u0000null"), "g", 1L)).toDF("k", "sub", "cnt"),
+      Seq((Option.empty[String], "g", 2L)).toDF("k", "sub", "cnt")))
+  }
+
   test("vacuumDryRun plans exactly what vacuum then deletes, touching nothing") {
     import spark.implicits._
     val base = freshBase()
@@ -1510,5 +1539,111 @@ class VersionedSpec extends SparkSpec {
     val dst3 = freshBase()
     Versioned.cloneTable(spark, src, dst3, validate = true)
     assert(Versioned.read(spark, dst3).count() === 0L)
+  }
+
+  /** The parquet directories under `base` that `body` wrote, staged
+    * dirs deleted again included. */
+  private def dirsWrittenDuring(base: String)(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.datasources
+      .InsertIntoHadoopFsRelationCommand
+    val out = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        qe.analyzed.foreach {
+          case c: InsertIntoHadoopFsRelationCommand
+              if c.outputPath.toUri.getPath.startsWith(base + "/") =>
+            out.add(c.outputPath.getName)
+          case _ => ()
+        }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestBus.drain(sc)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.TestBus.drain(sc)
+    } finally spark.listenerManager.unregister(listener)
+    out.toArray(Array.empty[String]).toSeq
+  }
+
+  /** An orders-shaped frame: 1,500 keys over five priorities. */
+  private def ordersFixture(): org.apache.spark.sql.DataFrame =
+    spark.range(1, 1501).select(col("id").as("o_orderkey"),
+      concat(lit("p"), pmod(col("id") * 7, lit(5)).cast("string"))
+        .as("o_orderpriority"),
+      (pmod(col("id"), lit(997)) + 0.25).as("o_totalprice"))
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame,
+      cols: Seq[String]): Seq[org.apache.spark.sql.Row] =
+    df.select(cols.map(col): _*).orderBy(cols.map(col): _*).collect().toSeq
+
+  // deletion-vector dirs always hold (file_path string, row_index long):
+  // opening a snapshot reads them with that schema instead of launching a
+  // parquet schema-inference job per open
+  test("a snapshot with outstanding deletion vectors opens without a Spark job") {
+    val base = freshBase()
+    val ord = ordersFixture()
+    Versioned.commit(ord, base)
+    Versioned.deleteWhereMor(spark, base, pmod(col("o_orderkey"), lit(7)) === 0)
+    Versioned.deleteWhereMor(spark, base, pmod(col("o_orderkey"), lit(5)) === 0)
+    val head = Versioned.versions(spark, base).last
+    assert(Versioned.entries(spark, base, head).count(_.tombstone) === 2,
+      "fixture sanity: two outstanding deletion vectors")
+    val (df, jobs) = jobsDuring(Versioned.read(spark, base))
+    assert(jobs === 0, s"opening the snapshot launched $jobs job(s)")
+    val keep = pmod(col("o_orderkey"), lit(7)) =!= 0 &&
+      pmod(col("o_orderkey"), lit(5)) =!= 0
+    assert(sortedRows(df, ord.columns.toSeq) ===
+      sortedRows(ord.filter(keep), ord.columns.toSeq))
+  }
+
+  // a compaction rewrites every dir, so the window's two snapshots share
+  // none and no deletion-vector delta can land in a common file: the
+  // touched-file collect is skipped, and building the feed runs no job
+  test("changes across a compactLatest window runs no touched-file collect") {
+    val base = freshBase()
+    val ord = ordersFixture()
+    Versioned.commit(ord, base)
+    Versioned.deleteWhereMor(spark, base, pmod(col("o_orderkey"), lit(7)) === 0)
+    val v0 = Versioned.versions(spark, base).last
+    Versioned.deleteWhereMor(spark, base, pmod(col("o_orderkey"), lit(5)) === 0)
+    val toV = Versioned.compactLatest(spark, base, targetFiles = 2)
+    val (feed, jobs) = jobsDuring(Versioned.changes(spark, base, v0, toV))
+    assert(jobs === 0, s"building the change feed launched $jobs job(s)")
+    val cols = ord.columns.toSeq
+    assert(feed.filter(col("_change") === "insert").count() === 0L)
+    assert(sortedRows(feed.filter(col("_change") === "delete"), cols) ===
+      sortedRows(ord.filter(pmod(col("o_orderkey"), lit(5)) === 0 &&
+        pmod(col("o_orderkey"), lit(7)) =!= 0), cols))
+  }
+
+  // the rollup's dir is tagged with every priority; a window touching
+  // all five leaves no untouched remainder to re-stage, while a window
+  // touching one still re-stages the other four
+  test("syncRollup over a window touching every rollup partition stages no remainder") {
+    val src = freshBase(); val roll = freshBase()
+    val ord = ordersFixture()
+    Versioned.commit(ord, src)
+    syncOnce(src, roll) // bootstrap: one dir tagged with all five values
+    val every = pmod(col("o_orderkey"), lit(3)) === 0
+    assert(ord.filter(every).select("o_orderpriority").distinct().count()
+      === ord.select("o_orderpriority").distinct().count(),
+      "fixture sanity: the first window touches every priority")
+    Versioned.deleteWhereMor(spark, src, every)
+    val all = dirsWrittenDuring(roll)(syncOnce(src, roll))
+    assert(all.size === 1, s"staged ${all.mkString(", ")}: merged state only")
+    assert(readRollup(roll) === rollupOf(Versioned.read(spark, src)))
+
+    Versioned.deleteWhereMor(spark, src,
+      col("o_orderpriority") === "p1" &&
+        pmod(col("o_orderkey"), lit(3)) === 1)
+    val one = dirsWrittenDuring(roll)(syncOnce(src, roll))
+    assert(one.size === 2, s"staged ${one.mkString(", ")}: merged + remainder")
+    assert(readRollup(roll) === rollupOf(Versioned.read(spark, src)))
   }
 }

@@ -555,7 +555,7 @@ class ProtocolSpec extends SparkSpec {
         .repartitionByRange(2, col("id")),
       base, bloomCols = Seq("k"))
     val ents = Versioned.entries(spark, base, 1L)
-    val bloom = spark.read.parquet(ents.head.path + "/_graft_bloom")
+    val bloom = Layout.readSidecar(spark, ents.head.path, "_graft_bloom")
     val row = bloom.select("bloom_items", "bloom_bits", "bloom_fpp")
       .head()
     assert(row.getLong(0) <= 300L && row.getLong(0) >= 100L,

@@ -3,10 +3,12 @@
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 
-Reads each <verifyOutDir>/<name> parquet (written by graft.Verify), runs the
-matching oracle SQL from oracle_sql.json in DuckDB against the same parquet
-tables, sorts columns by name + rows, and compares values exactly
-(floats to 1e-12 relative). Mirrors what we know of the driver harness.
+For every query named in <verifyOutDir>/oracle_sql.json, reads the
+<verifyOutDir>/<name> parquet (written by graft.Verify), runs the oracle SQL
+in DuckDB against the same parquet tables, sorts columns by name + rows, and
+compares values exactly (floats to 1e-12 relative). A named query with no
+output counts as FAIL; an output directory with no oracle is reported
+rows-only. Mirrors what we know of the driver harness.
 """
 import json, sys, glob, os
 import duckdb
@@ -30,8 +32,9 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = n_noracle = 0
-    names = sorted(d for d in os.listdir(out_dir)
-                   if os.path.isdir(os.path.join(out_dir, d)))
+    dirs = {d for d in os.listdir(out_dir)
+            if os.path.isdir(os.path.join(out_dir, d))}
+    names = sorted(dirs | set(oracle))
     for name in names:
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
