@@ -19,7 +19,6 @@ import org.apache.spark.sql.functions._
   *    full-propagation loop would re-shuffle all 4.5M edges every round;
   *    diameters far beyond this want pointer-doubling instead).
   *
-  * Run with GRAFT_CC_DEBUG=1 to see per-round frontier sizes.
   * Expected components: 100,000 cliques + 1 chain + 1,000 singletons.
   */
 object StressGraph {

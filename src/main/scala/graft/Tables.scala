@@ -71,51 +71,6 @@ object Tables {
     spark.read.schema(inferredSchema(spark, path)).parquet(path)
   }
 
-  /** Per-(session, path) cache of each table's EXACT row count, read
-    * driver-side from the parquet footer(s) (r17, VERDICT r16 item 8):
-    * the size-switched entries (w5_rank, w6_ntile, w8_percent_rank,
-    * w9_range_frame) branched on `df.count()` — a full Spark job
-    * (~40-80 ms of fixed scheduler+scan cost) paid per invocation just
-    * to pick a plan shape. Footer `getRecordCount` is the same number
-    * (parquet footers carry exact row counts) with zero jobs. Same
-    * session scoping and immutability argument as [[inferredSchema]]
-    * above — this memoizes file METADATA, never rows or results. */
-  private val footerRowCounts = new java.util.WeakHashMap[SparkSession,
-    java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]]()
-
-  def tableRows(spark: SparkSession, dir: String, name: String): Long = {
-    val path = s"$dir/$name.parquet"
-    val per = footerRowCounts.synchronized {
-      var m = footerRowCounts.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-        footerRowCounts.put(spark, m)
-      }
-      m
-    }
-    val hit = per.get(path)
-    if (hit != null) hit.longValue()
-    else {
-      val conf = spark.sessionState.newHadoopConf()
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(conf)
-      // a table may be a single parquet file (the testdata shape) or a
-      // directory of part files; sum footer record counts either way
-      val files: Seq[org.apache.hadoop.fs.Path] =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).toSeq.map(_.getPath)
-            .filter(f => f.getName.endsWith(".parquet"))
-        else Seq(p)
-      val n = files.map { f =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-        try r.getRecordCount finally r.close()
-      }.sum
-      per.put(path, n)
-      n
-    }
-  }
-
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame  = table(s, d, "customer")

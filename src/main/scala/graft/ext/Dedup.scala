@@ -920,10 +920,7 @@ object Dedup {
     var labels = byDst.mapPartitions(
         _.map { case (v, _) => (v, v) }, preservesPartitioning = true)
       .reduceByKey(part, math.min(_: Long, _: Long)).cache()
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    var t0 = System.nanoTime()
     labels.foreach(_ => ()) // materialize edges + seeds in one job
-    if (dbg) System.err.println(f"[cc] seed+edges ${(System.nanoTime()-t0)/1e9}%.2f s")
     // Pregel-style active set: labels only ever DECREASE, so a new min can
     // only arrive through a neighbor whose label dropped last round. Each
     // round therefore sends messages only FROM the previous round's
@@ -934,7 +931,6 @@ object Dedup {
     var frontier = labels
     var prevCached: org.apache.spark.rdd.RDD[_] = labels
     var changed = 1L
-    var round = 0
     while (changed > 0) {
       val acc = sc.longAccumulator("cc_frontier")
       // THE round's only shuffle: frontier labels re-keyed by edge source.
@@ -953,9 +949,7 @@ object Dedup {
           if (nu < old) acc.add(1L)
           (old, nu)
         }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      t0 = System.nanoTime()
       joint.foreach(_ => ()) // one action per round; fills acc
-      if (dbg) System.err.println(f"[cc] round ${(System.nanoTime()-t0)/1e9}%.2f s frontier=${acc.value}")
       // Accumulator semantics: at-least-once on task retry, so `changed`
       // can only over-count — worst case one extra no-op round, never a
       // wrong answer; it cannot under-count and stop early.
@@ -974,7 +968,6 @@ object Dedup {
       frontier = joint.mapPartitions(_.flatMap { case (v, (old, nu)) =>
         if (nu < old) Some((v, nu)) else None
       }, preservesPartitioning = true)
-      round += 1
     }
     byDst.unpersist(blocking = false)
     // Labels are (Long, Long) pairs for edge-touched vertices only — tiny
@@ -1071,7 +1064,6 @@ object Dedup {
         (nbrs.iterator ++ Iterator(u)).filter(_ != mm).map(v => (v, mm))
       }
 
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
     var cur = dedupByKey(
       edges.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
         .rdd.map(r => (r.getLong(0), r.getLong(1)))
@@ -1079,9 +1071,7 @@ object Dedup {
         .map { case (a, b) => if (a > b) (a, b) else (b, a) })
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var converged = false
-    var round = 0
     while (!converged) {
-      val t0 = System.nanoTime()
       val next = dedupByKey(smallStar(largeStar(cur)))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // convergence = SET equality (star sets are fixpoints of both ops),
@@ -1093,12 +1083,8 @@ object Dedup {
       val grew = next.map(e => (e, 1)).union(cur.map(e => (e, -1)))
         .reduceByKey(_ + _).filter(_._2 != 0).count()
       converged = grew == 0L
-      if (dbg) System.err.println(
-        f"[cc-star] round $round ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          s"diff=$grew")
       cur.unpersist(blocking = true)
       cur = next
-      round += 1
     }
     // fixpoint = per-component stars (v, root): labels are the star edges
     // plus each root labeling itself

@@ -68,7 +68,7 @@ object Pipeline {
     * former formulation ranked the FULL aggregated vocabulary — millions
     * of rows at web scale — through one task; truncation to maxVocab only
     * happened afterwards). Same shard-offset decomposition as
-    * [[packSequences]] / `Windows.ntileExact`, with shards = exact
+    * [[packSequences]], with shards = exact
     * `(cnt, first-char)` groups, which are contiguous ranges of the
     * (cnt desc, token asc) sort order: per-group counts (bounded driver
     * state) prefix-sum on the driver into group bases, and the global

@@ -201,11 +201,11 @@ object Similarity {
     * of 8, from one count of `vectors` — the only Spark job plan
     * construction runs in auto mode (it doubles as the broadcast-bound
     * check below). Explicit bits skip that count, and the bound check
-    * runs a LIMIT-bounded count instead; explicit bits with the bound at
-    * -1 give a fully lazy frame. The formula keeps the pair stream
-    * ~linear in n and holds recall on clustered corpora; isotropic
-    * corpora past ~2k vectors should pass explicit, narrower bits (see
-    * [[resolveBits]]).
+    * runs a LIMIT-bounded count instead; explicit bits with
+    * `broadcastBound = -1` give a fully lazy frame. The formula keeps
+    * the pair stream ~linear in n and holds recall on clustered corpora;
+    * isotropic corpora past ~2k vectors should pass explicit, narrower
+    * bits (see [[resolveBits]]).
     *
     * Probe set: per table, the query's own bucket plus every 1-bit flip
     * (bits+1 probes of 2^bits).
@@ -214,38 +214,43 @@ object Similarity {
     * aggregate is `persist`ed, not checkpointed — recomputable lineage
     * (executor loss replays it) and no Spark job until an action —
     * and the rescue branch is unioned unconditionally (an empty
-    * short-query set makes it a zero-row union, not a driver probe). */
+    * short-query set makes it a zero-row union, not a driver probe).
+    *
+    * `broadcastBound` (bytes, default 1 GiB ≈ 4M × 64-dim rows; -1
+    * disables) caps the vector projection the re-joins broadcast; a
+    * corpus past it is refused before any scoring job runs. */
   def knnJoinLsh(vectors: DataFrame, k: Int = 3, tables: Int = 16,
-      bits: Int = -1, rescueCap: Int = 1024): DataFrame = {
+      bits: Int = -1, rescueCap: Int = 1024,
+      broadcastBound: Long = 1L << 30): DataFrame = {
     // ENFORCED BOUND (r14, VERDICT r13 #1): the two vector re-joins below
     // broadcast the full n × (4·dim + 8)-byte vector projection — the one
     // architectural memory bound in this operator. Past it the failure
     // mode used to be a raw executor OOM / 8 GB-broadcast error with no
     // hint of the remedy; now it is a loud contract error that routes the
-    // caller to the right tool. `spark.graft.ann.lsh.broadcastBound`
-    // (bytes, default 1 GiB ≈ 4M × 64-dim rows; -1 disables) is checked
-    // against the auto-bits count, or — when explicit bits kept the plan
-    // lazy — a LIMIT-bounded probe that scans at most bound/rowBytes + 1
-    // rows (the [[IvfIndex.train]] trainCap shape), so the guard never
-    // pays a full count it doesn't already have.
-    val bound = longConf(vectors.sparkSession,
-      "spark.graft.ann.lsh.broadcastBound", 1L << 30)
+    // caller to the right tool. `broadcastBound` is checked against the
+    // auto-bits count, or — when explicit bits kept the plan lazy — a
+    // LIMIT-bounded probe that scans at most bound/rowBytes + 1 rows (the
+    // [[IvfIndex.train]] trainCap shape), so the guard never pays a full
+    // count it doesn't already have.
+    require(broadcastBound > 0 || broadcastBound == -1,
+      "knnJoinLsh: broadcastBound must be positive (or -1 = disabled), " +
+        s"got $broadcastBound")
     val rowBytes = 4L * 64 + 8
-    def checkBound(n: Long): Unit = if (bound > 0) {
-      require(n <= bound / rowBytes,
+    def checkBound(n: Long): Unit = if (broadcastBound > 0) {
+      require(n <= broadcastBound / rowBytes,
         s"knnJoinLsh: corpus has >= $n rows; the exact-rerank banded shape " +
           s"broadcasts n x (4*dim+8) = ${n * rowBytes} bytes of vectors, over " +
-          s"spark.graft.ann.lsh.broadcastBound=$bound. Past this regime use " +
+          s"broadcastBound=$broadcastBound. Past this regime use " +
           "knnJoinIvf (vectors ride the cell join, no re-join) or the PQ " +
-          "family (rerank from ~12-byte codes), or raise the bound / set it " +
-          "to -1 if executors can hold the broadcast.")
+          "family (rerank from ~12-byte codes), or raise broadcastBound / " +
+          "pass -1 if executors can hold the broadcast.")
     }
     val nBits = resolveBits(bits,
       () => { val n = vectors.count(); checkBound(n); n },
       targetBucket = 8)
-    if (bits > 0 && bound > 0)
-      checkBound(vectors.limit(
-        math.min(bound / rowBytes + 1, Int.MaxValue.toLong).toInt).count())
+    if (bits > 0 && broadcastBound > 0)
+      checkBound(vectors.limit(math.min(broadcastBound / rowBytes + 1,
+        Int.MaxValue.toLong).toInt).count())
     val sigs = graft.functions.VectorFunctions.srpSignature(
       col("embedding"), bands = tables, bits = nBits, dim = 64, seed = 42)
     // posexplode the signature expression itself, not a `sigs` column:
@@ -481,8 +486,7 @@ object Similarity {
     * native expression carries the centroid matrix as a reference
     * object and keeps ranking bit-identical (cosine desc, cell id
     * desc), so cells can scale with sqrt(n) as the 100 TB story needs.
-    * The scan is flat, O(cells) per row; `spark.graft.ann.cellsBound`
-    * (see [[IvfIndex.train]]) caps cells. */
+    * The scan is flat, O(cells) per row; [[CellsBound]] caps cells. */
   private def probeCells(cents: Seq[(Int, Seq[Float])], probes: Int): Column =
     // clamp: Lloyd steps can collapse emptied cells below the requested
     // probe count (the legacy slice() tolerated that silently)
@@ -494,28 +498,37 @@ object Similarity {
   private def nearestCell(cents: Seq[(Int, Seq[Float])]): Column =
     element_at(probeCells(cents, 1), 1)
 
-  /** TRAINING-SET BOUND (the FAISS discipline) over an ALREADY-
-    * materialized `(vec_id, embedding)` frame: Lloyd steps need a
-    * representative sample, not the corpus — past
-    * `spark.graft.ann.trainCap` vectors the quantizer trains on the
-    * first-cap md5(vec_id)-order sample (one TakeOrdered pass; the same
-    * hash order that picks quantizer seeds, so seeds ⊂ training set),
-    * keeping training cost BOUNDED while assignment/encode still cover
-    * every vector. Below the cap the frame trains as-is — bit-identical
-    * at test SF. The over-cap probe counts at most cap+1 checkpointed
-    * rows (CollectLimit, never a full count). Shared by
-    * [[IvfIndex.train]] and [[IvfPqIndex.train]] — the composite
-    * derives ONE train set for both quantizers (r17). */
-  private def boundedTrainSet(candidates: DataFrame): DataFrame = {
+  /** TRAINING-SET BOUND (the FAISS discipline) over a `(vec_id,
+    * embedding)` frame: Lloyd steps need a representative sample, not
+    * the corpus — past `trainCap` vectors the quantizer trains on the
+    * first-cap md5(vec_id)-order sample (one TakeOrdered pass,
+    * checkpointed; the same hash order that picks quantizer seeds, so
+    * seeds ⊂ training set), keeping training cost BOUNDED while
+    * assignment/encode still cover every vector. Below the cap the frame
+    * itself is the train set — bit-identical at test SF — and the flag
+    * says so (true = the train set is the whole corpus). The over-cap
+    * probe counts at most cap+1 rows (CollectLimit, never a full count).
+    * The one train-set derivation of [[IvfIndex.train]], [[PqIndex.train]]
+    * and [[IvfPqIndex.train]] — the composite derives ONE train set for
+    * both quantizers (r17). */
+  private def boundedTrainSet(candidates: DataFrame,
+      trainCap: Int): (DataFrame, Boolean) = {
+    require(trainCap > 0, s"trainCap must be positive, got $trainCap")
     val spark = candidates.sparkSession
-    val trainCap = intConf(spark, "spark.graft.ann.trainCap", 65536)
-    if (candidates.limit(trainCap + 1).count() <= trainCap) candidates
-    else candidates
+    if (candidates.limit(trainCap + 1).count() <= trainCap) (candidates, true)
+    else (candidates
       .orderBy(md5(col("vec_id").cast("string")))
       .limit(trainCap)
       .repartition(spark.sparkContext.defaultParallelism)
-      .localCheckpoint(true)
+      .localCheckpoint(true), false)
   }
+
+  /** Largest IVF cell count [[IvfIndex.train]] accepts. Every row scans
+    * all `cells` centroids, so per-row assignment grows linearly in
+    * cells; under the cells≈sqrt(n) rule 4096 cells cover ~16M rows per
+    * index. Two-level routing is no remedy: it measured only a constant
+    * ~4× per-row saving past ~900 cells (CROSSOVER §4). */
+  private val CellsBound = 4096
 
   /** A trained IVF index: driver-resident centroids (FAISS-style) plus the
     * cell-assigned vector table — build ONCE, [[IvfIndex.search]] many
@@ -622,10 +635,11 @@ object Similarity {
       * measured recall IS the operating recall. `lloydIters` Lloyd
       * steps refine the sample (each fully distributed: assignment is
       * a codegen projection, recompute shuffles only cells × dim-double
-      * partials; at corpus scale train on a sampled frame, as FAISS
-      * does). */
+      * partials). Past `trainCap` vectors the Lloyd steps run on an
+      * md5(vec_id)-order sample of that size, as FAISS does, while
+      * assignment still covers every vector. */
     def train(candidates0: DataFrame, cells: Int = 16,
-        lloydIters: Int = 3): IvfIndex = {
+        lloydIters: Int = 3, trainCap: Int = 65536): IvfIndex = {
       // Materialize the (vec_id, embedding) projection ONCE: seed collect,
       // the Lloyd-step recompute, cell assignment, and (in the per-call
       // ivfTopK shape) the query-probe side otherwise each re-scan the
@@ -636,8 +650,8 @@ object Similarity {
       // residency pattern).
       val candidates = candidates0.select(col("vec_id"), col("embedding"))
         .localCheckpoint(true)
-      trainPrepared(candidates, boundedTrainSet(candidates), cells,
-        lloydIters)
+      trainPrepared(candidates, boundedTrainSet(candidates, trainCap)._1,
+        cells, lloydIters)
     }
 
     /** [[train]] over a PRE-materialized `(vec_id, embedding)` frame
@@ -649,24 +663,13 @@ object Similarity {
     private[Similarity] def trainPrepared(candidates: DataFrame,
         trainSet: DataFrame, cells: Int, lloydIters: Int): IvfIndex = {
       // ENFORCED CELLS BOUND (r15, VERDICT r14 #5 — the broadcast-bound
-      // discipline applied to assignment cost): every row scans all
-      // `cells` centroids, so per-row assignment grows linearly in cells.
-      // Under the cells≈sqrt(n) rule the default bound of 4096 covers
-      // ~16M rows per index — beyond that the caller opts in consciously
-      // (shard the corpus across indexes, or raise
-      // `spark.graft.ann.cellsBound` / set -1 after reading this).
-      // Two-level routing is no remedy: it measured only a constant ~4×
-      // per-row saving past ~900 cells (CROSSOVER §4).
-      val cellsBound = longConf(candidates.sparkSession,
-        "spark.graft.ann.cellsBound", 4096L)
-      require(cellsBound <= 0 || cells <= cellsBound,
-        s"IvfIndex.train: cells=$cells exceeds " +
-          s"spark.graft.ann.cellsBound=$cellsBound. Per-row assignment " +
+      // discipline applied to assignment cost): see [[CellsBound]]
+      require(cells <= CellsBound,
+        s"IvfIndex.train: cells=$cells exceeds the cells bound " +
+          s"$CellsBound. Per-row assignment " +
           "scans every cell, so its cost grows linearly in cells (a " +
           "two-level router saved only a constant ~4x past ~900 cells, " +
-          "CROSSOVER.md §4). Shard the corpus across indexes, or raise " +
-          "the bound (set -1 to disable) if the O(cells)-per-row cost is " +
-          "acceptable.")
+          "CROSSOVER.md §4). Shard the corpus across indexes.")
       def collectCentroids(df: DataFrame): Seq[(Int, Seq[Float])] =
         df.collect().toSeq.map(r => (r.getInt(0), r.getSeq[Float](1)))
 
@@ -840,31 +843,21 @@ object Similarity {
       * [[graft.functions.CentroidAggregator]] (≤ m×k tiny partials);
       * a code that captures no vectors keeps its previous centroid. The
       * k-means objective (total sub-quantization error) is monotone
-      * non-increasing per step — property-tested in ExtSpec. */
+      * non-increasing per step — property-tested in ExtSpec. Past
+      * `trainCap` vectors the Lloyd steps run on the same md5(vec_id)-order
+      * sample as [[IvfIndex.train]] while the encode covers every vector. */
     def train(candidates: DataFrame, m: Int = 8, pqCodes: Int = 32,
-        lloydIters: Int = 2): PqIndex = {
-      // bounded training set, same discipline (and same hash order) as
-      // [[IvfIndex.train]]: Lloyd refinement samples, encode covers all.
-      // The over-cap probe counts at most cap+1 rows (CollectLimit, not
-      // a full count), and BOTH branches land on a checkpointed frame so
-      // the seed collect + `lloydIters` Lloyd scans replay blocks, not
-      // the caller's upstream plan (which pqTopK passes raw).
-      val trainCap = intConf(candidates.sparkSession,
-        "spark.graft.ann.trainCap", 65536)
-      val proj = candidates.select(col("vec_id"), col("embedding"))
-      val overCap = proj.limit(trainCap + 1).count() > trainCap
-      val trainSet =
-        if (!overCap) proj.localCheckpoint(true)
-        else proj
-          .orderBy(md5(col("vec_id").cast("string")))
-          .limit(trainCap)
-          .repartition(candidates.sparkSession
-            .sparkContext.defaultParallelism)
-          .localCheckpoint(true)
+        lloydIters: Int = 2, trainCap: Int = 65536): PqIndex = {
+      // BOTH cap regimes land on a checkpointed train set, so the seed
+      // collect + `lloydIters` Lloyd scans replay blocks, not the
+      // caller's upstream plan (which pqTopK passes raw)
+      val (sample, whole) = boundedTrainSet(
+        candidates.select(col("vec_id"), col("embedding")), trainCap)
+      val trainSet = if (whole) sample.localCheckpoint(true) else sample
       // encode covers EVERY vector: below the cap the checkpointed
       // train set IS the corpus (reuse its blocks); above it the full
       // caller frame encodes in its one unavoidable pass
-      val encSrc = if (!overCap) trainSet else candidates
+      val encSrc = if (whole) trainSet else candidates
       trainPrepared(candidates, trainSet, encSrc, m, pqCodes, lloydIters)
     }
 
@@ -1114,13 +1107,14 @@ object Similarity {
       * actions (seed TakeOrdered + Lloyd collects), so they overlap on
       * two driver threads (guide §2.6): the composite trains in max(),
       * not sum(), of the two walls, and each thread's computation is
-      * unchanged. */
+      * unchanged. `trainCap` bounds the shared train set as in
+      * [[IvfIndex.train]]. */
     def train(candidates0: DataFrame, cells: Int = 16, probes: Int = -1,
-        m: Int = 8, pqCodes: Int = 16): IvfPqIndex = {
+        m: Int = 8, pqCodes: Int = 16, trainCap: Int = 65536): IvfPqIndex = {
       import graft.functions.VectorFunctions.{pqEncode, vecNorm}
       val candidates = candidates0.select(col("vec_id"), col("embedding"))
         .localCheckpoint(true)
-      val trainSet = boundedTrainSet(candidates)
+      val trainSet = boundedTrainSet(candidates, trainCap)._1
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       val (ivf, pq) =
         try {
@@ -1171,52 +1165,6 @@ object Similarity {
 
   private def emb(s: SparkSession, d: String): DataFrame =
     embeddings(s, d).repartition(s.sparkContext.defaultParallelism)
-
-  /** The complete list of `spark.graft.*` session confs the engine
-    * reads, with defaults — each one a caller or test sets: three ANN
-    * memory guards a test lowers to reach the guarded path, the
-    * bloom-sizing pair, and the window switch. The registered entries'
-    * operating points and recall-contract thresholds are literals at
-    * each entry.
-    *
-    *  - `spark.graft.ann.trainCap` = 65536: quantizer training-set bound
-    *    ([[boundedTrainSet]], [[PqIndex.train]]).
-    *  - `spark.graft.ann.cellsBound` = 4096 (-1 disables): largest IVF
-    *    cell count [[IvfIndex.train]] accepts.
-    *  - `spark.graft.ann.lsh.broadcastBound` = 1073741824 (1 GiB; -1
-    *    disables): [[knnJoinLsh]]'s vector re-join broadcast bound.
-    *  - `spark.graft.bloom.items` / `spark.graft.bloom.bits` (unset =
-    *    auto-size from footers): bloom-sidecar sizing, set in scope by
-    *    [[graft.sources.Versioned.withBloomSizing]].
-    *  - `spark.graft.window.decomposeRows`: the window-decomposition
-    *    switch of [[graft.queries.Windows]].
-    *
-    * The registered operating points were tuned in r11 after the
-    * hash-sample seeding fix: the old first-k seeding made the
-    * registered queries a subset of the quantizer seeds, so the r8–r10
-    * "sweep winners" (ivf probes=2, ivfpq probes=1/rerank=100) were
-    * artifacts of that correlation — honest (nonseed) recall at those
-    * points was 0.18–0.28. On the testdata's ISOTROPIC embeddings (no
-    * cluster structure to route by), quantizer-routed recall is
-    * coverage-bound, so the honest operating points probe most cells:
-    * ivf probes=10 (nonseed 0.84), pq rerank=200 (0.82), ivfpq
-    * probes=12/rerank=400 (0.88) — all measured seed≈nonseed. Clustered
-    * real corpora reach the same recall at far lower probes (the RECALL
-    * sweep grids chart the trade). Probes of -1 = auto, resolved as a
-    * FRACTION of cells ([[resolveProbes]]) so the operating point
-    * survives a different cells choice. */
-  private def intConf(s: SparkSession, key: String, dflt: Int): Int = {
-    val v = s.conf.get(key, dflt.toString).trim.toInt
-    require(v > 0, s"$key must be positive, got $v")
-    v
-  }
-
-  private def longConf(s: SparkSession, key: String, dflt: Long): Long = {
-    val v = s.conf.get(key, dflt.toString).trim.toLong
-    require(v > 0 || v == -1,
-      s"$key must be positive (or -1 = disabled), got $v")
-    v
-  }
 
   /** Intra-query persists registered by [[knnJoinLsh]]'s rescue path.
     * Dataset.persist pins the plan in the session CacheManager until an
@@ -1322,7 +1270,22 @@ object Similarity {
     * the actual top-k result frames. Consumed by the Recall harness and
     * the specs; since r15 the CATALOG entries of the same names wrap
     * these in the recall-contract check below, so the correctness gate
-    * hash-verifies the contract instead of recording a rows-only pass. */
+    * hash-verifies the contract instead of recording a rows-only pass.
+    *
+    * The operating points are literals here, tuned in r11 after the
+    * hash-sample seeding fix: the old first-k seeding made the
+    * registered queries a subset of the quantizer seeds, so the r8–r10
+    * "sweep winners" (ivf probes=2, ivfpq probes=1/rerank=100) were
+    * artifacts of that correlation — honest (nonseed) recall at those
+    * points was 0.18–0.28. On the testdata's ISOTROPIC embeddings (no
+    * cluster structure to route by), quantizer-routed recall is
+    * coverage-bound, so the honest operating points probe most cells:
+    * ivf probes=10 (nonseed 0.84), pq rerank=200 (0.82), ivfpq
+    * probes=12/rerank=400 (0.88) — all measured seed≈nonseed. Clustered
+    * real corpora reach the same recall at far lower probes (the RECALL
+    * sweep grids chart the trade). Probes of -1 = auto, resolved as a
+    * FRACTION of cells ([[resolveProbes]]) so the operating point
+    * survives a different cells choice. */
   private[graft] val rawAnn: Map[String, Q] = Map(
     // Multi-table SRP LSH ANN (8 tables × 6 bits, flip-1 multi-probe).
     "x_ann_lsh" -> ((s, d) =>

@@ -59,50 +59,16 @@ object Depth {
       .orderBy("l_returnflag")),
 
     // RANGE window frame: running sum of order totals within $1000 (100k
-    // cents) below the current order's price, per priority class —
-    // SIZE-SWITCHED (Windows.decomposeRows): below the threshold the
-    // textbook partitionBy(o_orderpriority) RANGE window runs; above it,
-    // the ghost-row overlap decomposition avoids routing the whole fact
-    // through 5 window tasks. Ghost-row form: with shard width = frame
-    // width (100k cents), any row's frame [p-100k, p] lies entirely in
-    // its own value-shard plus the one below, so each row is duplicated
-    // once into the NEXT shard (ghost) and the RANGE window runs
-    // partitioned by (priority, shard) over real+ghost rows — every true
-    // frame member is present exactly once (a row's ghost lives only one
-    // shard up), the value predicate trims the candidates to the exact
-    // frame, and ghosts are dropped after the window. 2× rows through
-    // priority×price-bucket partitions instead of the whole fact through
-    // 5 tasks; bit-equality with the textbook window pinned in PlanSpec
-    // in BOTH regimes (the DuckDB twin keeps the plain OVER RANGE form —
-    // two plans, one hash).
+    // cents) below the current order's price, per priority class.
     "w9_range_frame" -> ((s, d) => {
-      val priced = orders(s, d)
+      val w = Window.partitionBy(col("o_orderpriority"))
+        .orderBy(col("price_cents")).rangeBetween(-100000L, 0L)
+      orders(s, d)
         .withColumn("price_cents", cents(col("o_totalprice")))
-      // footer row count of orders == priced.count() (pure projection),
-      // with zero Spark jobs -- metadata branch probe (r17, item 8)
-      if (tableRows(s, d, "orders") <= Windows.decomposeRows(s)) {
-        val w = Window.partitionBy(col("o_orderpriority"))
-          .orderBy(col("price_cents")).rangeBetween(-100000L, 0L)
-        priced
-          .withColumn("near_sum", sum(col("price_cents")).over(w))
-          .select(col("o_orderkey"), col("o_orderpriority"),
-            col("price_cents"), col("near_sum"))
-          .orderBy("o_orderkey")
-      } else {
-        val sharded = priced
-          .withColumn("shard", floor(col("price_cents") / 100000L))
-        val doubled = sharded.withColumn("ghost", lit(0)).unionByName(
-          sharded.withColumn("shard", col("shard") + 1)
-            .withColumn("ghost", lit(1)))
-        val w = Window.partitionBy(col("o_orderpriority"), col("shard"))
-          .orderBy(col("price_cents")).rangeBetween(-100000L, 0L)
-        doubled
-          .withColumn("near_sum", sum(col("price_cents")).over(w))
-          .filter(col("ghost") === 0)
-          .select(col("o_orderkey"), col("o_orderpriority"),
-            col("price_cents"), col("near_sum"))
-          .orderBy("o_orderkey")
-      }
+        .withColumn("near_sum", sum(col("price_cents")).over(w))
+        .select(col("o_orderkey"), col("o_orderpriority"),
+          col("price_cents"), col("near_sum"))
+        .orderBy("o_orderkey")
     }),
 
     // SCD Type-2 interval build: each order is a "version" of its

@@ -12,122 +12,6 @@ import graft.Tables._
 object Windows {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Size-driven plan switch for the window decompositions (the
-    * [[graft.ext.TextAnalysis]] lmSide pattern, r7 verdict item 4): the
-    * shard-offset/ghost-row rewrites buy partition-width freedom at 100 TB
-    * but pay an offsets collect + an extra exchange that is pure overhead
-    * while the windowed input comfortably fits its window tasks. At or
-    * below this row count the TEXTBOOK window plan runs; above it, the
-    * decomposition. Both forms are pinned bit-identical (PlanSpec +
-    * WindowDecompProps + the unchanged DuckDB OVER twins), so the switch
-    * moves plans, never bytes. The signal is an exact count of the
-    * windowed input — on parquet a metadata-cheap job, and the honest
-    * signal (estimates lie exactly when skew makes the decomposition
-    * matter). Default 4M rows ≈ a few hundred MB through one window task
-    * — past that, serializing a partition through one task is the
-    * bottleneck the decompositions exist to break. */
-  private[queries] def decomposeRows(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.window.decomposeRows")
-      .map(_.toLong).getOrElse(4194304L)
-
-  /** Exact `ntile(n) OVER (ORDER BY c_acctbal, c_custkey)` over the
-    * customer table with NO partition-less window — the scale-safe twin of
-    * the textbook formulation, whose single global WindowExec serializes
-    * every row through one task (the one plan shape that cannot survive a
-    * 100× scale-up; flagged by the round-6 verdict).
-    *
-    * Same shard-offset decomposition as [[graft.ext.Pipeline.packSequences]]:
-    * the global rank is split into a PARTITIONED within-shard row_number
-    * plus a per-shard base offset, where shards are contiguous ranges of
-    * the sort key (fixed-width `floor(c_acctbal / shardWidth)` buckets —
-    * every row of shard k orders before every row of shard k+1, and the
-    * (c_acctbal, c_custkey) tiebreak only ever compares rows INSIDE a
-    * shard, so base + within-shard rank IS the global rank, exactly).
-    *   1. per-shard counts — one tiny aggregate, one row per shard —
-    *      collect and prefix-sum on the driver (bounded driver state:
-    *      #shards rows, the [[graft.ext.Similarity.IvfIndex]] /
-    *      packSequences driver-resident-small-state pattern);
-    *   2. offsets broadcast-join back; rank = base + row_number over a
-    *      window PARTITIONED by shard — parallel across shards;
-    *   3. the tile comes from SQL-standard ntile arithmetic over (rank,
-    *      total): with q = total / n and r = total % n, the first r tiles
-    *      hold q+1 rows — integer math, so the result is byte-identical
-    *      to the ntile window and the DuckDB ntile oracle binds unchanged.
-    * Fixed-width shards are right for c_acctbal's known uniform domain; at
-    * 100 TB with an unknown distribution the shard bounds come from a
-    * sample (exactly Spark's RangePartitioner), which changes none of the
-    * arithmetic. Skewed shards degrade parallelism, never correctness. */
-  private[queries] def ntileExact(s: SparkSession, cust: DataFrame, n: Int,
-      shardWidth: Int = 500): DataFrame = {
-    import s.implicits._
-    val sharded = cust.select(col("c_custkey"), col("c_acctbal"),
-      floor(col("c_acctbal") / shardWidth).cast("long").as("shard"))
-    val counts = sharded.groupBy(col("shard"))
-      .agg(count(lit(1)).as("cnt")).orderBy("shard").collect()
-    var acc = 0L
-    val offsets = counts.map { r =>
-      val o = (r.getLong(0), acc); acc += r.getLong(1); o
-    }.toSeq
-    val total = acc
-    val q = total / n
-    val r = total % n
-    val w = Window.partitionBy(col("shard"))
-      .orderBy(col("c_acctbal"), col("c_custkey"))
-    sharded
-      .join(broadcast(offsets.toDF("shard", "shard_base")), "shard")
-      .withColumn("rn", col("shard_base") + row_number().over(w))
-      // first r tiles take q+1 rows, the rest q (ntile's exact split);
-      // the q=0 degenerate (total < n) routes every row through the
-      // first branch, so the otherwise-division by q never evaluates
-      .withColumn("bal_quartile",
-        when(col("rn") <= lit(r * (q + 1)),
-          floor((col("rn") - 1) / lit(q + 1)) + 1)
-          .otherwise(floor((col("rn") - lit(r * (q + 1)) - 1) / lit(q))
-            + lit(r) + 1)
-          .cast("int"))
-      .select(col("c_custkey"), col("bal_quartile"))
-      .orderBy("c_custkey")
-  }
-
-  /** Per-(nation, shard) offsets for the ranked-customer queries, with
-    * shards = fixed-width c_acctbal buckets INSIDE each nation — the
-    * [[ntileExact]] decomposition extended to ranking functions over a
-    * low-cardinality partition key (25 nations → 25 window tasks carry
-    * the full customer table in the textbook formulation). Tie groups
-    * (equal c_acctbal) land in one shard by construction (the shard is a
-    * function of the value), so per-shard rank/dense_rank/row_number
-    * compose exactly with the prefix-summed bases:
-    *   - base_rows  = rows in the nation's earlier shards (sort order);
-    *   - base_dense = DISTINCT c_acctbal values in earlier shards
-    *     (distinct values can't span shards either);
-    *   - n_nation   = the nation's row total (percent_rank/cume_dist
-    *     denominators).
-    * Bounded driver state: nations × buckets rows. Returns
-    * (nk, shard, base_rows, base_dense, n_nation) in `descending`
-    * (= c_acctbal desc) or ascending shard order. */
-  private def nationShardOffsets(sharded: DataFrame,
-      descending: Boolean): Seq[(Long, Long, Long, Long, Long)] = {
-    val groups = sharded
-      .groupBy(col("c_nationkey").as("nk"), col("shard"))
-      .agg(count(lit(1)).as("cnt"), countDistinct(col("c_acctbal")).as("dcnt"))
-      .collect()
-      .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue,
-        r.getLong(2), r.getLong(3)))
-    groups.groupBy(_._1).toSeq.flatMap { case (nk, gs) =>
-      val n = gs.map(_._3).sum
-      val ordered = if (descending) gs.sortBy(-_._2) else gs.sortBy(_._2)
-      var accR = 0L
-      var accD = 0L
-      ordered.map { case (_, sh, cnt, dcnt) =>
-        val o = (nk, sh, accR, accD, n); accR += cnt; accD += dcnt; o
-      }
-    }
-  }
-
-  private def shardedCustomer(cust: DataFrame): DataFrame =
-    cust.select(col("c_nationkey"), col("c_custkey"), col("c_acctbal"),
-      floor(col("c_acctbal") / 500).cast("long").as("shard"))
-
   val queries: Map[String, Q] = Map(
     // row_number: per-customer order sequence (IDENTITY-emulation shape, §7.4).
     "w1_row_number" -> ((s, d) => {
@@ -173,41 +57,14 @@ object Windows {
         .orderBy("o_custkey", "rn")
     }),
 
-    // rank vs dense_rank with real ties (customers ranked within nation)
-    // — SIZE-SWITCHED ([[decomposeRows]]): below the threshold the
-    // textbook partitionBy(nationkey) window runs (25 window tasks carry
-    // the input comfortably at bench SF); above it, [[nationShardOffsets]]
-    // partitions every window by (nation, value-shard) and the bases
-    // restore exact global-within-nation ranks, tie groups intact
-    // (bit-equality pinned in PlanSpec in BOTH regimes; the DuckDB twin
-    // keeps the plain OVER form — two plans, one hash).
+    // rank vs dense_rank with real ties (customers ranked within nation).
     "w5_rank" -> ((s, d) => {
-      import s.implicits._
-      val cust = customer(s, d)
-      // footer row count (Tables.tableRows): identical to cust.count() with
-      // zero Spark jobs -- the branch probe is metadata (r17, item 8)
-      if (tableRows(s, d, "customer") <= decomposeRows(s)) {
-        val w = Window.partitionBy(col("c_nationkey"))
-          .orderBy(col("c_acctbal").desc)
-        cust.select(col("c_nationkey"), col("c_custkey"),
-          rank().over(w).as("bal_rank"),
-          dense_rank().over(w).as("bal_dense_rank"))
-          .orderBy("c_nationkey", "c_custkey")
-      } else {
-        val sharded = shardedCustomer(cust)
-        val offs = nationShardOffsets(sharded, descending = true)
-          .toDF("nk", "shard_o", "base_rows", "base_dense", "n_nation")
-        val w = Window.partitionBy(col("c_nationkey"), col("shard"))
-          .orderBy(col("c_acctbal").desc)
-        sharded
-          .join(broadcast(offs),
-            col("c_nationkey") === col("nk") && col("shard") === col("shard_o"))
-          .select(col("c_nationkey"), col("c_custkey"),
-            (col("base_rows") + rank().over(w)).cast("int").as("bal_rank"),
-            (col("base_dense") + dense_rank().over(w)).cast("int")
-              .as("bal_dense_rank"))
-          .orderBy("c_nationkey", "c_custkey")
-      }
+      val w = Window.partitionBy(col("c_nationkey"))
+        .orderBy(col("c_acctbal").desc)
+      customer(s, d).select(col("c_nationkey"), col("c_custkey"),
+        rank().over(w).as("bal_rank"),
+        dense_rank().over(w).as("bal_dense_rank"))
+        .orderBy("c_nationkey", "c_custkey")
     }),
 
     // lead + first/last value over an explicit full-partition frame.
@@ -223,41 +80,14 @@ object Windows {
         .orderBy("o_custkey", "o_orderkey")
     }),
 
-    // percent_rank / cume_dist (deterministic: rank arithmetic over ints)
-    // — SIZE-SWITCHED like w5. In the decomposed regime the (c_acctbal,
-    // c_custkey) ordering is UNIQUE, so percent_rank = (rn-1)/(N-1) and
-    // cume_dist = rn/N with rn = base + within-shard row_number: the
-    // identical long-over-long IEEE divisions the built-ins (and DuckDB)
-    // evaluate, hence bit-stable across both plans and both engines.
+    // percent_rank / cume_dist (deterministic: rank arithmetic over ints).
     "w8_percent_rank" -> ((s, d) => {
-      import s.implicits._
-      val cust = customer(s, d)
-      // footer row count (Tables.tableRows): identical to cust.count() with
-      // zero Spark jobs -- the branch probe is metadata (r17, item 8)
-      if (tableRows(s, d, "customer") <= decomposeRows(s)) {
-        val w = Window.partitionBy(col("c_nationkey"))
-          .orderBy(col("c_acctbal"), col("c_custkey"))
-        cust.select(col("c_nationkey"), col("c_custkey"),
-          percent_rank().over(w).as("bal_pct_rank"),
-          cume_dist().over(w).as("bal_cume_dist"))
-          .orderBy("c_nationkey", "c_custkey")
-      } else {
-        val sharded = shardedCustomer(cust)
-        val offs = nationShardOffsets(sharded, descending = false)
-          .toDF("nk", "shard_o", "base_rows", "base_dense", "n_nation")
-        val w = Window.partitionBy(col("c_nationkey"), col("shard"))
-          .orderBy(col("c_acctbal"), col("c_custkey"))
-        sharded
-          .join(broadcast(offs),
-            col("c_nationkey") === col("nk") && col("shard") === col("shard_o"))
-          .withColumn("rn", col("base_rows") + row_number().over(w))
-          .select(col("c_nationkey"), col("c_custkey"),
-            when(col("n_nation") > 1,
-              (col("rn") - 1).cast("double") / (col("n_nation") - 1))
-              .otherwise(lit(0.0)).as("bal_pct_rank"),
-            (col("rn").cast("double") / col("n_nation")).as("bal_cume_dist"))
-          .orderBy("c_nationkey", "c_custkey")
-      }
+      val w = Window.partitionBy(col("c_nationkey"))
+        .orderBy(col("c_acctbal"), col("c_custkey"))
+      customer(s, d).select(col("c_nationkey"), col("c_custkey"),
+        percent_rank().over(w).as("bal_pct_rank"),
+        cume_dist().over(w).as("bal_cume_dist"))
+        .orderBy("c_nationkey", "c_custkey")
     }),
 
     // explicit NULLS FIRST/LAST ordering over an outer-join-produced null.
@@ -273,22 +103,15 @@ object Windows {
         .limit(50)
     }),
 
-    // ntile quartiles (unique ordering → deterministic tile assignment) —
-    // SIZE-SWITCHED: the textbook global-ORDER-BY ntile below the
-    // threshold (one window task is FINE for an input that fits it — the
-    // global-window PlanSpec gate allowlists exactly this switched entry),
-    // the [[ntileExact]] shard-offset decomposition above it.
-    "w6_ntile" -> ((s, d) => {
-      val cust = customer(s, d)
-      // footer row count (Tables.tableRows): identical to cust.count() with
-      // zero Spark jobs -- the branch probe is metadata (r17, item 8)
-      if (tableRows(s, d, "customer") <= decomposeRows(s))
-        cust.select(col("c_custkey"),
-          ntile(4).over(Window.orderBy(col("c_acctbal"), col("c_custkey")))
-            .as("bal_quartile"))
-          .orderBy("c_custkey")
-      else ntileExact(s, cust, 4)
-    }),
+    // ntile quartiles (unique ordering → deterministic tile assignment).
+    // A global-ORDER-BY window: its single window task carries the whole
+    // customer table, so the partition-less-window PlanSpec gate
+    // allowlists it by name.
+    "w6_ntile" -> ((s, d) => customer(s, d)
+      .select(col("c_custkey"),
+        ntile(4).over(Window.orderBy(col("c_acctbal"), col("c_custkey")))
+          .as("bal_quartile"))
+      .orderBy("c_custkey")),
 
     // ratio-to-report: each order's share of its priority class's total.
     // NOT a window: partitionBy(o_orderpriority) would route the whole

@@ -768,15 +768,13 @@ object Versioned {
     // write just produced answer that without a job
     if (bloomCols.nonEmpty &&
         stagedRowCount(spark, dataDir.toString, atLeast = 1L) > 0L) {
-      // sizing: explicit session confs win; otherwise AUTO-SIZE from
-      // the just-written files' footer row counts against a 3% target
-      // fpp — a 2k-row staging batch must not pay (or mis-trust) a
-      // 1M-item filter ([[Layout.writeBloomSidecar]] records what it
-      // chose in the sidecar meta)
-      val items = spark.conf.getOption("spark.graft.bloom.items")
-        .map(_.toLong).getOrElse(-1L)
-      val bits = spark.conf.getOption("spark.graft.bloom.bits")
-        .map(_.toLong).getOrElse(-1L)
+      // sizing: a [[withBloomSizing]] scope on this thread wins;
+      // otherwise AUTO-SIZE from the just-written files' footer row
+      // counts against a 3% target fpp — a 2k-row staging batch must
+      // not pay (or mis-trust) a 1M-item filter
+      // ([[Layout.writeBloomSidecar]] records what it chose in the
+      // sidecar meta)
+      val (items, bits) = bloomSizing.get.getOrElse((-1L, -1L))
       Layout.writeBloomSidecar(spark, dataDir.toString, bloomCols,
         expectedItems = items, numBits = bits, fpp = 0.03)
     }
@@ -1001,23 +999,26 @@ object Versioned {
     }
   }
 
-  /** Run `body` with the bloom-sidecar sizing confs
-    * (`spark.graft.bloom.items` / `.bits`) set, RESTORING the previous
-    * values after — a bare `conf.set` would leak a one-off sizing into
-    * every later bloom-staged commit of the session (undersized filters
-    * on production files ≈ 100% false positives ≈ pruning silently
-    * stops skipping). */
+  /** The bloom-sidecar sizing (expected items, bits) a
+    * [[withBloomSizing]] scope set on THIS thread; None = auto-size. A
+    * plain, non-inheritable ThreadLocal: only the scope's own thread
+    * stages with it, so a concurrent commit on another thread of the
+    * same session keeps its auto-size. */
+  private[graft] val bloomSizing =
+    ThreadLocal.withInitial[Option[(Long, Long)]](() => None)
+
+  /** Run `body` with an explicit bloom-sidecar sizing for every
+    * bloom-staged commit `body` makes on the calling thread, restoring
+    * the enclosing sizing after. The sizing never outlives the scope —
+    * a one-off sizing leaking into later commits would undersize their
+    * filters (≈ 100% false positives ≈ pruning silently stops
+    * skipping) — and never reaches other threads. */
   def withBloomSizing[A](spark: SparkSession, expectedItems: Long,
       numBits: Long)(body: => A): A = {
-    val keys = Seq("spark.graft.bloom.items" -> expectedItems,
-      "spark.graft.bloom.bits" -> numBits)
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v.toString) }
+    val prev = bloomSizing.get
+    bloomSizing.set(Some((expectedItems, numBits)))
     try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    finally bloomSizing.set(prev)
   }
 
   /** Commit `df` as the next version. `Overwrite` (default): the new

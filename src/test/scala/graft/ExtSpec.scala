@@ -1018,40 +1018,32 @@ class ExtSpec extends SparkSpec {
   // contract like the LSH broadcast bound — past the cells bound,
   // per-row assignment is only a constant ~4x better than flat (the S/4
   // fidelity floor, CROSSOVER §4), and training refuses rather than
-  // silently degrading; the conf raises it consciously.
-  test("ivf cells bound: train past spark.graft.ann.cellsBound fails loudly; conf raises it") {
+  // silently degrading.
+  test("ivf cells bound: train past 4096 cells fails loudly, naming the bound") {
     val emb = graft.Tables.embeddings(spark, sf)
-    val key = "spark.graft.ann.cellsBound"
-    try {
-      spark.conf.set(key, "32")
-      val e = intercept[IllegalArgumentException](
-        Similarity.IvfIndex.train(emb, cells = 48))
-      assert(e.getMessage.contains("cellsBound"), e.getMessage)
-      assert(e.getMessage.contains("constant ~4x"), e.getMessage)
-      spark.conf.set(key, "48")
-      assert(Similarity.IvfIndex.train(emb, cells = 48)
-        .centroids.nonEmpty)
-    } finally spark.conf.unset(key)
+    val e = intercept[IllegalArgumentException](
+      Similarity.IvfIndex.train(emb, cells = 4097))
+    assert(e.getMessage.contains("cells=4097"), e.getMessage)
+    assert(e.getMessage.contains("cells bound 4096"), e.getMessage)
+    assert(e.getMessage.contains("constant ~4x"), e.getMessage)
   }
 
   test("bounded quantizer training: a sub-corpus trainCap still yields a full index") {
-    // the 100 TB path: past spark.graft.ann.trainCap vectors the Lloyd
-    // steps train on the md5-order hash-sample while assignment/encode
-    // still cover every vector — force the sampled path with a tiny cap
+    // the 100 TB path: past `trainCap` vectors the Lloyd steps train on
+    // the md5-order hash-sample while assignment/encode still cover
+    // every vector — force the sampled path with a tiny cap
     val emb = graft.Tables.embeddings(spark, sf)
     assert(emb.count() > 64, "fixture must exceed the cap to exercise sampling")
-    spark.conf.set("spark.graft.ann.trainCap", "64")
-    try {
-      val ivf = Similarity.IvfIndex.train(emb)
-      assert(ivf.centroids.size >= 2, "sampled training still yields cells")
-      val out = Similarity.ivfpqTopK(emb, col("vec_id") < 10)
-      assert(out.groupBy("q_id").count().collect()
-        .forall(_.getLong(1) === 5L), "full top-5 per query off a sampled-train index")
-      // determinism: the sampled path is hash-ordered, not random
-      val again = Similarity.ivfpqTopK(emb, col("vec_id") < 10)
-        .collect().map(_.toSeq)
-      assert(out.collect().map(_.toSeq).toSeq === again.toSeq)
-    } finally spark.conf.unset("spark.graft.ann.trainCap")
+    val ivf = Similarity.IvfIndex.train(emb, trainCap = 64)
+    assert(ivf.centroids.size >= 2, "sampled training still yields cells")
+    def top5() = Similarity.IvfPqIndex.train(emb, trainCap = 64)
+      .searchWhere(col("vec_id") < 10)
+    val out = top5()
+    assert(out.groupBy("q_id").count().collect()
+      .forall(_.getLong(1) === 5L), "full top-5 per query off a sampled-train index")
+    // determinism: the sampled path is hash-ordered, not random
+    assert(out.collect().map(_.toSeq).toSeq ===
+      top5().collect().map(_.toSeq).toSeq)
   }
 
   test("centroid aggregator: mean of identical vectors is the vector") {
@@ -1672,29 +1664,23 @@ class ExtSpec extends SparkSpec {
   // the route-to-IVF/PQ message instead of OOMing an executor mid-job.
   test("lsh broadcast bound: over-bound corpus fails loudly with the routing message") {
     val vecs = rescueCorpus(1)   // 51 rows x (4*64+8)B = 13,464 B
-    val key = "spark.graft.ann.lsh.broadcastBound"
     try {
       // bound below the corpus footprint: plan construction must refuse,
       // both with explicit bits (limit-probe path) and auto (count path)
-      spark.conf.set(key, (50L * (4 * 64 + 8)).toString)
       Seq(16, -1).foreach { b =>
         val e = intercept[IllegalArgumentException](
-          Similarity.knnJoinLsh(vecs, k = 3, tables = 8, bits = b))
+          Similarity.knnJoinLsh(vecs, k = 3, tables = 8, bits = b,
+            broadcastBound = 50L * (4 * 64 + 8)))
         assert(e.getMessage.contains("knnJoinIvf"), e.getMessage)
         assert(e.getMessage.contains("broadcastBound"), e.getMessage)
       }
       // at exactly the corpus footprint the guard admits the plan
-      spark.conf.set(key, (51L * (4 * 64 + 8)).toString)
-      assert(Similarity.knnJoinLsh(vecs, k = 3, tables = 8, bits = 16)
-        .count() > 0)
+      assert(Similarity.knnJoinLsh(vecs, k = 3, tables = 8, bits = 16,
+        broadcastBound = 51L * (4 * 64 + 8)).count() > 0)
       // -1 disables the guard entirely
-      spark.conf.set(key, "-1")
-      assert(Similarity.knnJoinLsh(vecs, k = 3, tables = 8, bits = 16)
-        .count() > 0)
-    } finally {
-      spark.conf.unset(key)
-      Similarity.sweepAnnCaches()
-    }
+      assert(Similarity.knnJoinLsh(vecs, k = 3, tables = 8, bits = 16,
+        broadcastBound = -1).count() > 0)
+    } finally Similarity.sweepAnnCaches()
   }
 
   // Auto bits are ONE formula, clamp(round(log2(n / targetBucket)), 4, 24),

@@ -192,41 +192,26 @@ class PlanSpec extends SparkSpec {
     // the one plan shape that cannot survive a 100× scale-up. Allowlisted:
     // o1_multisort_ci's CI-rank window covers an input BOUNDED INDEPENDENT
     // OF CORPUS SIZE (s_suppkey < 100 → at most 100 rows at ANY scale
-    // factor), and w6_ntile is SIZE-SWITCHED (r8): below
-    // spark.graft.window.decomposeRows it deliberately runs the textbook
-    // global ntile — one window task is right for an input that fits it —
-    // and above the threshold it decomposes (asserted below by forcing the
-    // threshold to 0: the global window must vanish). x_text_vocab
-    // (vocab-sized) left this list for good in round 7
-    // (Pipeline.buildVocab — partitioned windows only, no switch).
-    def globalWindowed(): Set[String] =
-      SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, build) =>
-          val hasGlobal = build(spark, sf).queryExecution.optimizedPlan.collect {
-            case w: org.apache.spark.sql.catalyst.plans.logical.Window
-                if w.partitionSpec.isEmpty => w
-          }.nonEmpty
-          if (hasGlobal) Some(name) else None
-      }.toSet
+    // factor), and w6_ntile runs the textbook global ntile over the
+    // customer table. x_text_vocab (vocab-sized) left this list for good
+    // in round 7 (Pipeline.buildVocab — partitioned windows only).
+    val global = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, build) =>
+        val hasGlobal = build(spark, sf).queryExecution.optimizedPlan.collect {
+          case w: org.apache.spark.sql.catalyst.plans.logical.Window
+              if w.partitionSpec.isEmpty => w
+        }.nonEmpty
+        if (hasGlobal) Some(name) else None
+    }.toSet
     val allowed = Set("o1_multisort_ci", "w6_ntile")
-    val global = globalWindowed()
     assert((global -- allowed).isEmpty,
       s"partition-less windows appeared in: ${global -- allowed}")
     // a stale allowlist is a bug too: every listed query must still plan one
     assert((allowed -- global).isEmpty,
       s"allowlisted but no longer global: ${allowed -- global}")
-    // above the size threshold NOTHING but the key-bounded entry may plan
-    // a global window — the decomposed regime of every switched query
-    val key = "spark.graft.window.decomposeRows"
-    try {
-      spark.conf.set(key, "0")
-      val decomposed = globalWindowed()
-      assert(decomposed === Set("o1_multisort_ci"),
-        s"decomposed regime planned global windows in: $decomposed")
-    } finally spark.conf.unset(key)
   }
 
-  test("w6_ntile: textbook plan below the size threshold; decomposition above, bit-identical") {
+  test("w6_ntile: the textbook global ntile plan, bit-identical to the window") {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     // the textbook (partition-less) formulation as the in-suite oracle
@@ -234,32 +219,16 @@ class PlanSpec extends SparkSpec {
       .select(col("c_custkey"), ntile(4).over(
         Window.orderBy(col("c_acctbal"), col("c_custkey"))).as("bal_quartile"))
       .orderBy("c_custkey").collect()
-    // BELOW the threshold (default: test SF is far under 4M rows) the
-    // registered query IS the textbook plan: global ntile window, no
-    // shard join anywhere
-    val below = q("w6_ntile")
-    assert(below.collect() === expected)
-    val pBelow = explain(below)
-    assert(!pBelow.contains("Join"), pBelow)
-    assert(pBelow.contains("ntile"), pBelow)
-    // ABOVE the threshold (forced via conf=0) the decomposition must
-    // reproduce it exactly while planning only PARTITIONED windows
-    val key = "spark.graft.window.decomposeRows"
-    try {
-      spark.conf.set(key, "0")
-      val above = q("w6_ntile")
-      assert(above.collect() === expected)
-      val p = explain(above)
-      assert(p.contains("BroadcastHashJoin"), p) // shard offsets broadcast back
-      assert(!p.contains("SortMergeJoin"), p)
-      assert(above.queryExecution.optimizedPlan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window
-            if w.partitionSpec.isEmpty => w
-      }.isEmpty, p)
-    } finally spark.conf.unset(key)
+    // the registered query IS the textbook plan: global ntile window,
+    // no shard join anywhere
+    val df = q("w6_ntile")
+    assert(df.collect() === expected)
+    val p = explain(df)
+    assert(!p.contains("Join"), p)
+    assert(p.contains("ntile"), p)
   }
 
-  test("w5/w8: textbook windows below the size threshold; shard-offset decompositions above, bit for bit") {
+  test("w5/w8: textbook nation-partitioned windows, bit for bit, no join") {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     val cust = graft.Tables.customer(spark, sf)
@@ -273,27 +242,15 @@ class PlanSpec extends SparkSpec {
       percent_rank().over(w8w).as("bal_pct_rank"),
       cume_dist().over(w8w).as("bal_cume_dist"))
       .orderBy("c_nationkey", "c_custkey").collect()
-    // below threshold: textbook nation-partitioned windows, no shard join
+    // textbook nation-partitioned windows, no shard join
     Seq("w5_rank" -> exp5, "w8_percent_rank" -> exp8).foreach { case (n, exp) =>
       val df = q(n)
       assert(df.collect() === exp, n)
-      assert(!explain(df).contains("Join"), s"$n planned a join below threshold")
+      assert(!explain(df).contains("Join"), s"$n planned a join")
     }
-    // above threshold (conf=0): decomposed plans, same bytes
-    val key = "spark.graft.window.decomposeRows"
-    try {
-      spark.conf.set(key, "0")
-      Seq("w5_rank" -> exp5, "w8_percent_rank" -> exp8).foreach { case (n, exp) =>
-        val df = q(n)
-        assert(df.collect() === exp, s"$n decomposed regime diverged")
-        val p = explain(df)
-        assert(p.contains("BroadcastHashJoin"), s"$n lost the offsets broadcast:\n$p")
-        assert(!p.contains("SortMergeJoin"), p)
-      }
-    } finally spark.conf.unset(key)
   }
 
-  test("w9: textbook RANGE window below the size threshold; ghost-row decomposition above, bit for bit") {
+  test("w9: textbook RANGE window, bit for bit, no ghost-row union") {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     val w9w = Window.partitionBy(col("o_orderpriority"))
@@ -304,19 +261,11 @@ class PlanSpec extends SparkSpec {
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("price_cents"), col("near_sum"))
       .orderBy("o_orderkey").collect()
-    // below threshold: the textbook priority-partitioned window — no
-    // ghost-row union doubling the input
-    val below = q("w9_range_frame")
-    assert(below.collect() === exp9)
-    assert(!explain(below).contains("Union"), explain(below))
-    // above threshold (conf=0): ghost-row decomposition, same bytes
-    val key = "spark.graft.window.decomposeRows"
-    try {
-      spark.conf.set(key, "0")
-      val above = q("w9_range_frame")
-      assert(above.collect() === exp9)
-      assert(explain(above).contains("Union"), explain(above))
-    } finally spark.conf.unset(key)
+    // the textbook priority-partitioned window — no ghost-row union
+    // doubling the input
+    val df = q("w9_range_frame")
+    assert(df.collect() === exp9)
+    assert(!explain(df).contains("Union"), explain(df))
   }
 
   test("w10 ratio-to-report: per-class agg + broadcast join, no window at all") {

@@ -1056,8 +1056,38 @@ class VersionedSpec extends SparkSpec {
           Seq((1L, new java.sql.Timestamp(0))).toDF("id", "ts"),
           freshBase(), bloomCols = Seq("ts"))
       })
-    // and the sizing helper restored the session confs
-    assert(spark.conf.getOption("spark.graft.bloom.items").isEmpty)
+    // and the sizing scope was cleared when the body threw
+    assert(Versioned.bloomSizing.get.isEmpty)
+  }
+
+  test("bloom sizing is scoped to its thread: a concurrent commit auto-sizes") {
+    val base = freshBase()
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    // thread A holds a 1024-item sizing scope open across the whole commit
+    // below; a session-global sizing would leak into that commit
+    val a = new Thread(() =>
+      Versioned.withBloomSizing(spark, 1L << 10, 1L << 14) {
+        entered.countDown()
+        release.await()
+      })
+    a.start()
+    try {
+      assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      Versioned.commit(
+        spark.range(0, 300).toDF("id").withColumn("k", col("id") * 7L)
+          .repartitionByRange(2, col("id")),
+        base, bloomCols = Seq("k"))
+      val items = graft.sources.Layout.readSidecar(spark,
+        Versioned.entries(spark, base, 1L).head.path, "_graft_bloom")
+        .select("bloom_items").head().getLong(0)
+      // auto-size = the largest file's row count (~150 of 300 rows)
+      assert(items >= 100L && items <= 300L,
+        s"the unscoped commit must auto-size, got $items items")
+    } finally {
+      release.countDown()
+      a.join()
+    }
   }
 
   test("describe: one-row snapshot detail reflects layers and governance") {
