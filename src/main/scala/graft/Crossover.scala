@@ -117,7 +117,8 @@ object Crossover {
     val onlyEnv = sys.env.get("GRAFT_CROSSOVER_ONLY")
     val out = args.headOption.getOrElse(
       onlyEnv.fold("CROSSOVER.md")(f => s"CROSSOVER.$f.md"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -186,17 +186,8 @@ object StressVersioned {
               sha2(col("id").cast("string"), 256).as("pad")),
           base, SaveMode.Append)
       }
-      def bytesOf(paths: Seq[String]): Long = paths.map { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val it = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .listFiles(hp, true)
-        var t = 0L
-        while (it.hasNext) {
-          val s = it.next()
-          if (s.getPath.getName.endsWith(".parquet")) t += s.getLen
-        }
-        t
-      }.sum
+      def bytesOf(paths: Seq[String]): Long = paths.map(p =>
+        graft.sources.FsUtil.dataFiles(spark, p).map(_.getLen).sum).sum
       val before = Versioned.manifestFiles(spark, base, dirsN.toLong)
       val tableBytes = bytesOf(before)
       val total = spark.range(0, dirsN.toLong * rowsPerDir).count() // warm

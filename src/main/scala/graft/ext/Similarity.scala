@@ -530,6 +530,16 @@ object Similarity {
     * ~4× per-row saving past ~900 cells (CROSSOVER §4). */
   private val CellsBound = 4096
 
+  /** Refuse `cells` past [[CellsBound]] — checked before a train's first
+    * job (the corpus checkpoint, the train-cap probe). */
+  private def requireCellsBound(cells: Int): Unit =
+    require(cells <= CellsBound,
+      s"IvfIndex.train: cells=$cells exceeds the cells bound " +
+        s"$CellsBound. Per-row assignment " +
+        "scans every cell, so its cost grows linearly in cells (a " +
+        "two-level router saved only a constant ~4x past ~900 cells, " +
+        "CROSSOVER.md §4). Shard the corpus across indexes.")
+
   /** A trained IVF index: driver-resident centroids (FAISS-style) plus the
     * cell-assigned vector table — build ONCE, [[IvfIndex.search]] many
     * times. The per-call [[ivfTopK]] contract retrains every invocation
@@ -640,6 +650,7 @@ object Similarity {
       * assignment still covers every vector. */
     def train(candidates0: DataFrame, cells: Int = 16,
         lloydIters: Int = 3, trainCap: Int = 65536): IvfIndex = {
+      requireCellsBound(cells)
       // Materialize the (vec_id, embedding) projection ONCE: seed collect,
       // the Lloyd-step recompute, cell assignment, and (in the per-call
       // ivfTopK shape) the query-probe side otherwise each re-scan the
@@ -662,14 +673,6 @@ object Similarity {
       * Lloyd steps. */
     private[Similarity] def trainPrepared(candidates: DataFrame,
         trainSet: DataFrame, cells: Int, lloydIters: Int): IvfIndex = {
-      // ENFORCED CELLS BOUND (r15, VERDICT r14 #5 — the broadcast-bound
-      // discipline applied to assignment cost): see [[CellsBound]]
-      require(cells <= CellsBound,
-        s"IvfIndex.train: cells=$cells exceeds the cells bound " +
-          s"$CellsBound. Per-row assignment " +
-          "scans every cell, so its cost grows linearly in cells (a " +
-          "two-level router saved only a constant ~4x past ~900 cells, " +
-          "CROSSOVER.md §4). Shard the corpus across indexes.")
       def collectCentroids(df: DataFrame): Seq[(Int, Seq[Float])] =
         df.collect().toSeq.map(r => (r.getInt(0), r.getSeq[Float](1)))
 
@@ -1112,6 +1115,7 @@ object Similarity {
     def train(candidates0: DataFrame, cells: Int = 16, probes: Int = -1,
         m: Int = 8, pqCodes: Int = 16, trainCap: Int = 65536): IvfPqIndex = {
       import graft.functions.VectorFunctions.{pqEncode, vecNorm}
+      requireCellsBound(cells)
       val candidates = candidates0.select(col("vec_id"), col("embedding"))
         .localCheckpoint(true)
       val trainSet = boundedTrainSet(candidates, trainCap)._1

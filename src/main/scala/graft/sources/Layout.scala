@@ -219,26 +219,7 @@ object Layout {
   def writeZoneMap(spark: SparkSession, path: String,
       cols: Seq[String]): Unit = {
     import scala.jdk.CollectionConverters._
-    val p = new Path(path)
-    val f = fs(spark, p)
-    // RECURSIVE listing: hive-partitioned datasets keep their files in
-    // key=value subdirectories; skip anything under a hidden (_ or .)
-    // segment — the zone map sidecar itself lives in one
-    val baseQualified = f.makeQualified(p).toString
-    val files = {
-      val it = f.listFiles(p, true)
-      val buf = Seq.newBuilder[String]
-      while (it.hasNext) {
-        val full = it.next().getPath.toString
-        if (full.endsWith(".parquet")) {
-          val rel = full.stripPrefix(baseQualified).stripPrefix("/")
-          if (!rel.split('/').exists(s =>
-              s.startsWith("_") || s.startsWith(".")))
-            buf += full
-        }
-      }
-      buf.result()
-    }
+    val files = FsUtil.dataFiles(spark, path).map(_.getPath.toString).toList
     require(files.nonEmpty,
       s"no parquet data files under $path — refusing to write an empty " +
         "zone map (it would prune every read to zero rows)")
@@ -249,11 +230,8 @@ object Layout {
     val stats = spark.sparkContext
       .parallelize(files, math.max(1, math.min(files.size, 64)))
       .map { fp =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new Path(fp), conf.value)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val blocks = reader.getFooter.getBlocks.asScala
+        FsUtil.footer(new Path(fp), conf.value) { m =>
+          val blocks = m.getBlocks.asScala
           val chunks = blocks.flatMap(_.getColumns.asScala)
           val hasRows = blocks.nonEmpty
           val mm = colList.map { c =>
@@ -279,7 +257,7 @@ object Layout {
               if (vals.isEmpty) None else Some(vals.map(_._2).max))
           }
           (fp, mm, hasRows)
-        } finally reader.close()
+        }
       }
       .collect().toSeq
     // a dataset whose every file is EMPTY (zero row groups) has no
@@ -403,21 +381,18 @@ object Layout {
       yield (ZoneCodec.widenLo(lo), ZoneCodec.widenHi(hi))
   }
 
-  private def fs(spark: SparkSession, p: Path): org.apache.hadoop.fs.FileSystem =
-    FsUtil.fs(spark, p)
-
   /** The sidecar `name` (`_graft_zonemap` / `_graft_bloom`) under data
     * directory `dir`, read through the parquet files INSIDE it: passed
     * as an explicit path, the underscore-named directory trips Spark's
     * hidden-path filter, which logs "All paths were ignored" on every
-    * read even though the read goes ahead. Same rows either way. */
+    * read even though the read goes ahead. Layout writes every sidecar
+    * with Spark, so its footer records the row schema and the read
+    * takes it from there — no schema-inference job. */
   private[graft] def readSidecar(spark: SparkSession, dir: String,
       name: String): DataFrame = {
-    val side = new Path(dir, name)
-    val files = fs(spark, side).listStatus(side).toSeq.map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet") &&
-        !p.getName.startsWith(".") && !p.getName.startsWith("_"))
-    spark.read.parquet(files.map(_.toString): _*)
+    val files = FsUtil.dataFiles(spark, s"$dir/$name").map(_.getPath).toList
+    spark.read.schema(FsUtil.sparkSchema(spark, files.head).get)
+      .parquet(files.map(_.toString): _*)
   }
 
   /** A zone-map sidecar loaded to the driver in ONE read (it is KB-scale
@@ -468,7 +443,7 @@ object Layout {
     * existence probe + one KB-scale parquet read. */
   def loadZoneMap(spark: SparkSession, path: String): Option[ZoneMap] = {
     val zm = new Path(s"$path/_graft_zonemap")
-    if (!fs(spark, zm).exists(zm)) return None
+    if (!FsUtil.fs(spark, zm).exists(zm)) return None
     val df = readSidecar(spark, path, "_graft_zonemap")
     val names = df.schema.fieldNames
     val cols = names.filter(_.endsWith("_min")).map(_.stripSuffix("_min"))
@@ -550,7 +525,8 @@ object Layout {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1), got $fpp")
     // AUTO-SIZING (either parameter < 0): the filters are per FILE, and
     // the writer knows exactly how many rows each file holds — its
-    // footers say so, at one KB-scale footer read per file. Size to the
+    // footers say so ([[FsUtil.rowCounts]], one KB-scale driver-side
+    // footer read per file). Size to the
     // LARGEST file's row count against the target fpp (smaller files in
     // the same dir just enjoy a lower fpp); the classic bits formula
     // m = -n·ln(p)/ln(2)². A fixed global default would make tiny
@@ -559,10 +535,7 @@ object Layout {
     // filters — both real failure modes at 100 TB ingest cadence.
     val maxRows: Long =
       if (expectedItems >= 0 && numBits >= 0) -1L
-      else {
-        val counts = fileRowCounts(spark, path)
-        if (counts.isEmpty) 1L else math.max(1L, counts.map(_._2).max)
-      }
+      else FsUtil.rowCounts(spark, path).foldLeft(1L)(math.max)
     val rawItems =
       if (expectedItems >= 0) expectedItems else maxRows
     val rawBits =
@@ -592,7 +565,10 @@ object Layout {
           "spark.sql.optimizer.runtime.bloomFilter.maxNumItems/" +
           "maxNumBits — files this large exceed bloom capacity; " +
           "raise the conf maxima or write smaller files")
-    val df = spark.read.parquet(path)
+    // the data dir is Spark-written: its footer gives the read schema
+    // without an inference job
+    val df = spark.read.schema(FsUtil.sparkSchema(spark,
+      FsUtil.dataFiles(spark, path).next().getPath).get).parquet(path)
     val types = cols.map { c =>
       val f = df.schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
         throw new IllegalArgumentException(
@@ -642,44 +618,6 @@ object Layout {
       .groupBy("file").agg(aggs.head, (aggs.tail ++ typeCols ++ metaCols): _*)
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$path/_graft_bloom")
-  }
-
-  /** Per-file (path, rowCount) from parquet footers — one KB-scale
-    * footer read per file, distributed like [[writeZoneMap]]'s stats
-    * pass. The writer-side row-count source for bloom auto-sizing. */
-  private def fileRowCounts(spark: SparkSession,
-      path: String): Seq[(String, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val p = new Path(path)
-    val f = fs(spark, p)
-    val baseQualified = f.makeQualified(p).toString
-    val files = {
-      val it = f.listFiles(p, true)
-      val buf = Seq.newBuilder[String]
-      while (it.hasNext) {
-        val full = it.next().getPath.toString
-        if (full.endsWith(".parquet")) {
-          val rel = full.stripPrefix(baseQualified).stripPrefix("/")
-          if (!rel.split('/').exists(s =>
-              s.startsWith("_") || s.startsWith(".")))
-            buf += full
-        }
-      }
-      buf.result()
-    }
-    if (files.isEmpty) return Seq.empty
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 64)))
-      .map { fp =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new Path(fp), conf.value)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try (fp, reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
-        finally reader.close()
-      }
-      .collect().toSeq
   }
 
   /** The exact long [[writeBloomSidecar]]'s aggregate inserts for value
@@ -772,13 +710,7 @@ object Layout {
     * over the files being read is not safe. Returns the file count. */
   def compact(spark: SparkSession, inPath: String, outPath: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Int = {
-    val p = new Path(inPath)
-    val fs = FsUtil.fs(spark, p)
-    val bytes = fs.listFiles(p, true)
-    val total = Iterator.continually(bytes)
-      .takeWhile(_.hasNext).map(_.next())
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(_.getLen).sum
+    val total = FsUtil.dataFiles(spark, inPath).map(_.getLen).sum
     val n = math.max(1, math.ceil(total.toDouble / targetFileBytes).toInt)
     spark.read.parquet(inPath)
       .repartition(n).write.mode(SaveMode.Overwrite).parquet(outPath)

@@ -846,48 +846,29 @@ object Versioned {
     }
   }
 
-  /** Exact row count of a staged dir from its parquet FOOTERS — a
-    * driver-side metadata loop, no Spark job. The cheap post-write
-    * emptiness/size check that lets write paths stage FIRST and decide
-    * after (one pipeline execution) instead of running `isEmpty` (a
-    * full pipeline run) before staging (a second one). */
-  private[sources] def stagedRowCount(spark: SparkSession,
-      dir: String): Long = stagedRowCount(spark, dir, Long.MaxValue)
-
-  /** Footer-derived row count of a staged dir, stopping once `atLeast`
-    * rows are seen. Footers are read SEQUENTIALLY ON THE DRIVER, so the
-    * emptiness probe behind [[stageNonEmpty]] (`atLeast = 1`) must not
-    * pay one open-per-file on a many-file dir when the first non-empty
-    * footer already answers it — on object storage each open is a
-    * round trip, and the probe runs on every rollup upsert. */
+  /** Footer-derived row count of a staged dir ([[FsUtil.rowCounts]] —
+    * a driver-side metadata loop, no Spark job), stopping once `atLeast`
+    * rows are seen. The cheap post-write emptiness check that lets write
+    * paths stage FIRST and decide after (one pipeline execution) instead
+    * of running `isEmpty` (a full pipeline run) before staging (a second
+    * one). The early stop keeps the emptiness probe behind
+    * [[stageNonEmpty]] (`atLeast = 1`) from paying one open per file on a
+    * many-file dir when the first non-empty footer already answers it —
+    * on object storage each open is a round trip, and the probe runs on
+    * every rollup upsert. */
   private[sources] def stagedRowCount(spark: SparkSession,
       dir: String, atLeast: Long): Long = {
-    import scala.jdk.CollectionConverters._
-    val p = new Path(dir)
-    val f = fs(spark, p)
-    val it = f.listFiles(p, true)
+    val it = FsUtil.rowCounts(spark, dir)
     var n = 0L
-    while (it.hasNext && n < atLeast) {
-      val st = it.next()
-      val path = st.getPath
-      if (path.getName.endsWith(".parquet") &&
-          !path.toString.substring(f.makeQualified(p).toString.length)
-            .split('/').exists(s => s.startsWith("_") || s.startsWith("."))) {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(path, spark.sparkContext.hadoopConfiguration)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try n += reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-        finally reader.close()
-      }
-    }
+    while (it.hasNext && n < atLeast) n += it.next()
     n
   }
 
   /** Driver-side union schema over staged dirs: each dir was written as
     * one unit (uniform schema within), so ONE footer per dir determines
-    * it — pulled straight from the parquet key-value metadata Spark
-    * writes (`org.apache.spark.sql.parquet.row.metadata`), a pure
-    * driver-side footer read; even a plain non-merge
+    * it — the Spark row schema its first data file's footer records
+    * ([[FsUtil.sparkSchema]]), a pure driver-side footer read; even a
+    * plain non-merge
     * `spark.read.parquet(dir).schema` launches a whole inference JOB
     * per call. The union is a name-keyed field fold. Returns None on a
     * type conflict between dirs (widening schema evolution) or any
@@ -895,7 +876,7 @@ object Versioned {
     * own mergeSchema resolution. */
   private[sources] def unionDirSchemas(spark: SparkSession,
       dirs: Seq[String]): Option[org.apache.spark.sql.types.StructType] = {
-    import org.apache.spark.sql.types.{DataType, StructField, StructType}
+    import org.apache.spark.sql.types.{StructField, StructType}
     val out = scala.collection.mutable.LinkedHashMap[String, StructField]()
     // pruned READS pass per-file paths; a file's schema is its parent
     // dir's (staged as one unit), so dedupe to parents and the cost
@@ -904,33 +885,9 @@ object Versioned {
       if (d.endsWith(".parquet")) new Path(d).getParent.toString else d
     }.distinct
     for (d <- roots) {
-      val s: StructType =
-        try {
-          val p = new Path(d)
-          val f = fs(spark, p)
-          val base = f.makeQualified(p).toString
-          val it = f.listFiles(p, true)
-          var first: Path = null
-          while (first == null && it.hasNext) {
-            val st = it.next()
-            val path = st.getPath
-            if (path.getName.endsWith(".parquet") &&
-                !path.toString.substring(base.length)
-                  .split('/').exists(x =>
-                    x.startsWith("_") || x.startsWith(".")))
-              first = path
-          }
-          if (first == null) return None
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(first, spark.sparkContext.hadoopConfiguration)
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          val json =
-            try reader.getFooter.getFileMetaData.getKeyValueMetaData
-              .get("org.apache.spark.sql.parquet.row.metadata")
-            finally reader.close()
-          if (json == null) return None
-          DataType.fromJson(json).asInstanceOf[StructType]
-        } catch { case scala.util.control.NonFatal(_) => return None }
+      val s: StructType = scala.util.Try(FsUtil.dataFiles(spark, d)
+          .nextOption().flatMap(st => FsUtil.sparkSchema(spark, st.getPath)))
+        .toOption.flatten.getOrElse(return None)
       // key by the session's resolution rule: under the default
       // case-insensitive resolver, `Part` and `part` are ONE column
       // (mergeSchema unifies them to the first-seen spelling; an
@@ -959,10 +916,16 @@ object Versioned {
     * conflicts, where real coercion is needed. */
   private[sources] def snapReader(spark: SparkSession,
       paths: Seq[String]): org.apache.spark.sql.DataFrameReader =
-    unionDirSchemas(spark, paths) match {
-      case Some(s) => spark.read.schema(s)
-      case None => spark.read.option("mergeSchema", "true")
-    }
+    snapReader(spark, unionDirSchemas(spark, paths))
+
+  /** [[snapReader]] over an already-derived union schema — the one
+    * reader choice. */
+  private def snapReader(spark: SparkSession,
+      union: Option[org.apache.spark.sql.types.StructType])
+      : org.apache.spark.sql.DataFrameReader = union match {
+    case Some(s) => spark.read.schema(s)
+    case None => spark.read.option("mergeSchema", "true")
+  }
 
   /** Stage `df` and keep it only when it holds rows: returns the
     * manifest entry, or None after deleting the (tiny) empty dir. One
@@ -981,22 +944,23 @@ object Versioned {
     }
   }
 
-  /** Snapshot union schema, cached per (table, version): deriving it
-    * merges parquet footers across the WHOLE snapshot, so a strict-
-    * policy table's per-batch type check must not pay O(table files) on
-    * every small append — a snapshot's schema is immutable, one entry
-    * per table suffices (stale versions overwrite). */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, org.apache.spark.sql.types.StructType)]()
+  /** Per-table cache of ONE snapshot's schemas — (version, the
+    * driver-derived union schema or None for the mergeSchema fallback,
+    * the schema the snapshot reads as) — filled by [[readVersion]]. A
+    * committed snapshot is immutable, so an entry never
+    * staleness-checks; stale versions overwrite. Deriving the union
+    * opens one footer per dir of the WHOLE snapshot, so neither repeated
+    * reads nor a strict-policy table's per-batch type check may pay it
+    * on every call. */
+  private val snapshotSchemas = new java.util.concurrent.ConcurrentHashMap[
+    String, (Long, Option[org.apache.spark.sql.types.StructType],
+      org.apache.spark.sql.types.StructType)]()
+
   private def snapshotSchema(spark: SparkSession, basePath: String,
       v: Long): org.apache.spark.sql.types.StructType = {
-    val cached = schemaCache.get(basePath)
-    if (cached != null && cached._1 == v) cached._2
-    else {
-      val s = readVersion(spark, basePath, v).schema
-      schemaCache.put(basePath, (v, s))
-      s
-    }
+    val cached = snapshotSchemas.get(basePath)
+    if (cached != null && cached._1 == v) cached._3
+    else readVersion(spark, basePath, v).schema
   }
 
   /** The bloom-sidecar sizing (expected items, bits) a
@@ -1086,13 +1050,6 @@ object Versioned {
 
   private final class ReplayedBatch extends RuntimeException
 
-  /** Per-(table, version) cache of the snapshot's driver-derived union
-    * schema (see [[unionDirSchemas]]): a committed snapshot is
-    * immutable, so the answer never staleness-checks; one entry per
-    * table (stale versions overwrite), same shape as `schemaCache`. */
-  private val readSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Option[org.apache.spark.sql.types.StructType])]()
-
   /** Read a specific committed snapshot (time travel). Append batches
     * may ADD columns over time; the union schema reconciles across the
     * snapshot's directories, older files reading the new columns as
@@ -1107,19 +1064,14 @@ object Versioned {
     val dirs = dataEntries(ents).map(_.path)
     if (dirs.isEmpty) spark.emptyDataFrame
     else {
-      val cached = readSchemaCache.get(basePath)
-      val snap =
+      val cached = snapshotSchemas.get(basePath)
+      val union =
         if (cached != null && cached._1 == v) cached._2
-        else {
-          val s = unionDirSchemas(spark, dirs)
-          readSchemaCache.put(basePath, (v, s))
-          s
-        }
-      val rdr = snap match {
-        case Some(s) => spark.read.schema(s)
-        case None => spark.read.option("mergeSchema", "true")
-      }
-      applyDels(spark, rdr.parquet(dirs: _*), delPaths(ents))
+        else unionDirSchemas(spark, dirs)
+      val df = applyDels(spark, snapReader(spark, union).parquet(dirs: _*),
+        delPaths(ents))
+      snapshotSchemas.put(basePath, (v, union, df.schema))
+      df
     }
   }
 
@@ -1356,11 +1308,8 @@ object Versioned {
           rows.filter(_.getInt(2) == 1).map(_.getString(0)).toSeq)
       }
 
-    def readFiles(paths: Seq[String]): DataFrame = feedSchema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None =>
-        spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
+    def readFiles(paths: Seq[String]): DataFrame =
+      snapReader(spark, feedSchema).parquet(paths: _*)
     def rowsAt(delta: DataFrame, touchedFiles: Seq[String],
         keepDirs: Seq[String]): Option[DataFrame] = {
       val keep = keepDirs.map(normPath).toSet
@@ -2104,16 +2053,9 @@ object Versioned {
       }
       .start()
 
-  private def dirBytes(spark: SparkSession, path: String): Long = {
-    val p = new Path(path)
-    val it = fs(spark, p).listFiles(p, true)
-    var total = 0L
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.getPath.getName.endsWith(".parquet")) total += s.getLen
-    }
-    total
-  }
+  /** Bytes of a dir's DATA files — its sidecars are not data. */
+  private def dirBytes(spark: SparkSession, path: String): Long =
+    FsUtil.dataFiles(spark, path).map(_.getLen).sum
 
   /** Compaction INSIDE the protocol: fold data directories smaller than
     * `onlyDirsUnderBytes` into one `targetFiles`-file directory and

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.sources.FsUtil
 
 /** [EXT] Structured Streaming over the events schema (SURVEY §2.10 — absent
   * from the reference, which batch-models its time series; these are the
@@ -185,25 +186,22 @@ object StreamingEvents {
           // TRANSIENT read failure here would overwrite the touched
           // days with only the batch's rows — the very data loss this
           // merge exists to prevent. The probe is per touched `day=`
-          // subdirectory AND requires at least one visible data file in
-          // it — a sink root that exists but holds no parquet yet
-          // (pre-created dir, crash before the first commit) would make
-          // spark.read.parquet(root) throw schema-inference errors and
-          // permanently wedge every later micro-batch. Reading only the
+          // subdirectory AND requires at least one data file in it
+          // ([[FsUtil.dataFiles]]) — a sink root that exists but holds
+          // no parquet yet (pre-created dir, crash before the first
+          // commit) would make spark.read.parquet(root) throw
+          // schema-inference errors and permanently wedge every later
+          // micro-batch. Reading only the
           // touched day dirs (basePath reconstructs the partition
           // column) also keeps the per-batch cost a listing of those
           // dirs, never the whole sink root. Any failure past the probe
           // aborts the micro-batch and the engine retries it.
-          val sink = new org.apache.hadoop.fs.Path(path)
-          val sinkFs = sink.getFileSystem(
-            spark.sessionState.newHadoopConf())
-          def hasData(p: org.apache.hadoop.fs.Path): Boolean =
-            sinkFs.exists(p) && sinkFs.listStatus(p).exists { st =>
-              val n = st.getPath.getName
-              st.isFile && !n.startsWith("_") && !n.startsWith(".")
-            }
-          val touched = days
-            .filter(dd => hasData(new org.apache.hadoop.fs.Path(sink, s"day=$dd")))
+          def hasData(dir: String): Boolean = {
+            val p = new org.apache.hadoop.fs.Path(dir)
+            FsUtil.fs(spark, p).exists(p) &&
+              FsUtil.dataFiles(spark, dir).hasNext
+          }
+          val touched = days.filter(dd => hasData(s"$path/day=$dd"))
           val existing =
             if (touched.isEmpty) None
             else Some(spark.read.option("basePath", path)

@@ -1021,11 +1021,16 @@ class ExtSpec extends SparkSpec {
   // silently degrading.
   test("ivf cells bound: train past 4096 cells fails loudly, naming the bound") {
     val emb = graft.Tables.embeddings(spark, sf)
-    val e = intercept[IllegalArgumentException](
-      Similarity.IvfIndex.train(emb, cells = 4097))
+    val (e, jobs) = jobsDuring(intercept[IllegalArgumentException](
+      Similarity.IvfIndex.train(emb, cells = 4097)))
     assert(e.getMessage.contains("cells=4097"), e.getMessage)
     assert(e.getMessage.contains("cells bound 4096"), e.getMessage)
     assert(e.getMessage.contains("constant ~4x"), e.getMessage)
+    // refused before the corpus checkpoint and the train-cap probe
+    assert(jobs === 0, s"the refused train launched $jobs job(s)")
+    val (_, pqJobs) = jobsDuring(intercept[IllegalArgumentException](
+      Similarity.IvfPqIndex.train(emb, cells = 4097)))
+    assert(pqJobs === 0, s"the refused composite train launched $pqJobs job(s)")
   }
 
   test("bounded quantizer training: a sub-corpus trainCap still yields a full index") {

@@ -14,6 +14,22 @@ class PlanSpec extends SparkSpec {
   private def q(name: String): DataFrame =
     SparkEntry.queries(name)(spark, sf)
 
+  /** Every registered entry built ONCE per suite — building runs an
+    * entry's eager jobs (ANN training, checkpoints) — with what the two
+    * catalog-wide gates read: (name, plans a nested-loop join, plans a
+    * partition-less window). */
+  private lazy val census: Seq[(String, Boolean, Boolean)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, build) =>
+      val df = build(spark, sf)
+      val p = explain(df)
+      (name,
+        p.contains("BroadcastNestedLoopJoin") || p.contains("CartesianProduct"),
+        df.queryExecution.optimizedPlan.collect {
+          case w: org.apache.spark.sql.catalyst.plans.logical.Window
+              if w.partitionSpec.isEmpty => w
+        }.nonEmpty)
+    }
+
   test("half-open range filter is pushed down to the parquet scan") {
     val p = explain(q("p8_halfopen"))
     assert(p.contains("PushedFilters"), p)
@@ -175,13 +191,8 @@ class PlanSpec extends SparkSpec {
       // the 1-row supplier-count (and, for q11, the 1-row
       // total/nparts threshold) broadcast — the q22 scalar shape
       "tpch_q2", "tpch_q11", "tpch_q16", "tpch_q20")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, build) if !allowed.contains(name) =>
-        val p = explain(build(spark, sf))
-        if (p.contains("BroadcastNestedLoopJoin") || p.contains("CartesianProduct"))
-          Some(name)
-        else None
-      case _ => None
+    val offenders = census.collect {
+      case (name, true, _) if !allowed.contains(name) => name
     }
     assert(offenders.isEmpty, s"nested-loop joins appeared in: $offenders")
   }
@@ -195,14 +206,7 @@ class PlanSpec extends SparkSpec {
     // factor), and w6_ntile runs the textbook global ntile over the
     // customer table. x_text_vocab (vocab-sized) left this list for good
     // in round 7 (Pipeline.buildVocab — partitioned windows only).
-    val global = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, build) =>
-        val hasGlobal = build(spark, sf).queryExecution.optimizedPlan.collect {
-          case w: org.apache.spark.sql.catalyst.plans.logical.Window
-              if w.partitionSpec.isEmpty => w
-        }.nonEmpty
-        if (hasGlobal) Some(name) else None
-    }.toSet
+    val global = census.collect { case (name, _, true) => name }.toSet
     val allowed = Set("o1_multisort_ci", "w6_ntile")
     assert((global -- allowed).isEmpty,
       s"partition-less windows appeared in: ${global -- allowed}")

@@ -1676,4 +1676,60 @@ class VersionedSpec extends SparkSpec {
     assert(one.size === 2, s"staged ${one.mkString(", ")}: merged + remainder")
     assert(readRollup(roll) === rollupOf(Versioned.read(spark, src)))
   }
+
+  // a dir's size is its data files: the bloom sidecar under it (here a
+  // deliberately oversized one) is not data, so it neither inflates
+  // describe's bytes nor keeps a small dir from being folded
+  test("dirs are sized by their data files: a bloom sidecar neither inflates describe nor blocks a fold") {
+    import spark.implicits._
+    val base = freshBase()
+    Versioned.withBloomSizing(spark, 1L << 20, 1L << 24) {
+      Versioned.commit(Seq((1L, 2.0), (3L, 4.0)).toDF("id", "amt"), base,
+        bloomCols = Seq("id"))
+    }
+    val dir = Versioned.entries(spark, base, 1L).head.path
+    val local = new java.io.File(new java.net.URI(dir))
+    def parquetBytes(d: java.io.File): Long =
+      d.listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    val data = parquetBytes(local)
+    val side = parquetBytes(new java.io.File(local, "_graft_bloom"))
+    assert(data > 0L && side > 0L, s"fixture sanity: data $data, sidecar $side")
+    assert(Versioned.describe(spark, base).head().getAs[Long]("bytes") === data)
+    // between the data bytes and data + sidecar bytes: only a dir sized
+    // by its data files alone falls under it
+    val v = Versioned.compactLatest(spark, base, targetFiles = 1,
+      onlyDirsUnderBytes = data + side / 2)
+    assert(v === 2L, "the small dir must be folded into a new version")
+    assert(!Versioned.entries(spark, base, v).exists(_.path == dir))
+    assert(Versioned.read(spark, base).orderBy("id").as[(Long, Double)]
+      .collect().toSeq === Seq((1L, 2.0), (3L, 4.0)))
+  }
+
+  // every sidecar is Spark-written, so its footer carries the row schema:
+  // reading one launches no schema-inference job, and bloom auto-sizing
+  // reads the staged footers on the driver instead of running a job
+  test("sidecar reads and bloom auto-sizing launch no metadata job") {
+    val base = freshBase()
+    val df = spark.range(0, 2000, 1, 4)
+      .select(col("id"), (col("id") % 7).as("k"))
+    val (_, commitJobs) = jobsDuring(Versioned.commit(df, base,
+      statsCols = Seq("id"), bloomCols = Seq("id")))
+    val dir = Versioned.entries(spark, base, 1L).head.path
+    val (zm, zoneJobs) =
+      jobsDuring(graft.sources.Layout.loadZoneMap(spark, dir))
+    val (hit, readJobs) =
+      jobsDuring(Versioned.readWhere(spark, base, col("id") === 1234L))
+    info(s"jobs: commit $commitJobs, loadZoneMap $zoneJobs, readWhere $readJobs")
+    assert(zm.exists(_.columns == Set("id")))
+    assert(hit.collect().map(_.getLong(0)).toSeq === Seq(1234L))
+    assert(hit.inputFiles.length === 1, "both layers prune to one file")
+    // the sidecar collect alone
+    assert(zoneJobs === 1)
+    // the zone-map collect, then the bloom sidecar's type row and its
+    // membership pass
+    assert(readJobs === 3)
+    // the data write, the zone-map stats pass and its sidecar write, and
+    // the bloom aggregate (its shuffle stage, then its sidecar write)
+    assert(commitJobs === 5)
+  }
 }
