@@ -58,18 +58,23 @@ private[graft] object FsUtil {
     * (`org.apache.spark.sql.parquet.row.metadata`) — None for a file
     * another writer produced. */
   def sparkSchema(spark: SparkSession, file: Path): Option[StructType] =
-    footer(file, spark.sparkContext.hadoopConfiguration) { m =>
-      Option(m.getFileMetaData.getKeyValueMetaData
-        .get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-    }
+    footer(file, spark.sparkContext.hadoopConfiguration)(schemaOf)
 
-  /** Per-data-file row counts under `dir` from the footers, lazily: a
-    * sequential driver-side pass, one footer open per file consumed. */
-  def rowCounts(spark: SparkSession, dir: String): Iterator[Long] = {
+  private def schemaOf(m: ParquetMetadata): Option[StructType] =
+    Option(m.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+
+  /** Per data file under `dir`, lazily and in listing order, its
+    * footer's row count and Spark row schema ([[sparkSchema]]): ONE
+    * listing and a sequential driver-side pass, one footer open per file
+    * consumed — a caller that stops early (an emptiness probe, the first
+    * file's schema) opens no further. */
+  def footers(spark: SparkSession,
+      dir: String): Iterator[(Long, Option[StructType])] = {
     import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
-    dataFiles(spark, dir).map(st =>
-      footer(st.getPath, conf)(_.getBlocks.asScala.map(_.getRowCount).sum))
+    dataFiles(spark, dir).map(st => footer(st.getPath, conf)(m =>
+      (m.getBlocks.asScala.map(_.getRowCount).sum, schemaOf(m))))
   }
 }

@@ -98,18 +98,23 @@ object Incremental {
     * derivation spans several jobs, so under hot contention a bare retry
     * loop livelocks (every slow derivation loses to a faster writer) —
     * jittered spacing de-synchronizes the writers, the same answer the
-    * public lakehouse commit services use. */
-  private def retryCas[A](label: String)(body: => A): A = {
+    * public lakehouse commit services use. The first attempt derives
+    * from the op's snapshot `first`; each retry from one fresh head. */
+  private def retryCas[A](label: String, spark: SparkSession,
+      basePath: String, first: Versioned.Snapshot)(
+      body: Versioned.Snapshot => A): A = {
     var attempts = 0
+    var head = first
     while (true) {
       attempts += 1
       require(attempts <= 50,
         s"$label lost $attempts consecutive commit races — giving up")
-      try return body
+      try return body(head)
       catch {
         case _: java.util.ConcurrentModificationException =>
           val capMs = math.min(100L << math.min(attempts, 6), 5000L)
           Thread.sleep((capMs * math.random()).toLong)
+          head = Versioned.snapshot(spark, basePath)
       }
     }
     throw new IllegalStateException("unreachable")
@@ -131,7 +136,15 @@ object Incremental {
   def upsertRollup(spark: SparkSession, basePath: String, batch: DataFrame,
       batchId: String, partitionKey: String, subKeys: Seq[String],
       measures: Seq[String], maxEntries: Int = 64,
-      dropZeroMeasure: Option[String] = None): Long = {
+      dropZeroMeasure: Option[String] = None): Long =
+    upsert(spark, basePath, Versioned.snapshot(spark, basePath), batch,
+      batchId, partitionKey, subKeys, measures, maxEntries, dropZeroMeasure)
+
+  /** [[upsertRollup]] from the rollup snapshot `head` the caller holds. */
+  private def upsert(spark: SparkSession, basePath: String,
+      head: Versioned.Snapshot, batch: DataFrame, batchId: String,
+      partitionKey: String, subKeys: Seq[String], measures: Seq[String],
+      maxEntries: Int, dropZeroMeasure: Option[String]): Long = {
     require(measures.nonEmpty, "upsertRollup needs at least one measure")
     dropZeroMeasure.foreach(m => require(measures.contains(m),
       s"dropZeroMeasure $m must be one of the measures"))
@@ -139,16 +152,11 @@ object Incremental {
     // exact pre-check pattern): a redelivered batch id used to pay the
     // FULL batch pre-aggregation (partials cache + touched-partition
     // collect — a scan of the raw batch) before the in-CAS ledger check
-    // no-opped it. One driver-side head-manifest read skips that work;
-    // the authoritative re-check inside the CAS stays, so a concurrent
-    // first delivery racing this probe still resolves exactly-once.
-    // The versions listing is fetched ONCE and passed through (r17,
-    // ADVICE r16: the probe previously paid two manifest-dir listings —
-    // two metadata round-trips per NON-replayed batch on a slow object
-    // store — to save work only in the replay case).
-    val head = Versioned.versions(spark, basePath).lastOption
-    if (Versioned.appliedBatchIds(spark, basePath, head).contains(batchId))
-      return head.get
+    // no-opped it. The op's one head snapshot answers it, and the same
+    // snapshot is the first CAS attempt's base; the authoritative
+    // re-check inside the CAS stays, so a concurrent first delivery
+    // racing this probe still resolves exactly-once.
+    if (head.ledger.contains(batchId)) return head.version
     val keys = (partitionKey +: subKeys).map(col)
     def reAgg(df: DataFrame): DataFrame =
       df.groupBy(keys: _*).agg(
@@ -180,52 +188,43 @@ object Incremental {
         // column-less frame, and downstream column references that
         // expect the rollup schema would throw AnalysisException.
         val fin = finalizeState(partials)
-        return retryCas(s"upsertRollup($batchId) under $basePath") {
-          if (Versioned.versions(spark, basePath).isEmpty
-              && fin.schema.nonEmpty)
+        return retryCas(s"upsertRollup($batchId) under $basePath",
+            spark, basePath, head) { snap =>
+          if (snap.version == 0L && fin.schema.nonEmpty)
             // untagged (None): a tagged entry needs >=1 partition value,
             // and the schema-carrier dir holds no partitions at all
-            Versioned.publishEntries(spark, basePath, 0L,
-              Seq(ManifestEntry(Versioned.stage(stateShape(fin.limit(0)), basePath),
+            Versioned.publishEntries(spark, basePath, snap,
+              Seq(ManifestEntry(
+                Versioned.stage(stateShape(fin.limit(0)), basePath, snap),
                 None)),
               Map("batch_id" -> batchId))
-          else recordBatchId(spark, basePath, batchId)
+          // a metadata-only commit records the id (a replayed id is a
+          // no-op; two RACING recordings may both land, which records it
+          // twice — harmless, the guard only tests membership)
+          else if (snap.ledger.contains(batchId)) snap.version
+          else Versioned.publish(spark, basePath, snap, _.entries,
+            Map("batch_id" -> batchId))
         }
       }
-      retryCas(s"upsertRollup($batchId) under $basePath") {
-        attemptUpsert(spark, basePath, partials, batchId,
+      retryCas(s"upsertRollup($batchId) under $basePath",
+          spark, basePath, head) { snap =>
+        attemptUpsert(spark, basePath, snap, partials, batchId,
           partitionKey, touchedVals, touchedSet, reAgg, finalizeState,
           mayVanish = dropZeroMeasure.isDefined, maxEntries)
       }
     } finally partials.unpersist()
   }
 
-  /** Metadata-only commit: the entry list is unchanged (or empty on an
-    * uninitialized table); the atomic rename records `batchId` in the
-    * ledger. A replayed id is a no-op; two RACING no-op recordings may
-    * both land, which just records the id twice — harmless, since the
-    * guard only tests membership and no data rides on either commit. */
-  private def recordBatchId(spark: SparkSession, basePath: String,
-      batchId: String): Long = {
-    val vs = Versioned.versions(spark, basePath)
-    if (Versioned.appliedBatchIds(spark, basePath).contains(batchId))
-      return vs.last
-    Versioned.publish(spark, basePath, (_, prev) => prev,
-      Map("batch_id" -> batchId))
-  }
-
   private def attemptUpsert(spark: SparkSession, basePath: String,
-      partials: DataFrame, batchId: String, partitionKey: String,
-      touchedVals: Seq[Any], touchedSet: Set[String],
+      head: Versioned.Snapshot, partials: DataFrame, batchId: String,
+      partitionKey: String, touchedVals: Seq[Any], touchedSet: Set[String],
       reAgg: DataFrame => DataFrame,
       finalizeState: DataFrame => DataFrame, mayVanish: Boolean,
       maxEntries: Int): Long = {
-    val vs = Versioned.versions(spark, basePath)
-    // batch-level exactly-once: ONE head-manifest ledger read; the id was
-    // committed atomically WITH its data, so presence means fully applied
-    if (Versioned.appliedBatchIds(spark, basePath).contains(batchId))
-      return vs.last
-    if (vs.isEmpty) {
+    // batch-level exactly-once: the head's ledger; the id was committed
+    // atomically WITH its data, so presence means fully applied
+    if (head.ledger.contains(batchId)) return head.version
+    if (head.version == 0L) {
       // CAS-pinned bootstrap: two racing first batches must NOT both see
       // an empty table and Overwrite — the loser aborts here and retries
       // through the non-empty merge path above. Stage-then-check (the
@@ -238,22 +237,20 @@ object Incremental {
       // schema would throw AnalysisException), so stage the typed
       // zero-row dir — its parquet footer carries the schema.
       val fin = finalizeState(partials)
-      val stEntry = Versioned.stageNonEmpty(stateShape(fin), basePath, Some(touchedSet))
-        .toSeq match {
+      val stEntry = Versioned.stageNonEmpty(stateShape(fin), basePath, head,
+          Some(touchedSet)).toSeq match {
           case Seq() if fin.schema.nonEmpty =>
             Seq(ManifestEntry(
-              Versioned.stage(stateShape(fin.limit(0)), basePath),
+              Versioned.stage(stateShape(fin.limit(0)), basePath, head),
               Some(touchedSet)))
           case st => st
         }
-      return Versioned.publishEntries(spark, basePath, 0L, stEntry,
+      return Versioned.publishEntries(spark, basePath, head, stEntry,
         Map("batch_id" -> batchId))
     }
 
-    val head = vs.last
-    val ents = Versioned.entries(spark, basePath, head)
-    val dels = Versioned.delPaths(ents)
-    val dataEnts = Versioned.dataEntries(ents)
+    val dels = head.delPaths
+    val dataEnts = head.dataEntries
     // directory-level pruning: a tagged dir disjoint from the touched
     // partitions is carried by reference; untagged dirs (legacy or
     // post-update) make no claim and must be treated as intersecting.
@@ -267,13 +264,14 @@ object Incremental {
     // dir (then the fold below applies them and they can drop)
     val delEnts =
       if (foldAll || carried.isEmpty) Seq.empty[ManifestEntry]
-      else ents.filter(_.tombstone)
+      else head.entries.filter(_.tombstone)
     if (intersecting.isEmpty) {
       // every existing dir is provably disjoint (a brand-new partition):
       // the batch partials ARE the merged state — nothing to read at
       // all; stage-then-check (footers) answers vanishing in one pass
       val stEntry = Versioned.stageNonEmpty(
-        stateShape(finalizeState(partials)), basePath, Some(touchedSet)).toSeq
+        stateShape(finalizeState(partials)), basePath, head,
+        Some(touchedSet)).toSeq
       return Versioned.publishEntries(spark, basePath, head,
         delEnts ++ carried ++ stEntry, Map("batch_id" -> batchId))
     }
@@ -324,7 +322,7 @@ object Incremental {
     // each pipeline exactly once; an empty result costs a tiny write
     // that is deleted on the spot
     val mergedEntries = Versioned.stageNonEmpty(
-      stateShape(merged), basePath, Some(touchedSet)).toSeq
+      stateShape(merged), basePath, head, Some(touchedSet)).toSeq
     // the remainder keeps the intersecting dirs' confinement minus the
     // touched values — but only if EVERY intersecting dir was tagged
     val untouchedTags: Option[Set[String]] =
@@ -347,7 +345,7 @@ object Incremental {
     }
     val remEntries =
       if (tagIsExact && untouchedTags.exists(_.isEmpty)) Seq.empty
-      else Versioned.stageNonEmpty(stateShape(inRemainder), basePath,
+      else Versioned.stageNonEmpty(stateShape(inRemainder), basePath, head,
         untouchedTags.filter(_.nonEmpty)).toSeq
     // a lost CAS leaves the freshly staged dirs orphaned — vacuumable
     // garbage, never visible
@@ -363,10 +361,14 @@ object Incremental {
     * ledger cap ([[Versioned.AppliedCap]] ingested batches), in which
     * case [[syncRollup]] falls back to a full rebuild. */
   def syncedSourceVersion(spark: SparkSession, rollupBase: String,
+      consumerName: String): Option[Long] =
+    syncedIn(Versioned.snapshot(spark, rollupBase), consumerName)
+
+  private def syncedIn(rollup: Versioned.Snapshot,
       consumerName: String): Option[Long] = {
     val re = ("^sync-" + java.util.regex.Pattern.quote(consumerName) +
       "-to-(\\d+)$").r
-    Versioned.appliedBatchIds(spark, rollupBase)
+    rollup.ledger
       .flatMap(id => re.findFirstMatchIn(id).map(_.group(1).toLong))
       .maxOption
   }
@@ -420,12 +422,15 @@ object Incremental {
       s"consumer name must be [A-Za-z0-9._-]+, got '$consumerName'")
     require(measures.contains(countMeasure),
       s"countMeasure $countMeasure must be one of the measures")
+    // one listing per table: the source's (its head and whether the
+    // window's base is retained) and the rollup's head snapshot, which
+    // carries the consumer's offset and is the fold's base
     val srcVs = Versioned.versions(spark, sourceBase)
     require(srcVs.nonEmpty, s"no committed versions under $sourceBase")
     val toV = srcVs.last
-    val from = syncedSourceVersion(spark, rollupBase, consumerName)
-    if (from.contains(toV))
-      return Versioned.versions(spark, rollupBase).last
+    val roll = Versioned.snapshot(spark, rollupBase)
+    val from = syncedIn(roll, consumerName)
+    if (from.contains(toV)) return roll.version
     val batchId = s"sync-$consumerName-to-$toV"
     from match {
       case Some(f) if srcVs.contains(f) =>
@@ -438,13 +443,13 @@ object Incremental {
               feed.filter(col("_change") === "delete").drop("_change"))) {
             (df, m) => df.withColumn(m, negate(col(m)))
           }
-          upsertRollup(spark, rollupBase, ins.unionByName(del), batchId,
+          upsert(spark, rollupBase, roll, ins.unionByName(del), batchId,
             partitionKey, subKeys, measures, maxEntries,
             dropZeroMeasure = Some(countMeasure))
         } finally feed.unpersist()
       case _ =>
         // never synced / window vacuumed / offset aged out: full rebuild
-        fullLoad(spark, sourceBase, rollupBase, toV, batchId, prepare,
+        fullLoad(spark, sourceBase, toV, rollupBase, roll, batchId, prepare,
           partitionKey, subKeys, measures)
     }
   }
@@ -452,8 +457,8 @@ object Incremental {
   /** Rebuild the rollup as an Overwrite of the source head's full
     * aggregate — the bootstrap and gap-recovery path of [[syncRollup]],
     * CAS-guarded and ledger-recorded like every ingest. */
-  private def fullLoad(spark: SparkSession, sourceBase: String,
-      rollupBase: String, toV: Long, batchId: String,
+  private def fullLoad(spark: SparkSession, sourceBase: String, toV: Long,
+      rollupBase: String, rollup: Versioned.Snapshot, batchId: String,
       prepare: DataFrame => DataFrame, partitionKey: String,
       subKeys: Seq[String], measures: Seq[String]): Long = {
     val keys = (partitionKey +: subKeys).map(col)
@@ -468,22 +473,17 @@ object Incremental {
         if (partials.columns.isEmpty) Set.empty
         else partials.select(col(partitionKey)).distinct()
           .collect().map(r => partTag(r.get(0))).toSet
-      retryCas(s"syncRollup($batchId) rebuild under $rollupBase") {
-        val vs = Versioned.versions(spark, rollupBase)
-        if (Versioned.appliedBatchIds(spark, rollupBase).contains(batchId))
-          vs.last
-        else if (parts.isEmpty)
-          // empty source snapshot: the rollup is empty too — publish an
+      retryCas(s"syncRollup($batchId) rebuild under $rollupBase",
+          spark, rollupBase, rollup) { head =>
+        if (head.ledger.contains(batchId)) head.version
+        else Versioned.publishEntries(spark, rollupBase, head,
+          // an empty source snapshot leaves the rollup empty too: an
           // empty entry list (an empty staged dir would be unreadable)
-          Versioned.publish(spark, rollupBase, (head, _) => {
-            if (head != vs.lastOption.getOrElse(0L))
-              throw new java.util.ConcurrentModificationException(
-                s"rebuild derived from a stale head under $rollupBase")
-            Seq.empty
-          }, Map("batch_id" -> batchId))
-        else Versioned.commit(stateShape(partials), rollupBase,
-          expectedHead = Some(vs.lastOption.getOrElse(0L)),
-          meta = Map("batch_id" -> batchId), parts = Some(parts))
+          if (parts.isEmpty) Seq.empty
+          else Seq(ManifestEntry(
+            Versioned.stage(stateShape(partials), rollupBase, head),
+            Some(parts))),
+          Map("batch_id" -> batchId))
       }
     } finally if (!partials.columns.isEmpty) partials.unpersist()
   }

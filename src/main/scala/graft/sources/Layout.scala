@@ -514,7 +514,8 @@ object Layout {
     * silently BREAK soundness (missed files), the one failure mode a
     * skipping index must never have. Columns with zero non-null values
     * in a file get a null filter — [[pruneFilesBloom]] fails OPEN on
-    * it. */
+    * it. A dir holding no rows gets no sidecar (readers skip the layer
+    * there). */
   def writeBloomSidecar(spark: SparkSession, path: String,
       cols: Seq[String], expectedItems: Long = -1L,
       numBits: Long = -1L, fpp: Double = 0.03): Unit = {
@@ -523,19 +524,23 @@ object Layout {
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     require(cols.nonEmpty, "writeBloomSidecar needs at least one column")
     require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1), got $fpp")
+    // ONE footer pass answers emptiness (a zero-row dir has nothing to
+    // index, so it gets no sidecar), the auto-size and the read schema
+    val footers = FsUtil.footers(spark, path).toList
+    if (footers.forall(_._1 == 0L)) return
     // AUTO-SIZING (either parameter < 0): the filters are per FILE, and
     // the writer knows exactly how many rows each file holds — its
-    // footers say so ([[FsUtil.rowCounts]], one KB-scale driver-side
-    // footer read per file). Size to the
-    // LARGEST file's row count against the target fpp (smaller files in
-    // the same dir just enjoy a lower fpp); the classic bits formula
-    // m = -n·ln(p)/ln(2)². A fixed global default would make tiny
-    // staging batches carry MB-scale filters and make genuinely big
-    // files exceed the default's capacity into useless all-positive
-    // filters — both real failure modes at 100 TB ingest cadence.
+    // footers say so (one KB-scale driver-side footer read per file).
+    // Size to the LARGEST file's row count against the target fpp
+    // (smaller files in the same dir just enjoy a lower fpp); the
+    // classic bits formula m = -n·ln(p)/ln(2)². A fixed global default
+    // would make tiny staging batches carry MB-scale filters and make
+    // genuinely big files exceed the default's capacity into useless
+    // all-positive filters — both real failure modes at 100 TB ingest
+    // cadence.
     val maxRows: Long =
       if (expectedItems >= 0 && numBits >= 0) -1L
-      else FsUtil.rowCounts(spark, path).foldLeft(1L)(math.max)
+      else footers.map(_._1).foldLeft(1L)(math.max)
     val rawItems =
       if (expectedItems >= 0) expectedItems else maxRows
     val rawBits =
@@ -567,8 +572,7 @@ object Layout {
           "raise the conf maxima or write smaller files")
     // the data dir is Spark-written: its footer gives the read schema
     // without an inference job
-    val df = spark.read.schema(FsUtil.sparkSchema(spark,
-      FsUtil.dataFiles(spark, path).next().getPath).get).parquet(path)
+    val df = spark.read.schema(footers.head._2.get).parquet(path)
     val types = cols.map { c =>
       val f = df.schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
         throw new IllegalArgumentException(

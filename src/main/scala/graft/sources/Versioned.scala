@@ -190,13 +190,75 @@ object Versioned {
   private def dec(s: String): String =
     java.net.URLDecoder.decode(s, "UTF-8")
 
-  /** All committed versions, ascending. */
+  /** All committed versions, ascending: one `_manifests` listing. */
   def versions(spark: SparkSession, basePath: String): Seq[Long] = {
     val dir = manifestDir(basePath)
-    val f = fs(spark, dir)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.map(_.getPath.getName)
+    val listed =
+      try fs(spark, dir).listStatus(dir).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    listed.map(_.getPath.getName)
       .filter(_.matches("v\\d+")).map(_.drop(1).toLong).sorted
+  }
+
+  /** One committed snapshot: its version, manifest entries and
+    * `#key=value` commit metadata, parsed from ONE read of manifest
+    * `v<version>`; version 0 is an uninitialized table.
+    *
+    * ONE OP, ONE BASE VERSION: an op opens the head once ([[snapshot]]:
+    * one `_manifests` listing, one manifest open) and takes every view
+    * it needs from this value, so it never mixes two heads and pays the
+    * head's round trips once, not once per view. It hands the value to
+    * staging and to [[publish]], whose FIRST CAS attempt reuses a
+    * committed snapshot without a re-read: versions are dense, [[vacuum]]
+    * drops only a prefix of them (while `v<version>` exists, no later
+    * manifest was dropped), and the [[CommitStore]] is linearizable per
+    * target — so winning `v<version+1>` proves this snapshot was still
+    * the head. An uninitialized snapshot has no manifest to vouch for it
+    * and is read again; so is the head after every lost attempt. */
+  final case class Snapshot(version: Long, entries: Seq[ManifestEntry],
+      meta: Map[String, String]) {
+    def dataEntries: Seq[ManifestEntry] = entries.filterNot(_.tombstone)
+    def dataPaths: Seq[String] = dataEntries.map(_.path)
+    /** The deletion-vector directories. */
+    def delPaths: Seq[String] = entries.filter(_.tombstone).map(_.path)
+    /** The applied-batch ledger (`#applied=`), oldest → newest. */
+    def ledger: Seq[String] = meta.get(AppliedKey).iterator
+      .flatMap(_.split(',')).filter(_.nonEmpty).map(dec).toSeq
+    def constraints: Map[String, String] =
+      meta.get(ConstraintsKey).map(decodeConstraints).getOrElse(Map.empty)
+    def schemaPolicy: String = meta.getOrElse(PolicyKey, "evolve")
+    /** The protocol-stamped commit time (`#ts`, written by every
+      * [[publish]]). */
+    def ts: Long = meta("ts").toLong
+  }
+
+  private val Uninitialized = Snapshot(0L, Seq.empty, Map.empty)
+
+  /** The head snapshot ([[Snapshot]]; version 0 when uninitialized). */
+  private[sources] def snapshot(spark: SparkSession,
+      basePath: String): Snapshot =
+    versions(spark, basePath).lastOption
+      .fold(Uninitialized)(snapshotAt(spark, basePath, _))
+
+  /** The head snapshot of a table that must have a committed version. */
+  private def committedHead(spark: SparkSession, basePath: String): Snapshot = {
+    val s = snapshot(spark, basePath)
+    require(s.version > 0, s"no committed versions under $basePath")
+    s
+  }
+
+  /** Snapshot `v`: one manifest open, parsed once into entries and
+    * metadata. */
+  private def snapshotAt(spark: SparkSession, basePath: String,
+      v: Long): Snapshot = {
+    val (meta, ents) = manifestLines(spark, basePath, v)
+      .partition(_.startsWith("#"))
+    Snapshot(v, ents.map(decodeEntry), meta.flatMap { l =>
+      l.drop(1).split("=", 2) match {
+        case Array(k, value) => Some(k -> value)
+        case _ => None
+      }
+    }.toMap)
   }
 
   /** Manifest framing: every manifest opens with `#graft=2` and closes
@@ -219,9 +281,12 @@ object Versioned {
   private def manifestLines(spark: SparkSession, basePath: String,
       v: Long): Seq[String] = {
     val p = new Path(manifestDir(basePath), s"v$v")
-    val f = fs(spark, p)
-    require(f.exists(p), s"version $v does not exist under $basePath")
-    val in = f.open(p)
+    val in =
+      try fs(spark, p).open(p)
+      catch { case _: java.io.FileNotFoundException =>
+        throw new IllegalArgumentException(
+          s"version $v does not exist under $basePath")
+      }
     val lines =
       try scala.io.Source.fromInputStream(in, "UTF-8")
         .getLines().map(_.trim).filter(_.nonEmpty).toList
@@ -278,20 +343,13 @@ object Versioned {
 
   /** The manifest entries of snapshot `v` (paths + partition tags). */
   def entries(spark: SparkSession, basePath: String,
-      v: Long): Seq[ManifestEntry] =
-    manifestLines(spark, basePath, v)
-      .filterNot(_.startsWith("#")).map(decodeEntry)
+      v: Long): Seq[ManifestEntry] = snapshotAt(spark, basePath, v).entries
 
   /** Every referenced directory path of snapshot `v` (data AND
     * tombstone directories — vacuum's reachability set). */
   def manifestFiles(spark: SparkSession, basePath: String,
       v: Long): Seq[String] =
     entries(spark, basePath, v).map(_.path)
-
-  private[sources] def dataEntries(ents: Seq[ManifestEntry]): Seq[ManifestEntry] =
-    ents.filterNot(_.tombstone)
-  private[sources] def delPaths(ents: Seq[ManifestEntry]): Seq[String] =
-    ents.filter(_.tombstone).map(_.path)
 
   /** Every deletion-vector directory holds exactly these two columns
     * (the `_metadata` identity pair [[deleteWhereMor]] and
@@ -338,38 +396,13 @@ object Versioned {
     * "this batch's data is visible" are one indivisible fact: the replay
     * guard incremental consumers need for batch-level exactly-once. */
   def commitMeta(spark: SparkSession, basePath: String,
-      v: Long): Map[String, String] =
-    manifestLines(spark, basePath, v)
-      .filter(_.startsWith("#"))
-      .flatMap { l =>
-        l.drop(1).split("=", 2) match {
-          case Array(k, value) => Some(k -> value)
-          case _ => None
-        }
-      }.toMap
-
-  /** The protocol-stamped commit time (`#ts`, written by every
-    * [[publish]]). */
-  private def commitTs(meta: Map[String, String]): Long = meta("ts").toLong
-
-  /** The `#applied=` ledger carried in one manifest's metadata. */
-  private def ledgerOf(meta: Map[String, String]): Seq[String] =
-    meta.get(AppliedKey).iterator
-      .flatMap(_.split(',')).filter(_.nonEmpty).map(dec).toSeq
+      v: Long): Map[String, String] = snapshotAt(spark, basePath, v).meta
 
   /** The applied-batch-id ledger: ONE head-manifest read (the head's
     * `#applied=` line, maintained by every commit). Ordered
     * oldest→newest, capped at [[AppliedCap]]. */
   def appliedBatchIds(spark: SparkSession, basePath: String): Seq[String] =
-    appliedBatchIds(spark, basePath, versions(spark, basePath).lastOption)
-
-  /** [[appliedBatchIds]] at a head the caller already resolved — callers
-    * that hold a versions listing (the rollup replay probe) or a CAS
-    * attempt's head pass it through instead of paying a second
-    * manifest-dir listing per batch. */
-  private[sources] def appliedBatchIds(spark: SparkSession,
-      basePath: String, head: Option[Long]): Seq[String] =
-    head.fold(Seq.empty[String])(h => ledgerOf(commitMeta(spark, basePath, h)))
+    snapshot(spark, basePath).ledger
 
   private def encodeConstraints(cs: Map[String, String]): String =
     cs.toSeq.sortBy(_._1).map { case (n, e) => n + ":" + enc(e) }
@@ -388,9 +421,7 @@ object Versioned {
     * carried forward by every commit (protocol metadata, like the
     * ledger) and enforced on every data-adding write. */
   def constraints(spark: SparkSession, basePath: String): Map[String, String] =
-    versions(spark, basePath).lastOption
-      .flatMap(v => commitMeta(spark, basePath, v).get(ConstraintsKey))
-      .map(decodeConstraints).getOrElse(Map.empty)
+    snapshot(spark, basePath).constraints
 
   /** The rows of `df` that VIOLATE any of `cs` — standard SQL CHECK
     * semantics: a row violates only when the expression is FALSE
@@ -422,9 +453,7 @@ object Versioned {
     * read) or `"strict"` (a batch carrying a column the snapshot lacks,
     * or changing an existing column's type, is rejected whole). */
   def schemaPolicy(spark: SparkSession, basePath: String): String =
-    versions(spark, basePath).lastOption
-      .flatMap(v => commitMeta(spark, basePath, v).get(PolicyKey))
-      .getOrElse("evolve")
+    snapshot(spark, basePath).schemaPolicy
 
   /** Set the schema policy (metadata-only commit, protocol-carried like
     * the constraint set — a racing writer cannot drop it). STRICT is
@@ -439,7 +468,8 @@ object Versioned {
       policy: String): Long = {
     require(policy == "strict" || policy == "evolve",
       s"schema policy is 'strict' or 'evolve', got '$policy'")
-    publish(spark, basePath, (_, prev) => prev, editPolicy = Some(policy))
+    publish(spark, basePath, snapshot(spark, basePath), _.entries,
+      editPolicy = Some(policy))
   }
 
   /** ALTER TABLE … ADD CONSTRAINT … CHECK: validate that every EXISTING
@@ -469,15 +499,16 @@ object Versioned {
     // uninitialized table: nothing to validate — the constraint lands as
     // an empty v1 and gates every write from the first one on (the
     // natural declare-before-load flow)
-    versions(spark, basePath).lastOption.foreach { head =>
-      val cur = readVersion(spark, basePath, head)
+    val head = snapshot(spark, basePath)
+    if (head.version > 0) {
+      val cur = readSnapshot(spark, basePath, head)
       if (cur.columns.nonEmpty
           && violations(cur, Map(name -> sqlExpr)).limit(1).count() > 0)
         throw new ConstraintViolation(
           s"cannot add constraint $name CHECK ($sqlExpr) under $basePath: " +
             "existing rows violate it")
     }
-    publish(spark, basePath, (_, prev) => prev,
+    publish(spark, basePath, head, _.entries,
       editConstraints = Some(_ + (name -> sqlExpr)))
   }
 
@@ -485,20 +516,22 @@ object Versioned {
     * no-op rather than fail — drops are idempotent. */
   def dropConstraint(spark: SparkSession, basePath: String,
       name: String): Long =
-    publish(spark, basePath, (_, prev) => prev,
+    publish(spark, basePath, snapshot(spark, basePath), _.entries,
       editConstraints = Some(_ - name))
 
-  /** Atomically publish the next version. `mkEntries(headVersion,
-    * headEntries)` derives the manifest contents and is RE-EVALUATED
-    * against the refreshed head on every CAS attempt — a writer that
-    * loses a race re-derives (an append folds in the winner's files)
-    * instead of renaming its stale list over the winner's commit, which
-    * would be a silent lost update. `mkEntries` may throw to abort (the
-    * optimistic-conflict path of the copy-on-write ops). The applied-
-    * batch ledger is carried forward automatically: `meta("batch_id")`,
-    * when present, is appended to the head's ledger under the cap. */
+  /** Atomically publish the next version. `mkEntries(head)` derives the
+    * manifest contents; the first CAS attempt takes the op's own
+    * snapshot `base` as the head ([[Snapshot]] says why that is safe),
+    * and every later attempt RE-EVALUATES it against one freshly read
+    * head — a writer that loses a race re-derives (an append folds in
+    * the winner's files) instead of renaming its stale list over the
+    * winner's commit, which would be a silent lost update. `mkEntries`
+    * may throw to abort (the optimistic-conflict path of the
+    * copy-on-write ops). The applied-batch ledger is carried forward
+    * automatically: `meta("batch_id")`, when present, is appended to the
+    * head's ledger under the cap. */
   private[sources] def publish(spark: SparkSession, basePath: String,
-      mkEntries: (Long, Seq[ManifestEntry]) => Seq[ManifestEntry],
+      base: Snapshot, mkEntries: Snapshot => Seq[ManifestEntry],
       meta: Map[String, String] = Map.empty,
       seedLedger: Seq[String] = Seq.empty,
       editConstraints: Option[Map[String, String] => Map[String, String]]
@@ -522,35 +555,32 @@ object Versioned {
       s"#$PolicyKey is maintained by the protocol — use setSchemaPolicy")
     val mdir = manifestDir(basePath)
     val f = fs(spark, mdir)
-    f.mkdirs(mdir)
+    if (base.version == 0L) f.mkdirs(mdir)
+    var head = base
     var attempts = 0
     var committed = -1L
     while (committed < 0) {
       attempts += 1
       require(attempts <= 100,
         s"manifest CAS did not converge after 100 attempts under $basePath")
-      val head = versions(spark, basePath).lastOption
-      val prev = head.map(entries(spark, basePath, _)).getOrElse(Seq.empty)
-      val newEntries = mkEntries(head.getOrElse(0L), prev)
+      if (attempts > 1 || base.version == 0L) head = snapshot(spark, basePath)
+      val newEntries = mkEntries(head)
       // ledger derivation happens INSIDE the CAS loop: a lost race means
-      // the winner may have ingested batches this attempt must remember
-      val headMeta = head.map(commitMeta(spark, basePath, _))
-        .getOrElse(Map.empty[String, String])
+      // the winner may have ingested batches this attempt must remember;
       // an uninitialized table starts from the seed (a clone inherits)
-      val ledgerBase = if (head.isDefined) ledgerOf(headMeta) else seedLedger
-      val ledger =
-        (ledgerBase ++ meta.get("batch_id")).takeRight(AppliedCap)
+      val initialized = head.version > 0L
+      val ledger = ((if (initialized) head.ledger else seedLedger) ++
+        meta.get("batch_id")).takeRight(AppliedCap)
       // ts is clamped monotone over the head's stamp: a clock step-back
       // must not let readAsOf resolve a NEWER snapshot for an OLDER
       // stamp (version order and stamp order stay aligned)
       val ts = math.max(System.currentTimeMillis(),
-        head.fold(Long.MinValue)(_ => commitTs(headMeta) + 1))
+        if (initialized) head.ts + 1 else Long.MinValue)
       // constraints are PROTOCOL-CARRIED like the ledger: every commit
-      // re-reads the refreshed head's set inside the CAS (a concurrent
+      // takes the attempt's head set inside the CAS (a concurrent
       // addConstraint cannot be silently dropped by a racing writer);
       // editConstraints (add/dropConstraint) rewrites the set instead
-      val headCons = headMeta.get(ConstraintsKey)
-        .map(decodeConstraints).getOrElse(Map.empty[String, String])
+      val headCons = head.constraints
       // the constraint-race hook: data-adding callers pass a closure
       // that re-validates their staged rows against whatever the HEAD's
       // constraint set holds BEYOND what staging validated — so a
@@ -560,13 +590,11 @@ object Versioned {
       recheck(headCons)
       val consOut: Option[String] = editConstraints match {
         case None =>
-          if (headMeta.contains(ConstraintsKey))
-            Some(encodeConstraints(headCons))
-          else None
+          head.meta.get(ConstraintsKey).map(_ => encodeConstraints(headCons))
         case Some(f) => Some(encodeConstraints(f(headCons)))
       }
       // the schema policy carries exactly like the constraint set
-      val polOut = editPolicy.orElse(headMeta.get(PolicyKey))
+      val polOut = editPolicy.orElse(head.meta.get(PolicyKey))
       val fullMeta = meta + ("ts" -> ts.toString) +
         (AppliedKey -> ledger.map(enc).mkString(",")) ++
         consOut.map(ConstraintsKey -> _) ++
@@ -580,8 +608,12 @@ object Versioned {
       val out = f.create(tmp, false)
       try out.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
       finally out.close()
-      val v = head.getOrElse(0L) + 1
-      if (commitStore.putIfAbsent(f, tmp, new Path(mdir, s"v$v")))
+      val v = head.version + 1
+      // a stale snapshot must not win a slot a vacuum emptied behind
+      // newer heads (a commit no reader would see): while the head's own
+      // manifest exists, an absent v<head+1> was never written
+      if ((!initialized || f.exists(new Path(mdir, s"v${head.version}"))) &&
+          commitStore.putIfAbsent(f, tmp, new Path(mdir, s"v$v")))
         committed = v
       else f.delete(tmp, false) // lost the race — re-derive and retry
     }
@@ -593,13 +625,14 @@ object Versioned {
     * that landed since makes that derivation stale, so abort instead of
     * silently overwriting the interleaved commit. */
   private[sources] def publishEntries(spark: SparkSession, basePath: String,
-      expectedHead: Long, newEntries: Seq[ManifestEntry],
+      base: Snapshot, newEntries: Seq[ManifestEntry],
       meta: Map[String, String] = Map.empty): Long =
-    publish(spark, basePath, (head, _) => {
-      if (head != expectedHead)
+    publish(spark, basePath, base, head => {
+      if (head.version != base.version)
         throw new java.util.ConcurrentModificationException(
-          s"commit derived from v$expectedHead but head is v$head under " +
-            s"$basePath — re-read the snapshot and retry")
+          s"commit derived from v${base.version} but head is " +
+            s"v${head.version} under $basePath — re-read the snapshot " +
+            "and retry")
       newEntries
     }, meta)
 
@@ -625,15 +658,14 @@ object Versioned {
     * zone-disjoint vectors all carry through. Anything else still
     * aborts with ConcurrentModificationException. */
   private def publishRebase(spark: SparkSession, basePath: String,
-      expectedHead: Long, readPaths: Set[String],
-      delsAtDerivation: Seq[String],
+      base: Snapshot, readPaths: Set[String],
       recheck: Map[String, String] => Unit = _ => ())(
       mk: Seq[ManifestEntry] => Seq[ManifestEntry]): Long =
-    publish(spark, basePath, (head, prev) => {
-      if (head != expectedHead) {
-        val curData = dataEntries(prev).map(_.path).toSet
-        val curDels = delPaths(prev).toSet
-        val derived = delsAtDerivation.toSet
+    publish(spark, basePath, base, head => {
+      if (head.version != base.version) {
+        val curData = head.dataPaths.toSet
+        val curDels = head.delPaths.toSet
+        val derived = base.delPaths.toSet
         def racedDelsDisjoint: Boolean = {
           val raced = (curDels -- derived).toSeq
           // normPath BOTH sides: the vectors' file_path values carry
@@ -656,13 +688,14 @@ object Versioned {
         val composes = derived.subsetOf(curDels) &&
           readPaths.forall(curData.contains) && racedDelsDisjoint
         if (!composes) throw new java.util.ConcurrentModificationException(
-          s"rewrite derived from v$expectedHead conflicts with commits " +
-            s"up to v$head under $basePath — a raced commit rewrote a " +
+          s"rewrite derived from v${base.version} conflicts with commits " +
+            s"up to v${head.version} under $basePath — a raced commit " +
+            "rewrote a " +
             "directory this derivation read, removed a deletion vector " +
             "it applied, or landed a vector into a directory it read; " +
             "re-read the snapshot and retry")
       }
-      mk(prev)
+      mk(head.entries)
     }, recheck = recheck)
 
   /** Stage `df` into a fresh immutable `data-<uuid>` directory (with an
@@ -672,17 +705,21 @@ object Versioned {
     * is invisible until a manifest references it; a crash here leaves
     * vacuumable garbage, never a visible half-commit. */
   private[sources] def stage(df: DataFrame, basePath: String,
-      statsCols: Seq[String] = Seq.empty,
+      base: Snapshot, statsCols: Seq[String] = Seq.empty,
       bloomCols: Seq[String] = Seq.empty,
       validate: Boolean = true): String =
-    stageValidated(df, basePath, statsCols, bloomCols, validate)._1
+    stageValidated(df, basePath, base, statsCols, bloomCols, validate)._1
 
   /** [[stage]] plus the constraint set the staging actually VALIDATED
     * against — the capture that lets the publish-time recheck
     * ([[constraintRecheck]]) test only the DELTA a racing
-    * `addConstraint` introduced. */
+    * `addConstraint` introduced. The schema policy and the constraint
+    * set are the op's snapshot `base`'s: a constraint landing after it
+    * either aborts a publish pinned to `base` or, for the publishes
+    * that rebase or fold in raced commits, is validated as the recheck's
+    * delta inside the CAS. */
   private[sources] def stageValidated(df: DataFrame, basePath: String,
-      statsCols: Seq[String] = Seq.empty,
+      base: Snapshot, statsCols: Seq[String] = Seq.empty,
       bloomCols: Seq[String] = Seq.empty,
       validate: Boolean = true): (String, Map[String, String]) = {
     // __fp/__ri are the read path's row-identity aliases (applyDels);
@@ -701,23 +738,21 @@ object Versioned {
     // is narrower than the snapshot's is compatible). An empty-schema
     // snapshot (policy declared before the first load) establishes
     // nothing yet — the first batch defines the schema.
-    if (validate && schemaPolicy(spark, basePath) == "strict") {
-      versions(spark, basePath).lastOption.foreach { head =>
-        val snap = snapshotSchema(spark, basePath, head)
-        if (snap.fields.nonEmpty) df.schema.fields.foreach { f =>
-          snap.fields.find(_.name.equalsIgnoreCase(f.name)) match {
-            case None => throw new SchemaPolicyViolation(
-              s"strict schema policy under $basePath: batch column " +
-                s"'${f.name}' does not exist in the snapshot — " +
-                "setSchemaPolicy(\"evolve\") to allow schema evolution")
-            case Some(h) if !org.apache.spark.sql.GraftBridge
-                .sameType(h.dataType, f.dataType) =>
-              throw new SchemaPolicyViolation(
-                s"strict schema policy under $basePath: column " +
-                  s"'${f.name}' is ${h.dataType.simpleString} in the " +
-                  s"snapshot but ${f.dataType.simpleString} in the batch")
-            case _ => ()
-          }
+    if (validate && base.schemaPolicy == "strict" && base.version > 0L) {
+      val snap = snapshotSchema(spark, basePath, base)
+      if (snap.fields.nonEmpty) df.schema.fields.foreach { f =>
+        snap.fields.find(_.name.equalsIgnoreCase(f.name)) match {
+          case None => throw new SchemaPolicyViolation(
+            s"strict schema policy under $basePath: batch column " +
+              s"'${f.name}' does not exist in the snapshot — " +
+              "setSchemaPolicy(\"evolve\") to allow schema evolution")
+          case Some(h) if !org.apache.spark.sql.GraftBridge
+              .sameType(h.dataType, f.dataType) =>
+            throw new SchemaPolicyViolation(
+              s"strict schema policy under $basePath: column " +
+                s"'${f.name}' is ${h.dataType.simpleString} in the " +
+                s"snapshot but ${f.dataType.simpleString} in the batch")
+          case _ => ()
         }
       }
     }
@@ -728,10 +763,7 @@ object Versioned {
     // rows). Validated against the files just written, i.e. exactly
     // what readers would see; a violating batch is rejected WHOLE.
     val validated: Map[String, String] = if (!validate) Map.empty else {
-      // re-read AFTER the write (not a pre-write snapshot): a constraint
-      // added while a long batch write was in flight is enforced — the
-      // narrowest window the optimistic model allows
-      val cs = constraints(spark, basePath)
+      val cs = base.constraints
       if (cs.nonEmpty) {
         val staged = spark.read.parquet(dataDir.toString)
         // an unevaluable constraint (e.g. a non-boolean expression that
@@ -764,16 +796,13 @@ object Versioned {
     }
     if (statsCols.nonEmpty)
       Layout.writeZoneMap(spark, dataDir.toString, statsCols)
-    // a zero-row stage has no files to bloom-index; the footers the
-    // write just produced answer that without a job
-    if (bloomCols.nonEmpty &&
-        stagedRowCount(spark, dataDir.toString, atLeast = 1L) > 0L) {
+    if (bloomCols.nonEmpty) {
       // sizing: a [[withBloomSizing]] scope on this thread wins;
       // otherwise AUTO-SIZE from the just-written files' footer row
       // counts against a 3% target fpp — a 2k-row staging batch must
-      // not pay (or mis-trust) a 1M-item filter
-      // ([[Layout.writeBloomSidecar]] records what it chose in the
-      // sidecar meta)
+      // not pay (or mis-trust) a 1M-item filter. [[Layout
+      // .writeBloomSidecar]] reads each footer once (a zero-row stage
+      // gets no sidecar) and records what it chose in the sidecar meta.
       val (items, bits) = bloomSizing.get.getOrElse((-1L, -1L))
       Layout.writeBloomSidecar(spark, dataDir.toString, bloomCols,
         expectedItems = items, numBits = bits, fpp = 0.03)
@@ -846,28 +875,22 @@ object Versioned {
     }
   }
 
-  /** Footer-derived row count of a staged dir ([[FsUtil.rowCounts]] —
-    * a driver-side metadata loop, no Spark job), stopping once `atLeast`
-    * rows are seen. The cheap post-write emptiness check that lets write
-    * paths stage FIRST and decide after (one pipeline execution) instead
-    * of running `isEmpty` (a full pipeline run) before staging (a second
-    * one). The early stop keeps the emptiness probe behind
-    * [[stageNonEmpty]] (`atLeast = 1`) from paying one open per file on a
-    * many-file dir when the first non-empty footer already answers it —
-    * on object storage each open is a round trip, and the probe runs on
-    * every rollup upsert. */
-  private[sources] def stagedRowCount(spark: SparkSession,
-      dir: String, atLeast: Long): Long = {
-    val it = FsUtil.rowCounts(spark, dir)
-    var n = 0L
-    while (it.hasNext && n < atLeast) n += it.next()
-    n
-  }
+  /** Whether a staged dir holds rows, from its footers
+    * ([[FsUtil.footers]] — a driver-side metadata loop, no Spark job).
+    * The cheap post-write emptiness check that lets write paths stage
+    * FIRST and decide after (one pipeline execution) instead of running
+    * `isEmpty` (a full pipeline run) before staging (a second one). It
+    * stops at the first non-empty footer, so a many-file dir does not pay
+    * one open per file — on object storage each open is a round trip,
+    * and the probe runs on every rollup upsert. */
+  private[sources] def stagedNonEmpty(spark: SparkSession,
+      dir: String): Boolean =
+    FsUtil.footers(spark, dir).exists(_._1 > 0L)
 
   /** Driver-side union schema over staged dirs: each dir was written as
     * one unit (uniform schema within), so ONE footer per dir determines
     * it — the Spark row schema its first data file's footer records
-    * ([[FsUtil.sparkSchema]]), a pure driver-side footer read; even a
+    * ([[FsUtil.footers]]), a pure driver-side footer read; even a
     * plain non-merge
     * `spark.read.parquet(dir).schema` launches a whole inference JOB
     * per call. The union is a name-keyed field fold. Returns None on a
@@ -885,9 +908,8 @@ object Versioned {
       if (d.endsWith(".parquet")) new Path(d).getParent.toString else d
     }.distinct
     for (d <- roots) {
-      val s: StructType = scala.util.Try(FsUtil.dataFiles(spark, d)
-          .nextOption().flatMap(st => FsUtil.sparkSchema(spark, st.getPath)))
-        .toOption.flatten.getOrElse(return None)
+      val s: StructType = scala.util.Try(FsUtil.footers(spark, d)
+          .nextOption().flatMap(_._2)).toOption.flatten.getOrElse(return None)
       // key by the session's resolution rule: under the default
       // case-insensitive resolver, `Part` and `part` are ONE column
       // (mergeSchema unifies them to the first-seen spelling; an
@@ -932,10 +954,10 @@ object Versioned {
     * pipeline execution per staged frame — the emptiness answer comes
     * from the written footers, not a pre-pass. */
   private[sources] def stageNonEmpty(df: DataFrame, basePath: String,
-      parts: Option[Set[String]]): Option[ManifestEntry] = {
+      base: Snapshot, parts: Option[Set[String]]): Option[ManifestEntry] = {
     val spark = df.sparkSession
-    val dir = stage(df, basePath)
-    if (stagedRowCount(spark, dir, atLeast = 1L) > 0L)
+    val dir = stage(df, basePath, base)
+    if (stagedNonEmpty(spark, dir))
       Some(ManifestEntry(dir, parts))
     else {
       val p = new Path(dir)
@@ -957,10 +979,10 @@ object Versioned {
       org.apache.spark.sql.types.StructType)]()
 
   private def snapshotSchema(spark: SparkSession, basePath: String,
-      v: Long): org.apache.spark.sql.types.StructType = {
+      snap: Snapshot): org.apache.spark.sql.types.StructType = {
     val cached = snapshotSchemas.get(basePath)
-    if (cached != null && cached._1 == v) cached._3
-    else readVersion(spark, basePath, v).schema
+    if (cached != null && cached._1 == snap.version) cached._3
+    else readSnapshot(spark, basePath, snap).schema
   }
 
   /** The bloom-sidecar sizing (expected items, bits) a
@@ -995,8 +1017,9 @@ object Versioned {
     * rewrite was derived from a snapshot that is no longer current.
     * `statsCols`: write a zone-map sidecar into the staged directory
     * (range pruning in [[readWhere]]). `bloomCols`: write a per-file
-    * bloom sidecar (equality pruning in [[readWhere]]; sized by
-    * `spark.graft.bloom.items` / `spark.graft.bloom.bits`). `parts`:
+    * bloom sidecar (equality pruning in [[readWhere]]; auto-sized from
+    * the staged files' footer row counts, or by an enclosing
+    * [[withBloomSizing]] scope on this thread). `parts`:
     * declare the staged directory partition-confined (see
     * [[ManifestEntry]]). Returns the committed version. */
   def commit(df: DataFrame, basePath: String,
@@ -1009,16 +1032,17 @@ object Versioned {
     require(mode == SaveMode.Overwrite || mode == SaveMode.Append,
       s"versioned commits are Overwrite or Append, got $mode")
     val spark = df.sparkSession
+    val base = snapshot(spark, basePath)
     val (dataDir, stagedWith) =
-      stageValidated(df, basePath, statsCols, bloomCols)
-    publish(spark, basePath, (head, prev) => {
-      expectedHead.filter(_ != head).foreach { e =>
+      stageValidated(df, basePath, base, statsCols, bloomCols)
+    publish(spark, basePath, base, head => {
+      expectedHead.filter(_ != head.version).foreach { e =>
         throw new java.util.ConcurrentModificationException(
-          s"commit derived from v$e but head is v$head under $basePath — " +
-            "re-read the snapshot and retry")
+          s"commit derived from v$e but head is v${head.version} under " +
+            s"$basePath — re-read the snapshot and retry")
       }
       val entry = ManifestEntry(dataDir, parts)
-      if (mode == SaveMode.Append) prev :+ entry
+      if (mode == SaveMode.Append) head.entries :+ entry
       else Seq(entry)
     }, meta,
       recheck = constraintRecheck(spark, basePath, dataDir, stagedWith))
@@ -1035,14 +1059,13 @@ object Versioned {
   def appendOnce(batch: DataFrame, basePath: String,
       batchId: String): Option[Long] = {
     val spark = batch.sparkSession
-    if (appliedBatchIds(spark, basePath).contains(batchId)) return None
-    val (dataDir, stagedWith) = stageValidated(batch, basePath)
+    val base = snapshot(spark, basePath)
+    if (base.ledger.contains(batchId)) return None
+    val (dataDir, stagedWith) = stageValidated(batch, basePath, base)
     try {
-      Some(publish(spark, basePath, (head, prev) => {
-        if (appliedBatchIds(spark, basePath, Some(head).filter(_ > 0L))
-            .contains(batchId))
-          throw new ReplayedBatch
-        prev :+ ManifestEntry(dataDir, None)
+      Some(publish(spark, basePath, base, head => {
+        if (head.ledger.contains(batchId)) throw new ReplayedBatch
+        head.entries :+ ManifestEntry(dataDir, None)
       }, Map("batch_id" -> batchId),
         recheck = constraintRecheck(spark, basePath, dataDir, stagedWith)))
     } catch { case _: ReplayedBatch => None }
@@ -1059,18 +1082,22 @@ object Versioned {
     * schema-uniform); Spark's mergeSchema — a distributed
     * footer-reconciliation JOB on every read — remains the fallback for
     * cross-dir type conflicts, where real coercion is needed. */
-  def readVersion(spark: SparkSession, basePath: String, v: Long): DataFrame = {
-    val ents = entries(spark, basePath, v)
-    val dirs = dataEntries(ents).map(_.path)
+  def readVersion(spark: SparkSession, basePath: String, v: Long): DataFrame =
+    readSnapshot(spark, basePath, snapshotAt(spark, basePath, v))
+
+  /** [[readVersion]] of a snapshot the caller already opened. */
+  private def readSnapshot(spark: SparkSession, basePath: String,
+      snap: Snapshot): DataFrame = {
+    val dirs = snap.dataPaths
     if (dirs.isEmpty) spark.emptyDataFrame
     else {
       val cached = snapshotSchemas.get(basePath)
       val union =
-        if (cached != null && cached._1 == v) cached._2
+        if (cached != null && cached._1 == snap.version) cached._2
         else unionDirSchemas(spark, dirs)
       val df = applyDels(spark, snapReader(spark, union).parquet(dirs: _*),
-        delPaths(ents))
-      snapshotSchemas.put(basePath, (v, union, df.schema))
+        snap.delPaths)
+      snapshotSchemas.put(basePath, (snap.version, union, df.schema))
       df
     }
   }
@@ -1087,25 +1114,16 @@ object Versioned {
     * reading an insert-only contract wants. */
   def windowRemovesRows(spark: SparkSession, basePath: String,
       fromV: Long, toV: Long): Boolean = {
-    val from = entries(spark, basePath, fromV)
-    val to = entries(spark, basePath, toV)
-    val toData = dataEntries(to).map(_.path).toSet
-    dataEntries(from).exists(e => !toData.contains(e.path)) ||
-      delPaths(from).toSet != delPaths(to).toSet
-  }
-
-  /** Latest committed version, with a clear error on an uninitialized
-    * table (a bare `versions(...).last` would NoSuchElement with no
-    * mention of the path). */
-  private def headVersion(spark: SparkSession, basePath: String): Long = {
-    val vs = versions(spark, basePath)
-    require(vs.nonEmpty, s"no committed versions under $basePath")
-    vs.last
+    val from = snapshotAt(spark, basePath, fromV)
+    val to = snapshotAt(spark, basePath, toV)
+    val toData = to.dataPaths.toSet
+    from.dataPaths.exists(p => !toData.contains(p)) ||
+      from.delPaths.toSet != to.delPaths.toSet
   }
 
   /** Read the latest committed snapshot. */
   def read(spark: SparkSession, basePath: String): DataFrame =
-    readVersion(spark, basePath, headVersion(spark, basePath))
+    readSnapshot(spark, basePath, committedHead(spark, basePath))
 
   /** Undo without copying data: commit a NEW version whose manifest is
     * version `v`'s entry list (partition tags preserved). History stays
@@ -1122,7 +1140,7 @@ object Versioned {
     * and aborting the rollback on violation. */
   def rollbackTo(spark: SparkSession, basePath: String, v: Long,
       validate: Boolean = false): Long = {
-    val target = entries(spark, basePath, v)
+    val target = snapshotAt(spark, basePath, v)
     // validation runs INSIDE the publish CAS (the recheck hook, like
     // every DML form's constraint gate): a pre-publish check would
     // leave the same optimistic window a racing addConstraint exploits
@@ -1136,13 +1154,14 @@ object Versioned {
           val delta = headCons.filter { case (n, e) =>
             !validated.get(n).contains(e) }
           if (delta.nonEmpty) {
-            validateFrameAgainst(readVersion(spark, basePath, v), delta,
-              basePath, s"rollbackTo v$v")
+            validateFrameAgainst(readSnapshot(spark, basePath, target),
+              delta, basePath, s"rollbackTo v$v")
             validated = validated ++ delta
           }
         }
       }
-    publish(spark, basePath, (_, _) => target, recheck = recheck)
+    publish(spark, basePath, snapshot(spark, basePath), _ => target.entries,
+      recheck = recheck)
   }
 
   /** SHALLOW CLONE: initialize `dstBase` as a ZERO-COPY snapshot of
@@ -1171,8 +1190,8 @@ object Versioned {
     * The target must be uninitialized; fails loudly otherwise. */
   def cloneTable(spark: SparkSession, srcBase: String, dstBase: String,
       v: Option[Long] = None, validate: Boolean = false): Long = {
-    val srcV = v.getOrElse(headVersion(spark, srcBase))
-    val srcEnts = entries(spark, srcBase, srcV)
+    val src =
+      v.fold(committedHead(spark, srcBase))(snapshotAt(spark, srcBase, _))
     // opt-in: a clone pinned to an OLD version inherits only that
     // version's constraint set; `validate = true` additionally checks
     // the cloned data against the source HEAD's constraints (the gates
@@ -1183,25 +1202,23 @@ object Versioned {
     // inherently uncatchable cross-table — the documented residual
     // (same-table rollbackTo closes its window via the recheck hook).
     if (validate)
-      validateFrameAgainst(readVersion(spark, srcBase, srcV),
-        constraints(spark, srcBase), srcBase,
-        s"cloneTable of $srcBase@v$srcV")
-    // the ledger AS OF the cloned version — the head's may record
-    // batches whose data postdates (and so is absent from) the clone
-    val srcMeta = commitMeta(spark, srcBase, srcV)
-    val ledger = ledgerOf(srcMeta)
-    // constraints inherit as-of the cloned version too: a fork of a
-    // gated table must not silently lose its CHECK gate
-    val srcCons = srcMeta.get(ConstraintsKey)
-      .map(decodeConstraints).getOrElse(Map.empty[String, String])
-    publish(spark, dstBase, (head, _) => {
-      if (head != 0L) throw new IllegalStateException(
-        s"cloneTable target $dstBase is already initialized (head v$head)" +
-          " — clones must start from an empty table")
-      srcEnts
-    }, Map("cloned_from" -> s"$srcBase@v$srcV"), seedLedger = ledger,
-      editConstraints = if (srcCons.isEmpty) None else Some(_ ++ srcCons),
-      editPolicy = srcMeta.get(PolicyKey)) // schema policy forks too
+      validateFrameAgainst(readSnapshot(spark, srcBase, src),
+        (if (v.isEmpty) src else snapshot(spark, srcBase)).constraints,
+        srcBase, s"cloneTable of $srcBase@v${src.version}")
+    // the ledger and the constraints inherit AS OF the cloned version:
+    // the head's ledger may record batches whose data postdates (and so
+    // is absent from) the clone, and a fork of a gated table must not
+    // silently lose its CHECK gate
+    publish(spark, dstBase, snapshot(spark, dstBase), head => {
+      if (head.version != 0L) throw new IllegalStateException(
+        s"cloneTable target $dstBase is already initialized " +
+          s"(head v${head.version}) — clones must start from an empty table")
+      src.entries
+    }, Map("cloned_from" -> s"$srcBase@v${src.version}"),
+      seedLedger = src.ledger,
+      editConstraints =
+        if (src.constraints.isEmpty) None else Some(_ ++ src.constraints),
+      editPolicy = src.meta.get(PolicyKey)) // schema policy forks too
   }
 
   /** Net row-level CHANGE FEED between two retained snapshots — what an
@@ -1234,10 +1251,10 @@ object Versioned {
       fromV: Long, toV: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     require(fromV <= toV, s"changes: fromV $fromV must be <= toV $toV")
-    val from = entries(spark, basePath, fromV)
-    val to = entries(spark, basePath, toV)
-    val fromPaths = dataEntries(from).map(_.path)
-    val toPaths = dataEntries(to).map(_.path)
+    val from = snapshotAt(spark, basePath, fromV)
+    val to = snapshotAt(spark, basePath, toV)
+    val fromPaths = from.dataPaths
+    val toPaths = to.dataPaths
     val added = toPaths.filterNot(fromPaths.toSet)
     val removed = fromPaths.filterNot(toPaths.toSet)
     val common = fromPaths.filter(toPaths.toSet)
@@ -1257,14 +1274,14 @@ object Versioned {
     // schemas instead — correctness of the guard over cache warmth.)
     val guardCols: Seq[String] = feedSchema match {
       case Some(s) => s.fields.map(_.name).toSeq
-      case None => Seq(fromV, toV).distinct.flatMap(v =>
-        snapshotSchema(spark, basePath, v).fields.map(_.name).toSeq)
+      case None => Seq(from, to).distinctBy(_.version).flatMap(s =>
+        snapshotSchema(spark, basePath, s).fields.map(_.name).toSeq)
     }
     require(!guardCols.exists(_.equalsIgnoreCase("_change")),
       s"changes: the table under $basePath has a data column named " +
         "'_change' — the change feed reserves that name for its " +
         "insert/delete marker; rename the data column")
-    val (dvFrom, dvTo) = (delPaths(from), delPaths(to))
+    val (dvFrom, dvTo) = (from.delPaths, to.delPaths)
 
     def dv(paths: Seq[String]): DataFrame =
       if (paths.isEmpty)
@@ -1388,7 +1405,7 @@ object Versioned {
     val deletesRaw = wholeOneSided.filter(_._2 == "delete").map(_._1).toSeq ++
       rowsAt(deltaDel, delFiles, common)
     if (wholeSigned.isEmpty && insertsRaw.isEmpty && deletesRaw.isEmpty)
-      return readVersion(spark, basePath, toV)
+      return readSnapshot(spark, basePath, to)
         .filter(lit(false))
         .withColumn("_change", lit(null).cast("string"))
     val allCols = (wholeSigned.map { case (df, sgn) => df.drop(sgn) }.toSeq ++
@@ -1460,11 +1477,9 @@ object Versioned {
   def history(spark: SparkSession, basePath: String): DataFrame = {
     import scala.jdk.CollectionConverters._
     val rows = versions(spark, basePath).map { v =>
-      val meta = commitMeta(spark, basePath, v)
-      val ents = entries(spark, basePath, v)
-      org.apache.spark.sql.Row(v, commitTs(meta),
-        meta.get("batch_id").orNull,
-        ents.count(!_.tombstone), ents.count(_.tombstone))
+      val s = snapshotAt(spark, basePath, v)
+      org.apache.spark.sql.Row(v, s.ts, s.meta.get("batch_id").orNull,
+        s.dataEntries.size, s.delPaths.size)
     }
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("version",
@@ -1489,13 +1504,12 @@ object Versioned {
       tsMillis: Long): DataFrame = {
     val vs = versions(spark, basePath)
     require(vs.nonEmpty, s"no committed versions under $basePath")
-    val eligible = vs.filter { v =>
-      commitTs(commitMeta(spark, basePath, v)) <= tsMillis
-    }
+    val eligible = vs.map(snapshotAt(spark, basePath, _))
+      .filter(_.ts <= tsMillis)
     require(eligible.nonEmpty,
       s"no retained version at or before ts=$tsMillis under $basePath " +
         "(vacuumed away, or the table is younger than the stamp)")
-    readVersion(spark, basePath, eligible.last)
+    readSnapshot(spark, basePath, eligible.last)
   }
 
   /** Scheme-and-duplicate-slash-insensitive path form, for matching the
@@ -1506,23 +1520,23 @@ object Versioned {
   private def normPath(s: String): String =
     s.replaceFirst("^[A-Za-z][A-Za-z0-9+.-]*:", "").replaceAll("/+", "/")
 
-  /** The manifest entries whose directories CONTAIN rows matching `cond`
-    * — discovered with ONE column-pruned scan (the predicate columns
-    * plus the `_metadata.file_path` virtual column; no data is
+  /** The manifest entries whose directories CONTAIN rows `matching`
+    * keeps (a predicate filter, or the merge's key semi-join) —
+    * discovered with ONE column-pruned scan (the columns `matching`
+    * reads plus the `_metadata.file_path` virtual column; no data is
     * rewritten, and parquet pushdown/pruning apply as in any filter
     * query). Driver state is the distinct matching parent directories —
     * bounded by the snapshot's directory count. */
   private def touchedEntries(spark: SparkSession,
-      dataEnts: Seq[ManifestEntry], dels: Seq[String],
-      cond: Column): Seq[ManifestEntry] = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, regexp_replace}
+      dataEnts: Seq[ManifestEntry], dels: Seq[String])(
+      matching: DataFrame => DataFrame): Seq[ManifestEntry] = {
+    import org.apache.spark.sql.functions.{col, regexp_replace}
     // existing deletion vectors are applied first: a dir whose only
     // matching rows are already tombstoned must not be rewritten
-    val matchDirs = applyDels(spark,
+    val matchDirs = matching(applyDels(spark,
         snapReader(spark, dataEnts.map(_.path))
           .parquet(dataEnts.map(_.path): _*),
-        dels, keepMeta = true)
-      .filter(coalesce(cond, lit(false)))
+        dels, keepMeta = true))
       .select(regexp_replace(col("__fp"), "/[^/]+$", "").as("__dir"))
       .distinct().collect().map(r => normPath(r.getString(0))).toSet
     dataEnts.filter { e =>
@@ -1531,52 +1545,29 @@ object Versioned {
     }
   }
 
-  /** The zone-map stats columns EVERY one of `paths` carries (sidecar
-    * schema, `_min` fields), or empty when any dir lacks a sidecar —
-    * rewrite paths thread this through [[stage]] so DML on a statsCols
-    * table keeps its listing-time skipping layer instead of silently
-    * shedding it one rewritten dir at a time. */
-  private def sharedStatsCols(spark: SparkSession,
-      paths: Seq[String]): Seq[String] = {
-    val sets = paths.map { d =>
-      val zm = new Path(d, "_graft_zonemap")
-      if (!fs(spark, zm).exists(zm)) Set.empty[String]
-      else Layout.readSidecar(spark, d, "_graft_zonemap").schema.fieldNames
-        .filter(_.endsWith("_min")).map(_.stripSuffix("_min")).toSet
-    }
-    if (sets.isEmpty || sets.exists(_.isEmpty)) Seq.empty
-    else sets.reduce(_ intersect _).toSeq.sorted
+  /** The columns a dir's `sidecar` covers — `_graft_zonemap` (its
+    * `<c>_min` fields) or `_graft_bloom` (its `<c>_bloom` fields) — or
+    * None when the dir has none: the fail-open gate of both skipping
+    * layers. */
+  private def sidecarCols(spark: SparkSession, dir: String,
+      sidecar: String): Option[Set[String]] = {
+    val p = new Path(dir, sidecar)
+    val suffix = if (sidecar == "_graft_bloom") "_bloom" else "_min"
+    if (!fs(spark, p).exists(p)) None
+    else Some(Layout.readSidecar(spark, dir, sidecar).schema.fieldNames
+      .filter(_.endsWith(suffix)).map(_.stripSuffix(suffix)).toSet)
   }
 
-  /** Bloom analog of [[sharedStatsCols]]: the columns EVERY one of
-    * `paths` carries a bloom sidecar for — rewrite paths thread this
-    * through [[stage]] so DML on a bloom-indexed table keeps its
-    * point-lookup skipping layer. */
-  private def sharedBloomCols(spark: SparkSession,
-      paths: Seq[String]): Seq[String] = {
-    val sets = paths.map { d =>
-      val bm = new Path(d, "_graft_bloom")
-      if (!fs(spark, bm).exists(bm)) Set.empty[String]
-      else Layout.readSidecar(spark, d, "_graft_bloom").schema.fieldNames
-        .filter(_.endsWith("_bloom")).map(_.stripSuffix("_bloom")).toSet
-    }
+  /** The columns EVERY one of `paths` carries a `sidecar` for, or empty
+    * when any dir lacks one — rewrite paths thread the zone-map and
+    * bloom sets through [[stage]] so DML on a skipping-indexed table
+    * keeps both layers instead of silently shedding them one rewritten
+    * dir at a time. */
+  private def sharedCols(spark: SparkSession, paths: Seq[String],
+      sidecar: String): Seq[String] = {
+    val sets = paths.map(sidecarCols(spark, _, sidecar).getOrElse(Set.empty))
     if (sets.isEmpty || sets.exists(_.isEmpty)) Seq.empty
     else sets.reduce(_ intersect _).toSeq.sorted
-  }
-
-  /** The subset of `probes` a dir's bloom sidecar can evaluate — None
-    * when the dir has no sidecar. The fail-open gate of the point-
-    * lookup path. */
-  private def bloomUsable(spark: SparkSession, dir: String,
-      probes: Seq[(String, Seq[Any])])
-      : Option[Seq[(String, Seq[Any])]] = {
-    val bm = new Path(dir, "_graft_bloom")
-    if (!fs(spark, bm).exists(bm)) None
-    else {
-      val cols = Layout.readSidecar(spark, dir, "_graft_bloom")
-        .schema.fieldNames.toSet
-      Some(probes.filter(p => cols.contains(s"${p._1}_bloom")))
-    }
   }
 
   /** Predicate-driven read — the planner face of BOTH skipping layers:
@@ -1601,16 +1592,15 @@ object Versioned {
     import org.apache.spark.sql.functions.lit
     val node = PredicateRanges.tree(cond)
     val probesOpt = PredicateRanges.probes(node)
-    val head = headVersion(spark, basePath)
-    val ents = entries(spark, basePath, head)
+    val head = committedHead(spark, basePath)
     if (probesOpt.isEmpty) // k = 1 AND k = 2: no row can match
-      return readVersion(spark, basePath, head).filter(lit(false))
+      return readSnapshot(spark, basePath, head).filter(lit(false))
     val probes = probesOpt.get
     // each layer is consulted only when the predicate holds something
     // it could resolve — an atom-free tree must not pay an fs.exists +
     // sidecar read per dir for nothing
     val hasAtoms = PredicateRanges.hasAtoms(node)
-    val sources = dataEntries(ents).map(_.path).flatMap { d =>
+    val sources = head.dataPaths.flatMap { d =>
       val zone: Option[Set[String]] =
         if (!hasAtoms) None
         else Layout.loadZoneMap(spark, d).flatMap { zm =>
@@ -1622,7 +1612,8 @@ object Versioned {
         }
       val bloom: Option[Set[String]] =
         if (probes.isEmpty) None
-        else bloomUsable(spark, d, probes) match {
+        else sidecarCols(spark, d, "_graft_bloom")
+          .map(cs => probes.filter(p => cs.contains(p._1))) match {
           case Some(us) if us.nonEmpty =>
             Some(Layout.pruneFilesBloom(spark, d, us).toSet)
           case _ => None
@@ -1635,10 +1626,10 @@ object Versioned {
       }
     }
     val base =
-      if (sources.isEmpty) readVersion(spark, basePath, head).filter(lit(false))
+      if (sources.isEmpty)
+        readSnapshot(spark, basePath, head).filter(lit(false))
       else applyDels(spark,
-        snapReader(spark, sources).parquet(sources: _*),
-        delPaths(ents))
+        snapReader(spark, sources).parquet(sources: _*), head.delPaths)
     base.filter(cond)
   }
 
@@ -1677,14 +1668,15 @@ object Versioned {
   private def cowRewrite(spark: SparkSession, basePath: String,
       cond: Column, rewrite: DataFrame => DataFrame,
       keepParts: Boolean): Long = {
-    val head = headVersion(spark, basePath)
-    val ents = entries(spark, basePath, head)
-    val dels = delPaths(ents)
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    val head = committedHead(spark, basePath)
+    val dels = head.delPaths
     val candidates =
-      zoneSurvivors(spark, dataEntries(ents), PredicateRanges.tree(cond))
-    if (candidates.isEmpty) return head
-    val touched = touchedEntries(spark, candidates, dels, cond)
-    if (touched.isEmpty) return head
+      zoneSurvivors(spark, head.dataEntries, PredicateRanges.tree(cond))
+    if (candidates.isEmpty) return head.version
+    val touched = touchedEntries(spark, candidates, dels)(
+      _.filter(coalesce(cond, lit(false))))
+    if (touched.isEmpty) return head.version
     val touchedPaths = touched.map(_.path).toSet
     // apply existing tombstones BEFORE rewriting: a raw re-read of a
     // touched dir would silently resurrect its deleted rows. Tombstone
@@ -1700,9 +1692,9 @@ object Versioned {
       } else None
     // the replacement dir inherits the touched dirs' shared stats and
     // bloom columns, so both skipping layers survive DML
-    val (staged, stagedWith) = stageValidated(rewritten, basePath,
-      sharedStatsCols(spark, touched.map(_.path)),
-      sharedBloomCols(spark, touched.map(_.path)))
+    val (staged, stagedWith) = stageValidated(rewritten, basePath, head,
+      sharedCols(spark, touched.map(_.path), "_graft_zonemap"),
+      sharedCols(spark, touched.map(_.path), "_graft_bloom"))
     // the rebase read set is the CANDIDATES (every dir the discovery
     // scan read), not just the touched dirs: a racer rewriting a dir we
     // read-but-didn't-touch is a read-write conflict — its replacement
@@ -1712,8 +1704,7 @@ object Versioned {
     // addConstraint (metadata-only commit), so the staged rewrite's
     // rows re-validate against the head's constraint DELTA inside the
     // CAS — same gate the append paths carry
-    publishRebase(spark, basePath, head,
-      candidates.map(_.path).toSet, dels,
+    publishRebase(spark, basePath, head, candidates.map(_.path).toSet,
       recheck = constraintRecheck(spark, basePath, staged, stagedWith))(
       prev =>
       prev.filterNot(e => touchedPaths(e.path)) :+ ManifestEntry(staged, tag))
@@ -1787,12 +1778,11 @@ object Versioned {
   def deleteWhereMor(spark: SparkSession, basePath: String,
       cond: Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val head = headVersion(spark, basePath)
-    val ents = entries(spark, basePath, head)
-    val dels = delPaths(ents)
+    val head = committedHead(spark, basePath)
+    val dels = head.delPaths
     val candidates =
-      zoneSurvivors(spark, dataEntries(ents), PredicateRanges.tree(cond))
-    if (candidates.isEmpty) return head
+      zoneSurvivors(spark, head.dataEntries, PredicateRanges.tree(cond))
+    if (candidates.isEmpty) return head.version
     // stage FIRST, decide from the written footers (r17 — the
     // stageNonEmpty pattern): the old shape ran the discovery scan once
     // for `isEmpty` and once for the stage, behind a cache; one run now
@@ -1801,14 +1791,13 @@ object Versioned {
           .parquet(candidates.map(_.path): _*), dels, keepMeta = true)
       .filter(coalesce(cond, lit(false)))
       .select(col("__fp").as("file_path"), col("__ri").as("row_index"))
-    val staged = stage(dv, basePath, validate = false)
-    if (stagedRowCount(spark, staged, atLeast = 1L) == 0L) {
+    val staged = stage(dv, basePath, head, validate = false)
+    if (!stagedNonEmpty(spark, staged)) {
       val p = new Path(staged)
       fs(spark, p).delete(p, true)
-      return head
+      return head.version
     }
-    publishRebase(spark, basePath, head,
-      candidates.map(_.path).toSet, dels)(prev =>
+    publishRebase(spark, basePath, head, candidates.map(_.path).toSet)(prev =>
       prev :+ ManifestEntry(staged, None, tombstone = true))
   }
 
@@ -1820,12 +1809,11 @@ object Versioned {
   def updateWhereMor(spark: SparkSession, basePath: String,
       cond: Column, assignments: Map[String, Column]): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val head = headVersion(spark, basePath)
-    val ents = entries(spark, basePath, head)
-    val dels = delPaths(ents)
+    val head = committedHead(spark, basePath)
+    val dels = head.delPaths
     val candidates =
-      zoneSurvivors(spark, dataEntries(ents), PredicateRanges.tree(cond))
-    if (candidates.isEmpty) return head
+      zoneSurvivors(spark, head.dataEntries, PredicateRanges.tree(cond))
+    if (candidates.isEmpty) return head.version
     // cached: one discovery scan feeds the vector AND the patch rows
     // (two stage writes). The former separate `isEmpty` probe run is
     // gone (r17): the vector stages first and its footers answer
@@ -1838,21 +1826,20 @@ object Versioned {
     try {
       val dv = matched
         .select(col("__fp").as("file_path"), col("__ri").as("row_index"))
-      val dvDir = stage(dv, basePath, validate = false)
-      if (stagedRowCount(spark, dvDir, atLeast = 1L) == 0L) {
+      val dvDir = stage(dv, basePath, head, validate = false)
+      if (!stagedNonEmpty(spark, dvDir)) {
         val p = new Path(dvDir)
         fs(spark, p).delete(p, true)
-        return head
+        return head.version
       }
       val patched = assignments.foldLeft(matched: DataFrame) {
         case (d, (c, e)) => d.withColumn(c, e)
       }.drop("__fp", "__ri")
-      val (patchDir, patchWith) = stageValidated(patched, basePath)
+      val (patchDir, patchWith) = stageValidated(patched, basePath, head)
       // the patch dir carries NEW row values — recheck it against any
       // constraint a racing addConstraint landed (the vector carries
       // only row identities, nothing to validate)
-      publishRebase(spark, basePath, head,
-        candidates.map(_.path).toSet, dels,
+      publishRebase(spark, basePath, head, candidates.map(_.path).toSet,
         recheck = constraintRecheck(spark, basePath, patchDir, patchWith))(
         prev =>
         prev :+ ManifestEntry(dvDir, None, tombstone = true)
@@ -1909,9 +1896,8 @@ object Versioned {
     require(pre.isNullAt(0) || pre.getLong(0) <= 1L,
       s"mergeInto source is not unique on ${keys.mkString(",")} — a " +
         "duplicate source key would multiply target rows")
-    val head = headVersion(spark, basePath)
-    val ents = entries(spark, basePath, head)
-    val dels = delPaths(ents)
+    val head = committedHead(spark, basePath)
+    val dels = head.delPaths
 
     // discovery: dirs holding a key present in the source — a key-column-
     // pruned semi-join, no rewrite. The source side carries keys only,
@@ -1924,22 +1910,12 @@ object Versioned {
         else Some((k, Math.nextDown(pre.getDouble(1 + 2 * i)),
           Math.nextUp(pre.getDouble(2 + 2 * i))))
       }
-    val candidates = zoneSurvivors(spark, dataEntries(ents),
+    val candidates = zoneSurvivors(spark, head.dataEntries,
       PredicateRanges.numericEnvelope(keyRanges))
-    import org.apache.spark.sql.functions.regexp_replace
-    val matchDirs =
-      if (candidates.isEmpty) Set.empty[String]
-      else applyDels(spark, snapReader(spark, candidates.map(_.path))
-          .parquet(candidates.map(_.path): _*), dels, keepMeta = true)
-        .select((keys.map(col) :+
-          regexp_replace(col("__fp"), "/[^/]+$", "").as("__dir")): _*)
-        .join(srcKeys, keys, "left_semi")
-        .select("__dir").distinct()
-        .collect().map(r => normPath(r.getString(0))).toSet
-    val touched = candidates.filter { e =>
-      val p = normPath(e.path)
-      matchDirs.exists(d => d == p || d.startsWith(p + "/"))
-    }
+    val touched =
+      if (candidates.isEmpty) Seq.empty[ManifestEntry]
+      else touchedEntries(spark, candidates, dels)(
+        _.join(srcKeys, keys, "left_semi"))
     val touchedPaths = touched.map(_.path).toSet
 
     // rewrite of touched dirs: matched rows take the source's updateCols
@@ -1970,9 +1946,9 @@ object Versioned {
           val u = touched.flatMap(_.parts.get).toSet
           if (u.nonEmpty) Some(u) else None
         } else None
-      val (dir, stagedWith) = stageValidated(updated, basePath,
-        sharedStatsCols(spark, touched.map(_.path)),
-        sharedBloomCols(spark, touched.map(_.path)))
+      val (dir, stagedWith) = stageValidated(updated, basePath, head,
+        sharedCols(spark, touched.map(_.path), "_graft_zonemap"),
+        sharedCols(spark, touched.map(_.path), "_graft_bloom"))
       Seq((ManifestEntry(dir, tag), stagedWith))
     }
 
@@ -1985,20 +1961,19 @@ object Versioned {
     // exactly once, and an empty result costs a tiny staged dir deleted
     // on the spot instead of a full probe scan.
     val allKeys = applyDels(spark,
-      snapReader(spark, dataEntries(ents).map(_.path))
-        .parquet(dataEntries(ents).map(_.path): _*), dels)
+      snapReader(spark, head.dataPaths).parquet(head.dataPaths: _*), dels)
       .select(keys.map(col): _*)
     val inserts: DataFrame = source.join(allKeys, keys, "left_anti")
     val insertEntry: Seq[(ManifestEntry, Map[String, String])] = {
       // the insert dir joins the skipping layers only when the source
       // actually carries every shared stats/bloom column
-      val stats = sharedStatsCols(spark, dataEntries(ents).map(_.path))
+      val stats = sharedCols(spark, head.dataPaths, "_graft_zonemap")
         .filter(inserts.columns.contains)
-      val blooms = sharedBloomCols(spark, dataEntries(ents).map(_.path))
+      val blooms = sharedCols(spark, head.dataPaths, "_graft_bloom")
         .filter(inserts.columns.contains)
       val (dir, stagedWith) =
-        stageValidated(inserts, basePath, stats, blooms)
-      if (stagedRowCount(spark, dir, atLeast = 1L) > 0L)
+        stageValidated(inserts, basePath, head, stats, blooms)
+      if (stagedNonEmpty(spark, dir))
         Seq((ManifestEntry(dir, None), stagedWith))
       else {
         val p = new Path(dir)
@@ -2007,7 +1982,7 @@ object Versioned {
       }
     }
 
-    if (rewrittenEntry.isEmpty && insertEntry.isEmpty) return head
+    if (rewrittenEntry.isEmpty && insertEntry.isEmpty) return head.version
     // BOTH staged dirs carry new row values — each re-validates
     // against the head's constraint delta inside the CAS (a rebase
     // composes over a racing metadata-only addConstraint, so the
@@ -2020,8 +1995,7 @@ object Versioned {
     // read-write conflict — but a raced pure append (whose new dir
     // removes nothing) composes, landing untouched after the merge's
     // serial position, exactly like the delete/update forms
-    publishRebase(spark, basePath, head,
-      dataEntries(ents).map(_.path).toSet, dels,
+    publishRebase(spark, basePath, head, head.dataPaths.toSet,
       recheck = hc => rechecks.foreach(_(hc)))(prev =>
       prev.filterNot(e => touchedPaths(e.path)) ++
         rewrittenEntry.map(_._1) ++ insertEntry.map(_._1))
@@ -2071,32 +2045,30 @@ object Versioned {
   def compactLatest(spark: SparkSession, basePath: String,
       targetFiles: Int, onlyDirsUnderBytes: Long = Long.MaxValue): Long = {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
-    val head = headVersion(spark, basePath)
-    val ents = entries(spark, basePath, head)
-    val dels = delPaths(ents)
-    val datas = dataEntries(ents)
+    val head = committedHead(spark, basePath)
+    val datas = head.dataEntries
     val (fold, carry) =
       if (onlyDirsUnderBytes == Long.MaxValue)
         (datas, Seq.empty[ManifestEntry])
       else datas.partition(e => dirBytes(spark, e.path) < onlyDirsUnderBytes)
-    if (fold.isEmpty) return head
+    if (fold.isEmpty) return head.version
     // outstanding deletion vectors MATERIALIZE here: the folded rows are
     // re-staged with tombstoned rows subtracted. A full compaction
     // (everything folded) therefore drops the vector entries entirely; a
     // partial one keeps them for the carried dirs (their rows referencing
     // folded files dangle harmlessly).
     val df = applyDels(spark, snapReader(spark, fold.map(_.path))
-      .parquet(fold.map(_.path): _*), dels).repartition(targetFiles)
+      .parquet(fold.map(_.path): _*), head.delPaths).repartition(targetFiles)
     val tag =
       if (fold.forall(_.parts.isDefined)) {
         val u = fold.flatMap(_.parts.get).toSet
         if (u.nonEmpty) Some(u) else None
       } else None
     val delEnts =
-      if (carry.isEmpty) Seq.empty else ents.filter(_.tombstone)
-    val staged = stage(df, basePath,
-      sharedStatsCols(spark, fold.map(_.path)),
-      sharedBloomCols(spark, fold.map(_.path)))
+      if (carry.isEmpty) Seq.empty else head.entries.filter(_.tombstone)
+    val staged = stage(df, basePath, head,
+      sharedCols(spark, fold.map(_.path), "_graft_zonemap"),
+      sharedCols(spark, fold.map(_.path), "_graft_bloom"))
     publishEntries(spark, basePath, head,
       carry ++ delEnts :+ ManifestEntry(staged, tag))
   }
@@ -2118,13 +2090,12 @@ object Versioned {
   def optimizeZOrder(spark: SparkSession, basePath: String,
       zCols: Seq[String], files: Int,
       bloomCols: Seq[String] = Seq.empty): Long = {
-    val head = headVersion(spark, basePath)
-    val ents = entries(spark, basePath, head)
-    val datas = dataEntries(ents)
-    if (datas.isEmpty) return head
+    val head = committedHead(spark, basePath)
+    val datas = head.dataEntries
+    if (datas.isEmpty) return head.version
     val df = applyDels(spark,
       snapReader(spark, datas.map(_.path))
-        .parquet(datas.map(_.path): _*), delPaths(ents))
+        .parquet(datas.map(_.path): _*), head.delPaths)
     val clustered = Layout.zOrderFrame(df, zCols, files)
     val tag =
       if (datas.forall(_.parts.isDefined)) {
@@ -2134,10 +2105,11 @@ object Versioned {
     // inherit the folded dirs' existing skipping columns on top of the
     // requested ones — the op whose purpose is read acceleration must
     // not shed the layers DML and compaction preserve
-    val stats = (zCols ++ sharedStatsCols(spark, datas.map(_.path))).distinct
+    val stats = (zCols ++ sharedCols(spark, head.dataPaths, "_graft_zonemap"))
+      .distinct
     val blooms =
-      (bloomCols ++ sharedBloomCols(spark, datas.map(_.path))).distinct
-    val staged = stage(clustered, basePath, statsCols = stats,
+      (bloomCols ++ sharedCols(spark, head.dataPaths, "_graft_bloom")).distinct
+    val staged = stage(clustered, basePath, head, statsCols = stats,
       bloomCols = blooms, validate = false)
     publishEntries(spark, basePath, head, Seq(ManifestEntry(staged, tag)))
   }
@@ -2149,26 +2121,26 @@ object Versioned {
     * reads only (O(dirs)); the ops face of the protocol. */
   def describe(spark: SparkSession, basePath: String): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val head = headVersion(spark, basePath)
-    val ents = entries(spark, basePath, head)
-    val datas = dataEntries(ents)
-    val meta = commitMeta(spark, basePath, head)
+    val vs = versions(spark, basePath)
+    require(vs.nonEmpty, s"no committed versions under $basePath")
+    val head = snapshotAt(spark, basePath, vs.last)
+    val datas = head.dataEntries
     def hasSidecar(d: String, name: String): Boolean = {
       val p = new Path(d, name)
       fs(spark, p).exists(p)
     }
     val row = org.apache.spark.sql.Row(
-      head,
-      commitTs(meta),
+      head.version,
+      head.ts,
       datas.size,
-      ents.count(_.tombstone),
+      head.delPaths.size,
       datas.map(d => dirBytes(spark, d.path)).sum,
       datas.count(_.parts.isDefined),
       datas.count(e => hasSidecar(e.path, "_graft_zonemap")),
       datas.count(e => hasSidecar(e.path, "_graft_bloom")),
-      meta.get(ConstraintsKey).map(decodeConstraints).fold(0)(_.size),
-      meta.getOrElse(PolicyKey, "evolve"),
-      versions(spark, basePath).size)
+      head.constraints.size,
+      head.schemaPolicy,
+      vs.size)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       ("version", org.apache.spark.sql.types.LongType),
       ("ts", org.apache.spark.sql.types.LongType),
@@ -2395,9 +2367,18 @@ object Versioned {
   /** Pin `version` (default: the current head) against vacuum until the
     * returned lease is closed. */
   def pinSnapshot(spark: SparkSession, basePath: String,
-      version: Option[Long] = None): SnapshotLease = {
-    val v = version.getOrElse(headVersion(spark, basePath))
-    require(versions(spark, basePath).contains(v),
+      version: Option[Long] = None): SnapshotLease =
+    pinSnapshot(spark, basePath, version, versions(spark, basePath))
+
+  /** [[pinSnapshot]] checked against a `_manifests` listing the caller
+    * already holds (ascending, as [[versions]] returns it). */
+  def pinSnapshot(spark: SparkSession, basePath: String,
+      version: Option[Long], retained: Seq[Long]): SnapshotLease = {
+    val v = version.getOrElse {
+      require(retained.nonEmpty, s"no committed versions under $basePath")
+      retained.last
+    }
+    require(retained.contains(v),
       s"cannot pin v$v under $basePath — not a committed version")
     val key = fs(spark, new Path(basePath))
       .makeQualified(new Path(basePath)).toString

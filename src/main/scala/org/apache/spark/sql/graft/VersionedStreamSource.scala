@@ -233,15 +233,18 @@ private[graft] final class VersionedStreamSource(sqlContext: SQLContext,
     ex
   }
 
-  private def pinFor(endV: Long, v: Long): Unit = {
+  private def pinFor(endV: Long, v: Long, retained: Seq[Long]): Unit = {
     pins.computeIfAbsent(endV,
-      _ => Versioned.pinSnapshot(spark, basePath, Some(v)))
+      _ => Versioned.pinSnapshot(spark, basePath, Some(v), retained))
     ()
   }
 
   override def getBatch(start: Option[OffsetV1], end: OffsetV1): DataFrame = {
     val endV = ver(end)
     val startV = start.map(ver)
+    // ONE `_manifests` listing per batch serves the retention check and
+    // the window's lease
+    lazy val retained = Versioned.versions(spark, basePath)
     val batch = startV.orElse(startingVersion) match {
       case Some(fromV) if fromV < endV =>
         // retention check BEFORE deriving the window: after a restart
@@ -252,8 +255,7 @@ private[graft] final class VersionedStreamSource(sqlContext: SQLContext,
         // restart. Kafka's failOnDataLoss contract: loud by default
         // (a genuinely unconsumed vacuumed window IS data loss), an
         // explicit opt-out delivers an empty batch with a warning.
-        val retained = Versioned.versions(spark, basePath).toSet
-        val gone = Seq(fromV, endV).distinct.filterNot(retained)
+        val gone = Seq(fromV, endV).distinct.filterNot(retained.contains)
         if (gone.nonEmpty) {
           if (failOnDataLoss) throw new IllegalStateException(
             s"graft-versioned stream over $basePath: window " +
@@ -273,13 +275,13 @@ private[graft] final class VersionedStreamSource(sqlContext: SQLContext,
           val newFrom = retained.filter(v => v >= fromV && v < endV)
             .minOption
           newFrom match {
-            case Some(nf) if retained(endV) =>
+            case Some(nf) if retained.contains(endV) =>
               System.err.println(
                 s"WARN graft-versioned: window ($fromV, $endV] under " +
                   s"$basePath lost its base manifest to vacuum; " +
                   s"delivering retained sub-window ($nf, $endV] — " +
                   s"changes in ($fromV, $nf] are gone (failOnDataLoss=false)")
-              pinFor(endV, nf)
+              pinFor(endV, nf, retained)
               window(nf, endV)
             case _ =>
               System.err.println(
@@ -288,7 +290,7 @@ private[graft] final class VersionedStreamSource(sqlContext: SQLContext,
               emptyBatch()
           }
         } else {
-          pinFor(endV, fromV)
+          pinFor(endV, fromV, retained)
           window(fromV, endV)
         }
       // fromV >= endV: a restart-recovery probe or an already-consumed
@@ -303,7 +305,7 @@ private[graft] final class VersionedStreamSource(sqlContext: SQLContext,
         // redelivery is the sink ledger's problem, exactly as for any
         // replayed batch).
         val loadV =
-          if (Versioned.versions(spark, basePath).contains(endV)) endV
+          if (retained.contains(endV)) endV
           else {
             if (failOnDataLoss) throw new IllegalStateException(
               s"graft-versioned stream over $basePath: initial snapshot " +
@@ -312,8 +314,7 @@ private[graft] final class VersionedStreamSource(sqlContext: SQLContext,
                 "failOnDataLoss=false to load the earliest retained " +
                 "snapshot; otherwise size vacuum retention to consumer " +
                 "lag or pin snapshots with reader leases")
-            val er = Versioned.versions(spark, basePath)
-              .filter(_ >= endV).minOption.getOrElse(
+            val er = retained.filter(_ >= endV).minOption.getOrElse(
                 throw new IllegalStateException(
                   s"graft-versioned stream over $basePath: no retained " +
                     s"version at or after the initial snapshot v$endV"))
@@ -323,7 +324,7 @@ private[graft] final class VersionedStreamSource(sqlContext: SQLContext,
                 s"v$er instead (failOnDataLoss=false)")
             er
           }
-        pinFor(endV, loadV)
+        pinFor(endV, loadV, retained)
         val snap = Versioned.readVersion(spark, basePath, loadV)
         if (mode == "cdc") snap.withColumn("_change", lit("insert"))
         else snap

@@ -32,9 +32,85 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       (a, jobs.get)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** `body`'s result and the Hadoop metadata calls (list, open, stat) it
+    * made on local paths under `prefix`, in call order. Every local
+    * FileSystem created during `body` is a [[SparkSpec.CountingLocalFs]]
+    * (set through the SparkContext's Hadoop conf with the FileSystem
+    * cache off, so the cached instances stay plain); the conf is
+    * restored after. Filtering by `prefix` (the test's own base path)
+    * keeps other suites in the JVM out of the count. `.crc` checksum
+    * calls are left out. */
+  def fsCallsDuring[A](prefix: String)(
+      body: => A): (A, Seq[SparkSpec.FsCall]) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(conf.get(k)))
+    SparkSpec.fsCalls.synchronized {
+      SparkSpec.fsCalls.clear()
+      SparkSpec.fsPrefix = prefix
+      conf.set("fs.file.impl", classOf[SparkSpec.CountingLocalFs].getName)
+      conf.setBoolean("fs.file.impl.disable.cache", true)
+      try {
+        val a = body
+        (a, SparkSpec.fsCalls.toArray(Array.empty[SparkSpec.FsCall]).toSeq)
+      } finally {
+        SparkSpec.fsPrefix = null
+        saved.foreach {
+          case (k, Some(v)) => conf.set(k, v)
+          case (k, None) => conf.unset(k)
+        }
+      }
+    }
+  }
 }
 
 object SparkSpec {
+  /** One Hadoop metadata call: `op` is list, open or stat; `caller` the
+    * first class on the stack outside Hadoop, parquet-mr, the JDK and
+    * Scala (so a graft listing and Spark's file index listing tell
+    * apart). */
+  final case class FsCall(op: String, path: String, caller: String)
+
+  private[graft] val fsCalls =
+    new java.util.concurrent.ConcurrentLinkedQueue[FsCall]()
+  @volatile private[graft] var fsPrefix: String = null
+
+  /** A LocalFileSystem that records its list/open/stat calls under
+    * [[fsPrefix]] into [[fsCalls]]. */
+  class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+    import org.apache.hadoop.fs.{FileStatus, FSDataInputStream,
+      LocatedFileStatus, Path, RemoteIterator}
+
+    private def record(op: String, f: Path): Unit = {
+      val prefix = fsPrefix
+      val path = f.toUri.getPath
+      if (prefix != null && path.startsWith(prefix) && !path.endsWith(".crc")) {
+        val caller = Thread.currentThread.getStackTrace.iterator
+          .map(_.getClassName)
+          .find(c => !c.startsWith("org.apache.hadoop.") &&
+            !c.startsWith("org.apache.parquet.") &&
+            !c.startsWith("java.") && !c.startsWith("jdk.") &&
+            !c.startsWith("scala.") && !c.startsWith("graft.SparkSpec"))
+          .getOrElse("")
+        fsCalls.add(FsCall(op, path, caller))
+      }
+    }
+    override def listStatus(f: Path): Array[FileStatus] = {
+      record("list", f); super.listStatus(f)
+    }
+    override def listLocatedStatus(
+        f: Path): RemoteIterator[LocatedFileStatus] = {
+      record("list", f); super.listLocatedStatus(f)
+    }
+    override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+      record("open", f); super.open(f, bufferSize)
+    }
+    override def getFileStatus(f: Path): FileStatus = {
+      record("stat", f); super.getFileStatus(f)
+    }
+  }
+
   /** Cores for the shared test session. Historically hard-coded to 4,
     * which left a 32-core box ~90% idle while the heavy ANN/dedup suites
     * ground through compute-bound joins (r16: the driver's `sbt test`

@@ -1732,4 +1732,95 @@ class VersionedSpec extends SparkSpec {
     // the bloom aggregate (its shuffle stage, then its sidecar write)
     assert(commitJobs === 5)
   }
+
+  /** `_manifests` listings and manifest opens among `calls`, per table
+    * base (the parent of `_manifests`). */
+  private def manifestCalls(calls: Seq[SparkSpec.FsCall])
+      : Map[String, (Int, Int)] = {
+    val manifest = "(.*)/_manifests/v\\d+".r
+    val list = calls.collect { case SparkSpec.FsCall("list", p, _)
+      if p.endsWith("/_manifests") => p.stripSuffix("/_manifests") }
+    val open = calls.collect {
+      case SparkSpec.FsCall("open", manifest(t), _) => t }
+    (list ++ open).distinct
+      .map(t => t -> (list.count(_ == t), open.count(_ == t))).toMap
+  }
+
+  // each op reads the head once: one listing of `_manifests` and one open
+  // of the head manifest, which it parses into entries and metadata and
+  // hands down to staging and to publish's first CAS attempt
+  test("each lakehouse op lists _manifests once and opens one manifest " +
+      "per snapshot it reads") {
+    import spark.implicits._
+    val ord = ordersFixture()
+    def counted(setup: String => Unit)(op: String => Any): (Int, Int) = {
+      val base = freshBase()
+      setup(base)
+      val (_, calls) = fsCallsDuring(base)(op(base))
+      manifestCalls(calls).getOrElse(base, (0, 0))
+    }
+    val committed: String => Unit = b => Versioned.commit(ord, b)
+    val got = Seq(
+      "read" -> counted(committed)(b => Versioned.read(spark, b)),
+      "readWhere" -> counted(committed)(b =>
+        Versioned.readWhere(spark, b, col("o_orderkey") === 7L)),
+      "commit(Append)" -> counted(committed)(b => Versioned.commit(
+        ord.limit(10), b, SaveMode.Append)),
+      "mergeInto" -> counted(committed)(b => Versioned.mergeInto(spark, b,
+        Seq((7L, "p2", 1.5), (9999L, "p1", 2.5))
+          .toDF("o_orderkey", "o_orderpriority", "o_totalprice"),
+        Seq("o_orderkey"), Seq("o_totalprice"))),
+      "deleteWhere" -> counted(committed)(b =>
+        Versioned.deleteWhere(spark, b, col("o_orderkey") < 10L)),
+      "deleteWhereMor" -> counted(committed)(b =>
+        Versioned.deleteWhereMor(spark, b, col("o_orderkey") < 10L)),
+      "compactLatest" -> counted { b =>
+        committed(b); Versioned.commit(ord.limit(10), b, SaveMode.Append)
+      }(b => Versioned.compactLatest(spark, b, targetFiles = 1)))
+
+    // a two-table sync: the source head and the window's base, the
+    // rollup head — each table listed once
+    val root = Files.createTempDirectory("graft_sync_calls").toString
+    val (src, roll) = (root + "/src", root + "/roll")
+    Versioned.commit(ord, src)
+    syncOnce(src, roll)
+    Versioned.deleteWhereMor(spark, src, pmod(col("o_orderkey"), lit(3)) === 0)
+    val sync = manifestCalls(fsCallsDuring(root)(syncOnce(src, roll))._2)
+    val (srcCalls, rollCalls) =
+      (sync.getOrElse(src, (0, 0)), sync.getOrElse(roll, (0, 0)))
+    got.foreach { case (op, (l, o)) =>
+      info(s"$op: _manifests lists $l, opens $o") }
+    info(s"syncRollup: source lists/opens $srcCalls, rollup $rollCalls")
+    got.foreach { case (op, c) =>
+      assert(c === ((1, 1)), s"$op: (lists, opens) of _manifests")
+    }
+    assert(srcCalls._1 === 1 && rollCalls._1 === 1,
+      s"syncRollup lists each table once: source $srcCalls, rollup $rollCalls")
+    assert(srcCalls._2 + rollCalls._2 <= 3, "syncRollup opens the source " +
+      "head, its fromV and the rollup head: " +
+      s"source $srcCalls, rollup $rollCalls")
+  }
+
+  // the emptiness probe, the bloom auto-size and the sidecar's read schema
+  // come from one footer pass: graft lists the staged dir once and opens
+  // each of its footers at most once
+  test("a bloom-staged commit lists its staged dir once and opens each " +
+      "footer once") {
+    val base = freshBase()
+    val df = spark.range(0, 2000, 1, 4)
+      .select(col("id"), (col("id") % 7).as("k"))
+    val (v, calls) = fsCallsDuring(base)(
+      Versioned.commit(df, base, bloomCols = Seq("id")))
+    val dir = new org.apache.hadoop.fs.Path(
+      Versioned.entries(spark, base, v).head.path).toUri.getPath
+    val ours = calls.filter(_.caller.startsWith("graft."))
+    val lists = ours.count(c => c.op == "list" && c.path == dir)
+    val opens = ours
+      .filter(c => c.op == "open" && c.path.startsWith(dir + "/part-"))
+      .groupBy(_.path).values.map(_.size)
+    info(s"graft listings of the staged dir: $lists, footer opens per file: " +
+      opens.toSeq.sorted.mkString(","))
+    assert(lists === 1)
+    assert(opens.nonEmpty && opens.forall(_ == 1))
+  }
 }

@@ -23,13 +23,14 @@ class ProtocolSpec extends SparkSpec {
     // constraint exists (staging validates nothing), then land the
     // constraint, then publish the staged batch through the same
     // recheck closure `commit` uses — the CAS re-read must catch it
+    val snap = Versioned.snapshot(spark, base)
     val (dir, stagedWith) = Versioned.stageValidated(
-      Seq((3L, 999.0)).toDF("id", "amt"), base)
+      Seq((3L, 999.0)).toDF("id", "amt"), base, snap)
     assert(stagedWith.isEmpty)
     Versioned.addConstraint(spark, base, "amt_cap", "amt <= 100.0")
     val ex = intercept[ConstraintViolation] {
-      Versioned.publish(spark, base,
-        (_, prev) => prev :+ ManifestEntry(dir, None),
+      Versioned.publish(spark, base, snap,
+        _.entries :+ ManifestEntry(dir, None),
         recheck = Versioned.constraintRecheck(spark, base, dir, stagedWith))
     }
     assert(ex.getMessage.contains("amt_cap"))
@@ -41,11 +42,12 @@ class ProtocolSpec extends SparkSpec {
 
     // the same interleave with a CLEAN batch validates the delta and
     // lands — the recheck is a gate, not a blanket abort
+    val snap2 = Versioned.snapshot(spark, base)
     val (dir2, sw2) = Versioned.stageValidated(
-      Seq((4L, 40.0)).toDF("id", "amt"), base)
+      Seq((4L, 40.0)).toDF("id", "amt"), base, snap2)
     Versioned.addConstraint(spark, base, "amt_pos", "amt > 0.0")
-    Versioned.publish(spark, base,
-      (_, prev) => prev :+ ManifestEntry(dir2, None),
+    Versioned.publish(spark, base, snap2,
+      _.entries :+ ManifestEntry(dir2, None),
       recheck = Versioned.constraintRecheck(spark, base, dir2, sw2))
     assert(Versioned.read(spark, base).count() === 3)
   }
@@ -113,6 +115,40 @@ class ProtocolSpec extends SparkSpec {
     val ids = Versioned.appliedBatchIds(spark, base).toSet
     for (w <- 0 until writers; i <- 0 until perWriter)
       assert(ids.contains(s"writer$w-batch$i"))
+  }
+
+  // an op's first CAS attempt reuses the snapshot it opened; if newer
+  // heads landed and a vacuum dropped the manifests after that snapshot,
+  // the slot v<snapshot+1> is empty again — winning it would publish a
+  // version no reader ever sees behind the newer head
+  test("a stale snapshot cannot win a version slot a vacuum emptied") {
+    val base = freshBase()
+    Versioned.commit(Seq((1L, "a")).toDF("id", "s"), base)
+    val stale = Versioned.snapshot(spark, base)
+    val dir = Versioned.stage(Seq((9L, "z")).toDF("id", "s"), base, stale)
+    for (i <- 2L to 4L) Versioned.commit(Seq((i, "b")).toDF("id", "s"), base,
+      org.apache.spark.sql.SaveMode.Append)
+    Versioned.vacuum(spark, base, keepVersions = 2)
+    assert(Versioned.versions(spark, base) === Seq(3L, 4L),
+      "fixture sanity: v1 and v2 were dropped")
+    val v = Versioned.publish(spark, base, stale,
+      _.entries :+ ManifestEntry(dir, None))
+    assert(v === 5L, "the publish must re-read the head, not refill v2")
+    assert(Versioned.versions(spark, base) === Seq(3L, 4L, 5L))
+    assert(Versioned.read(spark, base).select("id").as[Long].collect()
+      .toSet === Set(1L, 2L, 3L, 4L, 9L))
+
+    // an uninitialized snapshot has no manifest to vouch for it: v1 may
+    // have been written and vacuumed since, so it is read again
+    val fresh = freshBase()
+    val empty = Versioned.snapshot(spark, fresh)
+    for (i <- 1L to 3L) Versioned.commit(Seq((i, "b")).toDF("id", "s"),
+      fresh, org.apache.spark.sql.SaveMode.Append)
+    Versioned.vacuum(spark, fresh, keepVersions = 2)
+    assert(Versioned.versions(spark, fresh) === Seq(2L, 3L))
+    assert(Versioned.publish(spark, fresh, empty, _.entries) === 4L,
+      "the publish must re-read the head, not refill v1")
+    assert(Versioned.read(spark, fresh).count() === 3)
   }
 
   test("reader lease: a pinned snapshot survives a concurrent vacuum") {
